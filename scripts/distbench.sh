@@ -15,7 +15,14 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF1DIR="${1:-/tmp/graft-sf1}"
-if [ ! -f "$SF1DIR/lineitem.parquet/_SUCCESS" ] && [ ! -e "$SF1DIR/lineitem.parquet" ]; then
+if [ -e "$SF1DIR/lineitem.parquet" ] && [ ! -f "$SF1DIR/lineitem.parquet/_SUCCESS" ]; then
+  # A half-written generation would bench a partial sf1 and append it to
+  # bench_history.jsonl as if it were whole. Leave the directory alone.
+  echo "[distbench] $SF1DIR/lineitem.parquet has no _SUCCESS marker:" \
+    "an interrupted SfGen run. Remove $SF1DIR or pass another dir." >&2
+  exit 1
+fi
+if [ ! -e "$SF1DIR/lineitem.parquet" ]; then
   echo "[distbench] generating ~sf1 at $SF1DIR (SfGen x10 from sf0.1)"
   scripts/runmain.sh graft.SfGen "$SF1DIR" 10
 fi

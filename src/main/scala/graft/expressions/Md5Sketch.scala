@@ -137,6 +137,9 @@ case class SimhashMd5Fp(child: Expression, bits: Int)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
+      case _ if bits > 60 =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"simhash_md5_fp supports <= 60 bits, got $bits")
       case ArrayType(StringType, _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
@@ -172,7 +175,6 @@ object SimhashMd5Fp {
     * ≤ 60, so fingerprints are non-negative and MinValue is safely out
     * of range). */
   def compute(arr: ArrayData, bits: Int): Long = {
-    require(bits <= 60, s"simhash_md5_fp supports <= 60 bits, got $bits")
     val n = arr.numElements()
     val sums = new Array[Int](bits)
     val md = Md5Sketch.digest.get()

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallGraph
+
 /** Document deduplication operators: exact, MinHash+LSH, SimHash, n-gram
   * Jaccard. Designed for the 100 TB shape: every candidate-generation path
   * is bucketed (band hash / bit-band grouping), so join cardinality is
@@ -130,61 +132,52 @@ object Dedup {
     // jobs at dev scale). Same xxhash64/perm/band/round arithmetic —
     // the DuckDB oracle independently recomputes the J ≥ τ pair set.
     // Distributed chain below unchanged — the 100 TB shape.
-    locally {
-      val in = docs.select(col(idCol).cast("long").as("id"),
-        shingles(col(textCol), shingleSize).as("sh"))
-      if (docs.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-          graft.operators.SmallGraph.smallEnough(in, "id")) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        return in.as[(Long, Seq[String])].coalesce(1)
-          .mapPartitions(it => minhashNearDupKernel(it, numPerms, bands,
-            rowsPerBand, threshold, maxBucket))
-          .toDF("id_a", "id_b", "jaccard")
-      }
+    SmallGraph.route(docs, Seq(idCol),
+        cols = Seq(col(idCol), shingles(col(textCol), shingleSize)))(
+        minhashNearDupKernel(_, numPerms, bands, rowsPerBand, threshold,
+          maxBucket), "id_a", "id_b", "jaccard") { docs =>
+      val withShingles = docs.select(col(idCol).as("id"),
+          shingles(col(textCol), shingleSize).as("sh"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sigs = minhashSignatures(withShingles, "id", "sh", numPerms)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bandsDf = lshBands(sigs, "id", "sig", bands, rowsPerBand)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bounded = bandsDf.withColumn("_n",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy("band_idx", "band_hash")))
+        .filter(col("_n") <= maxBucket).drop("_n")
+      val candidates = bounded.as("l")
+        .join(bounded.as("r"),
+          col("l.band_idx") === col("r.band_idx") &&
+            col("l.band_hash") === col("r.band_hash") &&
+            col("l.id") < col("r.id"))
+        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+        .distinct()
+      // Two-stage verification: a codegen'd signature screen first (64
+      // unrolled slot-equality terms estimate Jaccard; generous margin of
+      // 3.5 sigma ~ 0.22 so true positives survive), then the exact
+      // shingle-set Jaccard only on screen survivors. On organic corpora the
+      // screen discards most band-collision noise at ~1% of the exact cost;
+      // the final filter stays exact either way.
+      val sigById = sigs.select(col("id"), col("sig"))
+      val margin = 3.5 * math.sqrt(threshold * (1 - threshold) / numPerms)
+      val screened = candidates
+        .join(sigById.withColumnRenamed("id", "id_a").withColumnRenamed("sig", "sig_a"), "id_a")
+        .join(sigById.withColumnRenamed("id", "id_b").withColumnRenamed("sig", "sig_b"), "id_b")
+        .filter(
+          (0 until numPerms)
+            .map(i => when(element_at(col("sig_a"), i + 1) === element_at(col("sig_b"), i + 1), 1)
+              .otherwise(0))
+            .reduce(_ + _) >= math.floor((threshold - margin) * numPerms).toInt)
+        .select("id_a", "id_b")
+      val sh = withShingles.select(col("id"), col("sh"))
+      screened
+        .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        .select(col("id_a"), col("id_b"), round(jaccard(col("sh_a"), col("sh_b")), 4).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
     }
-    val withShingles = docs.select(col(idCol).as("id"),
-        shingles(col(textCol), shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = minhashSignatures(withShingles, "id", "sh", numPerms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandsDf = lshBands(sigs, "id", "sig", bands, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bounded = bandsDf.withColumn("_n",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .partitionBy("band_idx", "band_hash")))
-      .filter(col("_n") <= maxBucket).drop("_n")
-    val candidates = bounded.as("l")
-      .join(bounded.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-          col("l.band_hash") === col("r.band_hash") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-    // Two-stage verification: a codegen'd signature screen first (64
-    // unrolled slot-equality terms estimate Jaccard; generous margin of
-    // 3.5 sigma ~ 0.22 so true positives survive), then the exact
-    // shingle-set Jaccard only on screen survivors. On organic corpora the
-    // screen discards most band-collision noise at ~1% of the exact cost;
-    // the final filter stays exact either way.
-    val sigById = sigs.select(col("id"), col("sig"))
-    val margin = 3.5 * math.sqrt(threshold * (1 - threshold) / numPerms)
-    val screened = candidates
-      .join(sigById.withColumnRenamed("id", "id_a").withColumnRenamed("sig", "sig_a"), "id_a")
-      .join(sigById.withColumnRenamed("id", "id_b").withColumnRenamed("sig", "sig_b"), "id_b")
-      .filter(
-        (0 until numPerms)
-          .map(i => when(element_at(col("sig_a"), i + 1) === element_at(col("sig_b"), i + 1), 1)
-            .otherwise(0))
-          .reduce(_ + _) >= math.floor((threshold - margin) * numPerms).toInt)
-      .select("id_a", "id_b")
-    val sh = withShingles.select(col("id"), col("sh"))
-    screened
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .select(col("id_a"), col("id_b"), round(jaccard(col("sh_a"), col("sh_b")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
   }
 
   /** Bounded single-task replay of [[minhashNearDuplicates]] over per-doc
@@ -547,44 +540,36 @@ object Dedup {
     // chain is an eager corpus-wide explode checkpoint + groupBy + join
     // + window); identical seed strings, counts and island arithmetic.
     // Distributed shape below unchanged — the 100 TB path.
-    locally {
-      val in = docs.select(col(idCol).cast("long").as("id"),
-        TextAnalysis.tokens(col(textCol)).as("tk"))
-      if (docs.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-          graft.operators.SmallGraph.smallEnough(in, "id")) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        return in.as[(Long, Seq[String])].coalesce(1)
-          .mapPartitions(it => dupRegionsKernel(it, seedTokens))
-          .toDF(idCol, "n_dup_regions", "dup_tokens", "longest_region")
-      }
+    SmallGraph.route(docs, Seq(idCol),
+        cols = Seq(col(idCol), TextAnalysis.tokens(col(textCol))))(
+        dupRegionsKernel(_, seedTokens),
+        idCol, "n_dup_regions", "dup_tokens", "longest_region") { docs =>
+      val toks = TextAnalysis.tokens(col(textCol))
+      val nSeeds = size(toks) - (seedTokens - 1)
+      // localCheckpoint: the seed relation feeds BOTH the occurrence count
+      // and the join-back probe — without materializing it, the text scan +
+      // sliding-window explode executes twice (and the count side becomes a
+      // full second pass over the corpus at scale).
+      val seeds = docs
+        .filter(nSeeds > 0)
+        .select(col(idCol).as("_id"),
+          posexplode(transform(sequence(lit(0), nSeeds - 1),
+            i => array_join(slice(toks, i + 1, lit(seedTokens)), " ")))
+            .as(Seq("pos", "seed")))
+        .localCheckpoint()
+      val counts = seeds.groupBy("seed").agg(count(lit(1)).as("_n"))
+      val dup = seeds.join(counts, "seed").filter(col("_n") >= 2)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("_id").orderBy("pos")
+      dup
+        .withColumn("_island", col("pos") - row_number().over(w))
+        .groupBy(col("_id"), col("_island"))
+        .agg(min(col("pos")).as("_start"), max(col("pos")).as("_end"))
+        .groupBy(col("_id").as(idCol))
+        .agg(count(lit(1)).as("n_dup_regions"),
+          sum(col("_end") - col("_start") + seedTokens).as("dup_tokens"),
+          max(col("_end") - col("_start") + seedTokens).as("longest_region"))
     }
-    val toks = TextAnalysis.tokens(col(textCol))
-    val nSeeds = size(toks) - (seedTokens - 1)
-    // localCheckpoint: the seed relation feeds BOTH the occurrence count
-    // and the join-back probe — without materializing it, the text scan +
-    // sliding-window explode executes twice (and the count side becomes a
-    // full second pass over the corpus at scale).
-    val seeds = docs
-      .filter(nSeeds > 0)
-      .select(col(idCol).as("_id"),
-        posexplode(transform(sequence(lit(0), nSeeds - 1),
-          i => array_join(slice(toks, i + 1, lit(seedTokens)), " ")))
-          .as(Seq("pos", "seed")))
-      .localCheckpoint()
-    val counts = seeds.groupBy("seed").agg(count(lit(1)).as("_n"))
-    val dup = seeds.join(counts, "seed").filter(col("_n") >= 2)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_id").orderBy("pos")
-    dup
-      .withColumn("_island", col("pos") - row_number().over(w))
-      .groupBy(col("_id"), col("_island"))
-      .agg(min(col("pos")).as("_start"), max(col("pos")).as("_end"))
-      .groupBy(col("_id").as(idCol))
-      .agg(count(lit(1)).as("n_dup_regions"),
-        sum(col("_end") - col("_start") + seedTokens).as("dup_tokens"),
-        max(col("_end") - col("_start") + seedTokens).as("longest_region"))
   }
 
   /** Bounded single-task replay of [[duplicatedSpanRegions]]: per-doc
@@ -641,8 +626,10 @@ object Dedup {
     val idx = docs.indices.map(i => docs(i)._1 -> i).toMap
     val postings = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+    // Distinct grams per doc, like the distributed collect_set: a doc
+    // that repeats a gram must neither inflate its df nor pair with itself.
     docs.foreach { case (id, grams) =>
-      grams.foreach(g => postings.getOrElseUpdate(g,
+      grams.distinct.foreach(g => postings.getOrElseUpdate(g,
         scala.collection.mutable.ArrayBuffer.empty[Long]) += id)
     }
     val cand = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
@@ -746,36 +733,28 @@ object Dedup {
     // COST gate (SmallGraph): fingerprints, banding, cap and Hamming
     // verify in ONE executor task (see minhashNearDuplicates — same
     // rationale, same escape hatch). Distributed chain unchanged below.
-    locally {
-      val in = docs.select(col(idCol).cast("long").as("id"),
-        TextAnalysis.tokens(col(textCol)).as("tk"))
-      if (docs.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-          graft.operators.SmallGraph.smallEnough(in, "id")) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        return in.as[(Long, Seq[String])].coalesce(1)
-          .mapPartitions(it => simhashNearDupKernel(it, maxDist, maxBucket))
-          .toDF("id_a", "id_b", "hamming_dist")
-      }
+    SmallGraph.route(docs, Seq(idCol),
+        cols = Seq(col(idCol), TextAnalysis.tokens(col(textCol))))(
+        simhashNearDupKernel(_, maxDist, maxBucket),
+        "id_a", "id_b", "hamming_dist") { docs =>
+      val fp = simhashes(docs.select(col(idCol).as("id"), col(textCol)), "id", textCol)
+      val banded = fp.select(col("id"), col("fp"), posexplode(
+        array((0 until 4).map(b =>
+          shiftrightunsigned(col("fp"), b * 16).bitwiseAND(0xFFFFL)): _*))
+        .as(Seq("band_idx", "band_val")))
+      val bounded = banded.withColumn("_n",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy("band_idx", "band_val")))
+        .filter(col("_n") <= maxBucket).drop("_n")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      bounded.as("l").join(bounded.as("r"),
+          col("l.band_idx") === col("r.band_idx") &&
+            col("l.band_val") === col("r.band_val") &&
+            col("l.id") < col("r.id"))
+        .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
+          hamming(col("l.fp"), col("r.fp")).cast("long").as("hamming_dist"))
+        .distinct()
+        .filter(col("hamming_dist") <= maxDist)
     }
-    val fp = simhashes(docs.select(col(idCol).as("id"), col(textCol)), "id", textCol)
-    val banded = fp.select(col("id"), col("fp"), posexplode(
-      array((0 until 4).map(b =>
-        shiftrightunsigned(col("fp"), b * 16).bitwiseAND(0xFFFFL)): _*))
-      .as(Seq("band_idx", "band_val")))
-    val bounded = banded.withColumn("_n",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .partitionBy("band_idx", "band_val")))
-      .filter(col("_n") <= maxBucket).drop("_n")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bounded.as("l").join(bounded.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-          col("l.band_val") === col("r.band_val") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        hamming(col("l.fp"), col("r.fp")).cast("long").as("hamming_dist"))
-      .distinct()
-      .filter(col("hamming_dist") <= maxDist)
   }
 }

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallGraph
+
 /** Deterministic distributed k-means in exact integer units — Lloyd's
   * algorithm (Lloyd 1982) made engine-portable the same way PageRank is
   * ([[graft.operators.PageRank]]): every quantity that crosses a shuffle
@@ -56,7 +58,11 @@ object DetKMeans {
 
   /** Points in unit space: (id, u). */
   def unitPoints(df: DataFrame, idCol: String, embCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("id"), toUnits(col(embCol)).as("u"))
+    df.select(unitCols(idCol, embCol): _*)
+
+  /** The (id, u) columns of [[unitPoints]]. */
+  def unitCols(idCol: String, embCol: String): Seq[Column] =
+    Seq(col(idCol).cast("long").as("id"), toUnits(col(embCol)).as("u"))
 
   /** md5-seeded initial centroids: the k points with smallest
     * (md5(id), id). TakeOrdered + a k·dim driver read (bounded, same
@@ -246,25 +252,20 @@ object DetKMeans {
     * non-empty (an empty codebook yields cid=-1/d=MaxValue rows on the
     * kernel path vs zero rows distributed) — every in-repo caller
     * passes unique ids and a fitted codebook. */
-  def assignTo(pts: DataFrame, centroids: DataFrame): DataFrame = {
-    if (graft.operators.SmallGraph.smallEnough(pts, "id")) {
-      val spark = pts.sparkSession
-      import spark.implicits._
+  def assignTo(pts: DataFrame, centroids: DataFrame): DataFrame =
+    SmallGraph.route(pts, Seq("id"), cols = Seq(col("id"), col("u")))({
       val cents = centroids.select(col("cid"), col("c")).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
         .sortBy(_._1)
-      return pts.select(col("id"), col("u")).as[(Long, Seq[Long])]
-        .coalesce(1)
-        .mapPartitions(it => assignKernel(it, cents))
-        .toDF("id", "u", "cid", "d")
+      assignKernel(_, cents)
+    }, "id", "u", "cid", "d") { pts =>
+      pts.crossJoin(broadcast(centroids))
+        .select(col("id"), col("u"), col("cid"), dist2(col("u"), col("c")).as("d"))
+        .groupBy("id")
+        .agg(first(col("u")).as("u"), min(struct(col("d"), col("cid"))).as("m"))
+        .select(col("id"), col("u"),
+          col("m").getField("cid").as("cid"), col("m").getField("d").as("d"))
     }
-    pts.crossJoin(broadcast(centroids))
-      .select(col("id"), col("u"), col("cid"), dist2(col("u"), col("c")).as("d"))
-      .groupBy("id")
-      .agg(first(col("u")).as("u"), min(struct(col("d"), col("cid"))).as("m"))
-      .select(col("id"), col("u"),
-        col("m").getField("cid").as("cid"), col("m").getField("d").as("d"))
-  }
 
   /** One Lloyd update: per-cluster per-dim integer mean. */
   def updateCentroids(assign: DataFrame, dim: Int): DataFrame =
@@ -284,45 +285,38 @@ object DetKMeans {
     // COST gate: the whole Lloyd run in ONE executor task (identical
     // seeds, assignment ties, floor-mean updates); assignment and
     // centroids are two cheap kernel plans over the same scan.
-    locally {
-      val pts0 = unitPoints(df, idCol, embCol)
-      if (graft.operators.SmallGraph.smallEnough(pts0, "id")) {
-        val spark = df.sparkSession
-        import spark.implicits._
-        // ONE kernel run feeds both outputs: the tagged union is
-        // localCheckpointed (eager, single tiny partition), so a caller
-        // consuming assignment AND centroids no longer replays the
-        // whole Lloyd loop twice.
-        val both = pts0.select(col("id"), col("u")).as[(Long, Seq[Long])]
-          .coalesce(1)
-          .mapPartitions(it => lloydBothKernel(it, k, iters))
-          .toDF("kind", "a", "u", "cid", "d")
-          .localCheckpoint()
-        val assign = both.filter(col("kind") === 0)
-          .select(col("a").as("id"), col("u"), col("cid"), col("d"))
-        val cents = both.filter(col("kind") === 1)
-          .select(col("a").as("cid"), col("u").as("c"))
-        return (assign, cents)
+    SmallGraph.routeWith(unitPoints(df, idCol, embCol), Seq("id")) { pts =>
+      // ONE kernel run feeds both outputs: the tagged union is
+      // localCheckpointed (eager, single tiny partition), so a caller
+      // consuming assignment AND centroids no longer replays the
+      // whole Lloyd loop twice.
+      val both = SmallGraph.singleTask(pts, Seq(col("id"), col("u")))(
+          lloydBothKernel(_, k, iters), "kind", "a", "u", "cid", "d")
+        .localCheckpoint()
+      val assign = both.filter(col("kind") === 0)
+        .select(col("a").as("id"), col("u"), col("cid"), col("d"))
+      val cents = both.filter(col("kind") === 1)
+        .select(col("a").as("cid"), col("u").as("c"))
+      (assign, cents)
+    } { pts0 =>
+      val pts = pts0
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var centroids = seedCentroids(pts, k)
+      var assign: DataFrame = null
+      for (_ <- 1 to iters) {
+        assign = assignTo(pts, centroids)
+        centroids = updateCentroids(assign, dim)
       }
+      (assign, centroids)
     }
-    val pts = unitPoints(df, idCol, embCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var centroids = seedCentroids(pts, k)
-    var assign: DataFrame = null
-    for (_ <- 1 to iters) {
-      assign = assignTo(pts, centroids)
-      centroids = updateCentroids(assign, dim)
-    }
-    (assign, centroids)
   }
 
   /** Grouped [[assignTo]]: nearest centroid within each point's group
     * (product-quantization subspaces train side by side — `pts` and
     * `centroids` both carry a `g` column). Same math per group. */
-  def assignToGrouped(pts: DataFrame, centroids: DataFrame): DataFrame = {
-    if (graft.operators.SmallGraph.smallEnough(pts, "g", "id")) {
-      val spark = pts.sparkSession
-      import spark.implicits._
+  def assignToGrouped(pts: DataFrame, centroids: DataFrame): DataFrame =
+    SmallGraph.route(pts, Seq("g", "id"),
+        cols = Seq(col("g"), col("id"), col("u")))({
       // Bounded collected codebook (m groups × k × dim longs), assigned
       // per group inside one task.
       val byG = centroids.select(col("g"), col("cid"), col("c")).collect()
@@ -330,24 +324,21 @@ object DetKMeans {
         .groupBy(_._1).map { case (g, xs) => (g, xs.map(_._2).sortBy(_._1)) }
       // byG.get: a point whose group has no centroid row is DROPPED,
       // matching the distributed inner join on g (ADVICE r16).
-      return pts.select(col("g"), col("id"), col("u"))
-        .as[(Long, Long, Seq[Long])].coalesce(1)
-        .mapPartitions(it => it.flatMap { case (g, id, u) =>
-          byG.get(g).map { cents =>
-            val out = assignKernel(Iterator((id, u)), cents).next()
-            (g, out._1, out._2, out._3, out._4)
-          }
-        })
-        .toDF("g", "id", "u", "cid", "d")
+      (it: Iterator[(Long, Long, Seq[Long])]) => it.flatMap { case (g, id, u) =>
+        byG.get(g).map { cents =>
+          val out = assignKernel(Iterator((id, u)), cents).next()
+          (g, out._1, out._2, out._3, out._4)
+        }
+      }
+    }, "g", "id", "u", "cid", "d") { pts =>
+      pts.join(broadcast(centroids), Seq("g"))
+        .select(col("g"), col("id"), col("u"), col("cid"),
+          dist2(col("u"), col("c")).as("d"))
+        .groupBy("g", "id")
+        .agg(first(col("u")).as("u"), min(struct(col("d"), col("cid"))).as("m"))
+        .select(col("g"), col("id"), col("u"),
+          col("m").getField("cid").as("cid"), col("m").getField("d").as("d"))
     }
-    pts.join(broadcast(centroids), Seq("g"))
-      .select(col("g"), col("id"), col("u"), col("cid"),
-        dist2(col("u"), col("c")).as("d"))
-      .groupBy("g", "id")
-      .agg(first(col("u")).as("u"), min(struct(col("d"), col("cid"))).as("m"))
-      .select(col("g"), col("id"), col("u"),
-        col("m").getField("cid").as("cid"), col("m").getField("d").as("d"))
-  }
 
   /** Grouped [[fit]] over (g, id, u) unit points: every group trains its
     * own k centroids, but ALL groups share each round's two aggregate
@@ -360,37 +351,32 @@ object DetKMeans {
     require(k >= 1 && iters >= 1)
     // COST gate: all groups' Lloyd runs in ONE executor task (same
     // shared (md5(id), id) seed order per group).
-    if (graft.operators.SmallGraph.smallEnough(pts, "g", "id")) {
-      val spark = pts.sparkSession
-      import spark.implicits._
-      val in = pts.select(col("g"), col("id"), col("u"))
-        .as[(Long, Long, Seq[Long])]
-      val assign = in.coalesce(1)
-        .mapPartitions(it => lloydAssignGroupedKernel(it, k, iters))
-        .toDF("g", "id", "u", "cid", "d")
-      val cents = in.coalesce(1)
-        .mapPartitions(it => lloydCentroidsGroupedKernel(it, k, iters))
-        .toDF("g", "cid", "c")
-      return (assign, cents)
+    SmallGraph.routeWith(pts, Seq("g", "id")) { pts =>
+      val cols = Seq(col("g"), col("id"), col("u"))
+      (SmallGraph.singleTask(pts, cols)(lloydAssignGroupedKernel(_, k, iters),
+          "g", "id", "u", "cid", "d"),
+        SmallGraph.singleTask(pts, cols)(
+          lloydCentroidsGroupedKernel(_, k, iters), "g", "cid", "c"))
+    } { pts =>
+      val p = pts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var centroids = p.withColumn("h", md5(col("id").cast("string")))
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("g")
+            .orderBy(col("h"), col("id"))))
+        .filter(col("rn") <= k)
+        .select(col("g"), (col("rn") - 1).cast("long").as("cid"), col("u").as("c"))
+      var assign: DataFrame = null
+      for (_ <- 1 to iters) {
+        assign = assignToGrouped(p, centroids)
+        centroids = assign.groupBy("g", "cid")
+          .agg(count(lit(1)).as("n"),
+            array((0 until dim).map(i => sum(element_at(col("u"), i + 1))): _*).as("s"))
+          .select(col("g"), col("cid"),
+            transform(col("s"), s => floor(s.cast("double") / col("n")).cast("long"))
+              .as("c"))
+      }
+      (assign, centroids)
     }
-    val p = pts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var centroids = p.withColumn("h", md5(col("id").cast("string")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("g")
-          .orderBy(col("h"), col("id"))))
-      .filter(col("rn") <= k)
-      .select(col("g"), (col("rn") - 1).cast("long").as("cid"), col("u").as("c"))
-    var assign: DataFrame = null
-    for (_ <- 1 to iters) {
-      assign = assignToGrouped(p, centroids)
-      centroids = assign.groupBy("g", "cid")
-        .agg(count(lit(1)).as("n"),
-          array((0 until dim).map(i => sum(element_at(col("u"), i + 1))): _*).as("s"))
-        .select(col("g"), col("cid"),
-          transform(col("s"), s => floor(s.cast("double") / col("n")).cast("long"))
-            .as("c"))
-    }
-    (assign, centroids)
   }
 
   /** Generated DuckDB replay of [[fit]] — SQL kept in lockstep with the

@@ -34,7 +34,9 @@ object PqDet {
 
   /** Nearest centroid id, ties to the smallest cid — the
     * [[DetKMeans.assignTo]] min(struct(d, cid)) contract. */
-  private def nearest(u: Array[Long], cents: Seq[(Long, Array[Long])]): Long = {
+  private[graft] def nearest(u: Array[Long],
+                             cents: Seq[(Long, Array[Long])]): Long = {
+    require(cents.nonEmpty, "nearest centroid of an empty codebook")
     var bestC = -1L
     var bestD = Long.MaxValue
     cents.foreach { case (cid, c) =>

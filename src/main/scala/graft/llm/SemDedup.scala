@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallGraph
+
 /** Semantic deduplication (SemDeDup, Abbas et al. 2023,
   * arXiv:2303.09540): k-means-cluster the embedding space, compare
   * embeddings PAIRWISE ONLY WITHIN EACH CLUSTER, and drop all but one
@@ -181,45 +183,41 @@ object SemDedup {
     // KB-scale assigned relation. Distributed path below unchanged —
     // the 100 TB shape. localCheckpoint keeps the same eager
     // bounded-pair materialization contract either way.
-    if (graft.operators.SmallGraph.smallEnough(withCell, idCol, "cid")) {
-      val spark = withCell.sparkSession
-      import spark.implicits._
-      return withCell.select(col(idCol),
-          col(embCol).cast("array<double>"), col("u"), col("cid"))
-        .as[(Long, Seq[Double], Seq[Long], Long)]
-        .coalesce(1)
-        .mapPartitions(it =>
-          detPairsKernel(it, threshold, dim, maxCluster, planes))
-        .toDF("id_a", "id_b", "cos")
+    SmallGraph.routeWith(withCell, Seq(idCol, "cid")) { withCell =>
+      SmallGraph.singleTask(withCell, Seq(col(idCol),
+          col(embCol).cast("array<double>"), col("u"), col("cid")))(
+          detPairsKernel(_, threshold, dim, maxCluster, planes),
+          "id_a", "id_b", "cos")
         .localCheckpoint()
+    } { withCell =>
+      val keyed = detKey(withCell, maxCluster, planes)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      def cosCol(a: Column, b: Column): Column =
+        Similarity.roundHalfUp(Similarity.cosineUnrolled(a, b, dim), 6)
+      val small = keyed.filter(col("_sn") <= maxCluster)
+      val a = small.select(col("cid"), col("_sub"),
+        col(idCol).as("id_a"), col(embCol).as("_ea"))
+      val b = small.select(col("cid"), col("_sub"),
+        col(idCol).as("id_b"), col(embCol).as("_eb"))
+      val allPairs = a.join(b, Seq("cid", "_sub"))
+        .filter(col("id_a") < col("id_b"))
+        .withColumn("cos", cosCol(col("_ea"), col("_eb")))
+        .filter(col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
+      val chainOrd = Window.partitionBy("cid", "_sub").orderBy(col(idCol))
+      val chainPairs = keyed.filter(col("_sn") > maxCluster)
+        .withColumn("_nid", lead(col(idCol), 1).over(chainOrd))
+        .withColumn("_ne", lead(col(embCol), 1).over(chainOrd))
+        .filter(col("_nid").isNotNull)
+        .withColumn("cos", cosCol(col(embCol), col("_ne")))
+        .filter(col("cos") >= threshold)
+        .select(col(idCol).as("id_a"), col("_nid").as("id_b"), col("cos"))
+      // Same lifecycle contract as semanticPairs: the pair set is bounded,
+      // so checkpoint it eagerly and release the keyed relation now.
+      val pairs = allPairs.unionByName(chainPairs).localCheckpoint()
+      keyed.unpersist()
+      pairs
     }
-    val keyed = detKey(withCell, maxCluster, planes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def cosCol(a: Column, b: Column): Column =
-      Similarity.roundHalfUp(Similarity.cosineUnrolled(a, b, dim), 6)
-    val small = keyed.filter(col("_sn") <= maxCluster)
-    val a = small.select(col("cid"), col("_sub"),
-      col(idCol).as("id_a"), col(embCol).as("_ea"))
-    val b = small.select(col("cid"), col("_sub"),
-      col(idCol).as("id_b"), col(embCol).as("_eb"))
-    val allPairs = a.join(b, Seq("cid", "_sub"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", cosCol(col("_ea"), col("_eb")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-    val chainOrd = Window.partitionBy("cid", "_sub").orderBy(col(idCol))
-    val chainPairs = keyed.filter(col("_sn") > maxCluster)
-      .withColumn("_nid", lead(col(idCol), 1).over(chainOrd))
-      .withColumn("_ne", lead(col(embCol), 1).over(chainOrd))
-      .filter(col("_nid").isNotNull)
-      .withColumn("cos", cosCol(col(embCol), col("_ne")))
-      .filter(col("cos") >= threshold)
-      .select(col(idCol).as("id_a"), col("_nid").as("id_b"), col("cos"))
-    // Same lifecycle contract as semanticPairs: the pair set is bounded,
-    // so checkpoint it eagerly and release the keyed relation now.
-    val pairs = allPairs.unionByName(chainPairs).localCheckpoint()
-    keyed.unpersist()
-    pairs
   }
 
   /** Bounded single-task replay of [[detBoundedPairs]]'s exact steps:
@@ -324,29 +322,22 @@ object SemDedup {
                      k: Int, iters: Int, threshold: Double, dim: Int = 64,
                      maxCluster: Int = 40, numPlanes: Int = 8): DataFrame = {
     val planes = subPlanes(numPlanes, dim)
-    locally {
-      val in = corpus.select(col(idCol).cast("long").as("id"),
-        col(embCol).cast("array<double>").as("e"))
-      if (corpus.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-          graft.operators.SmallGraph.smallEnough(in, "id")) {
-        val spark = corpus.sparkSession
-        import spark.implicits._
-        return in.as[(Long, Seq[Double])].coalesce(1)
-          .mapPartitions(it => detCorpusPairsKernel(it, k, iters,
-            threshold, dim, maxCluster, planes))
-          .toDF("id_a", "id_b", "cos")
-          .localCheckpoint()
-      }
+    SmallGraph.routeWith(corpus, Seq(idCol)) { corpus =>
+      SmallGraph.singleTask(corpus,
+          Seq(col(idCol), col(embCol).cast("array<double>")))(
+          detCorpusPairsKernel(_, k, iters, threshold, dim, maxCluster,
+            planes), "id_a", "id_b", "cos")
+        .localCheckpoint()
+    } { corpus =>
+      val (_, cents) = DetKMeans.fit(corpus, idCol, embCol, k, iters, dim)
+      val assigned = DetKMeans.assignTo(
+          DetKMeans.unitPoints(corpus, idCol, embCol), cents)
+        .select(col("id"), col("u"), col("cid"))
+      val withCell = corpus.select(col(idCol).as("id"), col(embCol))
+        .join(assigned, "id")
+      detBoundedPairs(withCell, "id", embCol, threshold, dim, maxCluster,
+        numPlanes)
     }
-    val (_, cents) = DetKMeans.fit(corpus, idCol, embCol, k, iters, dim)
-    val assigned = DetKMeans.assignTo(
-        DetKMeans.unitPoints(corpus, idCol, embCol), cents)
-      .select(col("id"), col("u"), col("cid"))
-    val withCell = corpus.select(col(idCol).as("id"), col(embCol))
-      .join(assigned, "id")
-    detBoundedPairs(withCell, "id", embCol, threshold, dim, maxCluster,
-      numPlanes)
   }
 
   /** Single-task body of [[detCorpusPairs]]: toUnits quantization, the

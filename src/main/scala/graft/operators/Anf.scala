@@ -35,63 +35,60 @@ object Anf {
     // COST gate (SmallGraph): the whole sampled neighborhood profile in
     // ONE executor task under the size threshold; the bit-parallel loop
     // below is the 100 TB path.
-    if (SmallGraph.smallEnoughScaled(canonEdges, SmallGraph.SuperlinearMaxBytes, "lo", "hi")) {
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          SmallGraph.anfKernel(it, seedsMod, rounds, maxSeeds))
-        .toDF("r", "reached", "cum", "frac_micro", "eff_diam")
-    }
-    val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
-    val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
-      .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val seedIds = edges.select(col("lo").as("n"))
-      .unionAll(edges.select(col("hi").as("n")))
-      .distinct()
-      .filter(pmod(col("n"), lit(seedsMod)) === 0)
-      .orderBy("n").limit(maxSeeds + 1).collect().map(_.getLong(0))
-    require(seedIds.length <= maxSeeds,
-      s"ANF seed set exceeds maxSeeds=$maxSeeds for seedsMod=$seedsMod " +
-        "— raise seedsMod (fewer seeds) or pass a larger explicit bound")
-    val roundTotals = Array.fill(rounds)(0L)
-    seedIds.grouped(63).foreach { chunk =>
-      var frontier = chunk.zipWithIndex
-        .map { case (s, i) => (s, 1L << i) }.toSeq.toDF("n", "m")
+    SmallGraph.route(canonEdges, Seq("lo", "hi"), cost = SmallGraph.Superlinear)(
+        SmallGraph.anfKernel(_, seedsMod, rounds, maxSeeds),
+        "r", "reached", "cum", "frac_micro", "eff_diam") { canonEdges =>
+      val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
+      val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
+        .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
+        .repartition(col("src"))
         .localCheckpoint(true)
-      var visited = frontier.select(col("n"), col("m").as("vm"))
-        .localCheckpoint(true)
-      for (r <- 1 to rounds) {
-        val next = adj
-          .join(frontier.select(col("n").as("src"), col("m")), Seq("src"))
-          .groupBy(col("dst").as("n")).agg(expr("bit_or(m)").as("em"))
-          .join(visited, Seq("n"), "left")
-          .select(col("n"),
-            expr("em & ~coalesce(vm, CAST(0 AS BIGINT))").as("m"))
-          .filter(col("m") =!= 0L)
+      val seedIds = edges.select(col("lo").as("n"))
+        .unionAll(edges.select(col("hi").as("n")))
+        .distinct()
+        .filter(pmod(col("n"), lit(seedsMod)) === 0)
+        .orderBy("n").limit(maxSeeds + 1).collect().map(_.getLong(0))
+      require(seedIds.length <= maxSeeds,
+        s"ANF seed set exceeds maxSeeds=$maxSeeds for seedsMod=$seedsMod " +
+          "— raise seedsMod (fewer seeds) or pass a larger explicit bound")
+      val roundTotals = Array.fill(rounds)(0L)
+      seedIds.grouped(63).foreach { chunk =>
+        var frontier = chunk.zipWithIndex
+          .map { case (s, i) => (s, 1L << i) }.toSeq.toDF("n", "m")
           .localCheckpoint(true)
-        // One (seed, node) reach per set mask bit: the round's ANF
-        // increment is the total POPCOUNT over the new frontier.
-        val bits = next.agg(coalesce(sum(expr("bit_count(m)")),
-          lit(0L)).as("b")).head().getLong(0)
-        roundTotals(r - 1) += bits
-        visited = visited
-          .unionAll(next.select(col("n"), col("m").as("vm")))
-          .groupBy("n").agg(expr("bit_or(vm)").as("vm"))
+        var visited = frontier.select(col("n"), col("m").as("vm"))
           .localCheckpoint(true)
-        frontier = next
+        for (r <- 1 to rounds) {
+          val next = adj
+            .join(frontier.select(col("n").as("src"), col("m")), Seq("src"))
+            .groupBy(col("dst").as("n")).agg(expr("bit_or(m)").as("em"))
+            .join(visited, Seq("n"), "left")
+            .select(col("n"),
+              expr("em & ~coalesce(vm, CAST(0 AS BIGINT))").as("m"))
+            .filter(col("m") =!= 0L)
+            .localCheckpoint(true)
+          // One (seed, node) reach per set mask bit: the round's ANF
+          // increment is the total POPCOUNT over the new frontier.
+          val bits = next.agg(coalesce(sum(expr("bit_count(m)")),
+            lit(0L)).as("b")).head().getLong(0)
+          roundTotals(r - 1) += bits
+          visited = visited
+            .unionAll(next.select(col("n"), col("m").as("vm")))
+            .groupBy("n").agg(expr("bit_or(vm)").as("vm"))
+            .localCheckpoint(true)
+          frontier = next
+        }
       }
+      val cums = roundTotals.scanLeft(0L)(_ + _).tail
+      val total = cums.last
+      val effDiam =
+        if (total == 0L) 0L
+        else (1 to rounds).find(r => cums(r - 1) * 10 >= 9 * total).get.toLong
+      (1 to rounds).map { r =>
+        val frac = if (total == 0L) 0L else cums(r - 1) * 1000000L / total
+        (r.toLong, roundTotals(r - 1), cums(r - 1), frac, effDiam)
+      }.toDF("r", "reached", "cum", "frac_micro", "eff_diam")
+        .orderBy("r")
     }
-    val cums = roundTotals.scanLeft(0L)(_ + _).tail
-    val total = cums.last
-    val effDiam =
-      if (total == 0L) 0L
-      else (1 to rounds).find(r => cums(r - 1) * 10 >= 9 * total).get.toLong
-    (1 to rounds).map { r =>
-      val frac = if (total == 0L) 0L else cums(r - 1) * 1000000L / total
-      (r.toLong, roundTotals(r - 1), cums(r - 1), frac, effDiam)
-    }.toDF("r", "reached", "cum", "frac_micro", "eff_diam")
-      .orderBy("r")
   }
 }

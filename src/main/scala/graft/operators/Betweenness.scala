@@ -41,75 +41,70 @@ object Betweenness {
     // integer delta accumulation in ONE executor task under the size
     // threshold; the distributed (seed, node, sigma) loop below is the
     // 100 TB path.
-    if (SmallGraph.smallEnoughScaled(canonEdges, SmallGraph.SuperlinearMaxBytes, "lo", "hi")) {
-      val spark = canonEdges.sparkSession
-      import spark.implicits._
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          SmallGraph.betweennessKernel(it, seedsMod, rounds, k))
-        .toDF("n", "bc_micro")
-    }
-    val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
-    val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
-      .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val f0 = edges.select(col("lo").as("n"))
-      .unionAll(edges.select(col("hi").as("n")))
-      .distinct()
-      .filter(pmod(col("n"), lit(seedsMod)) === 0)
-      .select(col("n").as("s"), col("n"), lit(1L).as("sigma"))
-    // Forward: level-r frontiers carry exact path counts. Only the
-    // per-round frontier is checkpointed — the visited set is a plain
-    // union of already-checkpointed frontiers (shallow lineage, no
-    // multiplication), so materializing it separately would just buy
-    // extra checkpoint jobs.
-    val levels = scala.collection.mutable.ArrayBuffer(f0)
-    var visited = f0.select(col("s"), col("n"))
-    for (_ <- 1 to rounds) {
-      val prev = levels.last
-      val next = adj
-        .join(prev.select(col("s"), col("n").as("src"), col("sigma")),
-          Seq("src"))
-        .groupBy(col("s"), col("dst").as("n"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(visited, Seq("s", "n"), "left_anti")
+    SmallGraph.route(canonEdges, Seq("lo", "hi"), cost = SmallGraph.Superlinear)(
+        SmallGraph.betweennessKernel(_, seedsMod, rounds, k),
+        "n", "bc_micro") { canonEdges =>
+      val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
+      val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
+        .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
+        .repartition(col("src"))
         .localCheckpoint(true)
-      visited = visited.unionAll(next.select(col("s"), col("n")))
-      levels += next
+      val f0 = edges.select(col("lo").as("n"))
+        .unionAll(edges.select(col("hi").as("n")))
+        .distinct()
+        .filter(pmod(col("n"), lit(seedsMod)) === 0)
+        .select(col("n").as("s"), col("n"), lit(1L).as("sigma"))
+      // Forward: level-r frontiers carry exact path counts. Only the
+      // per-round frontier is checkpointed — the visited set is a plain
+      // union of already-checkpointed frontiers (shallow lineage, no
+      // multiplication), so materializing it separately would just buy
+      // extra checkpoint jobs.
+      val levels = scala.collection.mutable.ArrayBuffer(f0)
+      var visited = f0.select(col("s"), col("n"))
+      for (_ <- 1 to rounds) {
+        val prev = levels.last
+        val next = adj
+          .join(prev.select(col("s"), col("n").as("src"), col("sigma")),
+            Seq("src"))
+          .groupBy(col("s"), col("dst").as("n"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .join(visited, Seq("s", "n"), "left_anti")
+          .localCheckpoint(true)
+        visited = visited.unionAll(next.select(col("s"), col("n")))
+        levels += next
+      }
+      // Backward: δ flows from the horizon toward the seeds; every
+      // f(ℓ) node gets a row (no-successor nodes at δ = 0).
+      var delta = levels(rounds).withColumn("delta", lit(0L))
+      val contributions = scala.collection.mutable.ArrayBuffer(delta)
+      for (l <- (rounds - 1) to 1 by -1) {
+        val fromSucc = levels(l)
+          .select(col("s"), col("n"), col("sigma"))
+          .join(adj, col("n") === col("src"))
+          .join(delta.select(col("s"), col("n").as("w_n"),
+              col("sigma").as("w_sigma"), col("delta").as("w_delta")),
+            Seq("s")
+          )
+          .filter(col("dst") === col("w_n"))
+          .select(col("s"), col("n"),
+            expr("sigma * (1000000 + w_delta) div w_sigma").as("c"))
+          .groupBy("s", "n").agg(sum(col("c")).as("dsum"))
+        // Every δ(ℓ) except the last is consumed TWICE (next level + the
+        // final union) — without a checkpoint the recompute tree doubles
+        // per level; δ(1) has a single consumer and stays lazy.
+        delta = levels(l)
+          .join(fromSucc, Seq("s", "n"), "left")
+          .select(col("s"), col("n"), col("sigma"),
+            coalesce(col("dsum"), lit(0L)).as("delta"))
+        if (l > 1) delta = delta.localCheckpoint(true)
+        contributions += delta
+      }
+      contributions.map(_.select(col("n"), col("delta")))
+        .reduce(_ unionAll _)
+        .groupBy("n").agg(sum(col("delta")).as("bc_micro"))
+        .orderBy(col("bc_micro").desc, col("n"))
+        .limit(k)
     }
-    // Backward: δ flows from the horizon toward the seeds; every
-    // f(ℓ) node gets a row (no-successor nodes at δ = 0).
-    var delta = levels(rounds).withColumn("delta", lit(0L))
-    val contributions = scala.collection.mutable.ArrayBuffer(delta)
-    for (l <- (rounds - 1) to 1 by -1) {
-      val fromSucc = levels(l)
-        .select(col("s"), col("n"), col("sigma"))
-        .join(adj, col("n") === col("src"))
-        .join(delta.select(col("s"), col("n").as("w_n"),
-            col("sigma").as("w_sigma"), col("delta").as("w_delta")),
-          Seq("s")
-        )
-        .filter(col("dst") === col("w_n"))
-        .select(col("s"), col("n"),
-          expr("sigma * (1000000 + w_delta) div w_sigma").as("c"))
-        .groupBy("s", "n").agg(sum(col("c")).as("dsum"))
-      // Every δ(ℓ) except the last is consumed TWICE (next level + the
-      // final union) — without a checkpoint the recompute tree doubles
-      // per level; δ(1) has a single consumer and stays lazy.
-      delta = levels(l)
-        .join(fromSucc, Seq("s", "n"), "left")
-        .select(col("s"), col("n"), col("sigma"),
-          coalesce(col("dsum"), lit(0L)).as("delta"))
-      if (l > 1) delta = delta.localCheckpoint(true)
-      contributions += delta
-    }
-    contributions.map(_.select(col("n"), col("delta")))
-      .reduce(_ unionAll _)
-      .groupBy("n").agg(sum(col("delta")).as("bc_micro"))
-      .orderBy(col("bc_micro").desc, col("n"))
-      .limit(k)
   }
 
   /** Generated DuckDB replay: R forward rounds carrying (seed, node, σ)

@@ -34,42 +34,39 @@ object Bfs {
     // COST gate (SmallGraph): identical frontier expansion inside ONE
     // executor task under the size threshold; the distributed loop
     // below is the 100 TB path.
-    if (SmallGraph.smallEnough(canonEdges, "lo", "hi")) {
-      import spark.implicits._
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => SmallGraph.bfsKernel(it, seedsMod, rounds))
-        .toDF("hop", "n_nodes", "sum_id")
-    }
-    val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
-    // Undirected graph, directed adjacency: each edge contributes both
-    // directions so one semi-join by src expands a frontier fully.
-    val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
-      .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
-      .localCheckpoint(true)
-    val nodes = edges.select(col("lo").as("n"))
-      .unionAll(edges.select(col("hi").as("n")))
-      .distinct()
-    var frontier = nodes.filter(pmod(col("n"), lit(seedsMod)) === 0)
-      .localCheckpoint(true)
-    var visited = frontier
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    for (r <- 0 to rounds) {
-      val row = frontier
-        .agg(count(lit(1)).as("c"), coalesce(sum(col("n")), lit(0L)).as("s"))
-        .head()
-      out += ((r.toLong, row.getLong(0), row.getLong(1)))
-      if (r < rounds) {
-        frontier = adj
-          .join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
-          .select(col("dst").as("n")).distinct()
-          .join(visited, Seq("n"), "left_anti")
-          .localCheckpoint(true)
-        visited = visited.unionAll(frontier).localCheckpoint(true)
+    SmallGraph.route(canonEdges, Seq("lo", "hi"))(
+        SmallGraph.bfsKernel(_, seedsMod, rounds),
+        "hop", "n_nodes", "sum_id") { canonEdges =>
+      val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
+      // Undirected graph, directed adjacency: each edge contributes both
+      // directions so one semi-join by src expands a frontier fully.
+      val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
+        .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
+        .localCheckpoint(true)
+      val nodes = edges.select(col("lo").as("n"))
+        .unionAll(edges.select(col("hi").as("n")))
+        .distinct()
+      var frontier = nodes.filter(pmod(col("n"), lit(seedsMod)) === 0)
+        .localCheckpoint(true)
+      var visited = frontier
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      for (r <- 0 to rounds) {
+        val row = frontier
+          .agg(count(lit(1)).as("c"), coalesce(sum(col("n")), lit(0L)).as("s"))
+          .head()
+        out += ((r.toLong, row.getLong(0), row.getLong(1)))
+        if (r < rounds) {
+          frontier = adj
+            .join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
+            .select(col("dst").as("n")).distinct()
+            .join(visited, Seq("n"), "left_anti")
+            .localCheckpoint(true)
+          visited = visited.unionAll(frontier).localCheckpoint(true)
+        }
       }
+      import spark.implicits._
+      out.toSeq.toDF("hop", "n_nodes", "sum_id")
     }
-    import spark.implicits._
-    out.toSeq.toDF("hop", "n_nodes", "sum_id")
   }
 
   /** Generated DuckDB replay: the same R expansion rounds as chained

@@ -34,61 +34,58 @@ object Eccentricity {
     // COST gate (SmallGraph): per-seed BFS inside ONE executor task
     // under the size threshold; the bit-parallel loop below is the
     // 100 TB path.
-    if (SmallGraph.smallEnoughScaled(canonEdges, SmallGraph.SuperlinearMaxBytes, "lo", "hi")) {
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          SmallGraph.eccentricityKernel(it, seedsMod, rounds, maxSeeds))
-        .toDF("seed", "ecc", "n_reached")
-    }
-    val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
-    val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
-      .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val seedIds = edges.select(col("lo").as("n"))
-      .unionAll(edges.select(col("hi").as("n")))
-      .distinct()
-      .filter(pmod(col("n"), lit(seedsMod)) === 0)
-      .orderBy("n").limit(maxSeeds + 1).collect().map(_.getLong(0))
-    require(seedIds.length <= maxSeeds,
-      s"eccentricity seed set exceeds maxSeeds=$maxSeeds for seedsMod=" +
-        s"$seedsMod — raise seedsMod (fewer seeds) or pass a larger " +
-        "explicit bound; the per-seed accumulator is driver-resident")
-    val acc = scala.collection.mutable.LinkedHashMap.empty[Long, (Long, Long)]
-    seedIds.foreach(s => acc(s) = (0L, 0L))
-    seedIds.grouped(63).foreach { chunk =>
-      var frontier = chunk.zipWithIndex
-        .map { case (s, i) => (s, 1L << i) }.toSeq.toDF("n", "m")
+    SmallGraph.route(canonEdges, Seq("lo", "hi"), cost = SmallGraph.Superlinear)(
+        SmallGraph.eccentricityKernel(_, seedsMod, rounds, maxSeeds),
+        "seed", "ecc", "n_reached") { canonEdges =>
+      val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
+      val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
+        .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
+        .repartition(col("src"))
         .localCheckpoint(true)
-      var visited = frontier.select(col("n"), col("m").as("vm"))
-        .localCheckpoint(true)
-      for (r <- 1 to rounds) {
-        val next = adj
-          .join(frontier.select(col("n").as("src"), col("m")), Seq("src"))
-          .groupBy(col("dst").as("n")).agg(expr("bit_or(m)").as("em"))
-          .join(visited, Seq("n"), "left")
-          .select(col("n"),
-            expr("em & ~coalesce(vm, CAST(0 AS BIGINT))").as("m"))
-          .filter(col("m") =!= 0L)
+      val seedIds = edges.select(col("lo").as("n"))
+        .unionAll(edges.select(col("hi").as("n")))
+        .distinct()
+        .filter(pmod(col("n"), lit(seedsMod)) === 0)
+        .orderBy("n").limit(maxSeeds + 1).collect().map(_.getLong(0))
+      require(seedIds.length <= maxSeeds,
+        s"eccentricity seed set exceeds maxSeeds=$maxSeeds for seedsMod=" +
+          s"$seedsMod — raise seedsMod (fewer seeds) or pass a larger " +
+          "explicit bound; the per-seed accumulator is driver-resident")
+      val acc = scala.collection.mutable.LinkedHashMap.empty[Long, (Long, Long)]
+      seedIds.foreach(s => acc(s) = (0L, 0L))
+      seedIds.grouped(63).foreach { chunk =>
+        var frontier = chunk.zipWithIndex
+          .map { case (s, i) => (s, 1L << i) }.toSeq.toDF("n", "m")
           .localCheckpoint(true)
-        val countsRow = next.agg(count(lit(1)).as("_n"),
-            chunk.indices.map(i => sum(shiftright(col("m"), i)
-              .bitwiseAND(1L)).as(s"b$i")): _*)
-          .head()
-        chunk.zipWithIndex.foreach { case (s, i) =>
-          val c = Option(countsRow.get(i + 1)).fold(0L)(_.asInstanceOf[Long])
-          if (c > 0L) acc(s) = (r.toLong, acc(s)._2 + c)
+        var visited = frontier.select(col("n"), col("m").as("vm"))
+          .localCheckpoint(true)
+        for (r <- 1 to rounds) {
+          val next = adj
+            .join(frontier.select(col("n").as("src"), col("m")), Seq("src"))
+            .groupBy(col("dst").as("n")).agg(expr("bit_or(m)").as("em"))
+            .join(visited, Seq("n"), "left")
+            .select(col("n"),
+              expr("em & ~coalesce(vm, CAST(0 AS BIGINT))").as("m"))
+            .filter(col("m") =!= 0L)
+            .localCheckpoint(true)
+          val countsRow = next.agg(count(lit(1)).as("_n"),
+              chunk.indices.map(i => sum(shiftright(col("m"), i)
+                .bitwiseAND(1L)).as(s"b$i")): _*)
+            .head()
+          chunk.zipWithIndex.foreach { case (s, i) =>
+            val c = Option(countsRow.get(i + 1)).fold(0L)(_.asInstanceOf[Long])
+            if (c > 0L) acc(s) = (r.toLong, acc(s)._2 + c)
+          }
+          visited = visited
+            .unionAll(next.select(col("n"), col("m").as("vm")))
+            .groupBy("n").agg(expr("bit_or(vm)").as("vm"))
+            .localCheckpoint(true)
+          frontier = next
         }
-        visited = visited
-          .unionAll(next.select(col("n"), col("m").as("vm")))
-          .groupBy("n").agg(expr("bit_or(vm)").as("vm"))
-          .localCheckpoint(true)
-        frontier = next
       }
+      acc.toSeq.map { case (s, (e, n)) => (s, e, n) }
+        .toDF("seed", "ecc", "n_reached")
+        .orderBy("seed")
     }
-    acc.toSeq.map { case (s, (e, n)) => (s, e, n) }
-      .toDF("seed", "ecc", "n_reached")
-      .orderBy("seed")
   }
 }

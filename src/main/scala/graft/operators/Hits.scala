@@ -48,40 +48,36 @@ object Hits {
     // COST gate (SmallGraph): the half-step sums and the truncating
     // BigInt renormalization run inside ONE executor task under the
     // size threshold; the distributed loop below is the 100 TB path.
-    if (SmallGraph.smallEnough(edges, leftCol, rightCol)) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return edges.select(col(leftCol).cast("long"), col(rightCol).cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => SmallGraph.hitsKernel(it, rounds, k))
-        .toDF("kind", "id", "score_unit")
+    SmallGraph.route(edges, Seq(leftCol, rightCol))(
+        SmallGraph.hitsKernel(_, rounds, k), "kind", "id", "score_unit") {
+        edges =>
+      val e = edges.select(col(leftCol).as("c"), col(rightCol).as("p"))
+        .distinct().repartition(col("c")).localCheckpoint(true)
+      var h = e.select(col("c")).distinct()
+        .select(col("c"), lit(Unit6).as("h")).localCheckpoint(true)
+      val bcast = h.count() <= broadcastMaxNodes &&
+        e.select(col("p")).distinct().count() <= broadcastMaxNodes
+      def gated(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+      def renorm(raw: DataFrame, keyCol: String, out: String): DataFrame =
+        raw.crossJoin(broadcast(raw.agg(max(col("s")).as("mx"))))
+          .select(col(keyCol),
+            expr(s"CAST(s AS DECIMAL(38,0)) * $Unit6 div mx").as(out))
+      var a: DataFrame = null
+      for (_ <- 1 to rounds) {
+        val aRaw = e.join(gated(h), Seq("c"))
+          .groupBy("p").agg(sum(col("h")).as("s"))
+        a = renorm(aRaw, "p", "a").localCheckpoint(true)
+        val hRaw = e.join(gated(a), Seq("p"))
+          .groupBy("c").agg(sum(col("a")).as("s"))
+        h = renorm(hRaw, "c", "h").localCheckpoint(true)
+      }
+      def top(df: DataFrame, kind: String, id: Column, score: Column): DataFrame =
+        df.orderBy(score.desc, id).limit(k)
+          .select(lit(kind).as("kind"), id.as("id"), score.as("score_unit"))
+      top(a, "auth", col("p"), col("a"))
+        .unionByName(top(h, "hub", col("c"), col("h")))
+        .orderBy(col("kind"), col("score_unit").desc, col("id"))
     }
-    val e = edges.select(col(leftCol).as("c"), col(rightCol).as("p"))
-      .distinct().repartition(col("c")).localCheckpoint(true)
-    var h = e.select(col("c")).distinct()
-      .select(col("c"), lit(Unit6).as("h")).localCheckpoint(true)
-    val bcast = h.count() <= broadcastMaxNodes &&
-      e.select(col("p")).distinct().count() <= broadcastMaxNodes
-    def gated(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    def renorm(raw: DataFrame, keyCol: String, out: String): DataFrame =
-      raw.crossJoin(broadcast(raw.agg(max(col("s")).as("mx"))))
-        .select(col(keyCol),
-          expr(s"CAST(s AS DECIMAL(38,0)) * $Unit6 div mx").as(out))
-    var a: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val aRaw = e.join(gated(h), Seq("c"))
-        .groupBy("p").agg(sum(col("h")).as("s"))
-      a = renorm(aRaw, "p", "a").localCheckpoint(true)
-      val hRaw = e.join(gated(a), Seq("p"))
-        .groupBy("c").agg(sum(col("a")).as("s"))
-      h = renorm(hRaw, "c", "h").localCheckpoint(true)
-    }
-    def top(df: DataFrame, kind: String, id: Column, score: Column): DataFrame =
-      df.orderBy(score.desc, id).limit(k)
-        .select(lit(kind).as("kind"), id.as("id"), score.as("score_unit"))
-    top(a, "auth", col("p"), col("a"))
-      .unionByName(top(h, "hub", col("c"), col("h")))
-      .orderBy(col("kind"), col("score_unit").desc, col("id"))
   }
 
   /** Generated DuckDB replay over an edge CTE `edgesSql` (columns c, p):

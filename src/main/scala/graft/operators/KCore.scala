@@ -30,62 +30,58 @@ object KCore {
     // COST gate (SmallGraph): identical peel rounds inside ONE executor
     // task under the size threshold; the distributed loop below is the
     // 100 TB path.
-    if (SmallGraph.smallEnough(canonEdges, "lo", "hi")) {
+    SmallGraph.route(canonEdges, Seq("lo", "hi"))(
+        SmallGraph.kcoreKernel(_, k, rounds),
+        "round", "n_nodes", "n_edges") { canonEdges =>
+      // localCheckpoint per round, NOT persist: each round references its
+      // parent edge set 3–4 times, so the un-truncated logical lineage (and
+      // its explain/UI string) grows ~4^R on top of whatever produced the
+      // edges — at R = 6 that OOM'd the driver building the plan STRING
+      // before a single task ran. Checkpointing truncates the plan to the
+      // materialized blocks, the same medicine PageRank takes.
+      var edges = canonEdges.select(col("lo"), col("hi"))
+        .localCheckpoint(true)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       val spark = canonEdges.sparkSession
-      import spark.implicits._
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => SmallGraph.kcoreKernel(it, k, rounds))
-        .toDF("round", "n_nodes", "n_edges")
-    }
-    // localCheckpoint per round, NOT persist: each round references its
-    // parent edge set 3–4 times, so the un-truncated logical lineage (and
-    // its explain/UI string) grows ~4^R on top of whatever produced the
-    // edges — at R = 6 that OOM'd the driver building the plan STRING
-    // before a single task ran. Checkpointing truncates the plan to the
-    // materialized blocks, the same medicine PageRank takes.
-    var edges = canonEdges.select(col("lo"), col("hi"))
-      .localCheckpoint(true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val spark = canonEdges.sparkSession
-    for (r <- 0 to rounds) {
-      // One degree aggregate per round serves the survivor filter, the
-      // node count (every surviving node has ≥ 1 edge, so |deg| ==
-      // |nodes|) AND the edge count (Σdeg = 2|E|) — one scheduler job
-      // where the first cut of this operator ran three (deg.count +
-      // edges.count + the checkpoint): on KB-scale late rounds the job
-      // FLOOR, not the data, is the cost.
-      // deg is NOT checkpointed: it sits one aggregate above the
-      // checkpointed edge set (no lineage growth), and recomputing it in
-      // the two jobs that read it costs less than a third materialization
-      // job per round — 2 scheduler jobs per round total.
-      val deg = edges.select(col("lo").as("n"))
-        .unionAll(edges.select(col("hi").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val c = deg.agg(count(lit(1)).as("nn"),
-        coalesce(sum(col("d")), lit(0L)).as("sd")).head()
-      val (nNodes, nEdges) = (c.getLong(0), c.getLong(1) / 2)
-      out += ((r.toLong, nNodes, nEdges))
-      if (r < rounds) {
-        val keep = deg.filter(col("d") >= k).select("n")
-        // Late rounds shrink to KB scale; coalesce the survivor edge set
-        // so every subsequent job runs proportionally few tasks (~500k
-        // edges per partition, never fewer than 1). coalesce only ever
-        // REDUCES partition count, so on a real cluster with large
-        // per-round relations this is a no-op — the 100 TB plan shape is
-        // unchanged; only the small-tail scheduler floor shrinks.
-        val parts = math.max(1, math.min(
-          edges.rdd.getNumPartitions, (nEdges / 500000L).toInt + 1))
-        edges = edges
-          .join(keep.select(col("n").as("lo")), Seq("lo"), "left_semi")
-          .join(keep.select(col("n").as("hi")), Seq("hi"), "left_semi")
-          .select("lo", "hi")
-          .coalesce(parts)
-          .localCheckpoint(true)
+      for (r <- 0 to rounds) {
+        // One degree aggregate per round serves the survivor filter, the
+        // node count (every surviving node has ≥ 1 edge, so |deg| ==
+        // |nodes|) AND the edge count (Σdeg = 2|E|) — one scheduler job
+        // where the first cut of this operator ran three (deg.count +
+        // edges.count + the checkpoint): on KB-scale late rounds the job
+        // FLOOR, not the data, is the cost.
+        // deg is NOT checkpointed: it sits one aggregate above the
+        // checkpointed edge set (no lineage growth), and recomputing it in
+        // the two jobs that read it costs less than a third materialization
+        // job per round — 2 scheduler jobs per round total.
+        val deg = edges.select(col("lo").as("n"))
+          .unionAll(edges.select(col("hi").as("n")))
+          .groupBy("n").agg(count(lit(1)).as("d"))
+        val c = deg.agg(count(lit(1)).as("nn"),
+          coalesce(sum(col("d")), lit(0L)).as("sd")).head()
+        val (nNodes, nEdges) = (c.getLong(0), c.getLong(1) / 2)
+        out += ((r.toLong, nNodes, nEdges))
+        if (r < rounds) {
+          val keep = deg.filter(col("d") >= k).select("n")
+          // Late rounds shrink to KB scale; coalesce the survivor edge set
+          // so every subsequent job runs proportionally few tasks (~500k
+          // edges per partition, never fewer than 1). coalesce only ever
+          // REDUCES partition count, so on a real cluster with large
+          // per-round relations this is a no-op — the 100 TB plan shape is
+          // unchanged; only the small-tail scheduler floor shrinks.
+          val parts = math.max(1, math.min(
+            edges.rdd.getNumPartitions, (nEdges / 500000L).toInt + 1))
+          edges = edges
+            .join(keep.select(col("n").as("lo")), Seq("lo"), "left_semi")
+            .join(keep.select(col("n").as("hi")), Seq("hi"), "left_semi")
+            .select("lo", "hi")
+            .coalesce(parts)
+            .localCheckpoint(true)
+        }
       }
+      import spark.implicits._
+      out.toSeq.toDF("round", "n_nodes", "n_edges")
     }
-    import spark.implicits._
-    out.toSeq.toDF("round", "n_nodes", "n_edges")
   }
 
   /** Generated DuckDB replay: the same R peel rounds as chained CTEs over

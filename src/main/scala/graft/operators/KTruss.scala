@@ -39,41 +39,37 @@ object KTruss {
     // sorted-adjacency intersections inside ONE executor task under the
     // size threshold — same triangles, same peel; the distributed
     // triangle join below is the 100 TB path.
-    if (SmallGraph.smallEnoughScaled(canonEdges, SmallGraph.SuperlinearMaxBytes, "lo", "hi")) {
-      val spark = canonEdges.sparkSession
-      import spark.implicits._
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => SmallGraph.ktrussKernel(it, k, rounds))
-        .toDF("round", "n_nodes", "n_edges")
+    SmallGraph.route(canonEdges, Seq("lo", "hi"), cost = SmallGraph.Superlinear)(
+        SmallGraph.ktrussKernel(_, k, rounds),
+        "round", "n_nodes", "n_edges") { canonEdges =>
+      var edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
+      val snapshots = scala.collection.mutable.ArrayBuffer(edges)
+      for (_ <- 1 to rounds) {
+        val (tri, releaseTri) = Triangles.trianglesReleasable(
+          edges.select(col("lo").as("x"), col("hi").as("y")), "x", "y")
+        val sup = tri.select(explode(array(
+            struct(col("n1").as("lo"), col("n2").as("hi")),
+            struct(col("n1").as("lo"), col("n3").as("hi")),
+            struct(col("n2").as("lo"), col("n3").as("hi")))).as("e"))
+          .select(col("e.lo").as("lo"), col("e.hi").as("hi"))
+          .groupBy("lo", "hi").agg(count(lit(1)).as("sup"))
+        edges = edges
+          .join(sup.filter(col("sup") >= k - 2).select("lo", "hi"),
+            Seq("lo", "hi"), "left_semi")
+          .localCheckpoint(true)
+        // eager checkpoint above has materialized this round's support pass
+        // — release the triangle intermediates so cached blocks don't
+        // accumulate linearly with rounds.
+        releaseTri()
+        snapshots += edges
+      }
+      snapshots.zipWithIndex.map { case (e, r) =>
+        e.select(col("lo").as("n")).unionAll(e.select(col("hi").as("n")))
+          .agg(count_distinct(col("n")).as("n_nodes"),
+            (count(lit(1)) / 2).cast("long").as("n_edges"))
+          .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
+      }.reduce(_ unionByName _)
     }
-    var edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
-    val snapshots = scala.collection.mutable.ArrayBuffer(edges)
-    for (_ <- 1 to rounds) {
-      val (tri, releaseTri) = Triangles.trianglesReleasable(
-        edges.select(col("lo").as("x"), col("hi").as("y")), "x", "y")
-      val sup = tri.select(explode(array(
-          struct(col("n1").as("lo"), col("n2").as("hi")),
-          struct(col("n1").as("lo"), col("n3").as("hi")),
-          struct(col("n2").as("lo"), col("n3").as("hi")))).as("e"))
-        .select(col("e.lo").as("lo"), col("e.hi").as("hi"))
-        .groupBy("lo", "hi").agg(count(lit(1)).as("sup"))
-      edges = edges
-        .join(sup.filter(col("sup") >= k - 2).select("lo", "hi"),
-          Seq("lo", "hi"), "left_semi")
-        .localCheckpoint(true)
-      // eager checkpoint above has materialized this round's support pass
-      // — release the triangle intermediates so cached blocks don't
-      // accumulate linearly with rounds.
-      releaseTri()
-      snapshots += edges
-    }
-    snapshots.zipWithIndex.map { case (e, r) =>
-      e.select(col("lo").as("n")).unionAll(e.select(col("hi").as("n")))
-        .agg(count_distinct(col("n")).as("n_nodes"),
-          (count(lit(1)) / 2).cast("long").as("n_edges"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
-    }.reduce(_ unionByName _)
   }
 
   /** Generated DuckDB replay over a canonical edge CTE `edgesSql`

@@ -35,67 +35,62 @@ object Katz {
     // COST gate (SmallGraph): the integer attenuation rounds in ONE
     // executor task under the size threshold; the distributed loop
     // below is the 100 TB path.
-    if (SmallGraph.smallEnough(canonEdges, "lo", "hi")) {
-      val spark = canonEdges.sparkSession
-      import spark.implicits._
-      lastRoundsExecuted = iterations
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          SmallGraph.katzKernel(it, alphaDen, iterations, k))
-        .toDF("node", "katz_micro")
-    }
-    val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
-    val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
-      .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val nodes = edges.select(col("lo").as("node"))
-      .unionAll(edges.select(col("hi").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    def step(s: DataFrame): DataFrame = {
-      val contrib = adj
-        .join(s.select(col("node").as("src"), col("xu")), Seq("src"))
-        .select(col("dst"), expr(s"xu div $alphaDen").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("in_u"))
-      nodes
-        .join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (lit(1000000L) + coalesce(col("in_u"), lit(0L))).as("xu"))
-    }
-    var x = nodes.withColumn("xu", lit(1000000L))
-    var rounds = 0
-    var prevChk: DataFrame = null
-    var i = 1
-    var fixed = false
-    while (i <= iterations && !fixed) {
-      x = step(x)
-      rounds += 1
-      // FixpointGate at the checkpoint boundary (see PageRank): every
-      // round's x covers the full node set, so (node, xu) set equality
-      // vs the previous checkpoint is exact state equality. Strong
-      // attenuation (large alphaDen truncating every contribution to 0)
-      // reaches this fixpoint after one round.
-      if (i % 3 == 0 && i < iterations) {
-        x = x.localCheckpoint(true)
-        if (prevChk != null &&
-            FixpointGate.same(x, prevChk, Seq("node", "xu"))) {
-          val extra = (iterations - i) % 3
-          (1 to extra).foreach(_ => x = step(x))
-          rounds += extra
-          fixed = true
-          println(s"[katz] early-exit after round ${i + extra} of " +
-            s"$iterations (state at round $i == round ${i - 3} exactly; " +
-            s"final state provably identical)")
-        } else prevChk = x
+    lastRoundsExecuted = iterations // the distributed loop overwrites it
+    SmallGraph.route(canonEdges, Seq("lo", "hi"))(
+        SmallGraph.katzKernel(_, alphaDen, iterations, k),
+        "node", "katz_micro") { canonEdges =>
+      val edges = canonEdges.select(col("lo"), col("hi")).localCheckpoint(true)
+      val adj = edges.select(col("lo").as("src"), col("hi").as("dst"))
+        .unionAll(edges.select(col("hi").as("src"), col("lo").as("dst")))
+        .repartition(col("src"))
+        .localCheckpoint(true)
+      val nodes = edges.select(col("lo").as("node"))
+        .unionAll(edges.select(col("hi").as("node")))
+        .distinct()
+        .localCheckpoint(true)
+      def step(s: DataFrame): DataFrame = {
+        val contrib = adj
+          .join(s.select(col("node").as("src"), col("xu")), Seq("src"))
+          .select(col("dst"), expr(s"xu div $alphaDen").as("c"))
+          .groupBy("dst").agg(sum(col("c")).as("in_u"))
+        nodes
+          .join(contrib, nodes("node") === contrib("dst"), "left")
+          .select(col("node"),
+            (lit(1000000L) + coalesce(col("in_u"), lit(0L))).as("xu"))
       }
-      i += 1
+      var x = nodes.withColumn("xu", lit(1000000L))
+      var rounds = 0
+      var prevChk: DataFrame = null
+      var i = 1
+      var fixed = false
+      while (i <= iterations && !fixed) {
+        x = step(x)
+        rounds += 1
+        // FixpointGate at the checkpoint boundary (see PageRank): every
+        // round's x covers the full node set, so (node, xu) set equality
+        // vs the previous checkpoint is exact state equality. Strong
+        // attenuation (large alphaDen truncating every contribution to 0)
+        // reaches this fixpoint after one round.
+        if (i % 3 == 0 && i < iterations) {
+          x = x.localCheckpoint(true)
+          if (prevChk != null &&
+              FixpointGate.same(x, prevChk, Seq("node", "xu"))) {
+            val extra = (iterations - i) % 3
+            (1 to extra).foreach(_ => x = step(x))
+            rounds += extra
+            fixed = true
+            println(s"[katz] early-exit after round ${i + extra} of " +
+              s"$iterations (state at round $i == round ${i - 3} exactly; " +
+              s"final state provably identical)")
+          } else prevChk = x
+        }
+        i += 1
+      }
+      lastRoundsExecuted = rounds
+      x.select(col("node"), col("xu").as("katz_micro"))
+        .orderBy(col("katz_micro").desc, col("node"))
+        .limit(k)
     }
-    lastRoundsExecuted = rounds
-    x.select(col("node"), col("xu").as("katz_micro"))
-      .orderBy(col("katz_micro").desc, col("node"))
-      .limit(k)
   }
 
   /** Generated DuckDB replay: the identical per-edge truncating

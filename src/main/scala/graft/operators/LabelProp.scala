@@ -49,27 +49,22 @@ object LabelProp {
     // COST gate (SmallGraph): identical synchronous vote rounds inside
     // ONE executor task under the size threshold; the distributed loop
     // below is the 100 TB path.
-    if (SmallGraph.smallEnough(canonEdges, "lo", "hi")) {
-      val spark = canonEdges.sparkSession
-      import spark.implicits._
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => SmallGraph.labelPropSummaryKernel(it, rounds)
-          .map { case (r, c, l) => (r, c, Option(l)) }) // nullable like
-        .toDF("round", "n_communities", "largest") // the distributed max()
+    SmallGraph.route(canonEdges, Seq("lo", "hi"))(
+        SmallGraph.labelPropSummaryKernel(_, rounds),
+        "round", "n_communities", "largest") { canonEdges =>
+      val snapshots = snapshotsOf(canonEdges, rounds, broadcastMaxLabels)
+      // Peeling never reads the summaries, so they all evaluate in ONE
+      // final job over the checkpointed snapshots instead of one collect
+      // per round — rounds+1 scheduler jobs collapse to 1 (the k-core
+      // lesson applied one step further; its per-round count can't defer
+      // because it also sizes the next round's coalesce — this one doesn't).
+      snapshots.zipWithIndex.map { case (l, r) =>
+        l.groupBy("lbl").agg(count(lit(1)).as("sz"))
+          .agg(count(lit(1)).as("n_communities"), max(col("sz")).as("largest"))
+          .select(lit(r.toLong).as("round"), col("n_communities"),
+            col("largest"))
+      }.reduce(_ unionByName _)
     }
-    val snapshots = snapshotsOf(canonEdges, rounds, broadcastMaxLabels)
-    // Peeling never reads the summaries, so they all evaluate in ONE
-    // final job over the checkpointed snapshots instead of one collect
-    // per round — rounds+1 scheduler jobs collapse to 1 (the k-core
-    // lesson applied one step further; its per-round count can't defer
-    // because it also sizes the next round's coalesce — this one doesn't).
-    snapshots.zipWithIndex.map { case (l, r) =>
-      l.groupBy("lbl").agg(count(lit(1)).as("sz"))
-        .agg(count(lit(1)).as("n_communities"), max(col("sz")).as("largest"))
-        .select(lit(r.toLong).as("round"), col("n_communities"),
-          col("largest"))
-    }.reduce(_ unionByName _)
   }
 
   /** The converged (n, lbl) assignment after `rounds` — the relation
@@ -78,16 +73,11 @@ object LabelProp {
                   broadcastMaxLabels: Long = BroadcastMaxLabels): DataFrame = {
     // Same COST gate as [[propagateSummary]] — one shared kernel runs
     // the rounds, so summary and final labels cannot drift apart.
-    if (SmallGraph.smallEnough(canonEdges, "lo", "hi")) {
-      val spark = canonEdges.sparkSession
-      import spark.implicits._
-      return canonEdges.select(col("lo").cast("long"), col("hi").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => SmallGraph.labelPropFinalKernel(it, rounds)
-          .map { case (n, l) => (n, Option(l)) }) // nullable like the
-        .toDF("n", "lbl") // distributed argmax's -w.neg
+    SmallGraph.route(canonEdges, Seq("lo", "hi"))(
+        SmallGraph.labelPropFinalKernel(_, rounds),
+        "n", "lbl") { canonEdges =>
+      snapshotsOf(canonEdges, rounds, broadcastMaxLabels).last
     }
-    snapshotsOf(canonEdges, rounds, broadcastMaxLabels).last
   }
 
   private def snapshotsOf(canonEdges: DataFrame, rounds: Int,

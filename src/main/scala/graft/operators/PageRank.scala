@@ -47,104 +47,98 @@ object PageRank {
     // picorank-unit arithmetic — bit-identical output, ~90 scheduler
     // jobs collapse to 1. The distributed loop below stays the 100 TB
     // path and is auto-selected above the threshold.
-    if (SmallGraph.smallEnough(edges, srcCol, dstCol)) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      lastRoundsExecuted = iterations
-      return edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          SmallGraph.pagerankKernel(it, iterations, damping, null)
-            .map { case (n, r) => (n, Option(r)) }) // Option: match the
-        .toDF("node", "rank") // distributed rank column's nullability
-    }
-    // Scheduler-floor guard: an iterative query launches
-    // iterations × stages × partitions tasks, so at KB/MB edge scale the
-    // session-wide partition count costs more in task launches than it
-    // buys in parallelism. Size partitions to ~128k edges each (floor 1,
-    // cap the session default, which large graphs keep). The pre-distinct
-    // input count is a scan-only upper bound — no extra shuffle to learn
-    // it. Partitioning never changes results — unit sums are exact and
-    // order-independent.
-    val mUpper = edges.count()
-    val defaultParts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val parts =
-      math.max(1L, math.min(defaultParts.toLong, mUpper / 131072L + 1L)).toInt
-    // The distinct edge relation is checkpointed ONCE, already hash-
-    // partitioned by src at the chosen width; the degree aggregation and
-    // the degree join both reuse that partitioning (no further exchange),
-    // and nodes derive from the checkpoint instead of re-running the
-    // distinct.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(parts, col("src")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint() // tiny relation, reused every round
-    val n = nodes.count()
-    val eDeg = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint()
+    lastRoundsExecuted = iterations // the distributed loop overwrites it
+    SmallGraph.route(edges, Seq(srcCol, dstCol))(
+        SmallGraph.pagerankKernel(_, iterations, damping, null),
+        "node", "rank") { edges =>
+      // Scheduler-floor guard: an iterative query launches
+      // iterations × stages × partitions tasks, so at KB/MB edge scale the
+      // session-wide partition count costs more in task launches than it
+      // buys in parallelism. Size partitions to ~128k edges each (floor 1,
+      // cap the session default, which large graphs keep). The pre-distinct
+      // input count is a scan-only upper bound — no extra shuffle to learn
+      // it. Partitioning never changes results — unit sums are exact and
+      // order-independent.
+      val mUpper = edges.count()
+      val defaultParts = edges.sparkSession.sessionState.conf.numShufflePartitions
+      val parts =
+        math.max(1L, math.min(defaultParts.toLong, mUpper / 131072L + 1L)).toInt
+      // The distinct edge relation is checkpointed ONCE, already hash-
+      // partitioned by src at the chosen width; the degree aggregation and
+      // the degree join both reuse that partitioning (no further exchange),
+      // and nodes derive from the checkpoint instead of re-running the
+      // distinct.
+      val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .distinct().repartition(parts, col("src")).localCheckpoint()
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+        .localCheckpoint() // tiny relation, reused every round
+      val n = nodes.count()
+      val eDeg = e.join(
+          e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+        .localCheckpoint()
 
-    val base = lit((1.0 - damping) / n)
-    // The rank update folds INLINE into the next round's contribution
-    // join, so the loop carries only the small per-destination unit sums
-    // (`contribs`, ≤ |nodes| rows) instead of materializing a full ranks
-    // relation each round. That halves the per-round stage count — one
-    // eDeg ⋈ contribs left join (AQE broadcasts the tiny contribs side:
-    // no shuffle) + one partial-then-final aggregation (the round's single
-    // exchange) — which is what dominates iterative wall time at the
-    // scheduler floor, while staying algebraically IDENTICAL to the
-    // rank-relation form round for round: a node missing from contribs
-    // has no in-edges and takes rank = base, exactly as the left join's
-    // coalesce encodes. Integer picorank units keep every sum exact and
-    // order-independent, so this restructuring cannot move a single bit.
-    def rankExpr: org.apache.spark.sql.Column =
-      base + lit(damping) * (coalesce(col("in_units"), lit(0L)).cast("double") / 1e12)
-    def step(c: DataFrame): DataFrame = eDeg
-      .join(c.withColumnRenamed("dst", "_cdst"),
-        col("src") === col("_cdst"), "left")
-      .select(col("dst"),
-        floor(rankExpr / col("outdeg") * 1e12 + 0.5).cast("long").as("units"))
-      .groupBy("dst").agg(sum("units").as("in_units"))
-    var contribs = eDeg
-      .select(col("dst"),
-        floor(lit(1.0 / n) / col("outdeg") * 1e12 + 0.5).cast("long").as("units"))
-      .groupBy("dst").agg(sum("units").as("in_units"))
-    var rounds = 1
-    var prevChk: DataFrame = null
-    var i = 2
-    var fixed = false
-    while (i <= iterations && !fixed) {
-      contribs = step(contribs)
-      rounds += 1
-      // Truncate lineage every 3 rounds: keeps the plan O(1) deep (and
-      // AQE re-plans each chunk with real sizes). Recompute on executor
-      // loss is acceptable — each round is cheap relative to the
-      // full-lineage replay this prevents. The same boundary doubles as
-      // the FixpointGate probe: every round ≥ 1 covers the full eDeg dst
-      // set, so (dst, in_units) set equality vs the previous checkpoint
-      // is exact state equality.
-      if (i % 3 == 0 && i < iterations) {
-        contribs = contribs.localCheckpoint()
-        if (prevChk != null &&
-            FixpointGate.same(contribs, prevChk, Seq("dst", "in_units"))) {
-          val extra = (iterations - i) % 3
-          (1 to extra).foreach(_ => contribs = step(contribs))
-          rounds += extra
-          fixed = true
-          println(s"[pagerank] early-exit after round ${i + extra} of " +
-            s"$iterations (state at round $i == round ${i - 3} exactly; " +
-            s"final state provably identical)")
-        } else prevChk = contribs
+      val base = lit((1.0 - damping) / n)
+      // The rank update folds INLINE into the next round's contribution
+      // join, so the loop carries only the small per-destination unit sums
+      // (`contribs`, ≤ |nodes| rows) instead of materializing a full ranks
+      // relation each round. That halves the per-round stage count — one
+      // eDeg ⋈ contribs left join (AQE broadcasts the tiny contribs side:
+      // no shuffle) + one partial-then-final aggregation (the round's single
+      // exchange) — which is what dominates iterative wall time at the
+      // scheduler floor, while staying algebraically IDENTICAL to the
+      // rank-relation form round for round: a node missing from contribs
+      // has no in-edges and takes rank = base, exactly as the left join's
+      // coalesce encodes. Integer picorank units keep every sum exact and
+      // order-independent, so this restructuring cannot move a single bit.
+      def rankExpr: org.apache.spark.sql.Column =
+        base + lit(damping) * (coalesce(col("in_units"), lit(0L)).cast("double") / 1e12)
+      def step(c: DataFrame): DataFrame = eDeg
+        .join(c.withColumnRenamed("dst", "_cdst"),
+          col("src") === col("_cdst"), "left")
+        .select(col("dst"),
+          floor(rankExpr / col("outdeg") * 1e12 + 0.5).cast("long").as("units"))
+        .groupBy("dst").agg(sum("units").as("in_units"))
+      var contribs = eDeg
+        .select(col("dst"),
+          floor(lit(1.0 / n) / col("outdeg") * 1e12 + 0.5).cast("long").as("units"))
+        .groupBy("dst").agg(sum("units").as("in_units"))
+      var rounds = 1
+      var prevChk: DataFrame = null
+      var i = 2
+      var fixed = false
+      while (i <= iterations && !fixed) {
+        contribs = step(contribs)
+        rounds += 1
+        // Truncate lineage every 3 rounds: keeps the plan O(1) deep (and
+        // AQE re-plans each chunk with real sizes). Recompute on executor
+        // loss is acceptable — each round is cheap relative to the
+        // full-lineage replay this prevents. The same boundary doubles as
+        // the FixpointGate probe: every round ≥ 1 covers the full eDeg dst
+        // set, so (dst, in_units) set equality vs the previous checkpoint
+        // is exact state equality.
+        if (i % 3 == 0 && i < iterations) {
+          contribs = contribs.localCheckpoint()
+          if (prevChk != null &&
+              FixpointGate.same(contribs, prevChk, Seq("dst", "in_units"))) {
+            val extra = (iterations - i) % 3
+            (1 to extra).foreach(_ => contribs = step(contribs))
+            rounds += extra
+            fixed = true
+            println(s"[pagerank] early-exit after round ${i + extra} of " +
+              s"$iterations (state at round $i == round ${i - 3} exactly; " +
+              s"final state provably identical)")
+          } else prevChk = contribs
+        }
+        i += 1
       }
-      i += 1
+      lastRoundsExecuted = rounds
+      // Only the FINAL round needs the full node set (dangling-in nodes
+      // surface with rank = base via the left join's coalesce).
+      nodes.join(contribs, nodes("node") === contribs("dst"), "left")
+        .select(col("node"),
+          (floor(rankExpr * 1e9 + 0.5) / 1e9).as("rank"))
     }
-    lastRoundsExecuted = rounds
-    // Only the FINAL round needs the full node set (dangling-in nodes
-    // surface with rank = base via the left join's coalesce).
-    nodes.join(contribs, nodes("node") === contribs("dst"), "left")
-      .select(col("node"),
-        (floor(rankExpr * 1e9 + 0.5) / 1e9).as("rank"))
   }
 
   /** The matching DuckDB oracle: unrolled CTE chain replaying the exact

@@ -40,81 +40,79 @@ object Ppr {
     // Long twin opt in to the bounded single-task kernel — identical
     // picorank arithmetic, one job instead of ~rounds×stages. Callers
     // that pass only the Column predicate always run distributed.
-    if (isSeedLocal != null && SmallGraph.smallEnough(edges, srcCol, dstCol)) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      lastRoundsExecuted = iterations
-      return edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          SmallGraph.pagerankKernel(it, iterations, damping, isSeedLocal)
-            .map { case (n, r) => (n, Option(r)) }) // nullable like the
-        .toDF("node", "rank") // distributed rank column
-    }
-    val mUpper = edges.count()
-    val defaultParts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val parts =
-      math.max(1L, math.min(defaultParts.toLong, mUpper / 131072L + 1L)).toInt
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(parts, col("src")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val nS = nodes.filter(isSeed(col("node"))).count()
-    require(nS > 0, "personalization needs at least one seed node")
-    val eDeg = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint()
+    def distributed(edges: DataFrame): DataFrame = {
+      val mUpper = edges.count()
+      val defaultParts = edges.sparkSession.sessionState.conf.numShufflePartitions
+      val parts =
+        math.max(1L, math.min(defaultParts.toLong, mUpper / 131072L + 1L)).toInt
+      val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .distinct().repartition(parts, col("src")).localCheckpoint()
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+        .localCheckpoint()
+      val nS = nodes.filter(isSeed(col("node"))).count()
+      require(nS > 0, "personalization needs at least one seed node")
+      val eDeg = e.join(
+          e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+        .localCheckpoint()
 
-    // base(v) = (1-d)/|S| on seeds, 0 elsewhere — written as the same
-    // two-op double expression the oracle uses.
-    def baseOf(node: Column): Column =
-      when(isSeed(node), lit((1.0 - damping) / nS)).otherwise(lit(0.0))
-    def rankExpr(node: Column): Column =
-      baseOf(node) +
-        lit(damping) * (coalesce(col("in_units"), lit(0L)).cast("double") / 1e12)
-    def step(c: DataFrame): DataFrame = eDeg
-      .join(c.withColumnRenamed("dst", "_cdst"),
-        col("src") === col("_cdst"), "left")
-      .select(col("dst"),
-        floor(rankExpr(col("src")) / col("outdeg") * 1e12 + 0.5)
-          .cast("long").as("units"))
-      .groupBy("dst").agg(sum("units").as("in_units"))
-    var contribs = eDeg
-      .filter(isSeed(col("src"))) // r0 is nonzero only on seeds
-      .select(col("dst"),
-        floor(lit(1.0 / nS) / col("outdeg") * 1e12 + 0.5).cast("long").as("units"))
-      .groupBy("dst").agg(sum("units").as("in_units"))
-    var rounds = 1
-    var prevChk: DataFrame = null
-    var i = 2
-    var fixed = false
-    while (i <= iterations && !fixed) {
-      contribs = step(contribs)
-      rounds += 1
-      // FixpointGate at the checkpoint boundary (see PageRank): all
-      // compared checkpoints are from rounds ≥ 2, where the dst key set
-      // is the full eDeg dst set (round 1's seed-only coverage never
-      // reaches a comparison), so set equality == exact state equality.
-      if (i % 3 == 0 && i < iterations) {
-        contribs = contribs.localCheckpoint()
-        if (prevChk != null &&
-            FixpointGate.same(contribs, prevChk, Seq("dst", "in_units"))) {
-          val extra = (iterations - i) % 3
-          (1 to extra).foreach(_ => contribs = step(contribs))
-          rounds += extra
-          fixed = true
-          println(s"[ppr] early-exit after round ${i + extra} of " +
-            s"$iterations (state at round $i == round ${i - 3} exactly; " +
-            s"final state provably identical)")
-        } else prevChk = contribs
+      // base(v) = (1-d)/|S| on seeds, 0 elsewhere — written as the same
+      // two-op double expression the oracle uses.
+      def baseOf(node: Column): Column =
+        when(isSeed(node), lit((1.0 - damping) / nS)).otherwise(lit(0.0))
+      def rankExpr(node: Column): Column =
+        baseOf(node) +
+          lit(damping) * (coalesce(col("in_units"), lit(0L)).cast("double") / 1e12)
+      def step(c: DataFrame): DataFrame = eDeg
+        .join(c.withColumnRenamed("dst", "_cdst"),
+          col("src") === col("_cdst"), "left")
+        .select(col("dst"),
+          floor(rankExpr(col("src")) / col("outdeg") * 1e12 + 0.5)
+            .cast("long").as("units"))
+        .groupBy("dst").agg(sum("units").as("in_units"))
+      var contribs = eDeg
+        .filter(isSeed(col("src"))) // r0 is nonzero only on seeds
+        .select(col("dst"),
+          floor(lit(1.0 / nS) / col("outdeg") * 1e12 + 0.5).cast("long").as("units"))
+        .groupBy("dst").agg(sum("units").as("in_units"))
+      var rounds = 1
+      var prevChk: DataFrame = null
+      var i = 2
+      var fixed = false
+      while (i <= iterations && !fixed) {
+        contribs = step(contribs)
+        rounds += 1
+        // FixpointGate at the checkpoint boundary (see PageRank): all
+        // compared checkpoints are from rounds ≥ 2, where the dst key set
+        // is the full eDeg dst set (round 1's seed-only coverage never
+        // reaches a comparison), so set equality == exact state equality.
+        if (i % 3 == 0 && i < iterations) {
+          contribs = contribs.localCheckpoint()
+          if (prevChk != null &&
+              FixpointGate.same(contribs, prevChk, Seq("dst", "in_units"))) {
+            val extra = (iterations - i) % 3
+            (1 to extra).foreach(_ => contribs = step(contribs))
+            rounds += extra
+            fixed = true
+            println(s"[ppr] early-exit after round ${i + extra} of " +
+              s"$iterations (state at round $i == round ${i - 3} exactly; " +
+              s"final state provably identical)")
+          } else prevChk = contribs
+        }
+        i += 1
       }
-      i += 1
+      lastRoundsExecuted = rounds
+      nodes.join(contribs, nodes("node") === contribs("dst"), "left")
+        .select(col("node"),
+          (floor(rankExpr(col("node")) * 1e9 + 0.5) / 1e9).as("rank"))
     }
-    lastRoundsExecuted = rounds
-    nodes.join(contribs, nodes("node") === contribs("dst"), "left")
-      .select(col("node"),
-        (floor(rankExpr(col("node")) * 1e9 + 0.5) / 1e9).as("rank"))
+    if (isSeedLocal == null) distributed(edges)
+    else {
+      lastRoundsExecuted = iterations // the distributed loop overwrites it
+      SmallGraph.route(edges, Seq(srcCol, dstCol))(
+        SmallGraph.pagerankKernel(_, iterations, damping, isSeedLocal),
+        "node", "rank")(distributed)
+    }
   }
 
   /** Generated DuckDB replay; `seedPredSql` is the SQL twin of `isSeed`

@@ -32,38 +32,33 @@ object RandomWalk {
                   seedsMod: Long, steps: Int,
                   salt: String = "walk"): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
-    val spark = edges.sparkSession
     // COST gate (SmallGraph): neighbor ranking + the md5 step picks run
     // inside ONE executor task under the size threshold; the distributed
     // frontier join below is the 100 TB path.
-    if (SmallGraph.smallEnough(edges, srcCol, dstCol)) {
-      import spark.implicits._
-      return edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          SmallGraph.randomWalkKernel(it, seedsMod, steps, salt))
-        .toDF("step", "n_walks", "sum_cur")
+    SmallGraph.route(edges, Seq(srcCol, dstCol))(
+        SmallGraph.randomWalkKernel(_, seedsMod, steps, salt),
+        "step", "n_walks", "sum_cur") { edges =>
+      val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
+      val nbr = e
+        .withColumn("idx",
+          row_number().over(Window.partitionBy("src").orderBy("dst")) - 1)
+        .withColumn("outdeg", count(lit(1)).over(Window.partitionBy("src")))
+        .repartition(col("src")).localCheckpoint(true)
+      var walks = nbr.select(col("src").as("walk")).distinct()
+        .filter(pmod(col("walk"), lit(seedsMod)) === 0)
+        .select(col("walk"), col("walk").as("cur"))
+        .localCheckpoint(true)
+      val snapshots = scala.collection.mutable.ArrayBuffer(walks)
+      for (s <- 1 to steps) {
+        walks = step(walks, nbr, s, salt).localCheckpoint(true)
+        snapshots += walks
+      }
+      snapshots.zipWithIndex.map { case (w, s) =>
+        w.agg(count(lit(1)).as("n_walks"),
+            coalesce(sum(col("cur")), lit(0L)).as("sum_cur"))
+          .select(lit(s.toLong).as("step"), col("n_walks"), col("sum_cur"))
+      }.reduce(_ unionByName _)
     }
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-    val nbr = e
-      .withColumn("idx",
-        row_number().over(Window.partitionBy("src").orderBy("dst")) - 1)
-      .withColumn("outdeg", count(lit(1)).over(Window.partitionBy("src")))
-      .repartition(col("src")).localCheckpoint(true)
-    var walks = nbr.select(col("src").as("walk")).distinct()
-      .filter(pmod(col("walk"), lit(seedsMod)) === 0)
-      .select(col("walk"), col("walk").as("cur"))
-      .localCheckpoint(true)
-    val snapshots = scala.collection.mutable.ArrayBuffer(walks)
-    for (s <- 1 to steps) {
-      walks = step(walks, nbr, s, salt).localCheckpoint(true)
-      snapshots += walks
-    }
-    snapshots.zipWithIndex.map { case (w, s) =>
-      w.agg(count(lit(1)).as("n_walks"),
-          coalesce(sum(col("cur")), lit(0L)).as("sum_cur"))
-        .select(lit(s.toLong).as("step"), col("n_walks"), col("sum_cur"))
-    }.reduce(_ unionByName _)
   }
 
   /** One walk step: the (cur = src) EQUI-join against the ranked

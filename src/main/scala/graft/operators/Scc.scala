@@ -42,50 +42,48 @@ object Scc {
     // UTF-8 binary, matching Spark's), instead of a driver collect plus
     // 4·rounds eager localCheckpoints. Distributed path below unchanged
     // — the 100 TB shape.
-    if (SmallGraph.smallEnoughAnyKey(e0)) {
-      return e0.as[(String, String)].coalesce(1)
-        .mapPartitions(it => kernel(it, rounds))
-        .toDF("relation", "pivot", "n_nodes", "checksum")
-        .orderBy("relation")
-    }
-    val e = e0.distinct()
-      .localCheckpoint(true)
-    // An edge relation that is empty after self-loop/duplicate filtering
-    // has no pivot to probe from: return the empty summary, don't throw.
-    val pivotRow = e.select(col("src").as("n"))
-      .unionAll(e.select(col("dst").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .orderBy(col("d").desc, col("n")).limit(1)
-      .collect().headOption
-    if (pivotRow.isEmpty)
-      return spark.range(0).select(
-        lit("").as("relation"), lit("").as("pivot"),
-        lit(0L).as("n_nodes"), lit(0L).as("checksum"))
-    val pivot = pivotRow.get.getString(0)
-    def closure(adj: DataFrame): DataFrame = {
-      var frontier = Seq(pivot).toDF("n").localCheckpoint(true)
-      var visited = frontier
-      for (_ <- 1 to rounds) {
-        frontier = adj
-          .join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
-          .select(col("dst").as("n")).distinct()
-          .join(visited, Seq("n"), "left_anti")
+    SmallGraph.route(e0, Seq("src", "dst"), anyKey = true)(kernel(_, rounds),
+        "relation", "pivot", "n_nodes", "checksum") { e0 =>
+      val e = e0.distinct()
+        .localCheckpoint(true)
+      // An edge relation that is empty after self-loop/duplicate filtering
+      // has no pivot to probe from: the empty summary, don't throw.
+      val pivotRow = e.select(col("src").as("n"))
+        .unionAll(e.select(col("dst").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+        .orderBy(col("d").desc, col("n")).limit(1)
+        .collect().headOption
+      if (pivotRow.isEmpty)
+        spark.range(0).select(
+          lit("").as("relation"), lit("").as("pivot"),
+          lit(0L).as("n_nodes"), lit(0L).as("checksum"))
+      else {
+        val pivot = pivotRow.get.getString(0)
+        def closure(adj: DataFrame): DataFrame = {
+          var frontier = Seq(pivot).toDF("n").localCheckpoint(true)
+          var visited = frontier
+          for (_ <- 1 to rounds) {
+            frontier = adj
+              .join(frontier.select(col("n").as("src")), Seq("src"), "left_semi")
+              .select(col("dst").as("n")).distinct()
+              .join(visited, Seq("n"), "left_anti")
+              .localCheckpoint(true)
+            visited = visited.unionAll(frontier).localCheckpoint(true)
+          }
+          visited
+        }
+        val fwd = closure(e).localCheckpoint(true)
+        val bwd = closure(e.select(col("dst").as("src"), col("src").as("dst")))
           .localCheckpoint(true)
-        visited = visited.unionAll(frontier).localCheckpoint(true)
+        val core = fwd.join(bwd, Seq("n"), "left_semi")
+        def row(df: DataFrame, label: String): DataFrame =
+          df.agg(count(lit(1)).as("n_nodes"), sum(chk(col("n"))).as("checksum"))
+            .select(lit(label).as("relation"), lit(pivot).as("pivot"),
+              col("n_nodes"), col("checksum"))
+        row(fwd, "forward").unionAll(row(bwd, "backward"))
+          .unionAll(row(core, "core"))
       }
-      visited
-    }
-    val fwd = closure(e).localCheckpoint(true)
-    val bwd = closure(e.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    val core = fwd.join(bwd, Seq("n"), "left_semi")
-    def row(df: DataFrame, label: String): DataFrame =
-      df.agg(count(lit(1)).as("n_nodes"), sum(chk(col("n"))).as("checksum"))
-        .select(lit(label).as("relation"), lit(pivot).as("pivot"),
-          col("n_nodes"), col("checksum"))
-    row(fwd, "forward").unionAll(row(bwd, "backward"))
-      .unionAll(row(core, "core"))
-      .orderBy("relation")
+    }.orderBy("relation")
   }
 
   /** Bounded single-task replay of [[pivotSccSummary]]'s exact steps:

@@ -1,6 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** COST-gated bounded kernels for the iterative graph operators
   * (McSherry, Isard & Murray, HotOS 2015, "Scalability! But at what
@@ -24,32 +31,44 @@ import org.apache.spark.sql.DataFrame
   * Integer sums are order-independent, so accumulation order cannot
   * move a bit.
   *
-  * Gate: `graft.graph.smallKernelMaxBytes` (default 256 MB) on the
-  * optimizer's `sizeInBytes` estimate of the edge subplan — derived from
-  * source file bytes, so it is scale-adaptive by construction (sf0.1's
-  * ~11 MB lineitem and a ~100 TB table land on opposite sides with no
-  * local-mode constant anywhere). `graft.graph.smallKernel=false` forces
-  * the distributed path (the parity spec's lever, and the escape hatch).
+  * [[route]] is the only way to add a kernel: it owns the gate, the
+  * Long-key check, the single-task plan and the output nullability.
+  *
+  * Gate: `graft.graph.smallKernelMaxBytes` (default: the kernel's
+  * [[Cost]] ceiling) on the optimizer's `sizeInBytes` estimate of the
+  * input's leaves — derived from source file bytes, so it is
+  * scale-adaptive by construction (sf0.1's ~11 MB lineitem and a
+  * ~100 TB table land on opposite sides with no local-mode constant
+  * anywhere), and it launches no job. `graft.graph.smallKernel=false`
+  * forces the distributed path (the parity spec's lever, and the escape
+  * hatch).
+  *
+  * Null keys: rows with a null key are filtered from the input before
+  * EITHER route sees it (the kernels decode keys as primitive longs;
+  * the distributed joins would drop those rows), so the two
+  * formulations agree by construction.
   */
 object SmallGraph {
 
-  /** Default ceiling on the estimated edge-relation bytes for the
-    * bounded kernel: 256 MB of source scan ≈ tens of millions of edges
-    * — comfortably one task's work (COST regime) for a LINEAR-pass
-    * kernel, far below executor memory, and orders of magnitude under
-    * any relation that actually needs a cluster. */
-  val DefaultMaxBytes: Long = 256L << 20
+  /** How a kernel's single-task work grows with its input; picks the
+    * gate's default byte ceiling. */
+  sealed abstract class Cost(val maxBytes: Long)
 
-  /** Ceiling for kernels whose single-task WORK grows faster than the
-    * scanned bytes (the r16 verdict's "latency cliff, not a cost
-    * model"): oriented triangle/wedge enumeration is O(m^1.5) (ktruss,
-    * triangles, clustering_coef, jaccard_sim, rectangles, link_pred,
-    * rich_club) and per-seed BFS sweeps are O(seeds·m) (closeness,
-    * eccentricity, anf, betweenness). 256 MB of edges is a fine linear
-    * pass but tens of minutes of wedge work in one task; 64 MB (~m ≈
-    * 4M edges → m^1.5 ≈ 8·10⁹ steps) keeps the worst gated kernel in
-    * the same few-second class as a linear pass at [[DefaultMaxBytes]].
-    * `graft.graph.smallKernelMaxBytes` still overrides both ceilings.
+  /** One or a few passes (pagerank class): 256 MB of source scan ≈ tens
+    * of millions of edges — comfortably one task's work (COST regime),
+    * far below executor memory, and orders of magnitude under any
+    * relation that actually needs a cluster. */
+  case object Linear extends Cost(256L << 20)
+
+  /** Single-task WORK that grows faster than the scanned bytes (the r16
+    * verdict's "latency cliff, not a cost model"): oriented
+    * triangle/wedge enumeration is O(m^1.5) (ktruss, triangles,
+    * clustering_coef, jaccard_sim, rectangles, link_pred) and per-seed
+    * BFS sweeps are O(seeds·m) (closeness, eccentricity, anf,
+    * betweenness). 256 MB of edges is a fine linear pass but tens of
+    * minutes of wedge work in one task; 64 MB (~m ≈ 4M edges → m^1.5 ≈
+    * 8·10⁹ steps) keeps the worst gated kernel in the same few-second
+    * class as a [[Linear]] pass.
     *
     * Join-fan-out note (ADVICE r16): the leaf-sum bounds bytes SCANNED,
     * not join output — the wedge kernels' pair inputs are FK-join-
@@ -57,39 +76,49 @@ object SmallGraph {
     * per-entry wedge work (the capped-wedge helpers), and this lower
     * ceiling bounds the residual blow-up; raise it only with a
     * `graft.graph.smallKernel=false` A/B at the new size. */
-  val SuperlinearMaxBytes: Long = 64L << 20
+  case object Superlinear extends Cost(64L << 20)
 
-  /** True when `edges` is small enough (by optimizer estimate — no job
-    * is launched) for the bounded single-task kernel, and every key
-    * column is LongType (the kernels work on primitive longs; other id
-    * types — e.g. the string ids some specs exercise — keep the
-    * distributed path, the [[graft.llm.Dedup]] `longIds` contract).
-    * Null keys are the caller's contract (the TPC-H-derived and planted
-    * id spaces are null-free): a null key would throw in the kernel's
-    * Long decode where the distributed joins would drop the row. */
-  def smallEnough(edges: DataFrame, keyCols: String*): Boolean =
-    smallEnoughScaled(edges, DefaultMaxBytes, keyCols: _*)
+  /** Kernel routes taken so far: the parity spec reads it to prove its
+    * default side really ran a kernel. */
+  private[graft] val kernelRoutes = new AtomicLong
 
-  /** [[smallEnough]] with a per-operator ceiling — pass
-    * [[SuperlinearMaxBytes]] for kernels with a superlinear work
-    * exponent. */
-  def smallEnoughScaled(edges: DataFrame, defaultMax: Long,
-                        keyCols: String*): Boolean = {
-    if (!keyCols.forall(c => edges.schema(c).dataType ==
-      org.apache.spark.sql.types.LongType)) false
-    else smallEnoughAnyKey(edges, defaultMax)
+  /** `kernel` in ONE executor task over `cols` of `input` (default: the
+    * `keys`) when the gate admits `input`, else `distributed`; both see
+    * `input` without its null-key rows. Unless `anyKey` (kernels that
+    * intern or cast their ids), every key must be LongType. `kernel` is
+    * evaluated on the driver only when its route is taken, so it may
+    * collect a bounded side input first. Output columns are `outCols`,
+    * nullable like the distributed route's. */
+  def route[I: TypeTag, O <: Product : TypeTag](input: DataFrame,
+      keys: Seq[String], cost: Cost = Linear, anyKey: Boolean = false,
+      cols: Seq[Column] = Nil)(
+      kernel: => Iterator[I] => Iterator[O], outCols: String*)(
+      distributed: DataFrame => DataFrame): DataFrame =
+    routeWith(input, keys, cost, anyKey)(singleTask(_,
+        if (cols.isEmpty) keys.map(col) else cols)(kernel, outCols: _*))(
+      distributed)
+
+  /** [[route]] for call sites whose routes return more than one
+    * relation: `small` builds its plans with [[singleTask]]. */
+  private[graft] def routeWith[R](input: DataFrame, keys: Seq[String],
+      cost: Cost = Linear, anyKey: Boolean = false)(
+      small: DataFrame => R)(distributed: DataFrame => R): R = {
+    val in = input.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+    if (admits(input, keys, cost, anyKey)) {
+      kernelRoutes.incrementAndGet()
+      small(in)
+    } else distributed(in)
   }
 
-  /** Size-only gate (no key-type requirement) for kernels that intern
-    * arbitrary comparable ids in-task — the string token graphs
-    * ([[graft.operators.WeightedPageRank]], [[graft.operators.Scc]]). */
-  def smallEnoughAnyKey(edges: DataFrame,
-                        defaultMax: Long = DefaultMaxBytes): Boolean = {
-    val conf = edges.sparkSession.conf
+  private def admits(input: DataFrame, keys: Seq[String], cost: Cost,
+                     anyKey: Boolean): Boolean = {
+    val conf = input.sparkSession.conf
     if (conf.getOption("graft.graph.smallKernel").contains("false")) false
+    else if (!anyKey && !keys.forall(input.schema(_).dataType == LongType))
+      false
     else {
       val maxBytes = conf.getOption("graft.graph.smallKernelMaxBytes")
-        .map(_.toLong).getOrElse(defaultMax)
+        .map(_.toLong).getOrElse(cost.maxBytes)
       // Sum the LEAF relation estimates, not the top-level one: without
       // CBO column stats Catalyst prices an FK equi-join as the PRODUCT
       // of its inputs, which would push any join-derived edge relation
@@ -97,9 +126,28 @@ object SmallGraph {
       // bytes bound the data actually scanned — the honest "fits in one
       // task" signal at either scale (a 100 TB leaf still routes
       // distributed).
-      val leaves = edges.queryExecution.optimizedPlan.collectLeaves()
+      val leaves = input.queryExecution.optimizedPlan.collectLeaves()
       leaves.map(_.stats.sizeInBytes).sum <= BigInt(maxBytes)
     }
+  }
+
+  /** The single-task plan: `cols` of `in` as `I` tuples (by position),
+    * one partition, `kernel`, named nullable output columns. */
+  private[graft] def singleTask[I: TypeTag, O <: Product : TypeTag](
+      in: DataFrame, cols: Seq[Column])(
+      kernel: Iterator[I] => Iterator[O], outCols: String*): DataFrame = {
+    val fields = ExpressionEncoder[O]().schema.fields
+    require(fields.length == outCols.length,
+      s"kernel emits ${fields.length} columns, ${outCols.length} named")
+    def nullable(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case other => other
+    }
+    val out = StructType(fields.zip(outCols).map { case (f, n) =>
+      StructField(n, nullable(f.dataType)) })
+    in.select(cols: _*).as[I](ExpressionEncoder[I]()).coalesce(1)
+      .mapPartitions(it => kernel(it).map(Row.fromTuple))(Encoders.row(out))
+      .toDF()
   }
 
   // ------------------------------------------------------------ helpers

@@ -33,43 +33,38 @@ object Sssp {
   def distanceSummary(edges: DataFrame, seedsMod: Long,
                       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
     // COST gate (SmallGraph): identical min-collapse + relax rounds
     // inside ONE executor task under the size threshold; the
     // distributed loop below is the 100 TB path.
-    if (SmallGraph.smallEnough(edges, "src", "dst", "w")) {
-      import spark.implicits._
-      return edges.select(col("src").cast("long"), col("dst").cast("long"),
-          col("w").cast("long"))
-        .as[(Long, Long, Long)].coalesce(1)
-        .mapPartitions(it => SmallGraph.ssspKernel(it, seedsMod, rounds))
-        .toDF("round", "n_reached", "sum_dist", "max_dist")
-    }
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .groupBy("src", "dst").agg(min("w").as("w"))
-      .repartition(col("src")).localCheckpoint(true)
-    var d = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .filter(pmod(col("node"), lit(seedsMod)) === 0)
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    val snapshots = scala.collection.mutable.ArrayBuffer(d)
-    for (_ <- 1 to rounds) {
-      val relaxed = e
-        .join(d.select(col("node").as("src"), col("dist")), Seq("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      d = d.unionByName(relaxed)
-        .groupBy("node").agg(min("dist").as("dist"))
+    SmallGraph.route(edges, Seq("src", "dst", "w"))(
+        SmallGraph.ssspKernel(_, seedsMod, rounds),
+        "round", "n_reached", "sum_dist", "max_dist") { edges =>
+      val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+        .groupBy("src", "dst").agg(min("w").as("w"))
+        .repartition(col("src")).localCheckpoint(true)
+      var d = e.select(col("src").as("node"))
+        .unionAll(e.select(col("dst").as("node"))).distinct()
+        .filter(pmod(col("node"), lit(seedsMod)) === 0)
+        .select(col("node"), lit(0L).as("dist"))
         .localCheckpoint(true)
-      snapshots += d
+      val snapshots = scala.collection.mutable.ArrayBuffer(d)
+      for (_ <- 1 to rounds) {
+        val relaxed = e
+          .join(d.select(col("node").as("src"), col("dist")), Seq("src"))
+          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+        d = d.unionByName(relaxed)
+          .groupBy("node").agg(min("dist").as("dist"))
+          .localCheckpoint(true)
+        snapshots += d
+      }
+      snapshots.zipWithIndex.map { case (s, r) =>
+        s.agg(count(lit(1)).as("n_reached"),
+            coalesce(sum(col("dist")), lit(0L)).as("sum_dist"),
+            coalesce(max(col("dist")), lit(0L)).as("max_dist"))
+          .select(lit(r.toLong).as("round"), col("n_reached"),
+            col("sum_dist"), col("max_dist"))
+      }.reduce(_ unionByName _)
     }
-    snapshots.zipWithIndex.map { case (s, r) =>
-      s.agg(count(lit(1)).as("n_reached"),
-          coalesce(sum(col("dist")), lit(0L)).as("sum_dist"),
-          coalesce(max(col("dist")), lit(0L)).as("max_dist"))
-        .select(lit(r.toLong).as("round"), col("n_reached"),
-          col("sum_dist"), col("max_dist"))
-    }.reduce(_ unionByName _)
   }
 
   /** Generated DuckDB replay over a weighted edge CTE `edgesSql`

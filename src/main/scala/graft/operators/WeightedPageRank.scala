@@ -39,66 +39,53 @@ object WeightedPageRank {
     // localCheckpoints + iterations × (join + aggregate) scheduler
     // rounds over a vocabulary-scale graph. Distributed path below is
     // unchanged — the 100 TB shape.
-    locally {
-      val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w"))
-      val st = e0.schema("src").dataType
-      val longKeys = st == org.apache.spark.sql.types.LongType &&
-        e0.schema("dst").dataType == st
-      val strKeys = st == org.apache.spark.sql.types.StringType &&
-        e0.schema("dst").dataType == st
-      if ((longKeys || strKeys) && SmallGraph.smallEnoughAnyKey(e0)) {
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val ds =
-          if (strKeys)
-            e0.as[(String, String, Long)].coalesce(1)
-              .mapPartitions(it => kernel[String](it, iterations, damping))
-              .toDF("node", "rank")
-          else
-            e0.as[(Long, Long, Long)].coalesce(1)
-              .mapPartitions(it => kernel[Long](it, iterations, damping))
-              .toDF("node", "rank")
-        return ds
-      }
-    }
-    val mUpper = edges.count()
-    val defaultParts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val parts =
-      math.max(1L, math.min(defaultParts.toLong, mUpper / 131072L + 1L)).toInt
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .repartition(parts, col("src")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val n = nodes.count()
-    val eDeg = e.join(
-        e.groupBy("src").agg(sum("w").as("wdeg")), "src")
-      .localCheckpoint()
+    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      col(wCol).cast("long").as("w"))
+    val keys = Seq("src", "dst", "w")
+    def distributed(e0: DataFrame): DataFrame = {
+      val mUpper = e0.count()
+      val defaultParts = edges.sparkSession.sessionState.conf.numShufflePartitions
+      val parts =
+        math.max(1L, math.min(defaultParts.toLong, mUpper / 131072L + 1L)).toInt
+      val e = e0.groupBy("src", "dst").agg(sum("w").as("w"))
+        .repartition(parts, col("src")).localCheckpoint()
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+        .localCheckpoint()
+      val n = nodes.count()
+      val eDeg = e.join(
+          e.groupBy("src").agg(sum("w").as("wdeg")), "src")
+        .localCheckpoint()
 
-    val base = lit((1.0 - damping) / n)
-    def rankExpr: org.apache.spark.sql.Column =
-      base + lit(damping) * (coalesce(col("in_units"), lit(0L)).cast("double") / 1e12)
-    // One fixed double-op order shared with the oracle:
-    // ((rank · w) / wdeg) · 1e12 — left-to-right as written on both sides.
-    def unitsExpr(rank: org.apache.spark.sql.Column) =
-      floor(rank * col("w") / col("wdeg") * 1e12 + 0.5).cast("long").as("units")
-    var contribs = eDeg
-      .select(col("dst"), unitsExpr(lit(1.0 / n)))
-      .groupBy("dst").agg(sum("units").as("in_units"))
-    for (i <- 2 to iterations) {
-      contribs = eDeg
-        .join(contribs.withColumnRenamed("dst", "_cdst"),
-          col("src") === col("_cdst"), "left")
-        .select(col("dst"), unitsExpr(rankExpr))
+      val base = lit((1.0 - damping) / n)
+      def rankExpr: org.apache.spark.sql.Column =
+        base + lit(damping) * (coalesce(col("in_units"), lit(0L)).cast("double") / 1e12)
+      // One fixed double-op order shared with the oracle:
+      // ((rank · w) / wdeg) · 1e12 — left-to-right as written on both sides.
+      def unitsExpr(rank: org.apache.spark.sql.Column) =
+        floor(rank * col("w") / col("wdeg") * 1e12 + 0.5).cast("long").as("units")
+      var contribs = eDeg
+        .select(col("dst"), unitsExpr(lit(1.0 / n)))
         .groupBy("dst").agg(sum("units").as("in_units"))
-      if (i % 3 == 0 && i < iterations) contribs = contribs.localCheckpoint()
+      for (i <- 2 to iterations) {
+        contribs = eDeg
+          .join(contribs.withColumnRenamed("dst", "_cdst"),
+            col("src") === col("_cdst"), "left")
+          .select(col("dst"), unitsExpr(rankExpr))
+          .groupBy("dst").agg(sum("units").as("in_units"))
+        if (i % 3 == 0 && i < iterations) contribs = contribs.localCheckpoint()
+      }
+      nodes.join(contribs, nodes("node") === contribs("dst"), "left")
+        .select(col("node"),
+          (floor(rankExpr * 1e9 + 0.5) / 1e9).as("rank"))
     }
-    nodes.join(contribs, nodes("node") === contribs("dst"), "left")
-      .select(col("node"),
-        (floor(rankExpr * 1e9 + 0.5) / 1e9).as("rank"))
+    if (Seq("src", "dst").forall(
+        e0.schema(_).dataType == org.apache.spark.sql.types.StringType))
+      SmallGraph.route(e0, keys, anyKey = true)(
+        kernel[String](_, iterations, damping), "node", "rank")(distributed)
+    else
+      SmallGraph.route(e0, keys)(
+        kernel[Long](_, iterations, damping), "node", "rank")(distributed)
   }
 
   /** Bounded single-task replay of [[run]]'s exact arithmetic: intern

@@ -8,6 +8,7 @@ import graft.config.Catalog
 import graft.header.HeaderDetector
 import graft.io.FileReader
 import graft.llm.{Decontaminate, Dedup, Index, Multimodal, Pack, SemDedup, Similarity, TextAnalysis, Urls}
+import graft.operators.SmallGraph
 import graft.pipeline.Ingestor
 import graft.transform.Transformers
 
@@ -32,34 +33,30 @@ trait RegistryGraph extends RegistryEvent {
     // COST gate (SmallGraph): the capped wedge kernel + scoring in ONE
     // executor task under the size threshold; the distributed explode
     // below is the 100 TB path.
-    if (graft.operators.SmallGraph.smallEnoughScaled(sub, graft.operators.SmallGraph.SuperlinearMaxBytes, "x", "y")) {
-      import spark.implicits._
-      return sub.select(col("x").cast("long"), col("y").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => graft.operators.SmallGraph.jaccardSimKernel(it))
-        .toDF("a", "b", "cn", "da", "db", "j6")
+    SmallGraph.route(sub, Seq("x", "y"), cost = SmallGraph.Superlinear)(
+        SmallGraph.jaccardSimKernel(_), "a", "b", "cn", "da", "db", "j6") { sub =>
+      val canon = graft.operators.Triangles.canonical(sub, "x", "y")
+        .localCheckpoint(true)
+      val nbr = canon.select(col("lo").as("w"), col("hi").as("n"))
+        .unionAll(canon.select(col("hi").as("w"), col("lo").as("n")))
+      val deg = nbr.groupBy("w").agg(count(lit(1)).as("d"))
+        .localCheckpoint(true)
+      val wedges = nbr
+        .join(deg.filter(col("d").between(2, 256)).select("w"), Seq("w"))
+        .groupBy("w").agg(sort_array(collect_set(col("n"))).as("ns"))
+        .select(explode(expr(
+          "flatten(transform(ns, (x, i) -> " +
+            "transform(slice(ns, i + 2, size(ns)), y -> struct(x, y))))"))
+          .as("e"))
+        .select(col("e.x").as("a"), col("e.y").as("b"))
+      wedges.groupBy("a", "b").agg(count(lit(1)).as("cn"))
+        .join(deg.select(col("w").as("a"), col("d").as("da")), Seq("a"))
+        .join(deg.select(col("w").as("b"), col("d").as("db")), Seq("b"))
+        .select(col("a"), col("b"), col("cn"), col("da"), col("db"),
+          expr("(cn * 1000000) div (da + db - cn)").as("j6"))
+        .orderBy(col("j6").desc, col("a"), col("b"))
+        .limit(20)
     }
-    val canon = graft.operators.Triangles.canonical(sub, "x", "y")
-      .localCheckpoint(true)
-    val nbr = canon.select(col("lo").as("w"), col("hi").as("n"))
-      .unionAll(canon.select(col("hi").as("w"), col("lo").as("n")))
-    val deg = nbr.groupBy("w").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    val wedges = nbr
-      .join(deg.filter(col("d").between(2, 256)).select("w"), Seq("w"))
-      .groupBy("w").agg(sort_array(collect_set(col("n"))).as("ns"))
-      .select(explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-          "transform(slice(ns, i + 2, size(ns)), y -> struct(x, y))))"))
-        .as("e"))
-      .select(col("e.x").as("a"), col("e.y").as("b"))
-    wedges.groupBy("a", "b").agg(count(lit(1)).as("cn"))
-      .join(deg.select(col("w").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("w").as("b"), col("d").as("db")), Seq("b"))
-      .select(col("a"), col("b"), col("cn"), col("da"), col("db"),
-        expr("(cn * 1000000) div (da + db - cn)").as("j6"))
-      .orderBy(col("j6").desc, col("a"), col("b"))
-      .limit(20)
   }
 
   /** Rectangle (4-cycle / "butterfly") support per diagonal pair — the
@@ -79,31 +76,27 @@ trait RegistryGraph extends RegistryEvent {
     val sub = coPurchaseSubPairs(spark, dir)
     // COST gate (SmallGraph): shared capped wedge kernel, C(cn,2)
     // support in ONE executor task; distributed explode = 100 TB path.
-    if (graft.operators.SmallGraph.smallEnoughScaled(sub, graft.operators.SmallGraph.SuperlinearMaxBytes, "x", "y")) {
-      import spark.implicits._
-      return sub.select(col("x").cast("long"), col("y").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => graft.operators.SmallGraph.rectanglesKernel(it))
-        .toDF("a", "b", "cn", "rect")
+    SmallGraph.route(sub, Seq("x", "y"), cost = SmallGraph.Superlinear)(
+        SmallGraph.rectanglesKernel(_), "a", "b", "cn", "rect") { sub =>
+      val canon = graft.operators.Triangles.canonical(sub, "x", "y")
+        .localCheckpoint(true)
+      val nbr = canon.select(col("lo").as("w"), col("hi").as("n"))
+        .unionAll(canon.select(col("hi").as("w"), col("lo").as("n")))
+      val deg = nbr.groupBy("w").agg(count(lit(1)).as("d"))
+      val wedges = nbr
+        .join(deg.filter(col("d").between(2, 256)).select("w"), Seq("w"))
+        .groupBy("w").agg(sort_array(collect_set(col("n"))).as("ns"))
+        .select(explode(expr(
+          "flatten(transform(ns, (x, i) -> " +
+            "transform(slice(ns, i + 2, size(ns)), y -> struct(x, y))))"))
+          .as("e"))
+        .select(col("e.x").as("a"), col("e.y").as("b"))
+      wedges.groupBy("a", "b").agg(count(lit(1)).as("cn"))
+        .select(col("a"), col("b"), col("cn"),
+          expr("cn * (cn - 1) div 2").as("rect"))
+        .orderBy(col("rect").desc, col("a"), col("b"))
+        .limit(20)
     }
-    val canon = graft.operators.Triangles.canonical(sub, "x", "y")
-      .localCheckpoint(true)
-    val nbr = canon.select(col("lo").as("w"), col("hi").as("n"))
-      .unionAll(canon.select(col("hi").as("w"), col("lo").as("n")))
-    val deg = nbr.groupBy("w").agg(count(lit(1)).as("d"))
-    val wedges = nbr
-      .join(deg.filter(col("d").between(2, 256)).select("w"), Seq("w"))
-      .groupBy("w").agg(sort_array(collect_set(col("n"))).as("ns"))
-      .select(explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-          "transform(slice(ns, i + 2, size(ns)), y -> struct(x, y))))"))
-        .as("e"))
-      .select(col("e.x").as("a"), col("e.y").as("b"))
-    wedges.groupBy("a", "b").agg(count(lit(1)).as("cn"))
-      .select(col("a"), col("b"), col("cn"),
-        expr("cn * (cn - 1) div 2").as("rect"))
-      .orderBy(col("rect").desc, col("a"), col("b"))
-      .limit(20)
   }
 
   /** Rich-club coefficient φ(k) = 2·E_k / (N_k·(N_k − 1)) at k ∈
@@ -119,36 +112,29 @@ trait RegistryGraph extends RegistryEvent {
     // COST gate (SmallGraph): degrees + three filtered edge counts in
     // ONE executor task; the distributed aggregates below are the
     // 100 TB path.
-    {
-      val pairs = coPurchasePairs(spark, dir)
-      if (graft.operators.SmallGraph.smallEnough(pairs, "x", "y")) {
-        import spark.implicits._
-        return pairs.select(col("x").cast("long"), col("y").cast("long"))
-          .as[(Long, Long)].coalesce(1)
-          .mapPartitions(it => graft.operators.SmallGraph.richClubKernel(it))
-          .toDF("k", "n_club", "e_club", "phi_micro")
-      }
+    SmallGraph.route(coPurchasePairs(spark, dir), Seq("x", "y"))(
+        SmallGraph.richClubKernel(_), "k", "n_club", "e_club", "phi_micro") {
+        pairs =>
+      val canon = graft.operators.Triangles.canonical(pairs, "x", "y")
+        .localCheckpoint(true)
+      val deg = canon.select(col("lo").as("n"))
+        .unionAll(canon.select(col("hi").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+        .localCheckpoint(true)
+      Seq(32L, 64L, 128L).map { k =>
+        val club = deg.filter(col("d") > k).select("n")
+        val nk = club.agg(count(lit(1)).as("nk"))
+        val ek = canon
+          .join(club.select(col("n").as("lo")), Seq("lo"), "left_semi")
+          .join(club.select(col("n").as("hi")), Seq("hi"), "left_semi")
+          .agg(count(lit(1)).as("ek"))
+        nk.crossJoin(ek)
+          .select(lit(k).as("k"), col("nk").as("n_club"),
+            col("ek").as("e_club"),
+            expr("CASE WHEN nk >= 2 THEN (2 * ek * 1000000)" +
+              " div (nk * (nk - 1)) ELSE 0 END").as("phi_micro"))
+      }.reduce(_ unionAll _).orderBy("k")
     }
-    val canon = graft.operators.Triangles.canonical(
-        coPurchasePairs(spark, dir), "x", "y")
-      .localCheckpoint(true)
-    val deg = canon.select(col("lo").as("n"))
-      .unionAll(canon.select(col("hi").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    Seq(32L, 64L, 128L).map { k =>
-      val club = deg.filter(col("d") > k).select("n")
-      val nk = club.agg(count(lit(1)).as("nk"))
-      val ek = canon
-        .join(club.select(col("n").as("lo")), Seq("lo"), "left_semi")
-        .join(club.select(col("n").as("hi")), Seq("hi"), "left_semi")
-        .agg(count(lit(1)).as("ek"))
-      nk.crossJoin(ek)
-        .select(lit(k).as("k"), col("nk").as("n_club"),
-          col("ek").as("e_club"),
-          expr("CASE WHEN nk >= 2 THEN (2 * ek * 1000000)" +
-            " div (nk * (nk - 1)) ELSE 0 END").as("phi_micro"))
-    }.reduce(_ unionAll _).orderBy("k")
   }
 
   /** Power-law tail exponent of the co-purchase degree distribution —
@@ -364,18 +350,14 @@ trait RegistryGraph extends RegistryEvent {
     // COST gate (SmallGraph): canonicalize + degree-oriented triangle
     // enumeration + bucket counts in ONE executor task under the size
     // threshold; the distributed wedge join below is the 100 TB path.
-    if (graft.operators.SmallGraph.smallEnoughScaled(pairs, graft.operators.SmallGraph.SuperlinearMaxBytes, "x", "y")) {
-      import spark.implicits._
-      return pairs.select(col("x").cast("long"), col("y").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it =>
-          graft.operators.SmallGraph.triangleBucketsKernel(it))
-        .toDF("bucket", "n_triangles")
+    SmallGraph.route(pairs, Seq("x", "y"), cost = SmallGraph.Superlinear)(
+        SmallGraph.triangleBucketsKernel(_), "bucket", "n_triangles") {
+        pairs =>
+      graft.operators.Triangles.triangles(pairs, "x", "y")
+        .groupBy(pmod(col("n1"), lit(10)).as("bucket"))
+        .agg(count(lit(1)).as("n_triangles"))
+        .orderBy("bucket")
     }
-    graft.operators.Triangles.triangles(pairs, "x", "y")
-      .groupBy(pmod(col("n1"), lit(10)).as("bucket"))
-      .agg(count(lit(1)).as("n_triangles"))
-      .orderBy("bucket")
   }
 
   /** Multi-source BFS hop distances over the part co-purchase graph from
@@ -428,52 +410,44 @@ trait RegistryGraph extends RegistryEvent {
     // COST gate (SmallGraph): triangles, degrees and the integer
     // micro-unit lcc/transitivity summary in ONE executor task under
     // the size threshold; the distributed pass below is the 100 TB path.
-    {
-      val pairs = coPurchasePairs(spark, dir)
-      if (graft.operators.SmallGraph.smallEnoughScaled(pairs, graft.operators.SmallGraph.SuperlinearMaxBytes, "x", "y")) {
-        import spark.implicits._
-        return pairs.select(col("x").cast("long"), col("y").cast("long"))
-          .as[(Long, Long)].coalesce(1)
-          .mapPartitions(it =>
-            graft.operators.SmallGraph.clusteringKernel(it))
-          .toDF("n_nodes", "n_triangles", "n_wedges",
-            "transitivity_micro", "avg_lcc_micro")
-      }
+    SmallGraph.route(coPurchasePairs(spark, dir), Seq("x", "y"),
+        cost = SmallGraph.Superlinear)(SmallGraph.clusteringKernel(_),
+        "n_nodes", "n_triangles", "n_wedges", "transitivity_micro",
+        "avg_lcc_micro") { pairs =>
+      val dec = DecimalType(38, 0)
+      val canon = graft.operators.Triangles.canonical(pairs, "x", "y")
+        .localCheckpoint(true)
+      val (tri, release) =
+        graft.operators.Triangles.trianglesReleasable(canon, "lo", "hi")
+      val triN = tri
+        .select(explode(array(col("n1"), col("n2"), col("n3"))).as("n"))
+        .groupBy("n").agg(count(lit(1)).as("t"))
+      val deg = canon.select(col("lo").as("n"))
+        .unionAll(canon.select(col("hi").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+      val per = deg.filter(col("d") >= 2)
+        .join(triN, Seq("n"), "left")
+        .select(col("d"), coalesce(col("t"), lit(0L)).as("t"))
+        .withColumn("lcc6", expr(
+          "(CAST(t AS DECIMAL(38,0)) * 2000000) div (CAST(d AS DECIMAL(38,0)) * (d - 1))"))
+      val out = per.agg(
+          count(lit(1)).as("n_nodes"),
+          sum(col("t")).as("t3"),
+          sum((col("d").cast(dec) * (col("d") - 1))).as("w2"),
+          sum(col("lcc6")).as("slcc"))
+        .select(col("n_nodes"),
+          expr("t3 div 3").as("n_triangles"),
+          expr("w2 div 2").cast("long").as("n_wedges"),
+          expr("(CAST(t3 AS DECIMAL(38,0)) * 2000000) div w2")
+            .as("transitivity_micro"),
+          expr("slcc div n_nodes").as("avg_lcc_micro"))
+      // Materialize the 1-row summary, then release the cached triangle
+      // inputs (the KTruss discipline): the returned relation re-reads the
+      // checkpoint, never the unpersisted intermediates.
+      val outM = out.localCheckpoint(true)
+      release()
+      outM
     }
-    val dec = DecimalType(38, 0)
-    val canon = graft.operators.Triangles.canonical(
-        coPurchasePairs(spark, dir), "x", "y")
-      .localCheckpoint(true)
-    val (tri, release) =
-      graft.operators.Triangles.trianglesReleasable(canon, "lo", "hi")
-    val triN = tri
-      .select(explode(array(col("n1"), col("n2"), col("n3"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("t"))
-    val deg = canon.select(col("lo").as("n"))
-      .unionAll(canon.select(col("hi").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val per = deg.filter(col("d") >= 2)
-      .join(triN, Seq("n"), "left")
-      .select(col("d"), coalesce(col("t"), lit(0L)).as("t"))
-      .withColumn("lcc6", expr(
-        "(CAST(t AS DECIMAL(38,0)) * 2000000) div (CAST(d AS DECIMAL(38,0)) * (d - 1))"))
-    val out = per.agg(
-        count(lit(1)).as("n_nodes"),
-        sum(col("t")).as("t3"),
-        sum((col("d").cast(dec) * (col("d") - 1))).as("w2"),
-        sum(col("lcc6")).as("slcc"))
-      .select(col("n_nodes"),
-        expr("t3 div 3").as("n_triangles"),
-        expr("w2 div 2").cast("long").as("n_wedges"),
-        expr("(CAST(t3 AS DECIMAL(38,0)) * 2000000) div w2")
-          .as("transitivity_micro"),
-        expr("slcc div n_nodes").as("avg_lcc_micro"))
-    // Materialize the 1-row summary, then release the cached triangle
-    // inputs (the KTruss discipline): the returned relation re-reads the
-    // checkpoint, never the unpersisted intermediates.
-    val outM = out.localCheckpoint(true)
-    release()
-    outM
   }
 
   /** Link prediction on the co-purchase graph: rank non-adjacent node
@@ -494,35 +468,31 @@ trait RegistryGraph extends RegistryEvent {
     // COST gate (SmallGraph): capped wedges + per-center AA floors +
     // the non-adjacency filter in ONE executor task; the distributed
     // explode/anti-join below is the 100 TB path.
-    if (graft.operators.SmallGraph.smallEnoughScaled(sub, graft.operators.SmallGraph.SuperlinearMaxBytes, "x", "y")) {
-      import spark.implicits._
-      return sub.select(col("x").cast("long"), col("y").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => graft.operators.SmallGraph.linkPredKernel(it))
-        .toDF("a", "b", "cn", "aa_micro")
+    SmallGraph.route(sub, Seq("x", "y"), cost = SmallGraph.Superlinear)(
+        SmallGraph.linkPredKernel(_), "a", "b", "cn", "aa_micro") { sub =>
+      val canon = graft.operators.Triangles.canonical(sub, "x", "y")
+        .localCheckpoint(true)
+      val nbr = canon.select(col("lo").as("w"), col("hi").as("n"))
+        .unionAll(canon.select(col("hi").as("w"), col("lo").as("n")))
+      val aa = nbr.groupBy("w").agg(count(lit(1)).as("d"))
+        .filter(col("d").between(2, 256))
+        .select(col("w"), floor(lit(1e6) / log(col("d").cast("double"))).as("aa6"))
+      val wedges = nbr.groupBy("w")
+        .agg(sort_array(collect_set(col("n"))).as("ns"))
+        .join(aa, Seq("w"))
+        .select(col("aa6"), explode(expr(
+          "flatten(transform(ns, (x, i) -> " +
+            "transform(slice(ns, i + 2, size(ns)), y -> struct(x, y))))"))
+          .as("e"))
+        .select(col("e.x").as("a"), col("e.y").as("b"), col("aa6"))
+      val scored = wedges.groupBy("a", "b").agg(
+        count(lit(1)).as("cn"), sum(col("aa6")).as("aa_micro"))
+      scored.join(canon,
+          scored("a") === canon("lo") && scored("b") === canon("hi"),
+          "left_anti")
+        .orderBy(col("cn").desc, col("aa_micro").desc, col("a"), col("b"))
+        .limit(20)
     }
-    val canon = graft.operators.Triangles.canonical(sub, "x", "y")
-      .localCheckpoint(true)
-    val nbr = canon.select(col("lo").as("w"), col("hi").as("n"))
-      .unionAll(canon.select(col("hi").as("w"), col("lo").as("n")))
-    val aa = nbr.groupBy("w").agg(count(lit(1)).as("d"))
-      .filter(col("d").between(2, 256))
-      .select(col("w"), floor(lit(1e6) / log(col("d").cast("double"))).as("aa6"))
-    val wedges = nbr.groupBy("w")
-      .agg(sort_array(collect_set(col("n"))).as("ns"))
-      .join(aa, Seq("w"))
-      .select(col("aa6"), explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-          "transform(slice(ns, i + 2, size(ns)), y -> struct(x, y))))"))
-        .as("e"))
-      .select(col("e.x").as("a"), col("e.y").as("b"), col("aa6"))
-    val scored = wedges.groupBy("a", "b").agg(
-      count(lit(1)).as("cn"), sum(col("aa6")).as("aa_micro"))
-    scored.join(canon,
-        scored("a") === canon("lo") && scored("b") === canon("hi"),
-        "left_anti")
-      .orderBy(col("cn").desc, col("aa_micro").desc, col("a"), col("b"))
-      .limit(20)
   }
 
   /** Harmonic closeness centrality from the mod-97 seed set over the
@@ -724,41 +694,33 @@ trait RegistryGraph extends RegistryEvent {
     // COST gate (SmallGraph): exact-integer moments + the single double
     // division in ONE executor task; the distributed joins below are
     // the 100 TB path.
-    {
-      val pairs = coPurchasePairs(spark, dir)
-      if (graft.operators.SmallGraph.smallEnough(pairs, "x", "y")) {
-        import spark.implicits._
-        return pairs.select(col("x").cast("long"), col("y").cast("long"))
-          .as[(Long, Long)].coalesce(1)
-          .mapPartitions(it =>
-            graft.operators.SmallGraph.assortativityKernel(it))
-          .toDF("n_directed_edges", "r6")
-      }
+    SmallGraph.route(coPurchasePairs(spark, dir), Seq("x", "y"))(
+        SmallGraph.assortativityKernel(_), "n_directed_edges", "r6") {
+        pairs =>
+      val dec = DecimalType(38, 0)
+      val canon = graft.operators.Triangles.canonical(pairs, "x", "y")
+        .localCheckpoint(true)
+      val deg = canon.select(col("lo").as("n"))
+        .unionAll(canon.select(col("hi").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("deg"))
+      val e2 = canon.select(col("lo").as("s"), col("hi").as("t"))
+        .unionAll(canon.select(col("hi").as("s"), col("lo").as("t")))
+      val jk = e2
+        .join(deg.select(col("n").as("s"), col("deg").as("j")), Seq("s"))
+        .join(deg.select(col("n").as("t"), col("deg").as("k")), Seq("t"))
+      jk.agg(
+          count(lit(1)).as("n2"),
+          sum(col("j").cast(dec) * col("k")).as("sjk"),
+          sum(col("j").cast(dec)).as("sj"),
+          sum(col("j").cast(dec) * col("j")).as("sjj"))
+        .select(col("n2").as("n_directed_edges"),
+          (floor(
+            (col("n2").cast(dec) * col("sjk") - col("sj") * col("sj"))
+              .cast("double")
+            / (col("n2").cast(dec) * col("sjj") - col("sj") * col("sj"))
+              .cast("double")
+            * 1e6) / 1e6).as("r6"))
     }
-    val dec = DecimalType(38, 0)
-    val canon = graft.operators.Triangles.canonical(
-        coPurchasePairs(spark, dir), "x", "y")
-      .localCheckpoint(true)
-    val deg = canon.select(col("lo").as("n"))
-      .unionAll(canon.select(col("hi").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-    val e2 = canon.select(col("lo").as("s"), col("hi").as("t"))
-      .unionAll(canon.select(col("hi").as("s"), col("lo").as("t")))
-    val jk = e2
-      .join(deg.select(col("n").as("s"), col("deg").as("j")), Seq("s"))
-      .join(deg.select(col("n").as("t"), col("deg").as("k")), Seq("t"))
-    jk.agg(
-        count(lit(1)).as("n2"),
-        sum(col("j").cast(dec) * col("k")).as("sjk"),
-        sum(col("j").cast(dec)).as("sj"),
-        sum(col("j").cast(dec) * col("j")).as("sjj"))
-      .select(col("n2").as("n_directed_edges"),
-        (floor(
-          (col("n2").cast(dec) * col("sjk") - col("sj") * col("sj"))
-            .cast("double")
-          / (col("n2").cast(dec) * col("sjj") - col("sj") * col("sj"))
-            .cast("double")
-          * 1e6) / 1e6).as("r6"))
   }
 
   /** Newman modularity of the LabelProp communities on the modulus-4

@@ -8,6 +8,7 @@ import graft.config.Catalog
 import graft.header.HeaderDetector
 import graft.io.FileReader
 import graft.llm.{Decontaminate, Dedup, Index, Multimodal, Pack, SemDedup, Similarity, TextAnalysis, Urls}
+import graft.operators.SmallGraph
 import graft.pipeline.Ingestor
 import graft.transform.Transformers
 
@@ -351,42 +352,34 @@ trait RegistryLlmDedup extends RegistryMm {
     // distributed chain below is an eager shingle checkpoint + groupBy
     // + pair explode + two verify joins); identical gram sets, caps and
     // truncating score. Distributed shape unchanged — the 100 TB path.
-    locally {
-      val in = base.unionAll(excerpts)
+    SmallGraph.route(base.unionAll(excerpts), Seq("doc_id"),
+        cols = Seq(col("doc_id"), Dedup.shingles(col("text"), 5)))(
+        Dedup.containmentKernel(_, dfMin = 2, dfMax = 8, minScore = 8000L),
+        "doc_a", "doc_b", "n_common", "containment4") { docs =>
+      val corpus = widen(docs) // 1-task scan, heavy shingles
         .select(col("doc_id"), Dedup.shingles(col("text"), 5).as("grams"))
-      if (graft.operators.SmallGraph.smallEnough(in, "doc_id")) {
-        import spark.implicits._
-        return in.as[(Long, Seq[String])].coalesce(1)
-          .mapPartitions(it => graft.llm.Dedup.containmentKernel(it,
-            dfMin = 2, dfMax = 8, minScore = 8000L))
-          .toDF("doc_a", "doc_b", "n_common", "containment4")
-          .orderBy("doc_a", "doc_b")
-      }
-    }
-    val corpus = widen(base.unionAll(excerpts)) // 1-task scan, heavy shingles
-      .select(col("doc_id"), Dedup.shingles(col("text"), 5).as("grams"))
-      .localCheckpoint(true) // feeds the bucket explode AND the verify join
-    val gd = corpus.select(col("doc_id"), explode(col("grams")).as("gr"))
-    val buckets = gd.groupBy("gr")
-      .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")).between(2, 8))
-    val pairs = buckets.select(explode(expr(
-        "flatten(transform(ds, (x, i) -> " +
-          "transform(slice(ds, i + 2, size(ds)), y -> struct(x, y))))"))
-        .as("e"))
-      .select(col("e.x").as("da"), col("e.y").as("db")).distinct()
-    pairs
-      .join(corpus.select(col("doc_id").as("da"), col("grams").as("ga")),
-        Seq("da"))
-      .join(corpus.select(col("doc_id").as("db"), col("grams").as("gb")),
-        Seq("db"))
-      .select(col("da").as("doc_a"), col("db").as("doc_b"),
-        size(array_intersect(col("ga"), col("gb"))).cast("long")
-          .as("n_common"),
-        expr("(size(array_intersect(ga, gb)) * 10000)" +
-          " div least(size(ga), size(gb))").as("containment4"))
-      .filter(col("containment4") >= 8000)
-      .orderBy("doc_a", "doc_b")
+        .localCheckpoint(true) // feeds the bucket explode AND the verify join
+      val gd = corpus.select(col("doc_id"), explode(col("grams")).as("gr"))
+      val buckets = gd.groupBy("gr")
+        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
+        .filter(size(col("ds")).between(2, 8))
+      val pairs = buckets.select(explode(expr(
+          "flatten(transform(ds, (x, i) -> " +
+            "transform(slice(ds, i + 2, size(ds)), y -> struct(x, y))))"))
+          .as("e"))
+        .select(col("e.x").as("da"), col("e.y").as("db")).distinct()
+      pairs
+        .join(corpus.select(col("doc_id").as("da"), col("grams").as("ga")),
+          Seq("da"))
+        .join(corpus.select(col("doc_id").as("db"), col("grams").as("gb")),
+          Seq("db"))
+        .select(col("da").as("doc_a"), col("db").as("doc_b"),
+          size(array_intersect(col("ga"), col("gb"))).cast("long")
+            .as("n_common"),
+          expr("(size(array_intersect(ga, gb)) * 10000)" +
+            " div least(size(ga), size(gb))").as("containment4"))
+        .filter(col("containment4") >= 8000)
+    }.orderBy("doc_a", "doc_b")
   }
 
   // ------------------------------------------------ LLM-pipeline: similarity

@@ -8,6 +8,7 @@ import graft.config.Catalog
 import graft.header.HeaderDetector
 import graft.io.FileReader
 import graft.llm.{Decontaminate, Dedup, Index, Multimodal, Pack, SemDedup, Similarity, TextAnalysis, Urls}
+import graft.operators.SmallGraph
 import graft.pipeline.Ingestor
 import graft.transform.Transformers
 
@@ -451,6 +452,18 @@ trait RegistryLlmSim extends RegistryLlmCuration {
       .orderBy("vec_id")
   }
 
+  /** Bounded-kernel PQ ADC relation (id, adc_dist, exact_dist) over the
+    * null-key-filtered `emb`: the whole train-encode-ADC chain in ONE
+    * executor task ([[graft.llm.PqDet.pqAdcKernel]] — identical
+    * arithmetic, same oracle), the small route of both PQ queries.
+    * exact_dist is the full-precision refine distance the rerank tail
+    * consumes. */
+  private def pqDetAdc(emb: DataFrame): DataFrame =
+    SmallGraph.singleTask(emb,
+        graft.llm.DetKMeans.unitCols("vec_id", "embedding"))(
+      graft.llm.PqDet.pqAdcKernel(_, m = 8, subDim = 8, kCodes = 16,
+        iters = 2), "id", "adc_dist", "exact_dist")
+
   /** Product quantization with DETERMINISTIC per-subspace codebooks
     * (integer-unit k-means on each 8-dim slice) and fully-integer ADC
     * search — the PQ twin of q_llm_kmeans_det: training, encoding and
@@ -458,57 +471,33 @@ trait RegistryLlmSim extends RegistryLlmCuration {
     * oracle, so the TRAINED-index ANN answer is hash-checked. This IS
     * the registered `q_llm_ann_pq` (the seeded float-codebook variant
     * lives on as PqSpec coverage of graft.llm.Pq). */
-  /** Bounded-kernel PQ ADC relation (id, adc_dist, exact_dist): the
-    * whole train-encode-ADC chain in ONE executor task
-    * ([[graft.llm.PqDet.pqAdcKernel]] — identical arithmetic, same
-    * oracle) when the unit-point relation passes the SmallGraph gate;
-    * None routes the distributed chain (the 100 TB path). exact_dist
-    * is the full-precision refine distance the rerank tail consumes. */
-  private def pqDetKernelAdc(spark: SparkSession,
-                             dir: String): Option[DataFrame] = {
-    import graft.llm.DetKMeans
-    val emb = t(spark, dir, "embeddings")
-    val full = DetKMeans.unitPoints(emb, "vec_id", "embedding")
-    if (!graft.operators.SmallGraph.smallEnough(full, "id")) return None
-    import spark.implicits._
-    Some(full.select(col("id"), col("u")).as[(Long, Seq[Long])]
-      .coalesce(1)
-      .mapPartitions(it => graft.llm.PqDet.pqAdcKernel(it,
-        m = 8, subDim = 8, kCodes = 16, iters = 2))
-      .toDF("id", "adc_dist", "exact_dist"))
-  }
-
-  protected def llmAnnPqDet(spark: SparkSession, dir: String): DataFrame = {
-    pqDetKernelAdc(spark, dir).foreach { adc =>
-      return adc.select(col("id").as("vec_id"), col("adc_dist"))
-        .orderBy(col("adc_dist"), col("vec_id")).limit(10)
-    }
-    import graft.llm.DetKMeans
-    val emb = t(spark, dir, "embeddings")
-    val m = 8; val subDim = 8; val kCodes = 16; val iters = 2
-    // All m subspaces as one grouped relation: (g, id, u_slice-units).
-    val pts = emb.select(col("vec_id").cast("long").as("id"),
-        posexplode(array((0 until m).map(s =>
-          slice(col("embedding"), s * subDim + 1, subDim)): _*))
-          .as(Seq("g", "sub")))
-      .select(col("g").cast("long").as("g"), col("id"),
-        DetKMeans.toUnits(col("sub")).as("u"))
-    // The fitted codebook is m·k·dim longs but its LINEAGE is the whole
-    // training run — persist it so cells and the ADC table don't each
-    // re-execute training (the SemDedup round-6 lesson).
-    val (_, cents0) = DetKMeans.fitGrouped(pts, kCodes, iters, subDim)
-    val cents = cents0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cells = DetKMeans.assignToGrouped(pts, cents)
-    val q = pts.filter(col("id") === 0)
-      .select(col("g"), col("u").as("qu"))
-    val qd = cents.join(broadcast(q), Seq("g"))
-      .select(col("g"), col("cid"), DetKMeans.dist2(col("c"), col("qu")).as("qd"))
-    cells.select(col("g"), col("id"), col("cid"))
-      .join(broadcast(qd), Seq("g", "cid"))
-      .groupBy("id").agg(sum(col("qd")).as("adc_dist"))
-      .select(col("id").as("vec_id"), col("adc_dist"))
+  protected def llmAnnPqDet(spark: SparkSession, dir: String): DataFrame =
+    SmallGraph.routeWith(t(spark, dir, "embeddings"), Seq("vec_id"),
+        anyKey = true)(pqDetAdc) { emb =>
+      import graft.llm.DetKMeans
+      val m = 8; val subDim = 8; val kCodes = 16; val iters = 2
+      // All m subspaces as one grouped relation: (g, id, u_slice-units).
+      val pts = emb.select(col("vec_id").cast("long").as("id"),
+          posexplode(array((0 until m).map(s =>
+            slice(col("embedding"), s * subDim + 1, subDim)): _*))
+            .as(Seq("g", "sub")))
+        .select(col("g").cast("long").as("g"), col("id"),
+          DetKMeans.toUnits(col("sub")).as("u"))
+      // The fitted codebook is m·k·dim longs but its LINEAGE is the whole
+      // training run — persist it so cells and the ADC table don't each
+      // re-execute training (the SemDedup round-6 lesson).
+      val (_, cents0) = DetKMeans.fitGrouped(pts, kCodes, iters, subDim)
+      val cents = cents0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cells = DetKMeans.assignToGrouped(pts, cents)
+      val q = pts.filter(col("id") === 0)
+        .select(col("g"), col("u").as("qu"))
+      val qd = cents.join(broadcast(q), Seq("g"))
+        .select(col("g"), col("cid"), DetKMeans.dist2(col("c"), col("qu")).as("qd"))
+      cells.select(col("g"), col("id"), col("cid"))
+        .join(broadcast(qd), Seq("g", "cid"))
+        .groupBy("id").agg(sum(col("qd")).as("adc_dist"))
+    }.select(col("id").as("vec_id"), col("adc_dist"))
       .orderBy(col("adc_dist"), col("vec_id")).limit(10)
-  }
 
   /** FAISS IndexRefine on the deterministic PQ index: ADC ranks a
     * 50-candidate shortlist, exact integer L2 re-ranks it to the final
@@ -516,43 +505,41 @@ trait RegistryLlmSim extends RegistryLlmCuration {
     * distance reads only the shortlist's full vectors (broadcast semi),
     * which is the whole point of refine at scale: full-precision I/O
     * proportional to the shortlist, not the corpus. */
-  protected def llmAnnPqDetRerank(spark: SparkSession, dir: String): DataFrame = {
-    pqDetKernelAdc(spark, dir).foreach { adc =>
+  protected def llmAnnPqDetRerank(spark: SparkSession, dir: String): DataFrame =
+    SmallGraph.routeWith(t(spark, dir, "embeddings"), Seq("vec_id"),
+        anyKey = true) { emb =>
       // Shortlist by (ADC, id), exact-refine by the kernel's
       // full-precision distance — the same integers the distributed
       // tail's shortlist semi-join + dist2 recompute yields.
-      return adc.orderBy(col("adc_dist"), col("id")).limit(50)
+      pqDetAdc(emb).orderBy(col("adc_dist"), col("id")).limit(50)
         .select(col("id").as("vec_id"), col("exact_dist"))
-        .orderBy(col("exact_dist"), col("vec_id")).limit(10)
-    }
-    import graft.llm.DetKMeans
-    val emb = t(spark, dir, "embeddings")
-    val m = 8; val subDim = 8; val kCodes = 16; val iters = 2
-    val pts = emb.select(col("vec_id").cast("long").as("id"),
-        posexplode(array((0 until m).map(s =>
-          slice(col("embedding"), s * subDim + 1, subDim)): _*))
-          .as(Seq("g", "sub")))
-      .select(col("g").cast("long").as("g"), col("id"),
-        DetKMeans.toUnits(col("sub")).as("u"))
-    val (_, cents0) = DetKMeans.fitGrouped(pts, kCodes, iters, subDim)
-    val cents = cents0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cells = DetKMeans.assignToGrouped(pts, cents)
-    val q = pts.filter(col("id") === 0).select(col("g"), col("u").as("qu"))
-    val qd = cents.join(broadcast(q), Seq("g"))
-      .select(col("g"), col("cid"), DetKMeans.dist2(col("c"), col("qu")).as("qd"))
-    val shortlist = cells.select(col("g"), col("id"), col("cid"))
-      .join(broadcast(qd), Seq("g", "cid"))
-      .groupBy("id").agg(sum(col("qd")).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("id")).limit(50)
-    // Exact refine: full-precision integer L2 over the shortlist only.
-    val full = DetKMeans.unitPoints(emb, "vec_id", "embedding")
-    val qFull = full.filter(col("id") === 0).select(col("u").as("qu"))
-    full.join(broadcast(shortlist.select(col("id"))), Seq("id"))
-      .crossJoin(broadcast(qFull))
-      .select(col("id").as("vec_id"),
-        DetKMeans.dist2(col("u"), col("qu")).as("exact_dist"))
-      .orderBy(col("exact_dist"), col("vec_id")).limit(10)
-  }
+    } { emb =>
+      import graft.llm.DetKMeans
+      val m = 8; val subDim = 8; val kCodes = 16; val iters = 2
+      val pts = emb.select(col("vec_id").cast("long").as("id"),
+          posexplode(array((0 until m).map(s =>
+            slice(col("embedding"), s * subDim + 1, subDim)): _*))
+            .as(Seq("g", "sub")))
+        .select(col("g").cast("long").as("g"), col("id"),
+          DetKMeans.toUnits(col("sub")).as("u"))
+      val (_, cents0) = DetKMeans.fitGrouped(pts, kCodes, iters, subDim)
+      val cents = cents0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cells = DetKMeans.assignToGrouped(pts, cents)
+      val q = pts.filter(col("id") === 0).select(col("g"), col("u").as("qu"))
+      val qd = cents.join(broadcast(q), Seq("g"))
+        .select(col("g"), col("cid"), DetKMeans.dist2(col("c"), col("qu")).as("qd"))
+      val shortlist = cells.select(col("g"), col("id"), col("cid"))
+        .join(broadcast(qd), Seq("g", "cid"))
+        .groupBy("id").agg(sum(col("qd")).as("adc_dist"))
+        .orderBy(col("adc_dist"), col("id")).limit(50)
+      // Exact refine: full-precision integer L2 over the shortlist only.
+      val full = DetKMeans.unitPoints(emb, "vec_id", "embedding")
+      val qFull = full.filter(col("id") === 0).select(col("u").as("qu"))
+      full.join(broadcast(shortlist.select(col("id"))), Seq("id"))
+        .crossJoin(broadcast(qFull))
+        .select(col("id").as("vec_id"),
+          DetKMeans.dist2(col("u"), col("qu")).as("exact_dist"))
+    }.orderBy(col("exact_dist"), col("vec_id")).limit(10)
 
   /** Deterministic IVF-PQ (FAISS IVFADC, fully hash-checked): coarse
     * integer k-means partitions the corpus, PQ codebooks train on the
@@ -597,61 +584,59 @@ trait RegistryLlmSim extends RegistryLlmCuration {
   protected def ivfPqDetAdc(spark: SparkSession,
                           dir: String): (DataFrame, DataFrame) = {
     import graft.llm.DetKMeans
-    val emb = t(spark, dir, "embeddings")
     val m = 8; val subDim = 8; val kCodes = 16; val kCoarse = 8
-    val full = DetKMeans.unitPoints(emb, "vec_id", "embedding")
     // Bounded kernel: the whole IVFADC chain (coarse fit → cells →
     // residuals → per-subspace codebooks → probe → ADC) in ONE executor
     // task ([[graft.llm.PqDet.ivfPqAdcKernel]] — identical arithmetic;
     // the r16 partial-kernel plan still paid 2 collected codebooks,
     // 4 persists and a 4-relation ADC join tree). The extra exact_dist
     // column is the refine distance [[llmAnnIvfPqDetRerank]] consumes.
-    if (graft.operators.SmallGraph.smallEnough(full, "id")) {
-      import spark.implicits._
-      val adc = full.select(col("id"), col("u")).as[(Long, Seq[Long])]
-        .coalesce(1)
-        .mapPartitions(it => graft.llm.PqDet.ivfPqAdcKernel(it,
-          kCoarse, coarseIters = 2, m, subDim, kCodes,
-          pqIters = 2, nprobe = 2))
-        .toDF("id", "adc_dist", "exact_dist")
-      return (adc, full)
+    SmallGraph.routeWith(t(spark, dir, "embeddings"), Seq("vec_id"),
+        anyKey = true) { emb =>
+      val full = DetKMeans.unitPoints(emb, "vec_id", "embedding")
+      (SmallGraph.singleTask(full, Seq(col("id"), col("u")))(
+          graft.llm.PqDet.ivfPqAdcKernel(_, kCoarse, coarseIters = 2, m,
+            subDim, kCodes, pqIters = 2, nprobe = 2),
+          "id", "adc_dist", "exact_dist"), full)
+    } { emb =>
+      val full = DetKMeans.unitPoints(emb, "vec_id", "embedding")
+      val (_, co0) = DetKMeans.fit(emb, "vec_id", "embedding",
+        kCoarse, iters = 2, dim = 64)
+      val coarse = co0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cells = DetKMeans.assignTo(full, coarse)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val res = cells.join(broadcast(coarse), "cid")
+        .select(col("id"), col("cid"),
+          zip_with(col("u"), col("c"), (a, b) => a - b).as("r"))
+      val pts = res.select(col("id"),
+          posexplode(array((0 until m).map(s =>
+            slice(col("r"), s * subDim + 1, subDim)): _*)).as(Seq("g", "rs")))
+        .select(col("g").cast("long").as("g"), col("id"), col("rs").as("u"))
+      val (_, cb0) = DetKMeans.fitGrouped(pts, kCodes, iters = 2, subDim)
+      val codebooks = cb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val codes = DetKMeans.assignToGrouped(pts, codebooks)
+        .select(col("g"), col("id"), col("cid").as("code"))
+      val qu = full.filter(col("id") === 0).select(col("u").as("qu"))
+      val probed = coarse.crossJoin(broadcast(qu))
+        .select(col("cid"), DetKMeans.dist2(col("c"), col("qu")).as("cqd"))
+        .orderBy("cqd", "cid").limit(2).select("cid")
+      val qres = probed.join(broadcast(coarse), "cid").crossJoin(broadcast(qu))
+        .select(col("cid"), zip_with(col("qu"), col("c"), (a, b) => a - b).as("qr"))
+      val adcTable = qres.select(col("cid"),
+          posexplode(array((0 until m).map(s =>
+            slice(col("qr"), s * subDim + 1, subDim)): _*)).as(Seq("g", "qrs")))
+        .select(col("cid"), col("g").cast("long").as("g"), col("qrs"))
+        .join(broadcast(codebooks.select(col("g"), col("cid").as("code"), col("c"))),
+          Seq("g"))
+        .select(col("cid"), col("g"), col("code"),
+          DetKMeans.dist2(col("qrs"), col("c")).as("qd"))
+      val adcById = cells.select(col("id"), col("cid"))
+        .join(broadcast(probed), "cid")
+        .join(codes, Seq("id"))
+        .join(broadcast(adcTable), Seq("cid", "g", "code"))
+        .groupBy("id").agg(sum(col("qd")).as("adc_dist"))
+      (adcById, full)
     }
-    val (_, co0) = DetKMeans.fit(emb, "vec_id", "embedding",
-      kCoarse, iters = 2, dim = 64)
-    val coarse = co0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cells = DetKMeans.assignTo(full, coarse)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val res = cells.join(broadcast(coarse), "cid")
-      .select(col("id"), col("cid"),
-        zip_with(col("u"), col("c"), (a, b) => a - b).as("r"))
-    val pts = res.select(col("id"),
-        posexplode(array((0 until m).map(s =>
-          slice(col("r"), s * subDim + 1, subDim)): _*)).as(Seq("g", "rs")))
-      .select(col("g").cast("long").as("g"), col("id"), col("rs").as("u"))
-    val (_, cb0) = DetKMeans.fitGrouped(pts, kCodes, iters = 2, subDim)
-    val codebooks = cb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codes = DetKMeans.assignToGrouped(pts, codebooks)
-      .select(col("g"), col("id"), col("cid").as("code"))
-    val qu = full.filter(col("id") === 0).select(col("u").as("qu"))
-    val probed = coarse.crossJoin(broadcast(qu))
-      .select(col("cid"), DetKMeans.dist2(col("c"), col("qu")).as("cqd"))
-      .orderBy("cqd", "cid").limit(2).select("cid")
-    val qres = probed.join(broadcast(coarse), "cid").crossJoin(broadcast(qu))
-      .select(col("cid"), zip_with(col("qu"), col("c"), (a, b) => a - b).as("qr"))
-    val adcTable = qres.select(col("cid"),
-        posexplode(array((0 until m).map(s =>
-          slice(col("qr"), s * subDim + 1, subDim)): _*)).as(Seq("g", "qrs")))
-      .select(col("cid"), col("g").cast("long").as("g"), col("qrs"))
-      .join(broadcast(codebooks.select(col("g"), col("cid").as("code"), col("c"))),
-        Seq("g"))
-      .select(col("cid"), col("g"), col("code"),
-        DetKMeans.dist2(col("qrs"), col("c")).as("qd"))
-    val adcById = cells.select(col("id"), col("cid"))
-      .join(broadcast(probed), "cid")
-      .join(codes, Seq("id"))
-      .join(broadcast(adcTable), Seq("cid", "g", "code"))
-      .groupBy("id").agg(sum(col("qd")).as("adc_dist"))
-    (adcById, full)
   }
 
   /** Binary sign-quantized ANN: Hamming top-50 shortlist over packed

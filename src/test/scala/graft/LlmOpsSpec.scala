@@ -270,4 +270,25 @@ class LlmOpsSpec extends SparkSpecBase {
     assert(fps(1).getString(0) != fps(2).getString(0)) // md5 of different bags
     assert(fps(1).getLong(1) != fps(2).getLong(1))     // order-sensitive
   }
+
+  test("containment kernel: a repeated gram counts once per doc, as the " +
+      "distributed collect_set does") {
+    def run(docs: (Long, Seq[String])*) = Dedup.containmentKernel(
+      docs.iterator, dfMin = 2, dfMax = 2, minScore = 0L).toSeq
+    // df("a") is 2 docs, not 3 occurrences: the pair survives the cap.
+    assert(run((1L, Seq("a", "a")), (2L, Seq("a"))) ==
+      Seq((1L, 2L, 1L, 10000L)))
+    // No doc pairs with itself.
+    val wide = Dedup.containmentKernel(
+      Iterator((1L, Seq("a", "a", "b")), (2L, Seq("a", "b", "c"))),
+      dfMin = 2, dfMax = 8, minScore = 0L).toSeq
+    assert(wide.forall { case (a, b, _, _) => a < b } && wide.nonEmpty,
+      s"self-pair or no pair: $wide")
+  }
+
+  test("PqDet.nearest refuses an empty codebook") {
+    intercept[IllegalArgumentException] {
+      graft.llm.PqDet.nearest(Array(1L, 2L), Seq.empty)
+    }
+  }
 }

@@ -66,4 +66,12 @@ class Md5SketchSpec extends SparkSpecBase {
     assert(native.map(_._1).toSeq == Seq(1L, 2L, 3L))
     assert(native.toSeq == legacy.toSeq)
   }
+
+  test("SimhashMd5Fp rejects > 60 bits at analysis, not per row") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      gramsDf.select(Bridge.column(graft.expressions.SimhashMd5Fp(
+        Bridge.expression(col("grams")), 61)))
+    }
+    assert(e.getMessage.contains("60 bits"))
+  }
 }

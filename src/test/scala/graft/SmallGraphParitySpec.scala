@@ -11,17 +11,27 @@ import org.apache.spark.sql.functions._
   * seeds present/absent — the places a replay diverges first. The DuckDB
   * oracle independently replays the same arithmetic at every Verify gate; this
   * spec is the in-repo witness that flipping `graft.graph.smallKernel`
-  * can never move a bit. */
+  * can never move a bit. Fixtures plant null keys too: both routes must
+  * drop those rows (the SmallGraph.route null-key policy). */
 class SmallGraphParitySpec extends SparkSpecBase {
 
   private def bothWays(f: => DataFrame): Unit = {
+    import graft.operators.SmallGraph.kernelRoutes
     spark.conf.unset("graft.graph.smallKernel")
+    val before = kernelRoutes.get
     val localDf = f
+    // A gate that silently falls through (say, a non-Long key) would
+    // compare distributed with distributed and prove nothing.
+    assert(kernelRoutes.get > before,
+      "default side never took a kernel route")
     val local = localDf.collect().toSeq
     val localSchema = localDf.schema
     spark.conf.set("graft.graph.smallKernel", "false")
     try {
+      val forced = kernelRoutes.get
       val distDf = f
+      assert(kernelRoutes.get == forced,
+        "smallKernel=false side still took a kernel route")
       val dist = distDf.collect().toSeq
       // Names + types must match exactly; nullability may differ (it is
       // input-dependent on the distributed path — parquet columns are
@@ -38,16 +48,22 @@ class SmallGraphParitySpec extends SparkSpecBase {
   }
 
   // Hub 1 → {2,3,4,5}, chain 5-6-7, triangle 2-3-4, duplicate and
-  // reversed duplicates, a 2-cycle, and a negative-id appendage.
+  // reversed duplicates, a 2-cycle, a negative-id appendage, and a null
+  // key on either side.
   private def rawEdges = {
     import spark.implicits._
-    Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (5L, 6L), (6L, 7L),
+    (Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (5L, 6L), (6L, 7L),
       (2L, 3L), (3L, 4L), (2L, 4L), (4L, 2L), (1L, 2L), (7L, 1L),
-      (-3L, 1L), (-3L, -6L)).toDF("src", "dst")
+      (-3L, 1L), (-3L, -6L)).map { case (s, d) => (Option(s), Option(d)) } ++
+      Seq((None, Some(9L)), (Some(8L), None))).toDF("src", "dst")
   }
 
-  private def canonEdges =
+  // canonical() already drops null endpoints, so plant one after it.
+  private def canonEdges = {
+    import spark.implicits._
     graft.operators.Triangles.canonical(rawEdges, "src", "dst")
+      .unionByName(Seq((Option.empty[Long], Option(9L))).toDF("lo", "hi"))
+  }
 
   test("pagerank kernel == distributed loop") {
     bothWays(graft.operators.PageRank.run(rawEdges, "src", "dst",
@@ -89,8 +105,10 @@ class SmallGraphParitySpec extends SparkSpecBase {
   test("hits kernel == distributed loop (renorm ties)") {
     import spark.implicits._
     // Bipartite with duplicate pairs and score ties after renorm.
-    val e = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 11L), (3L, 12L),
-      (3L, 10L), (1L, 10L), (4L, 12L), (4L, 13L)).toDF("c", "p")
+    val e = (Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 11L), (3L, 12L),
+      (3L, 10L), (1L, 10L), (4L, 12L), (4L, 13L))
+      .map { case (c, p) => (Option(c), Option(p)) } ++
+      Seq((Some(5L), None))).toDF("c", "p")
     bothWays(graft.operators.Hits.topHubsAuthorities(e, "c", "p",
       rounds = 3, k = 3))
   }
@@ -106,9 +124,12 @@ class SmallGraphParitySpec extends SparkSpecBase {
 
   test("sssp kernel == distributed loop (parallel edges min-collapse)") {
     import spark.implicits._
-    val weighted = Seq((1L, 2L, 5L), (1L, 2L, 3L), (2L, 3L, 1L),
+    val weighted = (Seq((1L, 2L, 5L), (1L, 2L, 3L), (2L, 3L, 1L),
       (3L, 1L, 2L), (2L, 4L, 7L), (4L, 5L, 1L), (-3L, 1L, 2L),
-      (1L, -3L, 9L), (5L, 6L, 4L)).toDF("src", "dst", "w")
+      (1L, -3L, 9L), (5L, 6L, 4L))
+      .map { case (s, d, w) => (Option(s), Option(d), Option(w)) } ++
+      Seq((None, Some(2L), Some(1L)), (Some(6L), Some(7L), None)))
+      .toDF("src", "dst", "w")
     bothWays(graft.operators.Sssp.distanceSummary(weighted, seedsMod = 3,
       rounds = 4))
   }
@@ -128,6 +149,25 @@ class SmallGraphParitySpec extends SparkSpecBase {
   test("betweenness kernel == distributed loop (sigma/delta floors)") {
     bothWays(graft.operators.Betweenness.topK(canonEdges, seedsMod = 2,
       rounds = 3, k = 10))
+  }
+
+  test("minhash near-dup kernel == distributed chain (planted null id)") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog near the river bank"
+    val docs = Seq((Some(1L), base), (Some(2L), base + " today"),
+      (Some(3L), "an entirely different sentence about spark plans"),
+      (None, base)).toDF("id", "text")
+    bothWays(graft.llm.Dedup.minhashNearDuplicates(docs, "id", "text"))
+  }
+
+  test("k-means kernel == distributed Lloyd loop (planted null id)") {
+    import spark.implicits._
+    def v(base: Float) = Seq.tabulate(4)(i => base + i * 0.001f)
+    val pts = ((0L until 6L).map(i => (Option(i), v(0.0f))) ++
+      (6L until 12L).map(i => (Option(i), v(5.0f))) :+
+      ((None, v(-5.0f)))).toDF("vec_id", "embedding")
+    bothWays(graft.llm.DetKMeans.fit(pts, "vec_id", "embedding", k = 2,
+      iters = 3, dim = 4)._1)
   }
 
   // Registry-level kernels (wedge/triangle family): run the REGISTERED
