@@ -19,12 +19,18 @@ Anchor entries (graft.AnchorBench, fresh-JVM pinned subset, tagged
 comparisons and selected exclusively via --anchor, so the fresh-JVM numbers
 are only ever compared against other fresh-JVM numbers.
 
+The --perfbench mode diffs two `perfbench/run.py` outputs instead: it reads
+the JSON object on the last line of each and prints every metric with its
+old value, new value and new/old ratio (the per-layer diff of a --trace 1
+run, or the end-to-end figures of a --trace 0 run).
+
 Usage:
   benchdiff.py                     # last two same-sf entries of bench_history.jsonl
   benchdiff.py --sf sf1            # last two entries whose sf dir contains "sf1"
   benchdiff.py --anchor            # last two same-sf ANCHOR entries
   benchdiff.py OLD.json NEW.json   # explicit files (one JSON object each)
   benchdiff.py --threshold 3.0
+  benchdiff.py --perfbench OLD.out NEW.out   # two perfbench/run.py outputs
 
 Exit code: 0 always (the bench is load-sensitive; the output is an alarm to
 investigate, not a hard gate - wavegate/TimeOne are the re-check tools).
@@ -37,6 +43,36 @@ THRESHOLD = 2.0
 SF = None
 ANCHOR = False
 args = [a for a in sys.argv[1:]]
+
+
+def last_json(path):
+    return json.loads(Path(path).read_text().strip().splitlines()[-1])
+
+
+def perfbench_diff(old_path, new_path):
+    """Every metric of two perfbench runs: old, new, new/old."""
+    old, new = last_json(old_path), last_json(new_path)
+    om, nm = old.get("metrics", {}), new.get("metrics", {})
+    for tag, run in (("old", old), ("new", new)):
+        print(f"[benchdiff] {tag}: correct={run.get('correct')} "
+              f"attempted={run.get('attempted')} failed={run.get('failed')}")
+    width = max((len(k) for k in list(om) + list(nm)), default=0)
+    print(f"  {'metric':<{width}}  {'old':>12}  {'new':>12}  {'new/old':>8}  unit")
+    for name in list(om) + [k for k in nm if k not in om]:
+        a = om.get(name, {}).get("value")
+        b = nm.get(name, {}).get("value")
+        unit = (nm.get(name) or om.get(name)).get("unit", "")
+        ratio = f"{b / a:.3f}" if a and b is not None else "-"
+        fmt = lambda v: "-" if v is None else f"{v:.4g}"
+        print(f"  {name:<{width}}  {fmt(a):>12}  {fmt(b):>12}  {ratio:>8}  {unit}")
+
+
+if "--perfbench" in args:
+    i = args.index("--perfbench")
+    if len(args) != i + 3:
+        sys.exit("usage: benchdiff.py --perfbench OLD.out NEW.out")
+    perfbench_diff(args[i + 1], args[i + 2])
+    sys.exit(0)
 if "--anchor" in args:
     ANCHOR = True
     args.remove("--anchor")
@@ -50,8 +86,7 @@ if "--sf" in args:
     del args[i:i + 2]
 
 if len(args) == 2:
-    old = json.loads(Path(args[0]).read_text().strip().splitlines()[-1])
-    new = json.loads(Path(args[1]).read_text().strip().splitlines()[-1])
+    old, new = last_json(args[0]), last_json(args[1])
 else:
     hist = Path(__file__).resolve().parent.parent / "bench_history.jsonl"
     if not hist.exists():

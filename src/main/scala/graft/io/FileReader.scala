@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.ZipFile
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
@@ -587,14 +590,28 @@ object FileReader {
   /** S6 row-as-strings accessor: bounded driver-side fetch used by header
     * detection (reference: file_parser.py:138-152). */
   def firstRows(df: DataFrame, n: Int): IndexedSeq[Seq[String]] =
-    df.limit(n).collect().toIndexedSeq.map(_.toSeq.map(v => Option(v).map(_.toString.trim).getOrElse("")))
+    cellStrings(df.limit(n).collect().toIndexedSeq)
+
+  /** Collected rows as trimmed cell strings, null cells as "". */
+  private[graft] def cellStrings(rows: IndexedSeq[Row]): IndexedSeq[Seq[String]] =
+    rows.map(_.toSeq.map(v => Option(v).map(_.toString.trim).getOrElse("")))
 
   /** P1/P4 stable 1-based row numbers in file order via zipWithIndex —
     * deterministic across partitions because partition order follows file
-    * offset order. */
+    * offset order. Works on Catalyst's internal rows: the index is appended
+    * by an UnsafeProjection over (row, index), so no row is converted to an
+    * external `Row` and back. */
   def withRowNumbers(df: DataFrame, colName: String = "_row_number"): DataFrame = {
     val schema = StructType(df.schema.fields :+ StructField(colName, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (row, idx) => Row.fromSeq(row.toSeq :+ (idx + 1L)) }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val rdd = df.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
+      val append = UnsafeProjection.create(schema)
+      val index = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      it.map { case (row, idx) =>
+        index.setLong(0, idx + 1L)
+        append(joined(row, index)): InternalRow
+      }
+    }
+    Bridge.internalCreateDataFrame(df.sparkSession, rdd, schema)
   }
 }

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.config.{Catalog, SourceConfig}
 import graft.header.HeaderDetector
@@ -9,6 +11,7 @@ import graft.io.FileReader
 import graft.store.VersionStore
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** The end-to-end ingest orchestration — the Spark re-expression of the
   * reference's `POST /upload/{source}/ingest` flow (upload.py:419-561 →
@@ -40,14 +43,20 @@ object IngestPipeline {
         c.internalName -> HeaderDetector.ColumnMapping(c.acceptedHeaders, c.isRequired)
     }: _*)
 
-  /** Parse + detect + project + transform + split. Shared by ingest and
-    * validate. Returns (typedValid, quarantine, detection) — both returned
-    * frames share the `typed` parent, which is PERSISTED so the ingest's
-    * several actions (insert count, invalid count, dup count, data write)
-    * each start from the cached typed rows instead of re-parsing the file.
-    * Callers release it via the also-returned handle. */
-  private def prepare(spark: SparkSession, source: SourceConfig, path: String):
-      (DataFrame, DataFrame, HeaderDetector.Detection, DataFrame) = {
+  /** What [[prepare]] hands the ingest: the split frames (both over the
+    * checkpointed `typed` rows), the header detection, and the valid /
+    * invalid row counts the checkpoint job observed on its way through. */
+  private final case class Prepared(
+      valid: DataFrame, quarantine: DataFrame, det: HeaderDetector.Detection,
+      typed: DataFrame, validCount: Long, invalidCount: Long)
+
+  /** Parse + detect + project + transform + split. The typed rows are
+    * LOCALLY CHECKPOINTED, so the ingest's remaining actions (error collect,
+    * data write) start from the materialized rows instead of re-parsing the
+    * file; the same job counts the valid and invalid rows through an
+    * `Observation`. `typed` is returned so the caller can release it with
+    * [[releaseCheckpoint]]. */
+  private def prepare(spark: SparkSession, source: SourceConfig, path: String): Prepared = {
     val (raw, _) = FileReader.parseFile(spark, path)
     val head = FileReader.firstRows(raw, HeaderDetector.MaxScanRows)
     val det = HeaderDetector.detectHeaderRow(head, mappingsOf(source))
@@ -59,28 +68,52 @@ object IngestPipeline {
     val dataRows = numbered.filter(col("_row_number") > hdrIdx + 1)
     val nonEmpty = Ingestor.filterEmptyRows(dataRows, colIdx.values.map(i => s"_c$i").toSeq)
     // localCheckpoint (not just persist): the typed lineage is hundreds of
-    // parse/when expressions per column, and every downstream action (insert
-    // count, invalid count, error collect, data write) would re-ANALYZE that
-    // whole tree on the driver — at this point planning time, not execution
-    // time, dominates an ingest. Truncating the lineage makes each follow-up
-    // plan trivial. Fault-tolerance note: an ingest input is ≤100 MB by
-    // contract (the validate-time size cap), so losing a cached partition
-    // and restarting the ingest is cheaper than keeping the lineage.
+    // parse/when expressions per column, and every downstream action (error
+    // collect, data write) would re-ANALYZE that whole tree on the driver —
+    // at this point planning time, not execution time, dominates an ingest.
+    // Truncating the lineage makes each follow-up plan trivial.
+    // Fault-tolerance note: an ingest input is ≤100 MB by contract (the
+    // validate-time size cap), so losing a cached partition and restarting
+    // the ingest is cheaper than keeping the lineage. The observed counts
+    // sit in the checkpoint job's only (result) stage, so each partition
+    // adds to them once.
+    val present = Ingestor.keysPresent(source.uniqueKeys)
+    val split = Observation()
     val typed = Ingestor.transformColumns(Ingestor.project(nonEmpty, colIdx), source)
+      .observe(split, count(when(present, lit(1))).as("valid"),
+        count(when(!present, lit(1))).as("invalid"))
       .localCheckpoint()
+    val counts = split.get
     val (valid, quarantine) = Ingestor.validateSplit(typed, source.uniqueKeys)
-    (valid, quarantine, det, typed)
+    Prepared(valid, quarantine, det, typed, counts("valid").asInstanceOf[Long],
+      counts("invalid").asInstanceOf[Long])
   }
+
+  /** Drop the blocks a `localCheckpoint` pinned. `Dataset.unpersist` only
+    * reaches the cache manager; the checkpointed RDD sits under the plan as
+    * a `LogicalRDD` and has to be unpersisted itself. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
 
   /** Full ingest with the reference's partial-success semantics:
     * `completed` iff any rows landed (ingestor.py:624, 747-768); all-fail →
     * `failed` with a first-5 error summary (770-774). NCCI_PTP multi-part:
     * if a completed version already exists for (source, label, variant) the
-    * file appends under the SAME version id (691-783). */
+    * file appends under the SAME version id (691-783).
+    *
+    * Jobs per file: the bounded header collect, the checkpoint (which also
+    * counts valid and invalid rows), the error collect when any row is
+    * invalid, and the data write (which also counts the rows it lands),
+    * plus the store's metadata commits. */
   def ingestFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                  path: String, versionLabel: String,
                  effectiveDate: java.sql.Date, variant: Option[String] = None,
-                 markAsCurrent: Boolean = true): IngestResult = try {
+                 markAsCurrent: Boolean = true): IngestResult = {
+    var checkpointed: Option[DataFrame] = None
+    try {
     val source = Catalog(sourceCode)
     val fileHash = VersionStore.sha256File(path)
     val fileName = path.substring(path.lastIndexOf('/') + 1)
@@ -94,63 +127,71 @@ object IngestPipeline {
         .select("data_version_id", "part_count").collect().headOption
     else None
 
-    val (valid, quarantine, det, typed) = prepare(spark, source, path)
-    val (unique, _) = Ingestor.dedupFirstWins(valid, source.uniqueKeys)
-    val toWrite = unique.drop("_row_number").persist()
-    val inserted = toWrite.count()
-    // Valid + invalid in one job over the checkpointed typed rows.
-    // Duplicates = valid minus survivors (dedup keeps null-key rows, so the
-    // difference is exactly the rank>1 rows) — a count over the cached typed
-    // rows instead of a second run of the dedup window.
-    val (validCount, invalidCount) = Ingestor.validCounts(typed, source.uniqueKeys)
-    val dupCount = validCount - inserted
+    val Prepared(valid, quarantine, det, typed, validCount, invalidCount) =
+      prepare(spark, source, path)
+    checkpointed = Some(typed)
     // Error strings come to the driver CAPPED at maxCollectedErrors (the
-    // exact invalid count is still computed distributed) — an adversarial
+    // exact invalid count comes from the checkpoint job) — an adversarial
     // all-invalid file must not become a driver-OOM vector.
-    val invalidRows = quarantine.select("_error", "_row_number")
-      .orderBy("_row_number")
-      .limit(Catalog.Limits.maxCollectedErrors)
-      .collect().map(_.getString(0)).toSeq
+    val invalidRows = if (invalidCount == 0) Seq.empty[String]
+      else quarantine.select("_error", "_row_number")
+        .orderBy("_row_number")
+        .limit(Catalog.Limits.maxCollectedErrors)
+        .collect().map(_.getString(0)).toSeq
 
-    val result = existing match {
+    // Lands the first-wins survivors and returns how many: the write job
+    // counts them on the way out, past the dedup shuffle (in its result
+    // stage), so each partition adds once.
+    val (unique, _) = Ingestor.dedupFirstWins(valid, source.uniqueKeys)
+    def write(versionId: Long, append: Boolean): Long = {
+      val written = Observation()
+      store.writeData(source.targetTable, versionId,
+        unique.drop("_row_number").observe(written, count(lit(1)).as("rows")), append)
+      written.get("rows").asInstanceOf[Long]
+    }
+
+    val (versionId, inserted, status) = existing match {
       case Some(row) => // U4 append path
         val versionId = row.getLong(0)
-        store.writeData(source.targetTable, versionId, toWrite, append = true)
+        val inserted = write(versionId, append = true)
         store.appendPart(versionId, row.getInt(1) + 1, fileHash, fileName, inserted)
         store.log(versionId, "INFO", s"Appended part ${row.getInt(1) + 1} ($inserted rows)")
-        IngestResult(versionId, "completed", inserted + invalidCount + dupCount,
-          inserted, invalidCount, dupCount, invalidRows,
-          det.headerRowIndex.get, det.unmappedColumns)
+        (versionId, inserted, "completed")
       case None =>
         val versionId = store.createVersion(source.sourceCode, versionLabel,
           effectiveDate, variant, fileHash, fileName)
-        if (inserted > 0) {
-          store.writeData(source.targetTable, versionId, toWrite)
+        // First-wins dedup keeps a row for every valid key, so rows land
+        // exactly when one is valid: a failed version is never written.
+        if (validCount > 0) {
+          val inserted = write(versionId, append = false)
           store.completeVersion(versionId, inserted,
             markCurrentFor = if (markAsCurrent) Some((source.sourceCode, variant)) else None)
           if (invalidCount > 0)
             store.log(versionId, "WARNING",
               s"$invalidCount rows failed validation",
               Some(invalidRows.take(5).mkString("[\"", "\",\"", "\"]")))
-          IngestResult(versionId, "completed", inserted + invalidCount + dupCount,
-            inserted, invalidCount, dupCount, invalidRows,
-            det.headerRowIndex.get, det.unmappedColumns)
+          (versionId, inserted, "completed")
         } else {
           val summary = invalidRows.take(5).mkString("; ")
           store.failVersion(versionId, s"No rows inserted. First errors: $summary")
-          IngestResult(versionId, "failed", invalidCount + dupCount, 0,
-            invalidCount, dupCount, invalidRows,
-            det.headerRowIndex.get, det.unmappedColumns)
+          (versionId, 0L, "failed")
         }
     }
-    toWrite.unpersist()
-    typed.unpersist()
-    result
-  } finally {
-    // The eager localCheckpoint in prepare() materialized the grid, so no
-    // frame re-reads the upload — any XLSX scratch XML can go now instead
-    // of parking ~10× the upload size on disk until JVM exit.
-    FileReader.releaseScratch()
+    // Duplicates = valid minus survivors (dedup keeps null-key rows, so the
+    // difference is exactly the rank>1 rows).
+    val dupCount = validCount - inserted
+    IngestResult(versionId, status, inserted + invalidCount + dupCount,
+      inserted, invalidCount, dupCount, invalidRows,
+      det.headerRowIndex.get, det.unmappedColumns)
+    } finally {
+      // Whether the ingest landed or threw, nothing reads the checkpointed
+      // rows again. The eager localCheckpoint in prepare() materialized the
+      // grid, so no frame re-reads the upload either — any XLSX scratch XML
+      // can go now instead of parking ~10× the upload size on disk until
+      // JVM exit.
+      checkpointed.foreach(releaseCheckpoint)
+      FileReader.releaseScratch()
+    }
   }
 
   /** Dry-run validation preview (upload.py:196-416 + validator.py:13-87):
@@ -184,7 +225,12 @@ object IngestPipeline {
 
     try {
     val (raw, _) = FileReader.parseFile(spark, path)
-    val head = FileReader.firstRows(raw, HeaderDetector.MaxScanRows)
+    // One bounded collect serves both driver-side steps: header detection
+    // on the first MaxScanRows rows (trimmed, as firstRows trims them) and
+    // the type sample on the untrimmed rows after the header.
+    val sampled = raw.limit(HeaderDetector.MaxScanRows +
+      Catalog.Limits.typeValidationSampleRows).collect().toIndexedSeq
+    val head = FileReader.cellStrings(sampled.take(HeaderDetector.MaxScanRows))
     val det = HeaderDetector.detectHeaderRow(head, mappingsOf(source))
     if (!det.found)
       return ValidationReport(valid = false, 0, None, Map.empty, Seq.empty,
@@ -192,9 +238,9 @@ object IngestPipeline {
 
     val hdrIdx = det.headerRowIndex.get
     val colIdx = HeaderDetector.getColumnIndex(head(hdrIdx), det.columnMap)
-    val numbered = FileReader.withRowNumbers(raw)
-    val dataRows = numbered.filter(col("_row_number") > hdrIdx + 1)
-    val nData = dataRows.count()
+    // Every row after the header is a data row (file row numbers are
+    // 1-based, so the header is row hdrIdx + 1).
+    val nData = raw.count() - (hdrIdx + 1)
     val errors = if (nData == 0) Seq("File contains no data rows") else Seq.empty
 
     // D5 drift vs previous completed version of this source
@@ -210,8 +256,13 @@ object IngestPipeline {
         s"Row count $nData is more than 1.5x the previous upload ($p)"
     }
 
-    // D6 sampled type warnings over the first 100 data rows
-    val projected = Ingestor.project(dataRows.limit(Catalog.Limits.typeValidationSampleRows), colIdx)
+    // D6 sampled type warnings over the first 100 data rows, numbered on
+    // the driver with their file row numbers
+    val sample = sampled.drop(hdrIdx + 1).take(Catalog.Limits.typeValidationSampleRows)
+      .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (hdrIdx + 2L + i)) }
+    val sampleDf = spark.createDataFrame(sample.asJava, StructType(raw.schema.fields :+
+      StructField("_row_number", LongType, nullable = false)))
+    val projected = Ingestor.project(sampleDf, colIdx)
     val typeWarnings = Ingestor.typeValidationWarnings(projected, source)
       .collect().map { r =>
         s"Column '${r.getAs[String]("column")}' expects ${r.getAs[String]("expected_type")} " +

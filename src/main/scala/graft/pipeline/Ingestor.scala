@@ -79,19 +79,9 @@ object Ingestor {
     * ("Row N: Missing required key column 'k'", reference: ingestor.py:358-375).
     * Returns (valid, quarantine-with-_error). One pass, no write-then-retry:
     * validate-before-write replaces the reference's per-row INSERT fallback. */
-  /** Valid/invalid row counts in ONE action (the split frames would cost a
-    * job each; an ingest is fixed-overhead-bound at KB scale). */
-  def validCounts(df: DataFrame, uniqueKeys: Seq[String]): (Long, Long) = {
-    val allPresent = uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
-    val r = df.select(
-      count(when(allPresent, lit(1))).as("v"),
-      count(when(!allPresent, lit(1))).as("q")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   def validateSplit(df: DataFrame, uniqueKeys: Seq[String],
                     rowNumberCol: String = "_row_number"): (DataFrame, DataFrame) = {
-    val allPresent = uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
+    val allPresent = keysPresent(uniqueKeys)
     val firstMissing = coalesce(
       uniqueKeys.map(k => when(col(k).isNull, lit(k))): _*)
     val valid = df.filter(allPresent)
@@ -100,6 +90,10 @@ object Ingestor {
         lit(": Missing required key column '"), firstMissing, lit("'")))
     (valid, quarantine)
   }
+
+  /** True on the rows [[validateSplit]] keeps as valid: every unique key set. */
+  def keysPresent(uniqueKeys: Seq[String]): Column =
+    uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
 
   /** D1 in-file dedup, first-occurrence-wins, null-key rows exempt
     * (reference: ingestor.py:468-496). Window formulation: shuffle by the
@@ -160,15 +154,18 @@ object Ingestor {
   /** D6 sample-based type validation: over the first `sampleRows` data rows,
     * report per column the first (lowest row number) raw value that fails
     * its declared NUMERIC/INTEGER/DATE parse while not being a sentinel
-    * (reference: validator.py:90-175 — early-exit per column). */
+    * (reference: validator.py:90-175 — early-exit per column). One aggregate
+    * over the sample keeps, per checked column, the minimum
+    * (row number, value) struct among its bad rows; the single result row is
+    * unpivoted in source-column order, the reference validator's loop order. */
   def typeValidationWarnings(raw: DataFrame, source: SourceConfig,
                              sampleRows: Int = Catalog.Limits.typeValidationSampleRows): DataFrame = {
-    val sample = raw.limit(sampleRows)
     val checks = source.columns.filter(c =>
       c.dataType == LogicalType.Numeric || c.dataType == LogicalType.Integer ||
         c.dataType == LogicalType.Date)
       .filter(c => raw.columns.contains(c.internalName))
-    val checked = checks.map { c =>
+    if (checks.isEmpty) return raw.sparkSession.emptyDataFrame
+    val firstBad = checks.zipWithIndex.map { case (c, i) =>
       val v = col(c.internalName)
       val sentinel = trim(v).isin("", "*", "NULL", "N/A", "nan", "NaN") || v.isNull
       val parsed = c.dataType match {
@@ -176,17 +173,18 @@ object Ingestor {
         case _ => Transformers.parseNumeric(v).cast("string")
       }
       val bad = !sentinel && parsed.isNull
-      sample.filter(bad).select(
-        lit(c.internalName).as("column"),
+      min(when(bad, struct(col("_row_number").as("row_number"),
+        v.cast("string").as("value")))).as(s"_bad$i")
+    }
+    val warnings = checks.zipWithIndex.map { case (c, i) =>
+      struct(lit(c.internalName).as("column"),
         lit(c.dataType.name).as("expected_type"),
-        col("_row_number").as("row_number"),
-        v.cast("string").as("value"))
+        col(s"_bad$i.row_number").as("row_number"),
+        col(s"_bad$i.value").as("value"))
     }
-    checked.reduceOption(_ unionByName _) match {
-      case None => raw.sparkSession.emptyDataFrame
-      case Some(all) =>
-        val w = Window.partitionBy(col("column")).orderBy(col("row_number"))
-        all.withColumn("_r", row_number().over(w)).filter(col("_r") === 1).drop("_r")
-    }
+    raw.limit(sampleRows).agg(firstBad.head, firstBad.tail: _*)
+      .select(explode(array(warnings: _*)).as("w"))
+      .select("w.*")
+      .filter(col("row_number").isNotNull)
   }
 }

@@ -1,13 +1,16 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
-/** Column ⇄ Expression bridge. `ExpressionUtils` is `private[sql]`, so this
-  * one-file subpackage of org.apache.spark.sql exposes the two conversions
-  * a custom-Expression library needs — the standard pattern for third-party
-  * Catalyst extensions (no other internals are touched). */
+/** Bridge to the `private[sql]` entry points graft needs: the Column ⇄
+  * Expression conversions a custom-Expression library needs (the standard
+  * pattern for third-party Catalyst extensions), runtime function
+  * registration, and building a DataFrame straight from internal rows. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -15,8 +18,15 @@ object Bridge {
   /** Register a function builder into one session's registry (the runtime
     * sibling of the `spark.sql.extensions` config hook — same builder,
     * no session restart needed). */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
+  def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** DataFrame over an RDD of rows already in Catalyst's internal format —
+    * no external `Row` conversion on either side. */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+                              schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

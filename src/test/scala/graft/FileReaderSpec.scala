@@ -88,6 +88,41 @@ class FileReaderSpec extends SparkSpecBase {
     assert(got.toSeq == (1 to 100).map(i => (s"r$i", i.toLong)))
   }
 
+  test("row numbers follow slice order on a multi-partition frame") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val rows = (1 to 30).map(i => Row(s"r$i"))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("_c0", StringType))))
+    assert(df.rdd.getNumPartitions == 3)
+    val got = FileReader.withRowNumbers(df).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    assert(got.toSeq == (1 to 30).map(i => (s"r$i", i.toLong)))
+  }
+
+  test("row numbers follow file order on the distributed XLSX path") {
+    val dir = Files.createTempDirectory("graft-rn-xlsx").toString
+    val p = s"$dir/ptp.xlsx"
+    graft.io.SyntheticXlsx.writeNcciPtp(p, nRows = 500)
+    spark.conf.set("graft.xlsx.distributedThresholdBytes", "0")
+    spark.conf.set("graft.xlsx.chunkBytes", "4096")
+    try {
+      val raw = FileReader.readXlsx(spark, p)
+      assert(raw.rdd.getNumPartitions > 1) // the ranged, distributed parse
+      val got = FileReader.withRowNumbers(raw).collect()
+      val expected = FileReader.readXlsxRows(p)
+      assert(got.map(_.getLong(raw.columns.length)).toSeq ==
+        (1 to expected.size).map(_.toLong))
+      got.zip(expected).foreach { case (r, cells) =>
+        assert(r.toSeq.take(cells.size) == cells)
+      }
+    } finally {
+      spark.conf.unset("graft.xlsx.distributedThresholdBytes")
+      spark.conf.unset("graft.xlsx.chunkBytes")
+      FileReader.releaseScratch()
+    }
+  }
+
   test("xlsx bridge: shared strings, inline numbers, gap cells, bools") {
     val p = Files.createTempFile("graft-spec", ".xlsx")
     val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(p))

@@ -1,8 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+import org.scalatest.concurrent.TimeLimits._
+import org.scalatest.time.SpanSugar._
 
 import graft.pipeline.IngestPipeline
 import graft.store.VersionStore
@@ -11,8 +14,12 @@ import graft.store.VersionStore
   * append, and the dry-run validation report. */
 class IngestPipelineSpec extends SparkSpecBase {
 
-  private def newStore(): VersionStore =
-    new VersionStore(spark, Files.createTempDirectory("graft-ip").toString)
+  private def newStore(): VersionStore = newStoreAt()._1
+
+  private def newStoreAt(): (VersionStore, String) = {
+    val root = Files.createTempDirectory("graft-ip").toString
+    (new VersionStore(spark, root), root)
+  }
 
   private def csv(content: String): String = {
     val p = Files.createTempFile("graft-ip", ".csv")
@@ -81,6 +88,74 @@ class IngestPipelineSpec extends SparkSpecBase {
     val v = store.versions.filter(col("data_version_id") === r.versionId).head
     assert(v.getAs[String]("status") == "failed")
     assert(v.getAs[String]("error_message").contains("No rows inserted"))
+  }
+
+  test("zero-row uploads fail with exact counts, write no data and cannot hang") {
+    implicit val signaler: Signaler = ThreadSignaler
+    val (store, root) = newStoreAt()
+    def dataDir(id: Long) = Paths.get(root, "data", "cms.pfs_opps_cap", s"data_version_id=$id")
+    failAfter(120.seconds) {
+      val headerOnly = csv("HCPCS,OPPS CAP\n")
+      val rep = IngestPipeline.validateFile(spark, store, "PFS_OPPS_CAP", headerOnly, "2026-Q1")
+      assert(rep.dataRows == 0 && rep.errors == Seq("File contains no data rows"))
+      val r1 = IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", headerOnly, "2026-Q1", d)
+      assert((r1.status, r1.processed, r1.inserted, r1.invalid, r1.duplicates, r1.errors) ==
+        ("failed", 0L, 0L, 0L, 0L, Seq.empty))
+      assert(!Files.exists(dataDir(r1.versionId)))
+
+      val allInvalid = csv("HCPCS,OPPS CAP\n,1.00\n,2.00\n,3.00\n")
+      val r2 = IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", allInvalid, "2026-Q2", d)
+      assert((r2.status, r2.processed, r2.inserted, r2.invalid, r2.duplicates) ==
+        ("failed", 3L, 0L, 3L, 0L))
+      assert(r2.errors == (2 to 4).map(i =>
+        s"Row $i: Missing required key column 'hcpcs_code'"))
+      assert(!Files.exists(dataDir(r2.versionId)))
+      assert(store.versions.filter(col("status") === "failed").count() == 2)
+
+      // An all-invalid part appended to a completed multi-part version
+      // still runs its (empty) write, and the write's count must arrive.
+      val ptpHeader = "Column 1,Column 2,Modifier,Effective Date,Deletion Date\n"
+      val first = IngestPipeline.ingestFile(spark, store, "NCCI_PTP",
+        csv(ptpHeader + "00100,00101,1,20240101,*\n"), "2026-Q1", d, Some("HOSPITAL"))
+      val r3 = IngestPipeline.ingestFile(spark, store, "NCCI_PTP",
+        csv(ptpHeader + ",00201,0,20240101,*\n"), "2026-Q1", d, Some("HOSPITAL"))
+      assert((r3.versionId, r3.status, r3.processed, r3.inserted, r3.invalid, r3.duplicates) ==
+        (first.versionId, "completed", 1L, 0L, 1L, 0L))
+    }
+  }
+
+  test("an ingest whose write throws releases its checkpointed rows") {
+    val (store, root) = newStoreAt()
+    // A plain file where the table's data directory belongs: the data
+    // write cannot create its version directory and throws.
+    Files.createDirectories(Paths.get(root, "data"))
+    Files.writeString(Paths.get(root, "data", "cms.pfs_opps_cap"), "not a directory")
+    val path = csv("HCPCS,OPPS CAP\n99213,120.50\n99214,140.00\n")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1", d)
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"ingest left persistent RDDs $left")
+  }
+
+  test("type warnings come in source-column order and name the first bad row") {
+    val store = newStore()
+    // File columns in the reverse of PFS_GPCI's source order (work, pe, mp);
+    // work_gpci has three bad rows, the lowest carrying the largest value.
+    val path = csv(
+      """LOCALITY,MP GPCI,PE GPCI,WORK GPCI
+        |01,0.5,0.9,1.0
+        |02,x1,0.9,1.0
+        |03,0.5,0.9,bad-z
+        |04,0.5,y,bad-b
+        |05,0.5,0.9,bad-a
+        |""".stripMargin)
+    val rep = IngestPipeline.validateFile(spark, store, "PFS_GPCI", path, "2026")
+    def w(c: String, row: Int, v: String) =
+      s"Column '$c' expects NUMERIC but row $row has '$v'"
+    assert(rep.warnings == Seq(
+      w("work_gpci", 4, "bad-z"), w("pe_gpci", 5, "y"), w("mp_gpci", 3, "x1")))
   }
 
   test("NCCI_PTP multi-part: second file appends under the same version id") {
