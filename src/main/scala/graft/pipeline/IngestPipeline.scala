@@ -69,8 +69,8 @@ object IngestPipeline {
     val nonEmpty = Ingestor.filterEmptyRows(dataRows, colIdx.values.map(i => s"_c$i").toSeq)
     // localCheckpoint (not just persist): the typed lineage is hundreds of
     // parse/when expressions per column, and every downstream action (error
-    // collect, data write) would re-ANALYZE that whole tree on the driver —
-    // at this point planning time, not execution time, dominates an ingest.
+    // collect, data write) would re-ANALYZE that whole tree in the planner
+    // — at this point planning time, not execution time, dominates an ingest.
     // Truncating the lineage makes each follow-up plan trivial.
     // Fault-tolerance note: an ingest input is ≤100 MB by contract (the
     // validate-time size cap), so losing a cached partition and restarting
@@ -225,8 +225,8 @@ object IngestPipeline {
 
     try {
     val (raw, _) = FileReader.parseFile(spark, path)
-    // One bounded collect serves both driver-side steps: header detection
-    // on the first MaxScanRows rows (trimmed, as firstRows trims them) and
+    // One bounded collect feeds both local steps: header detection on the
+    // first MaxScanRows rows (trimmed, as firstRows trims them) and
     // the type sample on the untrimmed rows after the header.
     val sampled = raw.limit(HeaderDetector.MaxScanRows +
       Catalog.Limits.typeValidationSampleRows).collect().toIndexedSeq
@@ -256,8 +256,8 @@ object IngestPipeline {
         s"Row count $nData is more than 1.5x the previous upload ($p)"
     }
 
-    // D6 sampled type warnings over the first 100 data rows, numbered on
-    // the driver with their file row numbers
+    // D6 sampled type warnings over the first 100 data rows, numbered here
+    // with their file row numbers
     val sample = sampled.drop(hdrIdx + 1).take(Catalog.Limits.typeValidationSampleRows)
       .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (hdrIdx + 2L + i)) }
     val sampleDf = spark.createDataFrame(sample.asJava, StructType(raw.schema.fields :+
