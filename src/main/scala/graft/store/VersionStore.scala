@@ -3,8 +3,12 @@ package graft.store
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.config.Catalog
 
@@ -51,17 +55,19 @@ final class VersionStore(val spark: SparkSession, val root: String) {
     spark.createDataFrame(list, schema)
   }
 
-  private def loadMeta(cache: Option[Seq[org.apache.spark.sql.Row]], path: String):
-      Seq[org.apache.spark.sql.Row] =
+  // Metadata files are read with the schema they are written with, so
+  // opening one costs its collect and no schema-inference job.
+  private def loadMeta(cache: Option[Seq[org.apache.spark.sql.Row]], path: String,
+                       schema: StructType): Seq[org.apache.spark.sql.Row] =
     cache.getOrElse {
-      if (exists(path)) spark.read.parquet(path).collect().toSeq
+      if (exists(path)) spark.read.schema(schema).parquet(path).collect().toSeq
       else Seq.empty
     }
 
   /** Cached versions rows for driver-side metadata reads. Positional field
     * access only — rows constructed here are schemaless GenericRows. */
   private def versionRows: Seq[org.apache.spark.sql.Row] = {
-    val rows = loadMeta(versionsCache, versionsPath)
+    val rows = loadMeta(versionsCache, versionsPath, versionSchema)
     versionsCache = Some(rows)
     rows
   }
@@ -70,13 +76,13 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   def versions: DataFrame = localDF(versionRows, versionSchema)
 
   def parts: DataFrame = {
-    val rows = loadMeta(partsCache, partsPath)
+    val rows = loadMeta(partsCache, partsPath, partSchema)
     partsCache = Some(rows)
     localDF(rows, partSchema)
   }
 
   def logs: DataFrame =
-    if (exists(logsPath)) spark.read.parquet(logsPath)
+    if (exists(logsPath)) spark.read.schema(logSchema).parquet(logsPath)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
 
@@ -206,31 +212,31 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   /** Idempotent data move for [[landPart]]: write the part to a staging
     * dir, delete any `p<part>-*.parquet` files a previous (crashed)
     * attempt moved, then rename the staged files to those deterministic
-    * names. Exposed separately so specs can exercise the
+    * names. The staging write counts the rows it lands, so the part is
+    * never read back. Exposed separately so specs can exercise the
     * crash-after-stage-before-commit window directly. */
   private[graft] def stagePart(table: String, versionId: Long,
                                partNumber: Int, df: DataFrame): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$dataDir/$table/.staging-v$versionId-p$partNumber")
-    val dest = new org.apache.hadoop.fs.Path(
-      s"$dataDir/$table/data_version_id=$versionId")
+    val staging = new Path(s"$dataDir/$table/.staging-v$versionId-p$partNumber")
+    val dest = new Path(s"$dataDir/$table/data_version_id=$versionId")
     val fs = staging.getFileSystem(conf)
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     fs.mkdirs(dest)
     // Sweep any earlier attempt's files for THIS part, then move.
-    fs.globStatus(new org.apache.hadoop.fs.Path(dest, s"p$partNumber-*.parquet"))
+    fs.globStatus(new Path(dest, s"p$partNumber-*.parquet"))
       .foreach(st => fs.delete(st.getPath, false))
-    val n = spark.read.parquet(staging.toString).count()
     val staged = fs.listStatus(staging)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
     staged.zipWithIndex.foreach { case (st, i) =>
-      val target = new org.apache.hadoop.fs.Path(dest, s"p$partNumber-$i.parquet")
+      val target = new Path(dest, s"p$partNumber-$i.parquet")
       fs.rename(st.getPath, target): Unit
     }
     fs.delete(staging, true): Unit
-    n
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Ledger append — the atomic commit point of [[landPart]]. The
@@ -282,16 +288,47 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   def data(table: String): DataFrame = spark.read.parquet(s"$dataDir/$table")
 
   /** J2 current view. The current version ids are resolved DRIVER-SIDE from
-    * the cached metadata and emitted as a static `isin` partition filter, so
-    * the scan provably prunes to the current version's files at PLANNING
-    * time — on a table with years of version history this is the difference
-    * between listing one `data_version_id=<id>` directory and scanning them
-    * all (a broadcast join would at best prune dynamically at runtime).
+    * the cached metadata, and only their `data_version_id=<id>` directories
+    * are opened (`basePath` keeps `data_version_id` as a path column), so
+    * the file index lists the current version's files however long the
+    * table's history is. The schema comes from one footer of the current
+    * version ([[readVersions]]), so building the view launches no job. A
+    * static `isin` partition filter stays on top, so the plan shows the
+    * pruning (a broadcast join would at best prune dynamically at runtime).
+    * With no current version, or no footer carrying Spark's schema, the view
+    * is the whole table filtered to the current ids.
     * Null-safe variant compare mirrors the reference's
     * `IS NOT DISTINCT FROM` (init_db.py:418-518). */
   def currentView(table: String, sourceCode: String, variant: Option[String] = None): DataFrame = {
     val ids = currentVersionIds(sourceCode, variant)
-    data(table).filter(col("data_version_id").isin(ids.map(Long.box): _*))
+    readVersions(table, ids).getOrElse(data(table))
+      .filter(col("data_version_id").isin(ids.map(Long.box): _*))
+  }
+
+  /** The given versions' directories of `table`, read with the Spark schema
+    * stored in the footer of the first directory's first parquet file (by
+    * name) — the footer Spark's own non-merging inference reads, read here
+    * on the driver instead of in a job. None when no directory exists, it
+    * holds no parquet file, or the footer has no Spark schema (a file Spark
+    * did not write). */
+  private def readVersions(table: String, ids: Seq[Long]): Option[DataFrame] = {
+    val base = s"$dataDir/$table"
+    val dirs = ids.map(id => s"$base/data_version_id=$id").filter(exists)
+    dirs.headOption.flatMap(footerSchema).map(schema =>
+      spark.read.schema(schema).option("basePath", base).parquet(dirs: _*))
+  }
+
+  private def footerSchema(dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    fs.listStatus(path).filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName).headOption.flatMap { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey))
+        finally reader.close()
+      }.map(json => DataType.fromJson(json).asInstanceOf[StructType])
   }
 
   /** Current completed version ids for a (source, variant) scope, from the
@@ -345,6 +382,9 @@ final class VersionStore(val spark: SparkSession, val root: String) {
 
 object VersionStore {
   import org.apache.spark.sql.types._
+
+  /** Footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Audit diff between two versions of a relation on its unique keys:
     * one row per key present in either side, classified added / removed /

@@ -164,16 +164,34 @@ class PlanRegressionSpec extends SparkSpecBase {
       store.completeVersion(id, 1, markCurrentFor = Some(("PFS_GPCI", None)))
       id
     }
-    ingest("2026-Q1", 1)
-    val id2 = ingest("2026-Q2", 2)
-    val view = store.currentView("cms.pfs_gpci", "PFS_GPCI")
+    // More version directories than Spark lists on the driver (32), so a
+    // listing of the whole table's history would show up as a job.
+    (1 to 32).foreach(v => ingest(s"v$v", v))
+    val current = ingest("v33", 33)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.SpecBus.drain(sc)
+    sc.addSparkListener(listener)
+    val view = try store.currentView("cms.pfs_gpci", "PFS_GPCI")
+      finally { org.apache.spark.SpecBus.drain(sc); sc.removeSparkListener(listener) }
+    assert(jobs.get == 0, "building a current view must launch no Spark job")
+    val scan = view.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.getOrElse(fail("no file scan in the current view's plan"))
+    val files = scan.relation.location.inputFiles
+    assert(files.nonEmpty && files.forall(_.contains(s"/data_version_id=$current/")),
+      s"file index must hold only version $current's files: ${files.mkString(", ")}")
     val p = view.queryExecution.executedPlan.toString
-    // a static partition filter, not a join: only version 2's files scanned
-    assert(p.contains(s"data_version_id#") && p.contains(s"IN ($id2)")
-      || p.contains(s"data_version_id IN ($id2)")
-      || p.contains(s"= $id2"), s"expected static partition filter in:\n$p")
+    // a static partition filter, not a join: only the current version's files scanned
+    assert(p.contains(s"data_version_id#") && p.contains(s"IN ($current)")
+      || p.contains(s"data_version_id IN ($current)")
+      || p.contains(s"= $current"), s"expected static partition filter in:\n$p")
     assert(!p.contains("Join"), "current view must not need a join")
-    assert(view.collect().map(_.getAs[String]("mac_locality")).toSeq == Seq("loc2"))
+    assert(view.collect().map(_.getAs[String]("mac_locality")).toSeq == Seq("loc33"))
   }
 
   test("inverted index caps postings pre-shuffle via WindowGroupLimit") {

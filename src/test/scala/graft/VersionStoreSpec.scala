@@ -128,6 +128,56 @@ class VersionStoreSpec extends SparkSpecBase {
     assert(checksumBefore == checksumAfter)
   }
 
+  test("current view takes the current version's schema; fallbacks match a table read") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.IntegerType
+    val store = newStore()
+    val table = "cms.pfs_gpci"
+    def land(label: String, df: org.apache.spark.sql.DataFrame): Long = {
+      val id = store.createVersion("PFS_GPCI", label,
+        java.sql.Date.valueOf("2026-01-01"), None, s"h-$label", s"$label.csv")
+      store.writeData(table, id, df)
+      store.completeVersion(id, df.count(), markCurrentFor = Some(("PFS_GPCI", None)))
+      id
+    }
+    val v1 = land("v1", Seq(("01", 1.0)).toDF("mac_locality", "work_gpci"))
+    land("v2", Seq(("02", 2.0, 0.5)).toDF("mac_locality", "work_gpci", "pe_gpci"))
+    def view = store.currentView(table, "PFS_GPCI")
+    assert(view.columns.toSeq == Seq("mac_locality", "work_gpci", "pe_gpci", "data_version_id"))
+    assert(view.schema("data_version_id").dataType == IntegerType)
+    assert(view.collect().map(_.getDouble(2)).toSeq == Seq(0.5))
+    store.markCurrent(v1, "PFS_GPCI", None)
+    assert(view.columns.toSeq == Seq("mac_locality", "work_gpci", "data_version_id"))
+    assert(view.schema("data_version_id").dataType == IntegerType)
+    assert(view.collect().map(_.getString(0)).toSeq == Seq("01"))
+
+    // No current version in scope: the whole table, filtered to no ids.
+    val none = store.currentView(table, "PFS_GPCI", Some("HOSPITAL"))
+    assert(none.schema == store.data(table).schema)
+    assert(none.count() == 0)
+
+    // A version file without Spark's schema in its footer (written by plain
+    // parquet-hadoop): the view reads it the way spark.read.parquet does.
+    val foreign = newStore()
+    val id = foreign.createVersion("PFS_GPCI", "ext",
+      java.sql.Date.valueOf("2026-01-01"), None, "h-ext", "ext.parquet")
+    val file = new org.apache.hadoop.fs.Path(
+      s"${foreign.root}/data/$table/data_version_id=$id/part-0.parquet")
+    val parquetSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message gpci { required binary mac_locality (UTF8); required double work_gpci; }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(file)
+      .withType(parquetSchema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(parquetSchema)
+    try Seq(("03", 3.0), ("04", 4.0)).foreach { case (loc, w) =>
+      writer.write(groups.newGroup().append("mac_locality", loc).append("work_gpci", w))
+    } finally writer.close()
+    foreign.completeVersion(id, 2, markCurrentFor = Some(("PFS_GPCI", None)))
+    val read = spark.read.parquet(s"${foreign.root}/data/$table")
+    val ext = foreign.currentView(table, "PFS_GPCI")
+    assert(ext.schema == read.schema)
+    assert(ext.collect().toSeq.map(_.toSeq) == read.collect().toSeq.map(_.toSeq))
+  }
+
   test("version diff classifies added/removed/changed/unchanged keys") {
     import spark.implicits._
     val v1 = Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("k", "v")
