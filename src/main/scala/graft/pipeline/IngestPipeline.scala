@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -91,23 +92,34 @@ object IngestPipeline {
 
   /** Drop the blocks a `localCheckpoint` pinned. `Dataset.unpersist` only
     * reaches the cache manager; the checkpointed RDD sits under the plan as
-    * a `LogicalRDD` and has to be unpersisted itself. */
+    * a `LogicalRDD` and has to be unpersisted itself — through the
+    * SparkContext, because `RDD.unpersist` warns that a locally
+    * checkpointed RDD cannot be recomputed, and nothing reads it again. */
   private def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist()
+      case r: LogicalRDD => Bridge.unpersistRDD(r.rdd)
       case _ =>
     }
+
+  /** The completed version an upload of a multi-part source appends to. */
+  private def appendTarget(store: VersionStore, source: SourceConfig, versionLabel: String,
+                           variant: Option[String]): Option[VersionStore.Version] =
+    if (!source.multiPart) None
+    else store.metadata.versions.find(v => v.sourceCode == source.sourceCode &&
+      v.versionLabel == versionLabel && v.variant == variant && v.status == "completed")
 
   /** Full ingest with the reference's partial-success semantics:
     * `completed` iff any rows landed (ingestor.py:624, 747-768); all-fail →
     * `failed` with a first-5 error summary (770-774). NCCI_PTP multi-part:
     * if a completed version already exists for (source, label, variant) the
-    * file appends under the SAME version id (691-783).
+    * file appends under the SAME version id (691-783), landing as one part
+    * through [[VersionStore.landPart]]; a replayed file (its hash already
+    * that version's first file or on its part ledger) lands nothing.
     *
     * Jobs per file: the bounded header collect, the checkpoint (which also
     * counts valid and invalid rows), the error collect when any row is
-    * invalid, and the data write (which also counts the rows it lands),
-    * plus the store's metadata commits. */
+    * invalid, and the data write (which also counts the rows it lands).
+    * The store's metadata commits launch none. */
   def ingestFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                  path: String, versionLabel: String,
                  effectiveDate: java.sql.Date, variant: Option[String] = None,
@@ -118,14 +130,7 @@ object IngestPipeline {
     val fileHash = VersionStore.sha256File(path)
     val fileName = path.substring(path.lastIndexOf('/') + 1)
 
-    val existing = if (source.multiPart)
-      store.versions.filter(
-        col("source_code") === source.sourceCode &&
-          col("version_label") === versionLabel &&
-          (col("variant") <=> lit(variant.orNull)) &&
-          col("status") === "completed")
-        .select("data_version_id", "part_count").collect().headOption
-    else None
+    val existing = appendTarget(store, source, versionLabel, variant)
 
     val Prepared(valid, quarantine, det, typed, validCount, invalidCount) =
       prepare(spark, source, path)
@@ -139,31 +144,24 @@ object IngestPipeline {
         .limit(Catalog.Limits.maxCollectedErrors)
         .collect().map(_.getString(0)).toSeq
 
-    // Lands the first-wins survivors and returns how many: the write job
-    // counts them on the way out, past the dedup shuffle (in its result
-    // stage), so each partition adds once.
-    val (unique, _) = Ingestor.dedupFirstWins(valid, source.uniqueKeys)
-    def write(versionId: Long, append: Boolean): Long = {
-      val written = Observation()
-      store.writeData(source.targetTable, versionId,
-        unique.drop("_row_number").observe(written, count(lit(1)).as("rows")), append)
-      written.get("rows").asInstanceOf[Long]
-    }
+    // The first-wins survivors; the write job counts them on the way out,
+    // past the dedup shuffle (in its result stage), so each partition adds
+    // once.
+    val unique = Ingestor.dedupFirstWins(valid, source.uniqueKeys)._1.drop("_row_number")
 
     val (versionId, inserted, status) = existing match {
-      case Some(row) => // U4 append path
-        val versionId = row.getLong(0)
-        val inserted = write(versionId, append = true)
-        store.appendPart(versionId, row.getInt(1) + 1, fileHash, fileName, inserted)
-        store.log(versionId, "INFO", s"Appended part ${row.getInt(1) + 1} ($inserted rows)")
-        (versionId, inserted, "completed")
+      case Some(v) if store.metadata.holds(v, fileHash) => // a replay: nothing lands
+        (v.dataVersionId, 0L, "completed")
+      case Some(v) => // U4 append path
+        (v.dataVersionId, store.landPart(source.targetTable, v.dataVersionId,
+          v.partCount + 1, unique, fileHash, fileName), "completed")
       case None =>
         val versionId = store.createVersion(source.sourceCode, versionLabel,
           effectiveDate, variant, fileHash, fileName)
         // First-wins dedup keeps a row for every valid key, so rows land
         // exactly when one is valid: a failed version is never written.
         if (validCount > 0) {
-          val inserted = write(versionId, append = false)
+          val inserted = store.writeData(source.targetTable, versionId, unique)
           store.completeVersion(versionId, inserted,
             markCurrentFor = if (markAsCurrent) Some((source.sourceCode, variant)) else None)
           if (invalidCount > 0)
@@ -244,11 +242,9 @@ object IngestPipeline {
     val errors = if (nData == 0) Seq("File contains no data rows") else Seq.empty
 
     // D5 drift vs previous completed version of this source
-    val prevCount = store.versions
-      .filter(col("source_code") === source.sourceCode && col("status") === "completed")
-      .orderBy(col("effective_date").desc).limit(1)
-      .select("record_count").collect().headOption.flatMap(r => Option(r.get(0)))
-      .map(_.asInstanceOf[Long])
+    val prevCount = store.metadata.versions
+      .filter(v => v.sourceCode == source.sourceCode && v.status == "completed")
+      .maxByOption(v => Option(v.effectiveDate).map(_.getTime)).flatMap(_.recordCount)
     val driftWarnings = prevCount.toSeq.collect {
       case p if nData < p * 0.5 =>
         s"Row count $nData is less than half the previous upload ($p)"
@@ -269,11 +265,7 @@ object IngestPipeline {
           s"but row ${r.getAs[Long]("row_number")} has '${r.getAs[String]("value")}'"
       }.toSeq
 
-    val willAppend = source.multiPart && !store.versions.filter(
-      col("source_code") === source.sourceCode &&
-        col("version_label") === versionLabel &&
-        (col("variant") <=> lit(variant.orNull)) &&
-        col("status") === "completed").isEmpty
+    val willAppend = appendTarget(store, source, versionLabel, variant).nonEmpty
 
     ValidationReport(errors.isEmpty && !isDup, nData, Some(hdrIdx),
       det.columnMap, det.unmappedColumns, errors,

@@ -1,12 +1,15 @@
 package graft.store
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.security.MessageDigest
+import java.io.{FileInputStream, IOException}
+import java.security.{DigestInputStream, MessageDigest}
 
-import org.apache.hadoop.fs.Path
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -14,240 +17,179 @@ import graft.config.Catalog
 
 /** Versioned relational store over parquet.
   *
-  * Layout: `root/data/<table>/data_version_id=<id>/…parquet` (hive-style
-  * partitioning so version predicates prune at the FILE level — a "current
-  * version" read of a 100 TB table touches only that version's files), plus
-  * small metadata parquet tables `root/meta/{data_versions,parts,logs}`.
+  * Layout: `root/data/<table>/data_version_id=<id>/p<part>-<i>.parquet`
+  * (hive-style partitioning so version predicates prune at the FILE level —
+  * a "current version" read of a 100 TB table touches only that version's
+  * files), plus the metadata log `root/meta/_log/<n>.json`.
   *
   * Reference semantics: scripts/init_db.py:36-155 (metadata schema),
   * app/services/ingestor.py:101-259 (lifecycle), 691-783 (multi-part append),
   * scripts/init_db.py:418-518 (current views).
   *
-  * Atomicity (U3): metadata updates are write-new-then-rename swaps of the
-  * versions table — the same observable contract as the reference's DB
-  * transaction, under a single-writer discipline.
+  * Atomicity (U3): the metadata — versions, the part ledger, the event log
+  * and the next version id, KB-scale — is one [[VersionStore.State]] held
+  * on the driver. Every change is one [[commit]]: the new state is written
+  * from the driver to a temp file under `meta/_log/` and renamed to the next
+  * commit number; superseded commit files are pruned after the rename. A
+  * reader (a fresh instance on the same root) takes the highest-numbered
+  * file, so it sees the state before a commit or after it, never a mix and
+  * never nothing — the same observable contract as the reference's single
+  * DB transaction, under a single-writer discipline (one writing driver
+  * per root). Because the next id is part of the committed state, a
+  * version id is never handed out twice, even after the highest version is
+  * deleted. Metadata reads and commits launch no Spark job. Stores written
+  * in the older `meta/data_versions` parquet layout are not read.
   */
 final class VersionStore(val spark: SparkSession, val root: String) {
   import VersionStore._
 
-  private val metaDir = s"$root/meta"
+  private val logDir = new Path(s"$root/meta/_log")
   private val dataDir = s"$root/data"
 
-  def versionsPath: String = s"$metaDir/data_versions"
-  def partsPath: String = s"$metaDir/data_version_parts"
-  def logsPath: String = s"$metaDir/ingestion_logs"
+  private def fs: FileSystem = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(p: String): Boolean = Files.exists(Paths.get(p))
+  private def commitPath(n: Long): Path = new Path(logDir, f"$n%020d.json")
 
-  // The versions/parts metadata tables are KB-scale and this store is
-  // single-writer (class contract above), so they are cached as driver-local
-  // rows and served as LocalRelations: a metadata read costs no file-scan
-  // job, and a swap costs one local collect plus the one durable parquet
-  // write. The parquet under `meta/` stays the source of truth on disk —
-  // a fresh VersionStore instance on the same root reloads it.
-  private var versionsCache: Option[Seq[org.apache.spark.sql.Row]] = None
-  private var partsCache: Option[Seq[org.apache.spark.sql.Row]] = None
+  private def commits: Seq[Long] =
+    if (!fs.exists(logDir)) Nil
+    else fs.listStatus(logDir).toSeq.flatMap(st => commitNumber(st.getPath))
 
-  private def localDF(rows: Seq[org.apache.spark.sql.Row],
-                      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val list = new java.util.ArrayList[org.apache.spark.sql.Row](rows.size)
+  /** The latest complete commit's number (0 before the first commit) and
+    * its state; only [[commit]] moves them. */
+  private var head: Long = commits.maxOption.getOrElse(0L)
+  @volatile private var state: State =
+    if (head == 0) State.empty
+    else {
+      val in = fs.open(commitPath(head))
+      try Json.readValue(in: java.io.InputStream, classOf[State]) finally in.close()
+    }
+
+  /** The one metadata commit: apply `f` to the state, write the result as
+    * a temp file, rename it to the next commit number, then delete the
+    * superseded commits. The driver's state moves only once the rename has
+    * succeeded; a crash before it leaves the previous commit the latest
+    * one (a stray temp file is never read), a crash after it leaves the new
+    * one. Returns the committed state. */
+  private def commit(f: State => State): State = synchronized {
+    val next = f(state)
+    if (next != state) {
+      val target = commitPath(head + 1)
+      val tmp = new Path(logDir, s".${target.getName}.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(Json.writeValueAsBytes(next)) finally out.close()
+      if (!fs.rename(tmp, target)) throw new IOException(s"cannot rename $tmp to $target")
+      head += 1
+      state = next
+      commits.filter(_ < head).foreach(n => fs.delete(commitPath(n), false))
+    }
+    state
+  }
+
+  /** The committed metadata, as typed rows. */
+  def metadata: State = state
+
+  private def localDF(rows: Seq[Row], schema: StructType): DataFrame = {
+    val list = new java.util.ArrayList[Row](rows.size)
     rows.foreach(list.add)
     spark.createDataFrame(list, schema)
   }
 
-  // Metadata files are read with the schema they are written with, so
-  // opening one costs its collect and no schema-inference job.
-  private def loadMeta(cache: Option[Seq[org.apache.spark.sql.Row]], path: String,
-                       schema: StructType): Seq[org.apache.spark.sql.Row] =
-    cache.getOrElse {
-      if (exists(path)) spark.read.schema(schema).parquet(path).collect().toSeq
-      else Seq.empty
-    }
+  /** Metadata as DataFrames over the driver rows (LocalRelations). */
+  def versions: DataFrame = localDF(state.versions.map(_.row), versionSchema)
+  def parts: DataFrame = localDF(state.parts.map(_.row), partSchema)
+  def logs: DataFrame = localDF(state.logs.map(_.row), logSchema)
 
-  /** Cached versions rows for driver-side metadata reads. Positional field
-    * access only — rows constructed here are schemaless GenericRows. */
-  private def versionRows: Seq[org.apache.spark.sql.Row] = {
-    val rows = loadMeta(versionsCache, versionsPath, versionSchema)
-    versionsCache = Some(rows)
-    rows
-  }
-
-  /** Versions metadata DF (empty-shaped if none yet). */
-  def versions: DataFrame = localDF(versionRows, versionSchema)
-
-  def parts: DataFrame = {
-    val rows = loadMeta(partsCache, partsPath, partSchema)
-    partsCache = Some(rows)
-    localDF(rows, partSchema)
-  }
-
-  def logs: DataFrame =
-    if (exists(logsPath)) spark.read.schema(logSchema).parquet(logsPath)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
-
-  /** Atomic swap: write to a temp dir, then rename over the live one. The
-    * new state is collected once (tiny, local), cached for subsequent
-    * metadata reads, and written durably from the collected rows. */
-  private def swapWrite(df: DataFrame, path: String): Unit =
-    swapWriteRows(df.collect().toSeq, df.schema, path)
-
-  private def swapWriteRows(rows: Seq[org.apache.spark.sql.Row],
-                            schema: org.apache.spark.sql.types.StructType,
-                            path: String): Unit = {
-    if (path == versionsPath) versionsCache = Some(rows)
-    else if (path == partsPath) partsCache = Some(rows)
-    val tmp = path + ".tmp"
-    localDF(rows, schema).coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val live = Paths.get(path)
-    val old = Paths.get(path + ".old")
-    if (Files.exists(live)) {
-      deleteRecursively(old)
-      Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    }
-    Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
-  }
-
-  /** U2 create a version in 'processing' state; returns its id. The new row
-    * is built driver-side from the cached metadata (no read job) and the
-    * swap pays only the one durable write. */
+  /** U2 create a version in 'processing' state; returns its id. */
   def createVersion(sourceCode: String, versionLabel: String,
                     effectiveDate: java.sql.Date, variant: Option[String],
-                    fileHash: String, fileName: String): Long = {
-    val cur = versionRows
-    val nextId =
-      if (cur.isEmpty) 1L else cur.map(_.getLong(0)).max + 1L
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val row = org.apache.spark.sql.Row(
-      nextId, sourceCode, versionLabel, effectiveDate, variant.orNull,
-      "processing", fileHash, fileName, null, false, now, 1, null)
-    swapWriteRows(cur :+ row, versionSchema, versionsPath)
-    nextId
-  }
+                    fileHash: String, fileName: String): Long =
+    commit(s => s.copy(nextVersionId = s.nextVersionId + 1,
+      versions = s.versions :+ Version(s.nextVersionId, sourceCode, versionLabel,
+        effectiveDate, variant, "processing", fileHash, fileName, None,
+        isCurrent = false, now(), 1, None))).versions.last.dataVersionId
 
   /** U2 transition: completed (+record_count) or failed (+error). When
     * `markCurrentFor` is set, the U3 current-swap happens in the SAME
-    * metadata swap — one atomic transition, like the reference's single DB
-    * transaction (and one fewer metadata write per ingest). */
+    * commit — one atomic transition, like the reference's single DB
+    * transaction. */
   def completeVersion(id: Long, recordCount: Long,
                       markCurrentFor: Option[(String, Option[String])] = None): Unit =
-    updateVersion(id, v => {
-      val completed = v
-        .withColumn("status", when(col("data_version_id") === id, "completed").otherwise(col("status")))
-        .withColumn("record_count", when(col("data_version_id") === id, recordCount).otherwise(col("record_count")))
-      markCurrentFor match {
-        case Some((sourceCode, variant)) =>
-          val scope = col("source_code") === sourceCode &&
-            (col("variant") <=> lit(variant.orNull))
-          completed.withColumn("is_current",
-            when(col("data_version_id") === id, true)
-              .when(scope, false)
-              .otherwise(col("is_current")))
-        case None => completed
-      }
-    })
+    commit { s =>
+      val done = s.edit(id)(_.copy(status = "completed", recordCount = Some(recordCount)))
+      markCurrentFor.fold(done) { case (sourceCode, variant) => done.current(id, sourceCode, variant) }
+    }: Unit
 
-  def failVersion(id: Long, error: String): Unit = updateVersion(id,
-    _.withColumn("status", when(col("data_version_id") === id, "failed").otherwise(col("status")))
-      .withColumn("error_message", when(col("data_version_id") === id, error).otherwise(col("error_message"))))
+  def failVersion(id: Long, error: String): Unit =
+    commit(_.edit(id)(_.copy(status = "failed", errorMessage = Some(error)))): Unit
 
-  private def updateVersion(id: Long, f: DataFrame => DataFrame): Unit =
-    swapWrite(f(versions), versionsPath)
-
-  /** U3 mark-as-current: one swap clears is_current for the (source,
+  /** U3 mark-as-current: one commit clears is_current for the (source,
     * variant) scope and sets it on the new version — null-safe variant
     * compare, like the reference's `IS NOT DISTINCT FROM` (ingestor.py:226-259). */
-  def markCurrent(id: Long, sourceCode: String, variant: Option[String]): Unit = {
-    val scope = col("source_code") === sourceCode &&
-      (col("variant") <=> lit(variant.orNull))
-    updateVersion(id, v =>
-      v.withColumn("is_current",
-        when(col("data_version_id") === id, true)
-          .when(scope, false)
-          .otherwise(col("is_current"))))
-  }
+  def markCurrent(id: Long, sourceCode: String, variant: Option[String]): Unit =
+    commit(_.current(id, sourceCode, variant)): Unit
 
-  /** Write a version's data partition (U4 append mode for multi-part).
-    * The partition value is a constant for the whole write, so the files go
-    * straight into the hive-style `data_version_id=<id>` directory — the
-    * on-disk layout (and the partition-pruned read path) is identical to a
-    * `partitionBy` write, without the dynamic-partition writer, and
-    * Overwrite is scoped to THIS version's directory instead of risking a
-    * static-mode truncate of every other version's partition. */
-  def writeData(table: String, versionId: Long, df: DataFrame, append: Boolean = false): Unit = {
-    df.write.mode(if (append) SaveMode.Append else SaveMode.Overwrite)
-      .parquet(s"$dataDir/$table/data_version_id=$versionId")
-  }
+  private def versionDir(table: String, versionId: Long): Path =
+    new Path(s"$dataDir/$table/data_version_id=$versionId")
 
-  /** Part already committed to the ledger? (The exactly-once probe.) */
-  def hasPart(versionId: Long, partNumber: Int): Boolean =
-    parts.filter(org.apache.spark.sql.functions.col("data_version_id") === versionId &&
-        org.apache.spark.sql.functions.col("part_number") === partNumber)
-      .limit(1).count() > 0
-
-  /** Land one part EXACTLY ONCE even under crash/replay: skip if the part
-    * is on the ledger, otherwise [[stagePart]] (idempotent data move) then
-    * [[commitPart]] (ledger append — the commit point). Any crash before
-    * the ledger append leaves a state a replay repairs: re-staging
-    * deletes that part's previous files (deterministic `p<part>-<i>` names)
-    * before renaming the fresh ones in, so a half-moved earlier attempt
-    * can never leave extra rows behind. Returns rows landed (0 = skipped).
-    *
-    * Concurrency contract: ONE writer per store root. The metadata swap is
-    * a whole-file rename with a per-JVM cache, so two concurrent driver
-    * processes can interleave hasPart→stage→commit and double-append the
-    * ledger (data files stay deduplicated via the deterministic names; the
-    * part ledger and its counters would not). Within one JVM the re-probe
-    * inside the synchronized [[commitPart]] closes that window — a zombie
-    * foreachBatch replay on the same driver lands exactly once. */
-  def landPart(table: String, versionId: Long, partNumber: Int,
-               df: DataFrame, fileHash: String, fileName: String): Long = {
-    if (hasPart(versionId, partNumber)) return 0L
-    val n = stagePart(table, versionId, partNumber, df)
-    commitPart(versionId, partNumber, fileHash, fileName, n)
-    n
-  }
-
-  /** Idempotent data move for [[landPart]]: write the part to a staging
-    * dir, delete any `p<part>-*.parquet` files a previous (crashed)
-    * attempt moved, then rename the staged files to those deterministic
-    * names. The staging write counts the rows it lands, so the part is
-    * never read back. Exposed separately so specs can exercise the
-    * crash-after-stage-before-commit window directly. */
-  private[graft] def stagePart(table: String, versionId: Long,
-                               partNumber: Int, df: DataFrame): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val staging = new Path(s"$dataDir/$table/.staging-v$versionId-p$partNumber")
-    val dest = new Path(s"$dataDir/$table/data_version_id=$versionId")
-    val fs = staging.getFileSystem(conf)
+  /** Write one part of a version's data and return the rows written, counted
+    * by the write job itself. The rows go to a staging directory; then any
+    * `p<part>-*.parquet` files an earlier attempt left in the version's
+    * directory are deleted and the staged files are renamed to the
+    * deterministic `p<part>-<i>.parquet` names. Rewriting a part therefore
+    * replaces it — a replay after a crash leaves no extra rows — and never
+    * touches the version's other parts. The version's directory is the
+    * hive-style `data_version_id=<id>` partition, so the layout (and the
+    * partition-pruned read path) is that of a `partitionBy` write. */
+  def writeData(table: String, versionId: Long, df: DataFrame, part: Int = 1): Long = {
+    val staging = new Path(s"$dataDir/$table/.staging-v$versionId-p$part")
+    val dest = versionDir(table, versionId)
     val written = Observation()
     df.observe(written, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     fs.mkdirs(dest)
-    // Sweep any earlier attempt's files for THIS part, then move.
-    fs.globStatus(new Path(dest, s"p$partNumber-*.parquet"))
+    fs.globStatus(new Path(dest, s"p$part-*.parquet"))
       .foreach(st => fs.delete(st.getPath, false))
-    val staged = fs.listStatus(staging)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    staged.zipWithIndex.foreach { case (st, i) =>
-      val target = new Path(dest, s"p$partNumber-$i.parquet")
-      fs.rename(st.getPath, target): Unit
-    }
-    fs.delete(staging, true): Unit
+    fs.listStatus(staging).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName).zipWithIndex.foreach { case (p, i) =>
+        val target = new Path(dest, s"p$part-$i.parquet")
+        if (!fs.rename(p, target)) throw new IOException(s"cannot rename $p to $target")
+      }
+    fs.delete(staging, true)
     written.get("rows").asInstanceOf[Long]
   }
 
-  /** Ledger append — the atomic commit point of [[landPart]]. The
-    * uniqueness guard lives HERE, not only in the caller's earlier
-    * [[hasPart]] probe: re-probing under the lock turns landPart's
-    * check-then-act into a safe compare-and-commit for same-JVM replays. */
-  private[graft] def commitPart(versionId: Long, partNumber: Int,
-                                fileHash: String, fileName: String,
-                                recordCount: Long): Unit = synchronized {
-    if (!hasPart(versionId, partNumber))
-      appendPart(versionId, partNumber, fileHash, fileName, recordCount)
+  /** Part already on the ledger? (The exactly-once probe.) */
+  def hasPart(versionId: Long, partNumber: Int): Boolean = state.hasPart(versionId, partNumber)
+
+  /** U4 land one appended part EXACTLY ONCE even under crash/replay: skip
+    * if the part is on the ledger; otherwise [[writeData]] it, then commit
+    * its ledger row, the version's counters (record_count += n,
+    * part_count += 1 — reference ingestor.py:153-195) and a log line as ONE
+    * commit, the commit point. A crash before that commit leaves a state a
+    * replay repairs, because rewriting the part replaces its files. Batch
+    * (multi-part upload) and streaming (micro-batch) parts both land here.
+    * Returns rows landed (0 = skipped).
+    *
+    * Between the rename of the part's files and the commit, the current
+    * view already reads the new rows; a crash there leaves them visible,
+    * uncounted, until the part is replayed.
+    *
+    * Concurrency contract: ONE writing driver per store root. Within one
+    * JVM the re-probe inside the synchronized commit closes the
+    * check-then-act window — a zombie foreachBatch replay on the same
+    * driver commits the part once. */
+  def landPart(table: String, versionId: Long, partNumber: Int,
+               df: DataFrame, fileHash: String, fileName: String): Long = {
+    if (hasPart(versionId, partNumber)) return 0L
+    val n = writeData(table, versionId, df, partNumber)
+    commit { s =>
+      if (s.hasPart(versionId, partNumber)) s
+      else s.edit(versionId)(v => v.copy(recordCount = Some(v.recordCount.getOrElse(0L) + n),
+          partCount = v.partCount + 1))
+        .copy(parts = s.parts :+ Part(versionId, partNumber, fileHash, fileName, n))
+        .logged(versionId, "INFO", s"Appended part $partNumber ($n rows)", None)
+    }
+    n
   }
 
   /** S7's relational-sink sibling: write a version's rows to an external
@@ -265,38 +207,40 @@ final class VersionStore(val spark: SparkSession, val root: String) {
       .option("batchsize", Catalog.Limits.insertBatchSize)
       .jdbc(url, table, properties)
 
-  /** Compact one version's data directory into `targetFiles` parquet files,
-    * with the same write-new-then-rename swap the metadata uses. The ingest
-    * parallelism that made the WRITE fast leaves file counts sized for the
-    * writing cluster, not the readers — at scale, every query thereafter
-    * pays the listing + footer cost of thousands of small files until a
-    * compaction pass amortizes it away. Readers see the old files or the
-    * new ones, never a mix. */
+  /** Compact one version's data directory into `targetFiles` parquet files:
+    * the rows are rewritten to a hidden sibling directory, which then
+    * replaces the version's directory by two renames. The ingest parallelism
+    * that made the WRITE fast leaves file counts sized for the writing
+    * cluster, not the readers — at scale, every query thereafter pays the
+    * listing + footer cost of thousands of small files until a compaction
+    * pass amortizes it away. This swap is not crash-safe: a crash between
+    * the two renames leaves the version without its directory (the rows sit
+    * in `.compact-old-v<id>`), and it runs under the same single writer as
+    * every other change to the store. */
   def compactVersion(table: String, versionId: Long, targetFiles: Int = 1): Unit = {
-    val dir = s"$dataDir/$table/data_version_id=$versionId"
-    val tmp = dir + ".compact-tmp"
-    spark.read.parquet(dir).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val live = Paths.get(dir)
-    val old = Paths.get(dir + ".old")
-    deleteRecursively(old)
-    Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
+    val dir = versionDir(table, versionId)
+    val tmp = new Path(dir.getParent, s".compact-tmp-v$versionId")
+    val old = new Path(dir.getParent, s".compact-old-v$versionId")
+    spark.read.parquet(dir.toString).repartition(targetFiles)
+      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    fs.delete(old, true)
+    fs.rename(dir, old)
+    fs.rename(tmp, dir)
+    fs.delete(old, true): Unit
   }
 
   def data(table: String): DataFrame = spark.read.parquet(s"$dataDir/$table")
 
   /** J2 current view. The current version ids are resolved DRIVER-SIDE from
-    * the cached metadata, and only their `data_version_id=<id>` directories
-    * are opened (`basePath` keeps `data_version_id` as a path column), so
-    * the file index lists the current version's files however long the
-    * table's history is. The schema comes from one footer of the current
-    * version ([[readVersions]]), so building the view launches no job. A
-    * static `isin` partition filter stays on top, so the plan shows the
-    * pruning (a broadcast join would at best prune dynamically at runtime).
-    * With no current version, or no footer carrying Spark's schema, the view
-    * is the whole table filtered to the current ids.
+    * the committed metadata, and only their `data_version_id=<id>`
+    * directories are opened (`basePath` keeps `data_version_id` as a path
+    * column), so the file index lists the current version's files however
+    * long the table's history is. The schema comes from one footer of the
+    * current version ([[readVersions]]), so building the view launches no
+    * job. A static `isin` partition filter stays on top, so the plan shows
+    * the pruning (a broadcast join would at best prune dynamically at
+    * runtime). With no current version, or no footer carrying Spark's
+    * schema, the view is the whole table filtered to the current ids.
     * Null-safe variant compare mirrors the reference's
     * `IS NOT DISTINCT FROM` (init_db.py:418-518). */
   def currentView(table: String, sourceCode: String, variant: Option[String] = None): DataFrame = {
@@ -312,17 +256,15 @@ final class VersionStore(val spark: SparkSession, val root: String) {
     * holds no parquet file, or the footer has no Spark schema (a file Spark
     * did not write). */
   private def readVersions(table: String, ids: Seq[Long]): Option[DataFrame] = {
-    val base = s"$dataDir/$table"
-    val dirs = ids.map(id => s"$base/data_version_id=$id").filter(exists)
+    val dirs = ids.map(versionDir(table, _)).filter(fs.exists)
     dirs.headOption.flatMap(footerSchema).map(schema =>
-      spark.read.schema(schema).option("basePath", base).parquet(dirs: _*))
+      spark.read.schema(schema).option("basePath", s"$dataDir/$table")
+        .parquet(dirs.map(_.toString): _*))
   }
 
-  private def footerSchema(dir: String): Option[StructType] = {
+  private def footerSchema(dir: Path): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
-    fs.listStatus(path).filter(_.getPath.getName.endsWith(".parquet"))
+    fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName).headOption.flatMap { st =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
         try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
@@ -332,52 +274,34 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   }
 
   /** Current completed version ids for a (source, variant) scope, from the
-    * driver-side metadata cache — zero jobs. */
+    * driver's metadata — zero jobs. */
   def currentVersionIds(sourceCode: String, variant: Option[String]): Seq[Long] =
-    versionRows.collect {
-      case r if r.getString(1) == sourceCode && r.getBoolean(9) &&
-        r.getString(5) == "completed" && Option(r.getString(4)) == variant =>
-        r.getLong(0)
+    state.versions.collect {
+      case v if v.sourceCode == sourceCode && v.isCurrent &&
+        v.status == "completed" && v.variant == variant => v.dataVersionId
     }
 
-  /** U5 cascade delete: version data files + metadata rows. */
+  /** U5 cascade delete: the version's metadata rows are committed away
+    * first, then its data directory is removed — a crash between the two
+    * leaves only an unreferenced directory, whose id is never handed out
+    * again. */
   def deleteVersion(id: Long, table: String): Unit = {
-    deleteRecursively(Paths.get(s"$dataDir/$table/data_version_id=$id"))
-    swapWrite(versions.filter(col("data_version_id") =!= id), versionsPath)
-    if (exists(partsPath))
-      swapWrite(parts.filter(col("data_version_id") =!= id), partsPath)
-  }
-
-  /** U4 part bookkeeping: add a part row and bump the version's counters
-    * (record_count += n, part_count += 1 — reference ingestor.py:153-195). */
-  def appendPart(versionId: Long, partNumber: Int, fileHash: String,
-                 fileName: String, recordCount: Long): Unit = {
-    val row = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(
-        versionId, partNumber, fileHash, fileName, recordCount)), partSchema)
-    swapWrite(parts.unionByName(row), partsPath)
-    updateVersion(versionId, v => v
-      .withColumn("record_count", when(col("data_version_id") === versionId,
-        coalesce(col("record_count"), lit(0L)) + recordCount).otherwise(col("record_count")))
-      .withColumn("part_count", when(col("data_version_id") === versionId,
-        coalesce(col("part_count"), lit(1)) + 1).otherwise(col("part_count"))))
+    commit(s => s.copy(versions = s.versions.filterNot(_.dataVersionId == id),
+      parts = s.parts.filterNot(_.dataVersionId == id)))
+    fs.delete(versionDir(table, id), true): Unit
   }
 
   /** U6 ingestion event log append. */
-  def log(versionId: Long, level: String, message: String, detailsJson: Option[String] = None): Unit = {
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val row = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(versionId, level, message,
-        detailsJson.orNull, now)), logSchema)
-    row.write.mode(SaveMode.Append).parquet(logsPath)
-  }
+  def log(versionId: Long, level: String, message: String, detailsJson: Option[String] = None): Unit =
+    commit(_.logged(versionId, level, message, detailsJson)): Unit
 
-  /** D2 duplicate-file detection: any completed version of this source with
-    * the same hash blocks re-upload (reference: validator.py:178-214).
-    * Driver-side over the cached metadata rows — zero jobs. */
+  /** D2 duplicate-file detection: a completed version of this source whose
+    * upload — its first file or any appended part on the ledger — has the
+    * same hash blocks re-upload (reference: validator.py:178-214,
+    * upload.py:270-294). Driver-side over the metadata rows — zero jobs. */
   def isDuplicateFile(sourceCode: String, fileHash: String): Boolean =
-    versionRows.exists(r => r.getString(1) == sourceCode &&
-      r.getString(6) == fileHash && r.getString(5) == "completed")
+    state.versions.exists(v => v.sourceCode == sourceCode && v.status == "completed" &&
+      state.holds(v, fileHash))
 }
 
 object VersionStore {
@@ -385,6 +309,74 @@ object VersionStore {
 
   /** Footer key under which Spark's parquet writer stores the row schema. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private val Json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  private val CommitFile = """(\d{20})\.json""".r
+
+  private def commitNumber(p: Path): Option[Long] = p.getName match {
+    case CommitFile(n) => Some(n.toLong)
+    case _ => None
+  }
+
+  private def now() = new java.sql.Timestamp(System.currentTimeMillis())
+
+  /** One `data_versions` row ([[versionSchema]]). */
+  final case class Version(
+      dataVersionId: Long, sourceCode: String, versionLabel: String,
+      effectiveDate: java.sql.Date, variant: Option[String], status: String,
+      fileHash: String, fileName: String,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) recordCount: Option[Long],
+      isCurrent: Boolean, importedAt: java.sql.Timestamp, partCount: Int,
+      errorMessage: Option[String]) {
+    def row: Row = Row(dataVersionId, sourceCode, versionLabel, effectiveDate,
+      variant.orNull, status, fileHash, fileName, recordCount.map(Long.box).orNull,
+      isCurrent, importedAt, partCount, errorMessage.orNull)
+  }
+
+  /** One part-ledger row ([[partSchema]]): an appended part of a version. */
+  final case class Part(dataVersionId: Long, partNumber: Int, fileHash: String,
+                        fileName: String, recordCount: Long) {
+    def row: Row = Row(dataVersionId, partNumber, fileHash, fileName, recordCount)
+  }
+
+  /** One event-log row ([[logSchema]]). */
+  final case class LogEntry(dataVersionId: Long, level: String, message: String,
+                            details: Option[String], loggedAt: java.sql.Timestamp) {
+    def row: Row = Row(dataVersionId, level, message, details.orNull, loggedAt)
+  }
+
+  /** The whole committed metadata of a store; each commit writes one. */
+  final case class State(nextVersionId: Long, versions: Vector[Version],
+                         parts: Vector[Part], logs: Vector[LogEntry]) {
+    def hasPart(versionId: Long, partNumber: Int): Boolean =
+      parts.exists(p => p.dataVersionId == versionId && p.partNumber == partNumber)
+
+    /** Did an upload with this hash land in `v`, as its first file or as an
+      * appended part? */
+    def holds(v: Version, fileHash: String): Boolean =
+      v.fileHash == fileHash ||
+        parts.exists(p => p.dataVersionId == v.dataVersionId && p.fileHash == fileHash)
+
+    private[store] def edit(id: Long)(f: Version => Version): State =
+      copy(versions = versions.map(v => if (v.dataVersionId == id) f(v) else v))
+
+    /** `id` becomes the one current version of its (source, variant) scope. */
+    private[store] def current(id: Long, sourceCode: String, variant: Option[String]): State =
+      copy(versions = versions.map {
+        case v if v.dataVersionId == id => v.copy(isCurrent = true)
+        case v if v.sourceCode == sourceCode && v.variant == variant => v.copy(isCurrent = false)
+        case v => v
+      })
+
+    private[store] def logged(id: Long, level: String, message: String,
+                              details: Option[String]): State =
+      copy(logs = logs :+ LogEntry(id, level, message, details, now()))
+  }
+
+  object State {
+    val empty: State = State(1L, Vector.empty, Vector.empty, Vector.empty)
+  }
 
   /** Audit diff between two versions of a relation on its unique keys:
     * one row per key present in either side, classified added / removed /
@@ -443,16 +435,15 @@ object VersionStore {
     StructField("logged_at", TimestampType, nullable = false),
   ))
 
-  /** F13 SHA-256 of a file's raw bytes (reference: upload.py:47-49). */
+  /** F13 SHA-256 of a file's raw bytes (reference: upload.py:47-49),
+    * streamed through a fixed buffer. */
   def sha256File(path: String): String = {
     val md = MessageDigest.getInstance("SHA-256")
-    val bytes = Files.readAllBytes(Paths.get(path))
-    md.digest(bytes).map("%02x".format(_)).mkString
+    val in = new DigestInputStream(new FileInputStream(path), md)
+    try {
+      val buf = new Array[Byte](1 << 16)
+      while (in.read(buf) != -1) {}
+    } finally in.close()
+    md.digest().map("%02x".format(_)).mkString
   }
-
-  private[store] def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
 }

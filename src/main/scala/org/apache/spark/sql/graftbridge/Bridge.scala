@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.StructType
 /** Bridge to the `private[sql]` entry points graft needs: the Column ⇄
   * Expression conversions a custom-Expression library needs (the standard
   * pattern for third-party Catalyst extensions), runtime function
-  * registration, and building a DataFrame straight from internal rows. */
+  * registration, building a DataFrame straight from internal rows, and
+  * releasing an RDD's cached blocks. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -29,4 +30,10 @@ object Bridge {
                               schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** Drop an RDD's cached blocks through the SparkContext — what
+    * `RDD.unpersist` does, without its warning that a locally checkpointed
+    * RDD cannot be recomputed (for a caller that never reads it again). */
+  def unpersistRDD(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

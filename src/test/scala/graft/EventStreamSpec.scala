@@ -234,12 +234,12 @@ class EventStreamSpec extends SparkSpecBase {
     val replay = spark.read.parquet(s"$dir/stream").limit(10)
     EventStream.landBatch(store, "events_landed", vid, replay, batchId = 0L)
     assert(store.data("events_landed").count() == 30, "replayed batch duplicated rows")
-    // Crash WINDOW: data moved but the ledger append never ran (the commit
-    // point). The replay re-stages the same part — with a different
+    // Crash WINDOW: data moved but the ledger commit never ran (the commit
+    // point). The replay rewrites the same part — with a different
     // partitioning, so different file counts — and must sweep the earlier
     // attempt's files rather than adding to them.
-    store.stagePart("events_landed", vid, 99, replay.repartition(4))
-    store.stagePart("events_landed", vid, 99, replay.repartition(2))
+    store.writeData("events_landed", vid, replay.repartition(4), part = 99)
+    store.writeData("events_landed", vid, replay.repartition(2), part = 99)
     EventStream.landBatch(store, "events_landed", vid, replay, batchId = 99L)
     assert(store.data("events_landed").count() == 40,
       "crashed-then-replayed batch must land its 10 rows exactly once")

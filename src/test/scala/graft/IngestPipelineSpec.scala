@@ -179,6 +179,38 @@ class IngestPipelineSpec extends SparkSpecBase {
       .filter(col("data_version_id") === r1.versionId).count() == 3)
   }
 
+  test("a replayed multi-part append lands once, and its part is a duplicate file (D2)") {
+    val store = newStore()
+    val header = "Column 1,Column 2,Modifier,Effective Date,Deletion Date\n"
+    val part1 = csv(header + "00100,00101,1,20240101,*\n")
+    val part2 = csv(header + "00200,00201,0,20240101,*\n00300,00301,9,20240101,20250101\n")
+    def ingest(p: String) = IngestPipeline.ingestFile(spark, store, "NCCI_PTP", p,
+      "2026-Q1", d, Some("HOSPITAL"))
+    val id = ingest(part1).versionId
+    assert(ingest(part2).inserted == 2)
+    val replays = Seq(ingest(part2), ingest(part1))
+    assert(replays.map(r => (r.versionId, r.status, r.inserted, r.duplicates)) ==
+      Seq((id, "completed", 0L, 2L), (id, "completed", 0L, 1L)))
+    val v = store.versions.filter(col("data_version_id") === id).head
+    assert((v.getAs[Long]("record_count"), v.getAs[Int]("part_count")) == (3L, 2))
+    assert(store.currentView("cms.ncci_ptp", "NCCI_PTP", Some("HOSPITAL")).count() == 3)
+    // Re-validating either part flags it (reference upload.py:270-294).
+    Seq(part1, part2).foreach { p =>
+      val rep = IngestPipeline.validateFile(spark, store, "NCCI_PTP", p, "2026-Q2", Some("HOSPITAL"))
+      assert(rep.duplicateFile && !rep.valid)
+    }
+  }
+
+  test("validation launches the same jobs with or without a completed version") {
+    val store = newStore()
+    val path = csv("HCPCS,OPPS CAP\n99213,120.50\n99214,140.00\n")
+    def validate() = IngestPipeline.validateFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q2")
+    validate() // warm
+    val before = jobsIn(validate())
+    IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1", d)
+    assert(jobsIn(validate()) == before)
+  }
+
   test("validation report: counts, drift warning, sampled type warnings, dup file") {
     val store = newStore()
     val good = csv(

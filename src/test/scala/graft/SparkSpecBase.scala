@@ -20,6 +20,22 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
           org.apache.spark.sql.types.StringType, nullable = true))))
     df.select(f(col("v")).as("r")).head.get(0)
   }
+
+  /** Spark jobs started while `body` runs (the listener bus drained on
+    * both sides, so no job of an earlier call is counted). */
+  def jobsIn(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    org.apache.spark.SpecBus.drain(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally { org.apache.spark.SpecBus.drain(sc); sc.removeSparkListener(listener) }
+    n.get
+  }
 }
 
 object SparkSpecBase {

@@ -84,11 +84,89 @@ class VersionStoreSpec extends SparkSpecBase {
       java.sql.Date.valueOf("2026-01-01"), None, "hash1", "f1.csv")
     store.writeData("cms.pfs_opps_cap", id, sampleData(1))
     store.completeVersion(id, 2, markCurrentFor = Some(("PFS_OPPS_CAP", None)))
-    // a NEW instance must reload the durable parquet, not see empty caches
+    // a NEW instance must reload the durable commit log, not start empty
     val reopened = new VersionStore(spark, store.root)
     assert(reopened.currentView("cms.pfs_opps_cap", "PFS_OPPS_CAP").count() == 2)
     assert(reopened.isDuplicateFile("PFS_OPPS_CAP", "hash1"))
     assert(reopened.versions.filter(col("is_current")).count() == 1)
+
+    // 50 more commits: every kind of metadata change, plus landed parts.
+    (1 to 10).foreach { i =>
+      val v = store.createVersion("PFS_GPCI", s"2026-Q$i",
+        java.sql.Date.valueOf(s"2026-01-${10 + i}"), Some("V"), s"g$i", s"g$i.csv")
+      store.completeVersion(v, i.toLong)
+      store.markCurrent(v, "PFS_GPCI", Some("V"))
+      store.log(v, "INFO", s"note $i", if (i % 2 == 0) Some("""{"k":1}""") else None)
+      if (i % 3 == 0) store.failVersion(v, s"late $i")
+      else store.landPart("cms.pfs_gpci", v, 2, sampleData(i), s"p$i", s"p$i.csv"): Unit
+    }
+    val log = new java.io.File(s"${store.root}/meta/_log")
+    val commits = log.listFiles.map(_.getName).filter(_.matches("\\d{20}\\.json"))
+    assert(commits.length >= 1 && commits.length <= 2, commits.mkString(","))
+    val again = new VersionStore(spark, store.root)
+    def rows(s: VersionStore) = Seq(s.versions, s.parts, s.logs).map(_.collect().toSeq)
+    assert(rows(again) == rows(store))
+    assert(rows(store).map(_.size) == Seq(11, 7, 17))
+    assert(again.versions.filter(col("record_count").isNull).isEmpty)
+  }
+
+  test("version ids are never reused, across deletes and reopens") {
+    val store = newStore()
+    def create(s: VersionStore, label: String) = s.createVersion("PFS_GPCI", label,
+      java.sql.Date.valueOf("2026-01-01"), None, s"h-$label", s"$label.csv")
+    val v1 = create(store, "a")
+    val v2 = create(store, "b")
+    store.writeData("cms.pfs_gpci", v2, sampleData(2))
+    store.completeVersion(v2, 2, markCurrentFor = Some(("PFS_GPCI", None)))
+    store.deleteVersion(v2, "cms.pfs_gpci")
+    assert(!new java.io.File(s"${store.root}/data/cms.pfs_gpci/data_version_id=$v2").exists)
+    val v3 = create(store, "c")
+    assert(Seq(v1, v2, v3) == Seq(1L, 2L, 3L))
+    store.deleteVersion(v3, "cms.pfs_gpci")
+    assert(create(new VersionStore(spark, store.root), "d") == 4L)
+  }
+
+  test("metadata reads and commits launch no job; landing a part launches one") {
+    val store = newStore()
+    val data = sampleData(1)
+    val d = java.sql.Date.valueOf("2026-01-01")
+    var id = 0L
+    assert(jobsIn { id = store.createVersion("NCCI_PTP", "q", d, Some("H"), "h", "f.csv") } == 0)
+    assert(jobsIn(store.completeVersion(id, 2, markCurrentFor = Some(("NCCI_PTP", Some("H"))))) == 0)
+    assert(jobsIn(store.markCurrent(id, "NCCI_PTP", Some("H"))) == 0)
+    assert(jobsIn(store.log(id, "INFO", "hello")) == 0)
+    assert(jobsIn(store.landPart("cms.ncci_ptp", id, 2, data, "h2", "f2.csv")) == 1)
+    assert(jobsIn(store.landPart("cms.ncci_ptp", id, 2, data, "h2", "f2.csv")) == 0) // on the ledger
+    val other = store.createVersion("HCPCS", "q", d, None, "x", "x.csv")
+    assert(jobsIn(store.failVersion(other, "boom")) == 0)
+    assert(jobsIn(store.deleteVersion(other, "cms.hcpcs")) == 0)
+    assert(jobsIn {
+      val s = new VersionStore(spark, store.root)
+      s.versions.collect(); s.parts.collect(); s.logs.collect()
+    } == 0)
+    val v = store.versions.filter(col("data_version_id") === id).head
+    assert((v.getAs[Long]("record_count"), v.getAs[Int]("part_count")) == (4L, 2))
+    assert(store.parts.collect().map(_.getAs[String]("file_hash")).toSeq == Seq("h2"))
+  }
+
+  test("upload hashes stream the file and match the whole-file digest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hash")
+    def sha(bytes: Array[Byte]) = {
+      val p = java.nio.file.Files.write(dir.resolve(s"f${bytes.length}"), bytes)
+      val whole = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+        .map("%02x".format(_)).mkString
+      val streamed = VersionStore.sha256File(p.toString)
+      assert(streamed == whole)
+      streamed
+    }
+    assert(sha(Array.emptyByteArray) ==
+      "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855")
+    assert(sha("abc".getBytes("UTF-8")) ==
+      "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
+    // The multi-part PTP upload shape, over several buffer lengths.
+    val csv = "Column 1,Column 2,Modifier,Effective Date,Deletion Date\n" +
+      (0 until 20000).map(i => f"$i%05d,${i + 1}%05d,1,20240101,*").mkString("\n")
+    sha(csv.getBytes("UTF-8"))
   }
 
   test("JDBC sink writes version rows in 1000-row insert batches (S7)") {
