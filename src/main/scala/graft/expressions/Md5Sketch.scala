@@ -137,9 +137,9 @@ case class SimhashMd5Fp(child: Expression, bits: Int)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
-      case _ if bits > 60 =>
+      case _ if bits < 1 || bits > 60 =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash_md5_fp supports <= 60 bits, got $bits")
+          s"simhash_md5_fp supports 1 to 60 bits, got $bits")
       case ArrayType(StringType, _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>

@@ -7,6 +7,7 @@ import java.util.zip.ZipFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -118,13 +119,9 @@ object FileReader {
       // time size cap); the DATA tables the engine queries are parquet.
       .option("multiLine", "true")
       .csv(path)
-    // Ragged rows: pandas pads short rows with NaN -> str "nan"? The
-    // reference files are rectangular; we normalize missing tail cells to ""
-    // to keep the all-string contract.
-    val filled = df.columns.foldLeft(df)((d, c) =>
-      d.withColumn(c, org.apache.spark.sql.functions.coalesce(
-        org.apache.spark.sql.functions.col(c), org.apache.spark.sql.functions.lit(""))))
-    filled
+    // Ragged rows: missing tail cells become "" to keep the all-string
+    // contract (one Project over all columns).
+    df.select(df.columns.map(c => coalesce(col(c), lit("")).as(c)): _*)
   }
 
   /** S1 CSV scan with encoding cascade. */

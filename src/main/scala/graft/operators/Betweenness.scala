@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * degree-capped co-purchase subgraph — twelve orders under overflow).
   *
   * Distributed shape: sigma is per-seed NUMERIC state, so the
-  * bit-parallel mask trick (one long per 63 seeds — [[Closeness]])
+  * bit-parallel mask trick (one long per 63 seeds — [[SeedReach]])
   * cannot apply; the frontier is the honest (seed, node, σ) relation,
   * seed count bounded by the modulus. Each forward round is ONE
   * src-keyed join + ONE (seed, node) aggregate + ONE anti-join against

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one src-keyed join + one dst aggregate per round
   * (the PageRank loop shape), over an adjacency relation checkpointed
   * once and pre-partitioned by src; the carried (node, xu) relation is
-  * node-sized, checkpointed every 3 rounds to truncate lineage. */
+  * node-sized and runs through the [[FixpointGate]] round loop. */
 object Katz {
 
   /** Rounds actually computed by the last [[topK]] on this JVM —
@@ -58,34 +58,13 @@ object Katz {
           .select(col("node"),
             (lit(1000000L) + coalesce(col("in_u"), lit(0L))).as("xu"))
       }
-      var x = nodes.withColumn("xu", lit(1000000L))
-      var rounds = 0
-      var prevChk: DataFrame = null
-      var i = 1
-      var fixed = false
-      while (i <= iterations && !fixed) {
-        x = step(x)
-        rounds += 1
-        // FixpointGate at the checkpoint boundary (see PageRank): every
-        // round's x covers the full node set, so (node, xu) set equality
-        // vs the previous checkpoint is exact state equality. Strong
-        // attenuation (large alphaDen truncating every contribution to 0)
-        // reaches this fixpoint after one round.
-        if (i % 3 == 0 && i < iterations) {
-          x = x.localCheckpoint(true)
-          if (prevChk != null &&
-              FixpointGate.same(x, prevChk, Seq("node", "xu"))) {
-            val extra = (iterations - i) % 3
-            (1 to extra).foreach(_ => x = step(x))
-            rounds += extra
-            fixed = true
-            println(s"[katz] early-exit after round ${i + extra} of " +
-              s"$iterations (state at round $i == round ${i - 3} exactly; " +
-              s"final state provably identical)")
-          } else prevChk = x
-        }
-        i += 1
-      }
+      // Every round's x covers the full node set, so (node, xu) set
+      // equality is exact state equality. Strong attenuation (large
+      // alphaDen truncating every contribution to 0) reaches this
+      // fixpoint after one round.
+      val (x, rounds) = FixpointGate.rounds("katz",
+        nodes.withColumn("xu", lit(1000000L)), 0, iterations,
+        Seq("node", "xu"))(step)
       lastRoundsExecuted = rounds
       x.select(col("node"), col("xu").as("katz_micro"))
         .orderBy(col("katz_micro").desc, col("node"))

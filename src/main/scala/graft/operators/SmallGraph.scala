@@ -64,11 +64,11 @@ object SmallGraph {
     * verdict's "latency cliff, not a cost model"): oriented
     * triangle/wedge enumeration is O(m^1.5) (ktruss, triangles,
     * clustering_coef, jaccard_sim, rectangles, link_pred) and per-seed
-    * BFS sweeps are O(seeds·m) (closeness, eccentricity, anf,
-    * betweenness). 256 MB of edges is a fine linear pass but tens of
-    * minutes of wedge work in one task; 64 MB (~m ≈ 4M edges → m^1.5 ≈
-    * 8·10⁹ steps) keeps the worst gated kernel in the same few-second
-    * class as a [[Linear]] pass.
+    * BFS sweeps are O(seeds·m) (the one seed-reach sweep that closeness,
+    * eccentricity and anf fold, and betweenness). 256 MB of edges is a
+    * fine linear pass but tens of minutes of wedge work in one task;
+    * 64 MB (~m ≈ 4M edges → m^1.5 ≈ 8·10⁹ steps) keeps the worst gated
+    * kernel in the same few-second class as a [[Linear]] pass.
     *
     * Join-fan-out note (ADVICE r16): the leaf-sum bounds bytes SCANNED,
     * not join output — the wedge kernels' pair inputs are FK-join-
@@ -230,30 +230,26 @@ object SmallGraph {
 
   // ------------------------------------------------------ PageRank / PPR
 
-  /** Bounded-kernel replay of [[PageRank.run]] / [[Ppr.run]]'s loop:
-    * identical picorank-unit arithmetic over the deduplicated edge set.
-    * `seed == null` means plain PageRank (teleport everywhere). Emits
+  /** Bounded-kernel replay of [[Ppr.run]]'s loop: identical
+    * picorank-unit arithmetic over the deduplicated edge set.
+    * `seed = None` makes every node a seed (plain PageRank). Emits
     * (node, rank) for every node, unordered. */
   private[operators] def pagerankKernel(it: Iterator[(Long, Long)],
       iterations: Int, damping: Double,
-      seed: Long => Boolean): Iterator[(Long, Double)] = {
+      seed: Option[Long => Boolean]): Iterator[(Long, Double)] = {
     val (src, dst) = drain(it)
     val nodes = sortedNodes(src, dst)
     val n = nodes.length
     if (n == 0) return Iterator.empty
     val edges = packedDistinct(src, dst, nodes)
-    val isSeed: Array[Boolean] =
-      if (seed == null) null
-      else nodes.map(seed)
+    val isSeed: Array[Boolean] = seed.map(f => nodes.map(f)).orNull
     val nS = if (isSeed == null) n.toLong else isSeed.count(identity).toLong
     require(nS > 0, "personalization needs at least one seed node")
     val outdeg = new Array[Long](n)
     var i = 0
     while (i < edges.length) { outdeg((edges(i) >>> 32).toInt) += 1; i += 1 }
     def baseOf(v: Int): Double =
-      if (isSeed == null) (1.0 - damping) / n
-      else if (isSeed(v)) (1.0 - damping) / nS
-      else 0.0
+      if (isSeed == null || isSeed(v)) (1.0 - damping) / nS else 0.0
     // Round 1: r0 = 1/n everywhere (PageRank) or 1/|S| on seeds (PPR).
     var in = new Array[Long](n)
     i = 0
@@ -523,12 +519,12 @@ object SmallGraph {
     out.iterator
   }
 
-  // --------------------------------------------------- harmonic closeness
+  // ------------------------------------------------------- seed reach
 
-  /** Bounded-kernel replay of [[Closeness.harmonicSummary]]: per-seed
-    * BFS accumulation with the integer 10⁶ div r hop units; emits
-    * (seed, n_reached, harmonic_micro) sorted by seed. */
-  private[operators] def closenessKernel(it: Iterator[(Long, Long)],
+  /** Bounded-kernel replay of [[SeedReach.counts]]: one CSR BFS per
+    * seed; emits (seed, r, c) for every seed and every round 1..R,
+    * zero counts included, sorted by (seed, r). */
+  private[operators] def seedReachKernel(it: Iterator[(Long, Long)],
       seedsMod: Long, rounds: Int, maxSeeds: Int): Iterator[(Long, Long, Long)] = {
     val (lo, hi) = drain(it)
     val nodes = sortedNodes(lo, hi)
@@ -536,35 +532,29 @@ object SmallGraph {
     val (off, tgt) = csrUndirected(lo, hi, nodes)
     val seeds = (0 until n).filter(i =>
       java.lang.Math.floorMod(nodes(i), seedsMod) == 0L)
-    require(seeds.length <= maxSeeds,
-      s"closeness seed set exceeds maxSeeds=$maxSeeds for seedsMod=" +
-        s"$seedsMod — raise seedsMod (fewer seeds) or pass a larger " +
-        "explicit bound; the per-seed accumulator is driver-resident")
-    seeds.iterator.map { s =>
+    require(seeds.length <= maxSeeds, SeedReach.tooMany(maxSeeds, seedsMod))
+    seeds.iterator.flatMap { s =>
       val visited = new Array[Boolean](n)
       visited(s) = true
       var frontier = Array(s)
-      var reached = 0L; var harmonic = 0L
+      val c = new Array[Long](rounds)
       var r = 1
       while (r <= rounds && frontier.nonEmpty) {
         val next = new scala.collection.mutable.ArrayBuilder.ofInt
-        var c = 0L
         var i = 0
         while (i < frontier.length) {
           var j = off(frontier(i))
           while (j < off(frontier(i) + 1)) {
             val t = tgt(j)
-            if (!visited(t)) { visited(t) = true; next += t; c += 1 }
+            if (!visited(t)) { visited(t) = true; next += t; c(r - 1) += 1 }
             j += 1
           }
           i += 1
         }
-        reached += c
-        harmonic += c * (1000000L / r)
         frontier = next.result()
         r += 1
       }
-      (nodes(s), reached, harmonic)
+      (1 to rounds).iterator.map(r => (nodes(s), r.toLong, c(r - 1)))
     }
   }
 
@@ -707,100 +697,6 @@ object SmallGraph {
       s += 1
     }
     out.iterator
-  }
-
-  // ----------------------------------------------- eccentricity / ANF
-
-  /** Bounded-kernel replay of [[Eccentricity.summary]]: per-seed BFS,
-    * ecc = last round discovering a new node; emits
-    * (seed, ecc, n_reached) sorted by seed. */
-  private[operators] def eccentricityKernel(it: Iterator[(Long, Long)],
-      seedsMod: Long, rounds: Int, maxSeeds: Int): Iterator[(Long, Long, Long)] = {
-    val (lo, hi) = drain(it)
-    val nodes = sortedNodes(lo, hi)
-    val n = nodes.length
-    val (off, tgt) = csrUndirected(lo, hi, nodes)
-    val seeds = (0 until n).filter(i =>
-      java.lang.Math.floorMod(nodes(i), seedsMod) == 0L)
-    require(seeds.length <= maxSeeds,
-      s"eccentricity seed set exceeds maxSeeds=$maxSeeds for seedsMod=" +
-        s"$seedsMod — raise seedsMod (fewer seeds) or pass a larger " +
-        "explicit bound; the per-seed accumulator is driver-resident")
-    seeds.iterator.map { s =>
-      val visited = new Array[Boolean](n)
-      visited(s) = true
-      var frontier = Array(s)
-      var reached = 0L; var ecc = 0L
-      var r = 1
-      while (r <= rounds && frontier.nonEmpty) {
-        val next = new scala.collection.mutable.ArrayBuilder.ofInt
-        var c = 0L
-        var i = 0
-        while (i < frontier.length) {
-          var j = off(frontier(i))
-          while (j < off(frontier(i) + 1)) {
-            val t = tgt(j)
-            if (!visited(t)) { visited(t) = true; next += t; c += 1 }
-            j += 1
-          }
-          i += 1
-        }
-        if (c > 0) { ecc = r.toLong; reached += c }
-        frontier = next.result()
-        r += 1
-      }
-      (nodes(s), ecc, reached)
-    }
-  }
-
-  /** Bounded-kernel replay of [[Anf.profile]]: per-round total new-node
-    * counts over the seed set; emits (r, reached, cum, frac_micro,
-    * eff_diam) for rounds 1..R. */
-  private[operators] def anfKernel(it: Iterator[(Long, Long)],
-      seedsMod: Long, rounds: Int,
-      maxSeeds: Int): Iterator[(Long, Long, Long, Long, Long)] = {
-    val (lo, hi) = drain(it)
-    val nodes = sortedNodes(lo, hi)
-    val n = nodes.length
-    val (off, tgt) = csrUndirected(lo, hi, nodes)
-    val seeds = (0 until n).filter(i =>
-      java.lang.Math.floorMod(nodes(i), seedsMod) == 0L)
-    require(seeds.length <= maxSeeds,
-      s"ANF seed set exceeds maxSeeds=$maxSeeds for seedsMod=$seedsMod " +
-        "— raise seedsMod (fewer seeds) or pass a larger explicit bound")
-    val roundTotals = Array.fill(rounds)(0L)
-    seeds.foreach { s =>
-      val visited = new Array[Boolean](n)
-      visited(s) = true
-      var frontier = Array(s)
-      var r = 1
-      while (r <= rounds && frontier.nonEmpty) {
-        val next = new scala.collection.mutable.ArrayBuilder.ofInt
-        var i = 0
-        while (i < frontier.length) {
-          var j = off(frontier(i))
-          while (j < off(frontier(i) + 1)) {
-            val t = tgt(j)
-            if (!visited(t)) {
-              visited(t) = true; next += t; roundTotals(r - 1) += 1
-            }
-            j += 1
-          }
-          i += 1
-        }
-        frontier = next.result()
-        r += 1
-      }
-    }
-    val cums = roundTotals.scanLeft(0L)(_ + _).tail
-    val total = cums.last
-    val effDiam =
-      if (total == 0L) 0L
-      else (1 to rounds).find(r => cums(r - 1) * 10 >= 9 * total).get.toLong
-    (1 to rounds).iterator.map { r =>
-      val frac = if (total == 0L) 0L else cums(r - 1) * 1000000L / total
-      (r.toLong, roundTotals(r - 1), cums(r - 1), frac, effDiam)
-    }
   }
 
   // ---------------------------------------------------------------- Katz

@@ -1987,11 +1987,11 @@ trait RegistryCore extends RegistryBase {
     // coalesce(4): the slices are KB-scale — landing them at the scan's
     // 32-task fan-out writes 64 tiny files the read-back then pays for.
     val id1 = st.createVersion("SRC_TT", "2026-Q1", qDate, None, "h1", "tt1.csv")
-    st.writeData("tt", id1, v1.coalesce(4))
-    st.completeVersion(id1, v1.count(), markCurrentFor = Some(("SRC_TT", None)))
+    st.completeVersion(id1, st.writeData("tt", id1, v1.coalesce(4)),
+      markCurrentFor = Some(("SRC_TT", None)))
     val id2 = st.createVersion("SRC_TT", "2026-Q2", qDate, None, "h2", "tt2.csv")
-    st.writeData("tt", id2, v2.coalesce(4))
-    st.completeVersion(id2, v2.count(), markCurrentFor = Some(("SRC_TT", None)))
+    st.completeVersion(id2, st.writeData("tt", id2, v2.coalesce(4)),
+      markCurrentFor = Some(("SRC_TT", None)))
     val d1 = st.data("tt").filter(col("data_version_id") === id1)
       .select(col("k"), col("price").as("p1"))
     val d2 = st.data("tt").filter(col("data_version_id") === id2)

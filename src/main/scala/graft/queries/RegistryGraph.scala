@@ -498,7 +498,8 @@ trait RegistryGraph extends RegistryEvent {
   /** Harmonic closeness centrality from the mod-97 seed set over the
     * co-purchase graph — "which catalog anchors sit closest to
     * everything" (see [[graft.operators.Closeness]] for the integer
-    * micro-unit arithmetic and the (seed, node)-pair frontier shape). */
+    * micro-unit arithmetic and [[graft.operators.SeedReach]] for the
+    * bit-parallel frontier shape). */
   protected def graphCloseness(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Closeness.harmonicSummary(
       graft.operators.Triangles.canonical(
@@ -509,7 +510,7 @@ trait RegistryGraph extends RegistryEvent {
     * horizon on the 1/16 co-purchase subgraph (the [[graphKtruss]]
     * modulus restriction — a full-graph horizon sweep is the closeness
     * query's job; this one answers "how deep is the neighborhood"). See
-    * [[graft.operators.Eccentricity]] for the bit-parallel frontier
+    * [[graft.operators.SeedReach]] for the bit-parallel frontier
     * shape; the diameter lower bound is max ecc over the seed set,
     * broadcast back onto the bounded per-seed relation. */
   protected def graphEccentricity(spark: SparkSession, dir: String): DataFrame = {
@@ -572,8 +573,8 @@ trait RegistryGraph extends RegistryEvent {
     * within r hops") that calibrates every iterative operator's round
     * budget; eccentricity reports the same expansion per seed, ANF
     * reports the graph-level curve and its 90% effective diameter.
-    * See [[graft.operators.Anf]] for the bit-parallel popcount
-    * accumulation. */
+    * See [[graft.operators.SeedReach]] for the per-(seed, round) reach
+    * counts it sums. */
   protected def graphAnf(spark: SparkSession, dir: String): DataFrame = {
     val sub = coPurchaseSubPairs(spark, dir)
     graft.operators.Anf.profile(

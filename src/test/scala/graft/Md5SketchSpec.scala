@@ -74,4 +74,16 @@ class Md5SketchSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("60 bits"))
   }
+
+  test("SimhashMd5Fp rejects bits < 1 at analysis, not per row") {
+    // A negative width would fail per row (NegativeArraySizeException);
+    // a zero width would give every doc the same fingerprint.
+    Seq(0, -3).foreach { b =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        gramsDf.select(Bridge.column(graft.expressions.SimhashMd5Fp(
+          Bridge.expression(col("grams")), b)))
+      }
+      assert(e.getMessage.contains(s"got $b"))
+    }
+  }
 }
