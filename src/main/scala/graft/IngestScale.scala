@@ -16,6 +16,9 @@ import org.apache.spark.sql.SparkSession
   *    worst case (the sheet XML inflates to ~700 MB)
   *  - xls: BIFF8's own format ceiling, 65,536 rows (the sheet cannot be
   *    larger; size is bounded by the format, not the 100 MB cap)
+  * Each format ends with one JSON line (`{"format": …}`): file bytes,
+  * data rows, `ingest_s`, rows/s, the Spark jobs and tasks the ingest ran,
+  * peak driver heap, and the `IngestResult` counters.
   * Findings recorded in PLANS.md ("100 MB ingestion exercise"). Run:
   * `sbt "runMain graft.IngestScale [/tmp/outdir] [csv,xlsx,xls]"`. */
 object IngestScale {
@@ -51,14 +54,14 @@ object IngestScale {
     val spark = Sessions.local(defaultCpus = 32)
     graft.queries.Registry.configure(spark)
     formats.foreach {
-      case "csv" => runOne(spark, work, "csv", generateCsv(work, 1700000))
-      case "xlsx" => runOne(spark, work, "xlsx",
+      case "csv" => runOne(spark, work, "csv", 1700000, generateCsv(work, 1700000))
+      case "xlsx" => runOne(spark, work, "xlsx", 2600000,
         timed("generate 2,600,000-row XLSX") {
           val p = s"$work/ncci_ptp_100mb.xlsx"
           graft.io.SyntheticXlsx.writeNcciPtp(p, 2600000)
           p
         })
-      case "xls" => runOne(spark, work, "xls",
+      case "xls" => runOne(spark, work, "xls", 65536,
         timed("generate 65,536-row BIFF8 XLS (format ceiling)") {
           val p = s"$work/ncci_ptp_ceiling.xls"
           graft.io.SyntheticXls.ncciPtpCeiling(p)
@@ -110,18 +113,37 @@ object IngestScale {
     * existing store under the same version label APPENDS (by design) and
     * the reconciliation below would see both runs' rows. */
   private def runOne(spark: SparkSession, work: String, label: String,
-                     path: String): Unit = {
-    println(f"[ingest100] ($label) file size: ${new java.io.File(path).length() / 1e6}%.1f MB")
+                     rows: Long, path: String): Unit = {
+    val bytes = new java.io.File(path).length()
+    println(f"[ingest100] ($label) file size: ${bytes / 1e6}%.1f MB")
     resetPeakHeap()
     val store = new graft.store.VersionStore(spark,
       s"$work/store-$label-${java.lang.Long.toHexString(System.nanoTime())}")
-    val result = timed(s"($label) full ingest (parse->detect->transform->quarantine->dedup->land)") {
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val tasks = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    val result = try timed(s"($label) full ingest (parse->detect->transform->quarantine->dedup->land)") {
       graft.pipeline.IngestPipeline.ingestFile(spark, store, "NCCI_PTP", path,
         "2026-Q1", java.sql.Date.valueOf("2026-01-01"), Some("PRACTITIONER"))
+    } finally {
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
     }
+    val ingestS = (System.nanoTime() - t0) / 1e9
     println(s"[ingest100] ($label) status=${result.status} processed=${result.processed} " +
       s"inserted=${result.inserted} invalid=${result.invalid} " +
       s"duplicates=${result.duplicates} peakHeap=${peakHeapMb}MB")
+    val summary = f"""{"format":"$label","file_bytes":$bytes,"rows":$rows,"ingest_s":$ingestS%.3f,""" +
+      f""""rows_per_s":${rows / ingestS}%.0f,"jobs":${jobs.get},"tasks":${tasks.get},""" +
+      f""""peak_heap_mb":$peakHeapMb,"status":"${result.status}","processed":${result.processed},""" +
+      f""""inserted":${result.inserted},"invalid":${result.invalid},"duplicates":${result.duplicates}}"""
     timed(s"($label) current-view read-back + counter reconciliation") {
       val cur = store.currentView("cms.ncci_ptp", "NCCI_PTP", Some("PRACTITIONER"))
       val n = cur.count()
@@ -132,5 +154,6 @@ object IngestScale {
       println(s"[ingest100] ($label) modifier histogram: " +
         mods.map(r => s"${r.get(0)}:${r.getLong(1)}").mkString(" "))
     }
+    println(summary)
   }
 }

@@ -4,12 +4,17 @@ import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 import java.nio.file.{Files, Paths}
 import java.util.zip.ZipFile
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, Expression, GenericInternalRow, JoinedRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.config.Catalog
+import graft.header.HeaderDetector
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -20,29 +25,60 @@ import scala.jdk.CollectionConverters._
   * assumption, every cell a string, empty cells stay "" (never null),
   * positional column names _c0.._cN.
   *
-  * The sniffing steps (encoding, delimiter, column count) are deliberately
-  * driver-side over a bounded byte sample — they mirror the reference's own
-  * bounded probes and cost O(4KB) regardless of file size. The actual data
-  * read is a distributed `spark.read.csv` with the sniffed options, so a
-  * 100 GB CSV still scans in parallel across executors.
+  * An ingest reads an upload through [[readUpload]], which returns rows
+  * that are already numbered (`_row_number`, 1-based file order) together
+  * with their count and their first [[HeadRows]] rows, so no job reads the
+  * upload just to count it, number it or fetch its head:
+  *
+  *  - CSV/TXT: one driver-side streaming pass ([[DelimitedScan]]) checks
+  *    UTF-8 validity, finds every record start under the parser's quote
+  *    rules and counts the records, then cuts the file into about
+  *    `defaultParallelism` record-aligned byte ranges of at least
+  *    [[MinRangeBytes]]. Each task reads its range by path and parses it
+  *    with Spark's own CSV tokenizer (`UnivocityParser.parseStream`, the
+  *    same options `spark.read.csv` gets), so quoted newlines parse as in
+  *    pandas and a 100 MB upload still parses on every core. An upload
+  *    whose boundaries the scan cannot prove (a backslash, a bare `\r`, a
+  *    blank line, an unterminated quote, …) is read as one `multiLine`
+  *    `spark.read.csv` range, numbered by `zipWithIndex` and counted by a
+  *    job.
+  *  - XLSX/XLS parsed on the driver: numbered there and parallelized into
+  *    `defaultParallelism` slices.
+  *  - Large XLSX: the sheet-layout scan counts the rows of each range.
+  *
+  * The sniffing steps (delimiter, column count) read a bounded head of the
+  * file, mirroring the reference's own bounded probes.
   */
 object FileReader {
 
   /** Detected per-file read plan. */
   final case class ReadPlan(encoding: String, delimiter: String, numColumns: Int)
 
+  /** An upload as the ingest reads it: `rows` are the cells `_c0.._cN`
+    * plus `_row_number` (1-based, file order), `head` its first
+    * [[HeadRows]] rows without the row number, and `count` its row count.
+    * Both are computed at most once, on first use. */
+  final class Upload(val rows: DataFrame, head0: => IndexedSeq[Row], count0: => Long) {
+    lazy val head: IndexedSeq[Row] = head0
+    lazy val count: Long = count0
+  }
+
+  val RowNumber = "_row_number"
+
+  /** Rows an [[Upload]] keeps on the driver: header detection's scan
+    * window plus the type-validation sample after it. */
+  val HeadRows: Int = HeaderDetector.MaxScanRows + Catalog.Limits.typeValidationSampleRows
+
+  /** The smallest byte range a delimited upload is cut into, so a small
+    * upload stays one task. */
+  val MinRangeBytes: Long = 1L << 20
+
   /** S1 encoding cascade: utf-8 → latin-1 (reference tries cp1252 third, but
     * latin-1 decodes any byte sequence, so it is the effective terminal
     * fallback — reference: file_parser.py:79-101). Whole-file probe to match
-    * pandas' whole-file decode semantics; reference inputs cap at 100 MB. */
-  def detectEncoding(path: String): String = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    val dec = StandardCharsets.UTF_8.newDecoder()
-      .onMalformedInput(CodingErrorAction.REPORT)
-      .onUnmappableCharacter(CodingErrorAction.REPORT)
-    try { dec.decode(java.nio.ByteBuffer.wrap(bytes)); "UTF-8" }
-    catch { case _: java.nio.charset.CharacterCodingException => "ISO-8859-1" }
-  }
+    * pandas' whole-file decode semantics, streamed through a bounded buffer. */
+  def detectEncoding(path: String): String =
+    DelimitedScan(path, ',', parts = 1, Long.MaxValue, headRecords = 0).encoding
 
   /** S4 delimiter sniff on a 4096-char sample: pick max count among
     * tab/comma/pipe; ties prefer tab, then pipe (reference: file_parser.py:110-125).
@@ -100,45 +136,134 @@ object FileReader {
   private def allStringSchema(n: Int): StructType =
     StructType((0 until n).map(i => StructField(s"_c$i", StringType, nullable = true)))
 
-  /** Shared CSV/TXT distributed read with the all-string contract. The
+  private def numberedSchema(n: Int): StructType =
+    StructType(allStringSchema(n).fields :+ StructField(RowNumber, LongType, nullable = false))
+
+  /** The options every CSV/TXT parse runs with, ranged or whole-file. The
     * nullValue sentinel is a string that cannot occur in data, so empty
-    * fields surface as "" (univocity's emptyValue) instead of null. */
-  private def readDelimited(spark: SparkSession, path: String, plan: ReadPlan): DataFrame = {
-    val df = spark.read
-      .schema(allStringSchema(plan.numColumns))
-      .option("header", "false")
-      .option("sep", plan.delimiter)
-      .option("encoding", plan.encoding)
-      .option("mode", "PERMISSIVE")
-      .option("nullValue", "\u0000\u0000graft-null-sentinel")
-      .option("emptyValue", "")
-      // The reference parses with pandas, which honors newlines embedded in
-      // quoted fields; Spark's default line-split mode would shear such
-      // records. multiLine makes each file non-splittable — acceptable
-      // because ingest inputs are capped at 100 MB per file (the validate-
-      // time size cap); the DATA tables the engine queries are parquet.
-      .option("multiLine", "true")
-      .csv(path)
-    // Ragged rows: missing tail cells become "" to keep the all-string
-    // contract (one Project over all columns).
-    df.select(df.columns.map(c => coalesce(col(c), lit("")).as(c)): _*)
+    * fields surface as "" (univocity's emptyValue) instead of null.
+    * multiLine: the reference parses with pandas, which honors newlines
+    * embedded in quoted fields; Spark's line-split mode would shear such
+    * records. */
+  private def csvOptions(plan: ReadPlan): Map[String, String] = Map(
+    "header" -> "false",
+    "sep" -> plan.delimiter,
+    "encoding" -> plan.encoding,
+    "mode" -> "PERMISSIVE",
+    "nullValue" -> "\u0000\u0000graft-null-sentinel",
+    "emptyValue" -> "",
+    "multiLine" -> "true")
+
+  /** Shared CSV/TXT read: `sep` is the delimiter, or None to sniff it. The
+    * scan decides the encoding, and the TXT delimiter sniff decodes with
+    * it, so a latin-1 file whose sniff changes under latin-1 is scanned a
+    * second time for its own delimiter. `minRangeBytes` is
+    * [[MinRangeBytes]] outside tests. */
+  private[io] def readDelimited(spark: SparkSession, path: String, sep: Option[String],
+                                minRangeBytes: Long = MinRangeBytes): Upload = {
+    def scan(d: String) = DelimitedScan(path, d.charAt(0).toByte,
+      spark.sparkContext.defaultParallelism, minRangeBytes, HeadRows)
+    val guess = sep.getOrElse(sniffDelimiter(path))
+    val first = scan(guess)
+    val delimiter = sep.getOrElse(sniffDelimiter(path, first.encoding))
+    val result = if (delimiter == guess) first else scan(delimiter)
+    val plan = ReadPlan(result.encoding, delimiter,
+      sniffColumnCount(path, result.encoding, delimiter))
+    result.layout match {
+      case Some(layout) =>
+        val opts = csvOptions(plan)
+        val tz = spark.conf.get("spark.sql.session.timeZone")
+        val n = plan.numColumns
+        val rdd = spark.sparkContext.parallelize(layout.ranges, layout.ranges.size)
+          .mapPartitions(_.flatMap { r =>
+            val in = RangeStream(path, r)
+            TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+            parseRange(in, path, r, n, opts, tz)
+          })
+        val head = DelimitedScan.ByteRange(0, layout.headEnd, 1, math.min(layout.records, HeadRows))
+        new Upload(Bridge.internalCreateDataFrame(spark, rdd, rangedSchema(n)), {
+          val in = RangeStream(path, head)
+          try parseRange(in, path, head, n, opts, tz).map { r =>
+            Row.fromSeq((0 until n).map(c => r.getUTF8String(c).toString))
+          }.toIndexedSeq
+          finally in.close()
+        }, layout.records)
+      case None =>
+        // One range: Spark's whole-file multiLine read, numbered by
+        // zipWithIndex, its head and count each fetched by a job. Ragged
+        // rows: missing tail cells become "" (one Project over all columns).
+        val df = spark.read.schema(allStringSchema(plan.numColumns))
+          .options(csvOptions(plan)).csv(path)
+        val raw = df.select(df.columns.map(c => coalesce(col(c), lit("")).as(c)): _*)
+        new Upload(withRowNumbers(raw), raw.limit(HeadRows).collect().toIndexedSeq, raw.count())
+    }
+  }
+
+  /** The ranged read's rows: cells never null (as the fallback's
+    * `coalesce` leaves them), then the row number. */
+  private def rangedSchema(n: Int): StructType =
+    StructType(allStringSchema(n).fields.map(_.copy(nullable = false)) :+
+      StructField(RowNumber, LongType, nullable = false))
+
+  /** Parse the records of one byte range with Spark's CSV tokenizer and
+    * number them from `r.first`; a ragged row's missing tail cells become
+    * "" in the same projection, so no plan above the read repeats that
+    * per use. Throws when the range holds a different number of records
+    * than the scan counted, so a row is never silently renumbered. */
+  private def parseRange(in: java.io.InputStream, path: String, r: DelimitedScan.ByteRange,
+                         n: Int, opts: Map[String, String], tz: String): Iterator[InternalRow] = {
+    val rows = Bridge.parseCsvStream(in, allStringSchema(n), new CSVOptions(opts, false, tz),
+      path, r.start == 0)
+    val append = UnsafeProjection.create((0 until n).map(c =>
+      Coalesce(Seq(BoundReference(c, StringType, nullable = true), Literal(""))): Expression) :+
+      BoundReference(n, LongType, nullable = false))
+    val index = new GenericInternalRow(1)
+    val joined = new JoinedRow
+    var i = 0L
+    new Iterator[InternalRow] {
+      def hasNext: Boolean = rows.hasNext || {
+        if (i != r.records) throw new IllegalStateException(
+          s"$path bytes [${r.start}, ${r.end}) hold $i records; the scan counted ${r.records}")
+        false
+      }
+      def next(): InternalRow = {
+        index.setLong(0, r.first + i)
+        i += 1
+        append(joined(rows.next(), index))
+      }
+    }
+  }
+
+  private object RangeStream {
+    /** Buffered: the tokenizer's BOM check reads its input a byte at a time. */
+    def apply(path: String, r: DelimitedScan.ByteRange): java.io.InputStream =
+      new java.io.BufferedInputStream(new RangeStream(path, r.start, r.end), 1 << 16)
+  }
+
+  /** The bytes [start, end) of a file, read through one random-access handle. */
+  private final class RangeStream(path: String, start: Long, end: Long) extends java.io.InputStream {
+    private val file = new java.io.RandomAccessFile(path, "r")
+    file.seek(start)
+    private var left = end - start
+    def read(): Int =
+      if (left <= 0) -1 else { val b = file.read(); if (b >= 0) left -= 1; b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (left <= 0) -1 else {
+        val k = file.read(b, off, math.min(len.toLong, left).toInt)
+        if (k > 0) left -= k
+        k
+      }
+    override def close(): Unit = file.close()
   }
 
   /** S1 CSV scan with encoding cascade. */
-  def readCsv(spark: SparkSession, path: String): DataFrame = {
-    val enc = detectEncoding(path)
-    val n = sniffColumnCount(path, enc, ",")
-    readDelimited(spark, path, ReadPlan(enc, ",", n))
-  }
+  def readCsv(spark: SparkSession, path: String): DataFrame =
+    readDelimited(spark, path, Some(",")).rows.drop(RowNumber)
 
   /** S4 TXT scan with delimiter sniffing (always utf-8-with-replacement in
     * the reference; Spark's csv reader replaces malformed bytes already). */
-  def readTxt(spark: SparkSession, path: String): DataFrame = {
-    val enc = detectEncoding(path)
-    val sep = sniffDelimiter(path, enc)
-    val n = sniffColumnCount(path, enc, sep)
-    readDelimited(spark, path, ReadPlan(enc, sep, n))
-  }
+  def readTxt(spark: SparkSession, path: String): DataFrame =
+    readDelimited(spark, path, None).rows.drop(RowNumber)
 
   /** S2 XLSX scan — hand-rolled zip+XML bridge (no POI in this image).
     * XLSX is a zip holding sharedStrings.xml + worksheets/sheet1.xml,
@@ -171,24 +296,25 @@ object FileReader {
     * Numbers render like pandas dtype=str: integral floats lose the
     * trailing ".0". */
   def readXlsx(spark: SparkSession, path: String): DataFrame =
-    xlsxToDf(spark, path)
+    xlsxUpload(spark, path).rows.drop(RowNumber)
 
-  /** Driver-parsed row grid → DataFrame. parallelize preserves element
-    * order across slices, so P4 row numbering (zipWithIndex) is
-    * unaffected by the slice count. */
-  private def rowsToDf(spark: SparkSession,
-                       rows: IndexedSeq[IndexedSeq[String]]): DataFrame = {
+  /** Driver-parsed row grid → numbered upload, parallelized into
+    * `defaultParallelism` slices (parallelize keeps element order). */
+  private def gridUpload(spark: SparkSession,
+                         rows: IndexedSeq[IndexedSeq[String]]): Upload = {
     val n = if (rows.isEmpty) 0 else rows.map(_.length).max
-    val padded = rows.map(r => Row.fromSeq(r.padTo(n, "")))
-    val slices = math.max(1, padded.length / 100000)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(padded.toSeq, slices), allStringSchema(n))
+    val numbered = rows.iterator.zipWithIndex
+      .map { case (r, i) => Row.fromSeq(r.padTo(n, "") :+ (i + 1L)) }.toVector
+    val sc = spark.sparkContext
+    val slices = math.max(1, math.min(sc.defaultParallelism, rows.size))
+    new Upload(spark.createDataFrame(sc.parallelize(numbered, slices), numberedSchema(n)),
+      rows.take(HeadRows).map(r => Row.fromSeq(r.padTo(n, ""))), rows.size.toLong)
   }
 
   /** Dispatch between the driver-parsed and distributed XLSX paths on the
     * worksheet's decompressed size (falls back to compressed×8 when the
     * central directory omits it). */
-  private def xlsxToDf(spark: SparkSession, path: String): DataFrame = {
+  private def xlsxUpload(spark: SparkSession, path: String): Upload = {
     val threshold = spark.conf.getOption("graft.xlsx.distributedThresholdBytes")
       .map(_.toLong).getOrElse(8L << 20)
     val zip = new ZipFile(path)
@@ -197,7 +323,7 @@ object FileReader {
       val e = zip.getEntry(name)
       if (e.getSize >= 0) e.getSize else e.getCompressedSize * 8
     } finally zip.close()
-    if (sheetSize < threshold) rowsToDf(spark, readXlsxRows(path))
+    if (sheetSize < threshold) gridUpload(spark, readXlsxRows(path))
     else readXlsxDistributed(spark, path)
   }
 
@@ -208,10 +334,11 @@ object FileReader {
       .getOrElse(throw new IllegalArgumentException(s"No worksheet in $path"))
 
   /** Distributed XLSX grid: inflate-once to scratch, byte-scan row
-    * boundaries, parse ranges on executors. Falls back to the driver
-    * parse when the scan cannot find the expected worksheet structure
-    * (prefixed elements, exotic producers). */
-  private def readXlsxDistributed(spark: SparkSession, path: String): DataFrame = {
+    * boundaries (counting the rows of each range), parse ranges on
+    * executors. Falls back to the driver parse when the scan cannot find
+    * the expected worksheet structure (prefixed elements, exotic
+    * producers). */
+  private def readXlsxDistributed(spark: SparkSession, path: String): Upload = {
     val chunkBytes = spark.conf.getOption("graft.xlsx.chunkBytes")
       .map(_.toLong).getOrElse(32L << 20)
     val scratchDir = spark.conf.getOption("graft.xlsx.scratchDir")
@@ -237,44 +364,54 @@ object FileReader {
     scanSheetLayout(scratch, chunkBytes) match {
       case None =>
         Files.delete(scratch)
-        rowsToDf(spark, readXlsxRows(path)) // structure not recognized
+        gridUpload(spark, readXlsxRows(path)) // structure not recognized
       case Some(SheetLayout(_, ranges)) if ranges.isEmpty =>
         Files.delete(scratch)
-        rowsToDf(spark, IndexedSeq.empty)
+        gridUpload(spark, IndexedSeq.empty)
       case Some(SheetLayout(openTag, ranges)) =>
         val sc = spark.sparkContext
         val sharedB = sc.broadcast(shared)
         val scratchPath = scratch.toString
         val head = (openTag + "<sheetData>").getBytes("UTF-8")
         val tail = "</sheetData></worksheet>".getBytes("UTF-8")
-        def parsed = sc.parallelize(ranges, ranges.size).map {
-          case (start, end) =>
-            // A range is chunkBytes plus at most one row; a single row
-            // larger than 2 GB cannot be buffered — fail with the cause
-            // rather than a NegativeArraySizeException.
-            require(end - start < Int.MaxValue,
-              s"worksheet row run of ${end - start} bytes exceeds the " +
-                "2 GB task buffer — one row is larger than chunkBytes " +
-                "allows; this sheet cannot be range-parsed")
-            val bytes = new Array[Byte]((end - start).toInt)
-            val raf = new java.io.RandomAccessFile(scratchPath, "r")
-            try { raf.seek(start); raf.readFully(bytes) } finally raf.close()
-            val in = new java.io.SequenceInputStream(
-              java.util.Collections.enumeration(java.util.List.of[java.io.InputStream](
-                new java.io.ByteArrayInputStream(head),
-                new java.io.ByteArrayInputStream(bytes),
-                new java.io.ByteArrayInputStream(tail))))
-            try parseSheet(in, sharedB.value) finally in.close()
+        def parsed = sc.parallelize(ranges, ranges.size).map { r =>
+          // A range is chunkBytes plus at most one row; a single row
+          // larger than 2 GB cannot be buffered — fail with the cause
+          // rather than a NegativeArraySizeException.
+          require(r.end - r.start < Int.MaxValue,
+            s"worksheet row run of ${r.end - r.start} bytes exceeds the " +
+              "2 GB task buffer — one row is larger than chunkBytes " +
+              "allows; this sheet cannot be range-parsed")
+          val bytes = new Array[Byte]((r.end - r.start).toInt)
+          val raf = new java.io.RandomAccessFile(scratchPath, "r")
+          try { raf.seek(r.start); raf.readFully(bytes) } finally raf.close()
+          val in = new java.io.SequenceInputStream(
+            java.util.Collections.enumeration(java.util.List.of[java.io.InputStream](
+              new java.io.ByteArrayInputStream(head),
+              new java.io.ByteArrayInputStream(bytes),
+              new java.io.ByteArrayInputStream(tail))))
+          val rows = try parseSheet(in, sharedB.value) finally in.close()
+          if (rows.size != r.records) throw new IllegalStateException(
+            s"worksheet bytes [${r.start}, ${r.end}) hold ${rows.size} rows; " +
+              s"the scan counted ${r.records}")
+          (r.first, rows)
         }
         // Two jobs, two parses: the global column count must be known
         // before rows can be padded into a fixed schema, and caching the
         // parsed grid between jobs would reintroduce (in executor memory)
         // exactly the footprint this path removes. StAX over 32 MB chunks
-        // is CPU-cheap relative to the inflate.
-        val n = parsed.map(rows => rows.foldLeft(0)((m, r) => m max r.length))
-          .fold(0)(_ max _)
-        val rdd = parsed.flatMap(_.iterator.map(r => Row.fromSeq(r.padTo(n, ""))))
-        spark.createDataFrame(rdd, allStringSchema(n))
+        // is CPU-cheap relative to the inflate. The first job also brings
+        // back each range's first rows, which make the head.
+        val widths = parsed.map { case (_, rows) =>
+          (rows.foldLeft(0)((m, r) => m max r.length), rows.take(HeadRows))
+        }.collect()
+        val n = widths.map(_._1).max
+        val rdd = parsed.flatMap { case (first, rows) =>
+          rows.iterator.zipWithIndex.map { case (r, i) => Row.fromSeq(r.padTo(n, "") :+ (first + i)) }
+        }
+        new Upload(spark.createDataFrame(rdd, numberedSchema(n)),
+          widths.iterator.flatMap(_._2).take(HeadRows).map(r => Row.fromSeq(r.padTo(n, ""))).toIndexedSeq,
+          ranges.map(_.records).sum)
     }
   }
 
@@ -303,10 +440,10 @@ object FileReader {
   }
 
   /** Worksheet scratch-file layout: the `<worksheet …>` open tag (xmlns
-    * bindings live there) and the chunked [start, end) byte ranges of
-    * whole-`<row>` runs inside sheetData. */
+    * bindings live there) and the chunked byte ranges of whole-`<row>`
+    * runs inside sheetData, each with its row count and first row number. */
   private[io] final case class SheetLayout(openTag: String,
-                                           ranges: Seq[(Long, Long)])
+                                           ranges: Seq[DelimitedScan.ByteRange])
 
   /** One streaming byte scan of the decompressed sheet XML. Only `<`
     * triggers lookahead: every literal `<` in XML TEXT or ATTRIBUTES is
@@ -315,8 +452,8 @@ object FileReader {
     * recognized and skipped whole, so a `<row` seen by the scan is
     * guaranteed element markup. The scan recognizes `<worksheet …>`,
     * `<sheetData>`, `<row`-followed-by-delimiter starts, and
-    * `</sheetData`, and cuts a new range at the first row start after
-    * every `chunkBytes` of sheet data. None when the expected structure
+    * `</sheetData`, counts the row starts, and cuts a new range at the
+    * first row start after every `chunkBytes` of sheet data. None when the expected structure
     * is absent or a special construct is unterminated (caller falls
     * back to the driver parse). */
   private[io] def scanSheetLayout(file: java.nio.file.Path,
@@ -415,8 +552,12 @@ object FileReader {
       if (!inData) return None
 
       // Phase 3: row starts + </sheetData.
-      val ranges = ArrayBuffer.empty[(Long, Long)]
+      val ranges = ArrayBuffer.empty[DelimitedScan.ByteRange]
       var rangeStart = -1L
+      var rows = 0L       // row starts seen so far
+      var rangeFirst = 1L // row number of the open range's first row
+      def close(end: Long): Unit =
+        ranges += DelimitedScan.ByteRange(rangeStart, end, rangeFirst, rows + 1 - rangeFirst)
       var done = false
       while (!done && ensure(1)) {
         if (buf(i) == '<') {
@@ -428,11 +569,12 @@ object FileReader {
               if (matches("<row") && ensure(5) && isDelim(buf(i + 4))) {
                 if (rangeStart < 0) rangeStart = off
                 else if (off - rangeStart >= chunkBytes) {
-                  ranges += ((rangeStart, off)); rangeStart = off
+                  close(off); rangeStart = off; rangeFirst = rows + 1
                 }
+                rows += 1
                 i += 4
               } else if (matches("</sheetData")) {
-                if (rangeStart >= 0) ranges += ((rangeStart, off))
+                if (rangeStart >= 0) close(off)
                 done = true
               } else i += 1
           }
@@ -562,27 +704,37 @@ object FileReader {
 
   /** S3 legacy XLS scan via the BIFF8 subset reader; files that are really
     * zip containers (xlsx renamed .xls) fall through to the XLSX bridge. */
-  def readXls(spark: SparkSession, path: String): DataFrame = {
+  def readXls(spark: SparkSession, path: String): DataFrame =
+    xlsUpload(spark, path).rows.drop(RowNumber)
+
+  private def xlsUpload(spark: SparkSession, path: String): Upload = {
     val head = Files.newInputStream(Paths.get(path))
     val magic = try { val b = new Array[Byte](4); head.read(b); b } finally head.close()
-    if (magic.take(2).sameElements(Array[Byte]('P', 'K'))) xlsxToDf(spark, path)
-    else rowsToDf(spark, XlsReader.readRows(path))
+    if (magic.take(2).sameElements(Array[Byte]('P', 'K'))) xlsxUpload(spark, path)
+    else gridUpload(spark, XlsReader.readRows(path))
   }
 
   /** S5 dispatch by extension; same error contract as the reference
-    * (file_parser.py:32-70). */
-  def parseFile(spark: SparkSession, path: String): (DataFrame, String) = {
+    * (file_parser.py:32-70). The upload comes back numbered, counted and
+    * with its head (see [[Upload]]). */
+  def readUpload(spark: SparkSession, path: String): Upload = {
     if (!Files.exists(Paths.get(path)))
       throw new java.io.FileNotFoundException(s"File not found: $path")
-    val ext = path.substring(path.lastIndexOf('.') max 0).toLowerCase
-    ext match {
-      case ".csv" => (readCsv(spark, path), ext)
-      case ".xlsx" => (readXlsx(spark, path), ext)
-      case ".xls" => (readXls(spark, path), ext)
-      case ".txt" => (readTxt(spark, path), ext)
-      case _ => throw new IllegalArgumentException(s"Unsupported file type: $ext")
+    extension(path) match {
+      case ".csv" => readDelimited(spark, path, Some(","))
+      case ".xlsx" => xlsxUpload(spark, path)
+      case ".xls" => xlsUpload(spark, path)
+      case ".txt" => readDelimited(spark, path, None)
+      case ext => throw new IllegalArgumentException(s"Unsupported file type: $ext")
     }
   }
+
+  private def extension(path: String): String =
+    path.substring(path.lastIndexOf('.') max 0).toLowerCase
+
+  /** [[readUpload]]'s cells without the row number, and the extension. */
+  def parseFile(spark: SparkSession, path: String): (DataFrame, String) =
+    (readUpload(spark, path).rows.drop(RowNumber), extension(path))
 
   /** S6 row-as-strings accessor: bounded driver-side fetch used by header
     * detection (reference: file_parser.py:138-152). */
@@ -593,12 +745,13 @@ object FileReader {
   private[graft] def cellStrings(rows: IndexedSeq[Row]): IndexedSeq[Seq[String]] =
     rows.map(_.toSeq.map(v => Option(v).map(_.toString.trim).getOrElse("")))
 
-  /** P1/P4 stable 1-based row numbers in file order via zipWithIndex —
+  /** P1/P4 stable 1-based row numbers in file order via zipWithIndex, for
+    * frames no reader numbered (uploads come numbered from [[readUpload]]) —
     * deterministic across partitions because partition order follows file
     * offset order. Works on Catalyst's internal rows: the index is appended
     * by an UnsafeProjection over (row, index), so no row is converted to an
     * external `Row` and back. */
-  def withRowNumbers(df: DataFrame, colName: String = "_row_number"): DataFrame = {
+  def withRowNumbers(df: DataFrame, colName: String = RowNumber): DataFrame = {
     val schema = StructType(df.schema.fields :+ StructField(colName, LongType, nullable = false))
     val rdd = df.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
       val append = UnsafeProjection.create(schema)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.config.{Catalog, SourceConfig}
 import graft.header.HeaderDetector
@@ -20,7 +19,7 @@ import scala.jdk.CollectionConverters._
   * (upload.py:196-416).
   *
   * One distributed plan per file: all-string scan → driver-side header
-  * detection on 15 collected rows → projection → typed transform →
+  * detection on the reader's first 15 rows → projection → typed transform →
   * validity split → window dedup → versioned write. The quarantine split
   * replaces the reference's write-then-retry-per-row fallback: identical
   * observable outcome (partial success + per-row error strings), one pass.
@@ -58,15 +57,14 @@ object IngestPipeline {
     * `Observation`. `typed` is returned so the caller can release it with
     * [[releaseCheckpoint]]. */
   private def prepare(spark: SparkSession, source: SourceConfig, path: String): Prepared = {
-    val (raw, _) = FileReader.parseFile(spark, path)
-    val head = FileReader.firstRows(raw, HeaderDetector.MaxScanRows)
+    val upload = FileReader.readUpload(spark, path)
+    val head = FileReader.cellStrings(upload.head.take(HeaderDetector.MaxScanRows))
     val det = HeaderDetector.detectHeaderRow(head, mappingsOf(source))
     if (!det.found)
       throw new IllegalArgumentException(det.error.getOrElse("header not found"))
     val hdrIdx = det.headerRowIndex.get
     val colIdx = HeaderDetector.getColumnIndex(head(hdrIdx), det.columnMap)
-    val numbered = FileReader.withRowNumbers(raw)
-    val dataRows = numbered.filter(col("_row_number") > hdrIdx + 1)
+    val dataRows = upload.rows.filter(col("_row_number") > hdrIdx + 1)
     val nonEmpty = Ingestor.filterEmptyRows(dataRows, colIdx.values.map(i => s"_c$i").toSeq)
     // localCheckpoint (not just persist): the typed lineage is hundreds of
     // parse/when expressions per column, and every downstream action (error
@@ -116,10 +114,12 @@ object IngestPipeline {
     * through [[VersionStore.landPart]]; a replayed file (its hash already
     * that version's first file or on its part ledger) lands nothing.
     *
-    * Jobs per file: the bounded header collect, the checkpoint (which also
-    * counts valid and invalid rows), the error collect when any row is
-    * invalid, and the data write (which also counts the rows it lands).
-    * The store's metadata commits launch none. */
+    * Jobs per file: the checkpoint (which also counts valid and invalid
+    * rows), the error collect when any row is invalid, and the data write
+    * (which also counts the rows it lands). The reader hands over the head
+    * the header detection reads, with no job except on its one-range
+    * fallback (see [[FileReader]]); the store's metadata commits launch
+    * none. */
   def ingestFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                  path: String, versionLabel: String,
                  effectiveDate: java.sql.Date, variant: Option[String] = None,
@@ -222,12 +222,11 @@ object IngestPipeline {
     val isDup = store.isDuplicateFile(source.sourceCode, fileHash)
 
     try {
-    val (raw, _) = FileReader.parseFile(spark, path)
-    // One bounded collect feeds both local steps: header detection on the
+    val upload = FileReader.readUpload(spark, path)
+    // The upload's head feeds both local steps: header detection on the
     // first MaxScanRows rows (trimmed, as firstRows trims them) and
     // the type sample on the untrimmed rows after the header.
-    val sampled = raw.limit(HeaderDetector.MaxScanRows +
-      Catalog.Limits.typeValidationSampleRows).collect().toIndexedSeq
+    val sampled = upload.head
     val head = FileReader.cellStrings(sampled.take(HeaderDetector.MaxScanRows))
     val det = HeaderDetector.detectHeaderRow(head, mappingsOf(source))
     if (!det.found)
@@ -238,7 +237,7 @@ object IngestPipeline {
     val colIdx = HeaderDetector.getColumnIndex(head(hdrIdx), det.columnMap)
     // Every row after the header is a data row (file row numbers are
     // 1-based, so the header is row hdrIdx + 1).
-    val nData = raw.count() - (hdrIdx + 1)
+    val nData = upload.count - (hdrIdx + 1)
     val errors = if (nData == 0) Seq("File contains no data rows") else Seq.empty
 
     // D5 drift vs previous completed version of this source
@@ -256,8 +255,7 @@ object IngestPipeline {
     // with their file row numbers
     val sample = sampled.drop(hdrIdx + 1).take(Catalog.Limits.typeValidationSampleRows)
       .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (hdrIdx + 2L + i)) }
-    val sampleDf = spark.createDataFrame(sample.asJava, StructType(raw.schema.fields :+
-      StructField("_row_number", LongType, nullable = false)))
+    val sampleDf = spark.createDataFrame(sample.asJava, upload.rows.schema)
     val projected = Ingestor.project(sampleDf, colIdx)
     val typeWarnings = Ingestor.typeValidationWarnings(projected, source)
       .collect().map { r =>

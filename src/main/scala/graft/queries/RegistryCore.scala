@@ -626,8 +626,7 @@ trait RegistryCore extends RegistryBase {
     java.nio.file.Files.write(p,
       "01112,\"Smith, John\",café,100\n00500,plain,,0042\n"
         .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val df = FileReader.readCsv(spark, p.toString)
-    FileReader.withRowNumbers(df).orderBy("_row_number")
+    FileReader.readUpload(spark, p.toString).rows.orderBy("_row_number")
   }
 
   /** Fixed-width read (beyond-reference source): byte-range columns over
@@ -692,8 +691,7 @@ trait RegistryCore extends RegistryBase {
   protected def s4TxtSniff(spark: SparkSession, dir: String): DataFrame = {
     val p = java.nio.file.Files.createTempFile("graft-s4", ".txt")
     java.nio.file.Files.writeString(p, "A|B|C\n1|2,5|3\n4|5|6\n")
-    FileReader.withRowNumbers(FileReader.readTxt(spark, p.toString))
-      .orderBy("_row_number")
+    FileReader.readUpload(spark, p.toString).rows.orderBy("_row_number")
   }
 
   /** S2: XLSX read through the zip+XML bridge (shared strings + inline
@@ -714,14 +712,12 @@ trait RegistryCore extends RegistryBase {
         |<row r="3"><c r="A3" t="s"><v>3</v></c><c r="C3"><v>42</v></c></row>
         |</sheetData></worksheet>""".stripMargin)
     zos.close()
-    FileReader.withRowNumbers(FileReader.readXlsx(spark, p.toString))
-      .orderBy("_row_number")
+    FileReader.readUpload(spark, p.toString).rows.orderBy("_row_number")
   }
 
   /** S3: legacy XLS read through the BIFF8/CFB subset reader. */
   protected def s3Xls(spark: SparkSession, dir: String): DataFrame =
-    FileReader.withRowNumbers(
-      FileReader.readXls(spark, graft.io.SyntheticXls.standardFixture()))
+    FileReader.readUpload(spark, graft.io.SyntheticXls.standardFixture()).rows
       .orderBy("_row_number")
 
   /** H1-H4 + P3 + F-transforms end-to-end on a literal messy file: title

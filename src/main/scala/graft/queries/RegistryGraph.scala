@@ -511,15 +511,20 @@ trait RegistryGraph extends RegistryEvent {
     * modulus restriction — a full-graph horizon sweep is the closeness
     * query's job; this one answers "how deep is the neighborhood"). See
     * [[graft.operators.SeedReach]] for the bit-parallel frontier
-    * shape; the diameter lower bound is max ecc over the seed set,
-    * broadcast back onto the bounded per-seed relation. */
+    * shape; the diameter lower bound is max ecc over the seed set. One
+    * global aggregate gathers the bounded per-seed relation (at most
+    * `maxSeeds` rows) beside that max, so the seed-reach kernel runs once
+    * rather than once per consumer. */
   protected def graphEccentricity(spark: SparkSession, dir: String): DataFrame = {
     val sub = coPurchaseSubPairs(spark, dir)
     val per = graft.operators.Eccentricity.summary(
       graft.operators.Triangles.canonical(sub, "x", "y"),
       seedsMod = 932, rounds = 3)
-    per.crossJoin(broadcast(per.agg(max(col("ecc")).as("diameter_lb"))))
-      .select(col("seed"), col("ecc"), col("n_reached"), col("diameter_lb"))
+    per.agg(collect_list(struct(col("seed"), col("ecc"), col("n_reached"))).as("per"),
+        max(col("ecc")).as("diameter_lb"))
+      .select(explode(col("per")).as("p"), col("diameter_lb"))
+      .select(col("p.seed").as("seed"), col("p.ecc").as("ecc"),
+        col("p.n_reached").as("n_reached"), col("diameter_lb"))
       .orderBy("seed")
   }
 

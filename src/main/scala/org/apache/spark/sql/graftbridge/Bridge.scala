@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
@@ -10,8 +11,9 @@ import org.apache.spark.sql.types.StructType
 /** Bridge to the `private[sql]` entry points graft needs: the Column ⇄
   * Expression conversions a custom-Expression library needs (the standard
   * pattern for third-party Catalyst extensions), runtime function
-  * registration, building a DataFrame straight from internal rows, and
-  * releasing an RDD's cached blocks. */
+  * registration, building a DataFrame straight from internal rows,
+  * releasing an RDD's cached blocks, Spark's CSV stream parser, and
+  * waiting for the listener bus. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -36,4 +38,16 @@ object Bridge {
     * RDD cannot be recomputed (for a caller that never reads it again). */
   def unpersistRDD(rdd: RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Parse a CSV byte stream the way `spark.read.csv` parses one file with
+    * `multiLine` on: Spark's own tokenizer and row converter over `options`.
+    * `startOfFile` says whether the stream begins at the file's first byte. */
+  def parseCsvStream(in: java.io.InputStream, schema: StructType, options: CSVOptions,
+                     path: String, startOfFile: Boolean): Iterator[InternalRow] =
+    UnivocityParser.parseStream(in, new UnivocityParser(schema, options),
+      new CSVHeaderChecker(schema, options, path, startOfFile), schema)
+
+  /** Wait until every listener event posted so far has been delivered. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

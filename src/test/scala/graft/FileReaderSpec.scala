@@ -81,6 +81,24 @@ class FileReaderSpec extends SparkSpecBase {
     assert(rows(0) == Seq("café", "x"))
   }
 
+  test("encoding scan streams: a latin-1 byte past the first buffer is seen") {
+    val buf = 1 << 20 // the scan's buffer
+    val p = Files.createTempFile("graft-spec", ".csv")
+    Files.write(p, ("a,b\n" * (buf / 4 + 25)).getBytes(StandardCharsets.US_ASCII) ++
+      "caf\u00e9,x\n".getBytes(StandardCharsets.ISO_8859_1))
+    assert(Files.size(p) > buf)
+    assert(FileReader.detectEncoding(p.toString) == "ISO-8859-1")
+  }
+
+  test("encoding scan streams: a UTF-8 character split by the buffer end is valid") {
+    val buf = 1 << 20 // the scan's buffer
+    val p = Files.createTempFile("graft-spec", ".csv")
+    // é is two bytes: the first is the last byte of the first buffer
+    Files.write(p, ("x" * (buf - 1)).getBytes(StandardCharsets.US_ASCII) ++
+      "\u00e9,y\n".getBytes(StandardCharsets.UTF_8))
+    assert(FileReader.detectEncoding(p.toString) == "UTF-8")
+  }
+
   test("row numbers are stable 1-based file order (P1/P4)") {
     val p = tmp(".csv", (1 to 100).map(i => s"r$i,$i").mkString("\n"))
     val df = FileReader.withRowNumbers(FileReader.readCsv(spark, p))

@@ -7,6 +7,8 @@ import org.scalatest.concurrent.{Signaler, ThreadSignaler}
 import org.scalatest.concurrent.TimeLimits._
 import org.scalatest.time.SpanSugar._
 
+import scala.jdk.CollectionConverters._
+
 import graft.pipeline.IngestPipeline
 import graft.store.VersionStore
 
@@ -209,6 +211,46 @@ class IngestPipelineSpec extends SparkSpecBase {
     val before = jobsIn(validate())
     IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1", d)
     assert(jobsIn(validate()) == before)
+  }
+
+  /** Jobs of one validate + ingest of `path` (after a warm-up pair in
+    * another store), and the task count of every checkpoint stage. */
+  private def jobsPerUpload(source: String, path: String,
+                            variant: Option[String]): (Int, Int, Seq[Int]) = {
+    def run(store: VersionStore) = (
+      () => IngestPipeline.validateFile(spark, store, source, path, "2026-Q1", variant),
+      () => IngestPipeline.ingestFile(spark, store, source, path, "2026-Q1", d, variant))
+    val (warmV, warmI) = run(newStore())
+    warmV(); warmI()
+    val (validate, ingest) = run(newStore())
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.add((e.stageInfo.name + "\n" + e.stageInfo.details, e.stageInfo.numTasks)): Unit
+    }
+    val v = jobsIn(validate())
+    spark.sparkContext.addSparkListener(listener)
+    val i = try jobsIn(ingest()) finally spark.sparkContext.removeSparkListener(listener)
+    (v, i, stages.asScala.toSeq.collect { case (site, n) if site.contains("heckpoint") => n })
+  }
+
+  test("uploads come numbered, counted and with their head: no job reads them for it") {
+    // ~5 MB of PTP rows: 4 record-aligned ranges of at least 1 MB each on
+    // the 4-core spec session.
+    val rows = (0 until 200000).map(i =>
+      f"${10000 + i / 97}%05d,${20000 + i % 97997}%05d,${i % 3},20240101,*")
+    val big = csv("NCCI PTP edits,,,,\nColumn 1,Column 2,Modifier,Effective Date,Deletion Date\n" +
+      rows.mkString("\n") + "\n")
+    val (csvValidate, csvIngest, csvCheckpoints) = jobsPerUpload("NCCI_PTP", big, Some("PRACTITIONER"))
+    val xlsx = s"${Files.createTempDirectory("graft-ip-jobs")}/ptp.xlsx"
+    graft.io.SyntheticXlsx.writeNcciPtp(xlsx, nRows = 2000)
+    val (xlsxValidate, xlsxIngest, _) = jobsPerUpload("NCCI_PTP", xlsx, Some("PRACTITIONER"))
+    // validate: the type-warning sample only (the head and the count come
+    // with the upload); ingest: the checkpoint, the dedup + write, and, for
+    // the XLSX with its planted missing keys, the error collect.
+    assert((csvValidate, csvIngest) == (2, 3))
+    assert((xlsxValidate, xlsxIngest) == (2, 4))
+    assert(csvCheckpoints.nonEmpty && csvCheckpoints.forall(_ > 1), csvCheckpoints)
   }
 
   test("validation report: counts, drift warning, sampled type warnings, dup file") {
