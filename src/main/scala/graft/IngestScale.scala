@@ -1,6 +1,14 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
+
+import scala.jdk.CollectionConverters._
 
 /** Dev utility: exercise the FULL ingestion pipeline at the reference's
   * operating-envelope ceiling — a ~100 MB upload (the reference rejects
@@ -16,9 +24,15 @@ import org.apache.spark.sql.SparkSession
   *    worst case (the sheet XML inflates to ~700 MB)
   *  - xls: BIFF8's own format ceiling, 65,536 rows (the sheet cannot be
   *    larger; size is bounded by the format, not the 100 MB cap)
-  * Each format ends with one JSON line (`{"format": …}`): file bytes,
-  * data rows, `ingest_s`, rows/s, the Spark jobs and tasks the ingest ran,
-  * peak driver heap, and the `IngestResult` counters.
+  * Each upload is validated (`validateFile`), then ingested. Each format
+  * ends with one JSON line (`{"format": …}`): file bytes, data rows, the
+  * validate's wall time and jobs, the ingest's wall time, rows/s, jobs and
+  * tasks, `outside_jobs_s` (the ingest's wall time outside every Spark job:
+  * hashing, the reader's driver-side scan, planning and metadata commits),
+  * peak driver heap over the ingest, and the `IngestResult` counters. Two
+  * driver-side steps every validate and ingest repeats are timed alone
+  * beforehand, to attribute `outside_jobs_s`: the upload's SHA-256
+  * (`hash_s`) and `FileReader.readUpload` (`read_s`, `read_jobs`).
   * Findings recorded in PLANS.md ("100 MB ingestion exercise"). Run:
   * `sbt "runMain graft.IngestScale [/tmp/outdir] [csv,xlsx,xls]"`. */
 object IngestScale {
@@ -44,6 +58,38 @@ object IngestScale {
       if (p.getType == java.lang.management.MemoryType.HEAP)
         sum += p.getPeakUsage.getUsed)
     sum / (1024 * 1024)
+  }
+
+  /** What one call ran: its wall time, its Spark jobs and tasks, and the
+    * part of its wall time covered by no job. */
+  private final case class Calls(wallS: Double, jobs: Int, tasks: Long, outsideJobsS: Double)
+
+  /** Run `body` under a listener that records every job's interval. */
+  private def measured[A](spark: SparkSession)(body: => A): (A, Calls) = {
+    val starts = new ConcurrentHashMap[Int, java.lang.Long]()
+    val jobs = new ConcurrentLinkedQueue[(Long, Long)]()
+    val tasks = new AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(e.jobId, e.time): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.add((starts.get(e.jobId).longValue, e.time)): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet(): Unit
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val t0 = System.currentTimeMillis()
+    val result = try body finally {
+      Bridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val t1 = System.currentTimeMillis()
+    // the union of the job intervals, each clipped to the call
+    val (covered, _) = jobs.asScala.toSeq.map { case (a, b) => (a max t0, b min t1) }
+      .sortBy(_._1).foldLeft((0L, t0)) { case ((sum, end), (a, b)) =>
+        (sum + ((b max end) - (a max end)).max(0L), end max b)
+      }
+    (result, Calls((t1 - t0) / 1e3, jobs.size, tasks.get, (t1 - t0 - covered) / 1e3))
   }
 
   def main(args: Array[String]): Unit = {
@@ -116,32 +162,33 @@ object IngestScale {
                      rows: Long, path: String): Unit = {
     val bytes = new java.io.File(path).length()
     println(f"[ingest100] ($label) file size: ${bytes / 1e6}%.1f MB")
-    resetPeakHeap()
     val store = new graft.store.VersionStore(spark,
       s"$work/store-$label-${java.lang.Long.toHexString(System.nanoTime())}")
-    val jobs = new java.util.concurrent.atomic.AtomicLong()
-    val tasks = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        tasks.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    val result = try timed(s"($label) full ingest (parse->detect->transform->quarantine->dedup->land)") {
-      graft.pipeline.IngestPipeline.ingestFile(spark, store, "NCCI_PTP", path,
-        "2026-Q1", java.sql.Date.valueOf("2026-01-01"), Some("PRACTITIONER"))
-    } finally {
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    val ingestS = (System.nanoTime() - t0) / 1e9
+    val (_, hash) = measured(spark)(graft.store.VersionStore.sha256File(path))
+    val (_, read) = measured(spark)(
+      try graft.io.FileReader.readUpload(spark, path) finally graft.io.FileReader.releaseScratch())
+    val (report, validate) = measured(spark)(timed(s"($label) validate") {
+      graft.pipeline.IngestPipeline.validateFile(spark, store, "NCCI_PTP", path,
+        "2026-Q1", Some("PRACTITIONER"))
+    })
+    println(s"[ingest100] ($label) validate: valid=${report.valid} rows=${report.dataRows} " +
+      s"errors=${report.errors.mkString("; ")}")
+    resetPeakHeap()
+    val (result, ingest) = measured(spark)(
+      timed(s"($label) full ingest (parse->detect->transform->quarantine->dedup->land)") {
+        graft.pipeline.IngestPipeline.ingestFile(spark, store, "NCCI_PTP", path,
+          "2026-Q1", java.sql.Date.valueOf("2026-01-01"), Some("PRACTITIONER"))
+      })
     println(s"[ingest100] ($label) status=${result.status} processed=${result.processed} " +
       s"inserted=${result.inserted} invalid=${result.invalid} " +
       s"duplicates=${result.duplicates} peakHeap=${peakHeapMb}MB")
-    val summary = f"""{"format":"$label","file_bytes":$bytes,"rows":$rows,"ingest_s":$ingestS%.3f,""" +
-      f""""rows_per_s":${rows / ingestS}%.0f,"jobs":${jobs.get},"tasks":${tasks.get},""" +
+    val summary = f"""{"format":"$label","file_bytes":$bytes,"rows":$rows,""" +
+      f""""hash_s":${hash.wallS}%.3f,"read_s":${read.wallS}%.3f,"read_jobs":${read.jobs},""" +
+      f""""validate_s":${validate.wallS}%.3f,"validate_jobs":${validate.jobs},""" +
+      f""""validate_valid":${report.valid},""" +
+      f""""ingest_s":${ingest.wallS}%.3f,"rows_per_s":${rows / ingest.wallS}%.0f,""" +
+      f""""ingest_jobs":${ingest.jobs},"ingest_tasks":${ingest.tasks},""" +
+      f""""outside_jobs_s":${ingest.outsideJobsS}%.3f,""" +
       f""""peak_heap_mb":$peakHeapMb,"status":"${result.status}","processed":${result.processed},""" +
       f""""inserted":${result.inserted},"invalid":${result.invalid},"duplicates":${result.duplicates}}"""
     timed(s"($label) current-view read-back + counter reconciliation") {

@@ -43,18 +43,21 @@ object IngestPipeline {
         c.internalName -> HeaderDetector.ColumnMapping(c.acceptedHeaders, c.isRequired)
     }: _*)
 
-  /** What [[prepare]] hands the ingest: the split frames (both over the
-    * checkpointed `typed` rows), the header detection, and the valid /
-    * invalid row counts the checkpoint job observed on its way through. */
+  /** What [[prepare]] hands the ingest: the valid rows (over the
+    * checkpointed `typed` rows), the header detection, and what the
+    * checkpoint job observed on its way through: the valid / invalid row
+    * counts and the first quarantine errors by row number. */
   private final case class Prepared(
-      valid: DataFrame, quarantine: DataFrame, det: HeaderDetector.Detection,
-      typed: DataFrame, validCount: Long, invalidCount: Long)
+      valid: DataFrame, det: HeaderDetector.Detection, typed: DataFrame,
+      validCount: Long, invalidCount: Long, errors: Seq[String])
 
   /** Parse + detect + project + transform + split. The typed rows are
-    * LOCALLY CHECKPOINTED, so the ingest's remaining actions (error collect,
-    * data write) start from the materialized rows instead of re-parsing the
-    * file; the same job counts the valid and invalid rows through an
-    * `Observation`. `typed` is returned so the caller can release it with
+    * LOCALLY CHECKPOINTED, so the data write starts from the materialized
+    * rows instead of re-parsing the file; the same job, through an
+    * `Observation`, counts the valid and invalid rows and keeps the first
+    * `maxCollectedErrors` error strings (Spark's bounded top-k aggregate,
+    * so an adversarial all-invalid file cannot become a driver-OOM
+    * vector). `typed` is returned so the caller can release it with
     * [[releaseCheckpoint]]. */
   private def prepare(spark: SparkSession, source: SourceConfig, path: String): Prepared = {
     val upload = FileReader.readUpload(spark, path)
@@ -67,25 +70,30 @@ object IngestPipeline {
     val dataRows = upload.rows.filter(col("_row_number") > hdrIdx + 1)
     val nonEmpty = Ingestor.filterEmptyRows(dataRows, colIdx.values.map(i => s"_c$i").toSeq)
     // localCheckpoint (not just persist): the typed lineage is hundreds of
-    // parse/when expressions per column, and every downstream action (error
-    // collect, data write) would re-ANALYZE that whole tree in the planner
-    // — at this point planning time, not execution time, dominates an ingest.
-    // Truncating the lineage makes each follow-up plan trivial.
+    // parse/when expressions per column, and the data write would
+    // re-ANALYZE that whole tree in the planner — at this point planning
+    // time, not execution time, dominates an ingest. Truncating the lineage
+    // makes the follow-up plan trivial.
     // Fault-tolerance note: an ingest input is ≤100 MB by contract (the
     // validate-time size cap), so losing a cached partition and restarting
-    // the ingest is cheaper than keeping the lineage. The observed counts
+    // the ingest is cheaper than keeping the lineage. The observed metrics
     // sit in the checkpoint job's only (result) stage, so each partition
     // adds to them once.
-    val present = Ingestor.keysPresent(source.uniqueKeys)
+    val keys = source.uniqueKeys
+    val present = Ingestor.keysPresent(keys)
     val split = Observation()
     val typed = Ingestor.transformColumns(Ingestor.project(nonEmpty, colIdx), source)
       .observe(split, count(when(present, lit(1))).as("valid"),
-        count(when(!present, lit(1))).as("invalid"))
+        count(when(!present, lit(1))).as("invalid"),
+        Bridge.collectSmallest(when(!present,
+          struct(col("_row_number"), Ingestor.keyError(keys))),
+          Catalog.Limits.maxCollectedErrors).as("errors"))
       .localCheckpoint()
-    val counts = split.get
-    val (valid, quarantine) = Ingestor.validateSplit(typed, source.uniqueKeys)
-    Prepared(valid, quarantine, det, typed, counts("valid").asInstanceOf[Long],
-      counts("invalid").asInstanceOf[Long])
+    val observed = split.get
+    val errors = observed("errors").asInstanceOf[scala.collection.Seq[Row]]
+      .map(_.getString(1)).toVector
+    Prepared(typed.filter(present), det, typed, observed("valid").asInstanceOf[Long],
+      observed("invalid").asInstanceOf[Long], errors)
   }
 
   /** Drop the blocks a `localCheckpoint` pinned. `Dataset.unpersist` only
@@ -115,11 +123,11 @@ object IngestPipeline {
     * that version's first file or on its part ledger) lands nothing.
     *
     * Jobs per file: the checkpoint (which also counts valid and invalid
-    * rows), the error collect when any row is invalid, and the data write
-    * (which also counts the rows it lands). The reader hands over the head
-    * the header detection reads, with no job except on its one-range
-    * fallback (see [[FileReader]]); the store's metadata commits launch
-    * none. */
+    * rows and keeps the first error strings), the dedup shuffle, and the
+    * data write (which also counts the rows it lands). The reader hands
+    * over the head the header detection reads, with no job except on its
+    * one-range fallback (see [[FileReader]]); the store's metadata commits
+    * launch none. */
   def ingestFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                  path: String, versionLabel: String,
                  effectiveDate: java.sql.Date, variant: Option[String] = None,
@@ -132,22 +140,15 @@ object IngestPipeline {
 
     val existing = appendTarget(store, source, versionLabel, variant)
 
-    val Prepared(valid, quarantine, det, typed, validCount, invalidCount) =
+    val Prepared(valid, det, typed, validCount, invalidCount, invalidRows) =
       prepare(spark, source, path)
     checkpointed = Some(typed)
-    // Error strings come to the driver CAPPED at maxCollectedErrors (the
-    // exact invalid count comes from the checkpoint job) — an adversarial
-    // all-invalid file must not become a driver-OOM vector.
-    val invalidRows = if (invalidCount == 0) Seq.empty[String]
-      else quarantine.select("_error", "_row_number")
-        .orderBy("_row_number")
-        .limit(Catalog.Limits.maxCollectedErrors)
-        .collect().map(_.getString(0)).toSeq
 
-    // The first-wins survivors; the write job counts them on the way out,
-    // past the dedup shuffle (in its result stage), so each partition adds
-    // once.
-    val unique = Ingestor.dedupFirstWins(valid, source.uniqueKeys)._1.drop("_row_number")
+    // The first-wins survivors (every valid row has all its keys set, so
+    // there is no null-key branch); the write job counts them on the way
+    // out, past the dedup shuffle (in its result stage), so each partition
+    // adds once.
+    val unique = Ingestor.firstWins(valid, source.uniqueKeys)._1.drop("_row_number")
 
     val (versionId, inserted, status) = existing match {
       case Some(v) if store.metadata.holds(v, fileHash) => // a replay: nothing lands
@@ -163,11 +164,9 @@ object IngestPipeline {
         if (validCount > 0) {
           val inserted = store.writeData(source.targetTable, versionId, unique)
           store.completeVersion(versionId, inserted,
-            markCurrentFor = if (markAsCurrent) Some((source.sourceCode, variant)) else None)
-          if (invalidCount > 0)
-            store.log(versionId, "WARNING",
-              s"$invalidCount rows failed validation",
-              Some(invalidRows.take(5).mkString("[\"", "\",\"", "\"]")))
+            markCurrentFor = if (markAsCurrent) Some((source.sourceCode, variant)) else None,
+            warning = Option.when(invalidCount > 0)((s"$invalidCount rows failed validation",
+              Some(invalidRows.take(5).mkString("[\"", "\",\"", "\"]")))))
           (versionId, inserted, "completed")
         } else {
           val summary = invalidRows.take(5).mkString("; ")
@@ -175,8 +174,7 @@ object IngestPipeline {
           (versionId, 0L, "failed")
         }
     }
-    // Duplicates = valid minus survivors (dedup keeps null-key rows, so the
-    // difference is exactly the rank>1 rows).
+    // Duplicates = valid minus survivors: exactly the rank>1 rows.
     val dupCount = validCount - inserted
     IngestResult(versionId, status, inserted + invalidCount + dupCount,
       inserted, invalidCount, dupCount, invalidRows,
@@ -194,7 +192,10 @@ object IngestPipeline {
 
   /** Dry-run validation preview (upload.py:196-416 + validator.py:13-87):
     * extension/duplicate checks, header detection, row counts, drift
-    * warnings vs the previous completed version, sampled type warnings. */
+    * warnings vs the previous completed version, sampled type warnings.
+    * On a ranged CSV/TXT or a driver-parsed XLSX/XLS it launches no job:
+    * the head and the count come with the upload, and the type sample is
+    * evaluated on the driver ([[sampleTypeWarnings]]). */
   def validateFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                    path: String, versionLabel: String,
                    variant: Option[String] = None): ValidationReport = {
@@ -256,12 +257,7 @@ object IngestPipeline {
     val sample = sampled.drop(hdrIdx + 1).take(Catalog.Limits.typeValidationSampleRows)
       .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (hdrIdx + 2L + i)) }
     val sampleDf = spark.createDataFrame(sample.asJava, upload.rows.schema)
-    val projected = Ingestor.project(sampleDf, colIdx)
-    val typeWarnings = Ingestor.typeValidationWarnings(projected, source)
-      .collect().map { r =>
-        s"Column '${r.getAs[String]("column")}' expects ${r.getAs[String]("expected_type")} " +
-          s"but row ${r.getAs[Long]("row_number")} has '${r.getAs[String]("value")}'"
-      }.toSeq
+    val typeWarnings = sampleTypeWarnings(Ingestor.project(sampleDf, colIdx), source)
 
     val willAppend = appendTarget(store, source, versionLabel, variant).nonEmpty
 
@@ -272,4 +268,23 @@ object IngestPipeline {
     // after this point, so the dry run cleans up its scratch XML too.
     } finally FileReader.releaseScratch()
   }
+
+  /** D6 type warnings over an in-memory sample (a `LocalRelation` with a
+    * `_row_number` column, rows in file order): per checked column, in
+    * source-column order, the first row's [[Ingestor.badCells]] value.
+    * The optimizer's `ConvertToLocalRelation` evaluates the projection
+    * itself, so the collect launches no job; the distributed twin is
+    * [[Ingestor.typeValidationWarnings]]. */
+  private[graft] def sampleTypeWarnings(sample: DataFrame, source: SourceConfig): Seq[String] = {
+    val checks = Ingestor.badCells(sample, source)
+    val rows = sample.select(col("_row_number") +: checks.map(_._2): _*).collect()
+    checks.zipWithIndex.flatMap { case ((c, _), i) =>
+      rows.find(!_.isNullAt(i + 1)).map(r =>
+        typeWarning(c.internalName, c.dataType.name, r.getLong(0), r.getString(i + 1)))
+    }
+  }
+
+  private[graft] def typeWarning(column: String, expectedType: String,
+                                 rowNumber: Long, value: String): String =
+    s"Column '$column' expects $expectedType but row $rowNumber has '$value'"
 }

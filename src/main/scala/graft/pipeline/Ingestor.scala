@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.config.{Catalog, LogicalType, SourceConfig}
+import graft.config.{CanonicalColumn, Catalog, LogicalType, SourceConfig}
 import graft.transform.Transformers
 
 import scala.collection.immutable.ListMap
@@ -74,20 +74,15 @@ object Ingestor {
   }
 
   /** P5/S8 key validation + quarantine split: rows with any NULL unique-key
-    * column are routed to a quarantine DataFrame carrying the reference's
-    * exact error string for the FIRST missing key in key order
-    * ("Row N: Missing required key column 'k'", reference: ingestor.py:358-375).
+    * column are routed to a quarantine DataFrame carrying [[keyError]].
     * Returns (valid, quarantine-with-_error). One pass, no write-then-retry:
     * validate-before-write replaces the reference's per-row INSERT fallback. */
   def validateSplit(df: DataFrame, uniqueKeys: Seq[String],
                     rowNumberCol: String = "_row_number"): (DataFrame, DataFrame) = {
     val allPresent = keysPresent(uniqueKeys)
-    val firstMissing = coalesce(
-      uniqueKeys.map(k => when(col(k).isNull, lit(k))): _*)
     val valid = df.filter(allPresent)
-    val quarantine = df.filter(!allPresent).withColumn("_error",
-      concat(lit("Row "), col(rowNumberCol).cast("string"),
-        lit(": Missing required key column '"), firstMissing, lit("'")))
+    val quarantine = df.filter(!allPresent)
+      .withColumn("_error", keyError(uniqueKeys, rowNumberCol))
     (valid, quarantine)
   }
 
@@ -95,24 +90,40 @@ object Ingestor {
   def keysPresent(uniqueKeys: Seq[String]): Column =
     uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
 
+  /** A quarantined row's error: the reference's exact string for the FIRST
+    * missing key in key order ("Row N: Missing required key column 'k'",
+    * reference: ingestor.py:358-375); null on a row with every key set. */
+  def keyError(uniqueKeys: Seq[String], rowNumberCol: String = "_row_number"): Column =
+    concat(lit("Row "), col(rowNumberCol).cast("string"),
+      lit(": Missing required key column '"),
+      coalesce(uniqueKeys.map(k => when(col(k).isNull, lit(k))): _*), lit("'"))
+
   /** D1 in-file dedup, first-occurrence-wins, null-key rows exempt
-    * (reference: ingestor.py:468-496). Window formulation: shuffle by the
-    * unique keys only for rows with fully-non-null keys; null-key rows are
-    * unioned back untouched. Returns (unique, duplicates).
+    * (reference: ingestor.py:468-496): [[firstWins]] over the rows with
+    * every key set, and the null-key rows unioned back untouched. Returns
+    * (unique, duplicates). */
+  def dedupFirstWins(df: DataFrame, uniqueKeys: Seq[String],
+                     orderCol: String = "_row_number"): (DataFrame, DataFrame) = {
+    val anyNull = uniqueKeys.map(col(_).isNull).reduce(_ || _)
+    val (unique, dups) = firstWins(df.filter(!anyNull), uniqueKeys, orderCol)
+    (unique.unionByName(df.filter(anyNull)), dups)
+  }
+
+  /** First-wins dedup of rows whose unique keys are all set: one
+    * `row_number` window per key, ordered by `orderCol`; rank 1 survives.
+    * Returns (unique, duplicates). A caller whose rows all carry their keys
+    * (the valid side of [[validateSplit]]) calls this directly, so its plan
+    * has no null-key branch to scan.
     *
     * Scale note: partitionBy(uniqueKeys) distributes by key cardinality —
     * at 100 TB the key space (e.g. code pairs) is large, so partitions stay
     * balanced; no global sort, no collect. */
-  def dedupFirstWins(df: DataFrame, uniqueKeys: Seq[String],
-                     orderCol: String = "_row_number"): (DataFrame, DataFrame) = {
-    val anyNull = uniqueKeys.map(col(_).isNull).reduce(_ || _)
-    val exempt = df.filter(anyNull)
-    val keyed = df.filter(!anyNull)
+  def firstWins(keyed: DataFrame, uniqueKeys: Seq[String],
+                orderCol: String = "_row_number"): (DataFrame, DataFrame) = {
     val w = Window.partitionBy(uniqueKeys.map(col): _*).orderBy(col(orderCol))
     val ranked = keyed.withColumn("_dup_rank", row_number().over(w))
-    val unique = ranked.filter(col("_dup_rank") === 1).drop("_dup_rank").unionByName(exempt)
-    val dups = ranked.filter(col("_dup_rank") > 1).drop("_dup_rank")
-    (unique, dups)
+    (ranked.filter(col("_dup_rank") === 1).drop("_dup_rank"),
+      ranked.filter(col("_dup_rank") > 1).drop("_dup_rank"))
   }
 
   /** D3 column statistics: per-column null count / null %, and up to 3
@@ -151,32 +162,42 @@ object Ingestor {
             col(countCol) > col("prev_count") * 1.5))
   }
 
-  /** D6 sample-based type validation: over the first `sampleRows` data rows,
-    * report per column the first (lowest row number) raw value that fails
-    * its declared NUMERIC/INTEGER/DATE parse while not being a sentinel
-    * (reference: validator.py:90-175 — early-exit per column). One aggregate
-    * over the sample keeps, per checked column, the minimum
-    * (row number, value) struct among its bad rows; the single result row is
-    * unpivoted in source-column order, the reference validator's loop order. */
-  def typeValidationWarnings(raw: DataFrame, source: SourceConfig,
-                             sampleRows: Int = Catalog.Limits.typeValidationSampleRows): DataFrame = {
-    val checks = source.columns.filter(c =>
+  /** D6's one definition of a bad cell: per NUMERIC/INTEGER/DATE column of
+    * `source` present in `raw`, in source-column order, the raw value when
+    * it is not a sentinel and fails its declared parse, else null
+    * (reference: validator.py:90-175). [[typeValidationWarnings]]
+    * aggregates these over a distributed table; `IngestPipeline.validateFile`
+    * selects them over its in-memory sample and reduces on the driver. */
+  def badCells(raw: DataFrame, source: SourceConfig): Seq[(CanonicalColumn, Column)] =
+    source.columns.filter(c =>
       c.dataType == LogicalType.Numeric || c.dataType == LogicalType.Integer ||
         c.dataType == LogicalType.Date)
       .filter(c => raw.columns.contains(c.internalName))
-    if (checks.isEmpty) return raw.sparkSession.emptyDataFrame
-    val firstBad = checks.zipWithIndex.map { case (c, i) =>
-      val v = col(c.internalName)
-      val sentinel = trim(v).isin("", "*", "NULL", "N/A", "nan", "NaN") || v.isNull
-      val parsed = c.dataType match {
-        case LogicalType.Date => Transformers.parseDate(v).cast("string")
-        case _ => Transformers.parseNumeric(v).cast("string")
+      .map { c =>
+        val v = col(c.internalName)
+        val sentinel = trim(v).isin("", "*", "NULL", "N/A", "nan", "NaN") || v.isNull
+        val parsed = c.dataType match {
+          case LogicalType.Date => Transformers.parseDate(v).cast("string")
+          case _ => Transformers.parseNumeric(v).cast("string")
+        }
+        c -> when(!sentinel && parsed.isNull, v.cast("string"))
       }
-      val bad = !sentinel && parsed.isNull
-      min(when(bad, struct(col("_row_number").as("row_number"),
-        v.cast("string").as("value")))).as(s"_bad$i")
+
+  /** D6 sample-based type validation: over the first `sampleRows` data rows,
+    * report per column the first (lowest row number) [[badCells]] value
+    * (the reference validator exits early per column). One aggregate keeps,
+    * per checked column, the minimum (row number, value) struct among its
+    * bad rows; the single result row is unpivoted in source-column order,
+    * the reference validator's loop order. */
+  def typeValidationWarnings(raw: DataFrame, source: SourceConfig,
+                             sampleRows: Int = Catalog.Limits.typeValidationSampleRows): DataFrame = {
+    val checks = badCells(raw, source)
+    if (checks.isEmpty) return raw.sparkSession.emptyDataFrame
+    val firstBad = checks.zipWithIndex.map { case ((_, bad), i) =>
+      min(when(bad.isNotNull, struct(col("_row_number").as("row_number"),
+        bad.as("value")))).as(s"_bad$i")
     }
-    val warnings = checks.zipWithIndex.map { case (c, i) =>
+    val warnings = checks.zipWithIndex.map { case ((c, _), i) =>
       struct(lit(c.internalName).as("column"),
         lit(c.dataType.name).as("expected_type"),
         col(s"_bad$i.row_number").as("row_number"),

@@ -111,12 +111,17 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   /** U2 transition: completed (+record_count) or failed (+error). When
     * `markCurrentFor` is set, the U3 current-swap happens in the SAME
     * commit — one atomic transition, like the reference's single DB
-    * transaction. */
+    * transaction. A `warning` (message, details JSON) is logged at level
+    * WARNING in that commit too, so a completed version never lacks it. */
   def completeVersion(id: Long, recordCount: Long,
-                      markCurrentFor: Option[(String, Option[String])] = None): Unit =
+                      markCurrentFor: Option[(String, Option[String])] = None,
+                      warning: Option[(String, Option[String])] = None): Unit =
     commit { s =>
       val done = s.edit(id)(_.copy(status = "completed", recordCount = Some(recordCount)))
-      markCurrentFor.fold(done) { case (sourceCode, variant) => done.current(id, sourceCode, variant) }
+      val current = markCurrentFor.fold(done) { case (sourceCode, variant) =>
+        done.current(id, sourceCode, variant) }
+      warning.fold(current) { case (message, details) =>
+        current.logged(id, "WARNING", message, details) }
     }: Unit
 
   def failVersion(id: Long, error: String): Unit =

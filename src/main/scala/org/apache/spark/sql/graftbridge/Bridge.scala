@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
@@ -12,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   * Expression conversions a custom-Expression library needs (the standard
   * pattern for third-party Catalyst extensions), runtime function
   * registration, building a DataFrame straight from internal rows,
-  * releasing an RDD's cached blocks, Spark's CSV stream parser, and
-  * waiting for the listener bus. */
+  * releasing an RDD's cached blocks, Spark's CSV stream parser, the
+  * bounded top-k aggregate, and waiting for the listener bus. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -46,6 +47,13 @@ object Bridge {
                      path: String, startOfFile: Boolean): Iterator[InternalRow] =
     UnivocityParser.parseStream(in, new UnivocityParser(schema, options),
       new CSVHeaderChecker(schema, options, path, startOfFile), schema)
+
+  /** Spark's bounded `CollectTopK` aggregate: the `n` smallest non-null
+    * values of `c`, smallest first (`reverse = true`; with `false` it keeps
+    * the `n` largest). Each task keeps at most `n` values, so the
+    * aggregate's state stays bounded whatever the input size. */
+  def collectSmallest(c: Column, n: Int): Column =
+    column(new CollectTopK(expression(c), n, reverse = true).toAggregateExpression())
 
   /** Wait until every listener event posted so far has been delivered. */
   def drainListenerBus(spark: SparkSession): Unit =

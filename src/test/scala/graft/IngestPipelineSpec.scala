@@ -245,12 +245,62 @@ class IngestPipelineSpec extends SparkSpecBase {
     val xlsx = s"${Files.createTempDirectory("graft-ip-jobs")}/ptp.xlsx"
     graft.io.SyntheticXlsx.writeNcciPtp(xlsx, nRows = 2000)
     val (xlsxValidate, xlsxIngest, _) = jobsPerUpload("NCCI_PTP", xlsx, Some("PRACTITIONER"))
-    // validate: the type-warning sample only (the head and the count come
-    // with the upload); ingest: the checkpoint, the dedup + write, and, for
-    // the XLSX with its planted missing keys, the error collect.
-    assert((csvValidate, csvIngest) == (2, 3))
-    assert((xlsxValidate, xlsxIngest) == (2, 4))
+    val xls = s"${Files.createTempDirectory("graft-ip-jobs")}/ptp.xls"
+    graft.io.SyntheticXls.ncciPtpCeiling(xls, totalRows = 2000)
+    val store = newStore()
+    IngestPipeline.validateFile(spark, store, "NCCI_PTP", xls, "2026-Q1", Some("PRACTITIONER"))
+    val xlsValidate = jobsIn(IngestPipeline.validateFile(spark, store, "NCCI_PTP", xls,
+      "2026-Q1", Some("PRACTITIONER")))
+    // validate: none (the head and the count come with the upload, and the
+    // type sample is evaluated on the driver); ingest: the checkpoint
+    // (which also observes the errors of the XLSX's planted missing keys),
+    // the dedup shuffle and the write.
+    assert((csvValidate, csvIngest) == (0, 3))
+    assert((xlsxValidate, xlsxIngest) == (0, 3))
+    assert(xlsValidate == 0)
     assert(csvCheckpoints.nonEmpty && csvCheckpoints.forall(_ > 1), csvCheckpoints)
+  }
+
+  /** The errors an ingest reports for a PTP CSV: its first
+    * `maxCollectedErrors` rows missing a key, in file row order. */
+  private def expectedPtpErrors(path: String): Seq[String] =
+    Files.readAllLines(Paths.get(path)).asScala.zipWithIndex.drop(1).flatMap { case (line, i) =>
+      val cells = line.split(",", -1)
+      Seq("comprehensive_code", "component_code").zip(cells).collectFirst {
+        case (key, cell) if cell.isEmpty => s"Row ${i + 1}: Missing required key column '$key'"
+      }
+    }.take(graft.config.Catalog.Limits.maxCollectedErrors).toSeq
+
+  test("errors over several ranges: the first 10k by row number, first 5 on a failed version") {
+    val header = "Column 1,Column 2,Modifier,Effective Date,Deletion Date\n"
+    // ~4 MB, 120,000 rows; every 9th row misses one key, alternating
+    // between the two (13,333 invalid rows, past the 10,000 cap).
+    val mixed = csv(header + (0 until 120000).map { i =>
+      val (c1, c2) = (f"${10000 + i / 97}%05d", f"${20000 + i % 97997}%05d")
+      if (i % 9 != 4) s"$c1,$c2,1,20240101,*"
+      else if (i % 2 == 0) s",$c2,1,20240101,*" else s"$c1,,1,20240101,*"
+    }.mkString("\n") + "\n")
+    // ~2.5 MB, every row missing its first key.
+    val allInvalid = csv(header + (0 until 110000).map(i =>
+      f",${20000 + i}%05d,1,20240101,*").mkString("\n") + "\n")
+    Seq(mixed, allInvalid).foreach(p =>
+      assert(graft.io.FileReader.readUpload(spark, p).rows.rdd.getNumPartitions > 1, p))
+
+    val store = newStore()
+    val r = IngestPipeline.ingestFile(spark, store, "NCCI_PTP", mixed, "2026-Q1", d, Some("HOSPITAL"))
+    assert((r.status, r.invalid) == ("completed", 13333L))
+    assert(r.errors == expectedPtpErrors(mixed))
+    val f = IngestPipeline.ingestFile(spark, store, "NCCI_PTP", allInvalid, "2026-Q1", d,
+      Some("PRACTITIONER"))
+    val expected = expectedPtpErrors(allInvalid)
+    assert((f.status, f.invalid, f.errors) == ("failed", 110000L, expected))
+    val v = store.versions.filter(col("data_version_id") === f.versionId).head
+    assert(v.getAs[String]("error_message") ==
+      s"No rows inserted. First errors: ${expected.take(5).mkString("; ")}")
+
+    val clean = IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP",
+      csv("HCPCS,OPPS CAP\n99213,120.50\n99214,140.00\n"), "2026-Q1", d)
+    assert((clean.status, clean.invalid, clean.errors) == ("completed", 0L, Seq.empty))
   }
 
   test("validation report: counts, drift warning, sampled type warnings, dup file") {

@@ -110,6 +110,22 @@ class VersionStoreSpec extends SparkSpecBase {
     assert(again.versions.filter(col("record_count").isNull).isEmpty)
   }
 
+  test("an upload with invalid rows completes and logs its warning in one commit") {
+    val store = newStore()
+    def head() = new java.io.File(s"${store.root}/meta/_log").listFiles
+      .map(_.getName).filter(_.matches("\\d{20}\\.json")).map(_.stripSuffix(".json").toLong)
+      .maxOption.getOrElse(0L)
+    val path = java.nio.file.Files.createTempFile("graft-store", ".csv")
+    java.nio.file.Files.writeString(path, "HCPCS,OPPS CAP\n99213,120.50\n,90.00\n")
+    val r = graft.pipeline.IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP",
+      path.toString, "2026-Q1", java.sql.Date.valueOf("2026-01-01"))
+    assert((r.status, r.invalid) == ("completed", 1L))
+    // createVersion, then complete + mark current + warning
+    assert(head() == 2)
+    val warning = store.logs.filter(col("level") === "WARNING").collect()
+    assert(warning.map(_.getAs[String]("message")).toSeq == Seq("1 rows failed validation"))
+  }
+
   test("version ids are never reused, across deletes and reopens") {
     val store = newStore()
     def create(s: VersionStore, label: String) = s.createVersion("PFS_GPCI", label,
