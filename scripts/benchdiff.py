@@ -14,7 +14,7 @@ two history entries with matching "sf" dirs are diffed (a skewed-sf1 run
 appended between two sf0.1 rounds no longer poisons the diff); pass
 --sf <substring> to pick the series (e.g. --sf sf1).
 
-Anchor entries (graft.AnchorBench, fresh-JVM pinned subset, tagged
+Anchor entries (`graft.Bench --anchors`, fresh-JVM pinned subset, tagged
 "anchor":true) form their OWN series: they are excluded from full-bench
 comparisons and selected exclusively via --anchor, so the fresh-JVM numbers
 are only ever compared against other fresh-JVM numbers.
@@ -33,7 +33,8 @@ Usage:
   benchdiff.py --perfbench OLD.out NEW.out   # two perfbench/run.py outputs
 
 Exit code: 0 always (the bench is load-sensitive; the output is an alarm to
-investigate, not a hard gate - wavegate/TimeOne are the re-check tools).
+investigate, not a hard gate - wavegate and `graft.Bench q_name ...` are the
+re-check tools).
 """
 import json
 import sys
@@ -146,7 +147,8 @@ if not alarms:
           f"(of {len(set(nq) & set(oq))} comparable)")
 else:
     print(f"[benchdiff] {len(alarms)} ALARM(S) (>{THRESHOLD}x, re-check "
-          f"with TimeOne on a quiet host before calling it a regression):")
+          f"with `graft.Bench <query...>` on a quiet host before calling it "
+          f"a regression):")
     for ratio, name, a, b, tag in sorted(alarms, reverse=True):
         print(f"  {tag:>18}  {name}: {a:.2f}s -> {b:.2f}s")
 sys.exit(0)

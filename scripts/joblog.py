@@ -5,7 +5,8 @@ Usage: python3 scripts/joblog.py /tmp/sparklogs/<app-id> [minSec]
 
 Prints one line per job: jobId, wall seconds, #stages, total task time,
 and the callsite/description — the poor man's Stages tab for a headless
-sandbox. Point TimeOne/Bench at an event-log dir via
+sandbox. Point Bench (any selection: all, --anchors, named queries) at an
+event-log dir via
   -Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file:///tmp/sparklogs
 (scripts/runmain.sh passes JAVA_TOOL-style -D flags through EXTRA_JAVA_OPTS).
 """

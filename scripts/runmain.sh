@@ -3,6 +3,7 @@
 # long Bench/Verify run proceed in parallel with sbt compile/test. Mirrors
 # build.sbt's forked-run JVM flags exactly (JDK17 add-opens, UTC, no UI).
 # Usage: scripts/runmain.sh graft.Bench [args...]   (env vars pass through)
+#   e.g. scripts/runmain.sh graft.Bench --anchors  (the fresh-JVM anchor set)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 main="$1"; shift

@@ -1,14 +1,22 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every registered query against
-  * SPARK_GRAFT_SF_DIR (two suite-interleaved passes minutes apart,
-  * recording the per-query MIN plus the host 1-min loadavg — robust to
-  * one-sided host-load noise, and self-describing when a sustained load
-  * window inflates the artifact anyway) and prints one JSON line. A
-  * query that throws is recorded as -1 (failed) — never as its
-  * elapsed-time-until-crash — so BENCH output is auditable. */
+/** Benchmark main over the query registry, against SPARK_GRAFT_SF_DIR. One
+  * protocol times every selection: two suite-interleaved passes minutes
+  * apart, recording the per-query MIN plus the host 1-min loadavg (robust
+  * to one-sided host-load noise, and self-describing when a sustained load
+  * window inflates the artifact anyway). A query that throws is recorded
+  * as -1 (failed), never as its elapsed-time-until-crash. The arguments
+  * select what runs (an unknown name fails before any session is built):
+  *  - none: every registered query; one JSON line on stdout, the full
+  *    per-query map in `bench_full.json`, and a history entry;
+  *  - `--anchors`: the frozen [[anchors]]; a `"metric":"anchor"` line and
+  *    an `"anchor":true` history entry;
+  *  - `q_a q_b …`: those queries' two samples and min; no file written;
+  *  - `--explain q_a …`: their AQE-final executed plans, untimed. */
 object Bench {
 
   // Keys compress hard in the compact line only (the sidecar keeps full
@@ -57,9 +65,95 @@ object Bench {
     short.getOrElse(id, id)
   }
 
+
+  /** Frozen anchor set, run in a FRESH JVM (`scripts/runmain.sh
+    * graft.Bench --anchors`) so cross-round per-query numbers carry no
+    * registry-size JIT/codegen confound (the full bench drifted +14 % on
+    * byte-identical sources r14→r15 from 24 extra queries' codegen). It
+    * spans the round-14 six, one query per operator family, one per native
+    * Catalyst expression and the heaviest classes. APPEND-ONLY: removing or
+    * renaming an entry breaks the series (AnchorBenchSpec pins it). */
+  val anchors: Seq[String] = Seq(
+    // the round-14 six
+    "q_d8_group_category", "q_j1_lateral_top1", "q_agg1_pricing_summary",
+    "q_llm_ann_brute", "q_llm_exact_dedup", "q_graph_pagerank",
+    // one per operator family
+    "q_s1_csv_roundtrip", "q_s2_xlsx_read", "q_s3_xls_read",
+    "q_h1_header_detect", "q_p5_validate_quarantine",
+    "q_d1_dedup_first_wins", "q_j_broadcast_dims", "q_o1_latest",
+    "q_u1_upsert", "q_w_running_total", "q_fee_flagship",
+    "q_agg_heavy_hitters", "q_stats_tost", "q_ts_dtw",
+    "q_ts_perm_entropy", "q_e_shapley_attribution", "q_mm_phash",
+    "q_mm_vad", "q_sketch_hll_intersect", "q_exp_srm",
+    "q_gov_cl_diversity",
+    // one per native Catalyst expression
+    "q_llm_bpe", "q_llm_compress_ratio", "q_llm_decontaminate",
+    "q_llm_pii_scrub", "q_llm_cdc_chunks", "q_llm_ngram_jaccard",
+    "q_llm_langid", "q_llm_ann_pq", "q_layout_hilbert",
+    "q_llm_er_linkage", "q_llm_nfc",
+    // the heavy classes (iterative graph, banded dedup, IVF-PQ)
+    "q_graph_ktruss", "q_graph_betweenness", "q_llm_semdedup",
+    "q_llm_minhash_neardup", "q_llm_ann_ivfpq_rerank")
+
+  /** What one run does with its query names. */
+  private[graft] object Mode extends Enumeration { val All, Anchors, Subset, Explain = Value }
+  private[graft] final case class Selection(mode: Mode.Value, names: Seq[String])
+
+  /** The selection `args` asks for, over the `registered` query names in
+    * registry order; throws on a malformed argument list or an unknown name. */
+  private[graft] def select(args: Seq[String],
+                            registered: Seq[String] = SparkEntry.queries.keys.toSeq): Selection = {
+    def plain(names: Seq[String]) = names.nonEmpty && !names.exists(_.startsWith("--"))
+    val selection = args match {
+      case Seq() => Selection(Mode.All, registered)
+      case Seq("--anchors") => Selection(Mode.Anchors, anchors)
+      case "--explain" +: names if plain(names) => Selection(Mode.Explain, names)
+      case names if plain(names) => Selection(Mode.Subset, names)
+      case _ => throw new IllegalArgumentException(
+        "usage: Bench [--anchors | --explain q_name ... | q_name ...]")
+    }
+    val unknown = selection.names.filterNot(registered.toSet)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    selection
+  }
+
   def main(args: Array[String]): Unit = {
+    val selection = select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(defaultCpus = 32)
+    selection match {
+      case Selection(Mode.Explain, names) =>
+        names.foreach { n =>
+          println(s"==== $n ====")
+          val df = SparkEntry.queries(n)(spark, sfDir)
+          df.collect() // populate AQE final plan
+          println(df.queryExecution.executedPlan.toString)
+        }
+        spark.stop()
+      case Selection(Mode.Subset, names) =>
+        val run = passes(spark, sfDir, names)
+        spark.stop()
+        run.samples.foreach { case (n, a, b) =>
+          println(s"[bench] $n ${compact(a, 2)} s, ${compact(b, 2)} s, min ${compact(minOf(a, b), 2)} s")
+        }
+      case Selection(mode, names) => report(spark, sfDir, mode == Mode.Anchors, passes(spark, sfDir, names))
+    }
+  }
+
+  /** Each query's two samples (-1 for a failure; a query whose first
+    * sample failed is not run again), the 1-min loadavg before, between
+    * and after the passes, and whether the first of them tainted the run. */
+  private final case class Passes(samples: Seq[(String, Double, Double)],
+                                  loadavg: Seq[Double], tainted: Boolean)
+
+  private def minOf(a: Double, b: Double): Double = if (a < 0 || b < 0) -1.0 else math.min(a, b)
+
+  private def loadavg(): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
+
+  /** Warm the session, then time `names` in two passes. Names are kept by
+    * position, so a repeated name is timed once per occurrence. */
+  private def passes(spark: SparkSession, sfDir: String, names: Seq[String]): Passes = {
     // Warm the JVM/session (codegen, parquet footer reads) so the first
     // measured query isn't charged for session startup.
     try spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -80,31 +174,21 @@ object Bench {
     // estimator robust to one-sided noise (load only ever ADDS time).
     // Queries with write side effects land overwrite-idempotent layouts,
     // so the second pass is safe by construction.
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def once(name: String): Double = {
       val t0 = System.nanoTime()
       // Cached frames (minhash/cosine/funnel persist intermediates) would
       // otherwise accumulate across 200 queries and GC-tax later ones;
       // each pass is measured from a clean cache, like a fresh session.
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      try { SparkEntry.queries(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         -1.0
       } finally spark.catalog.clearCache()
     }
-    def loadavg(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    val qseq = SparkEntry.queries.toSeq
     val load0 = loadavg()
-    val pass1 = qseq.map { case (name, fn) => name -> once(name, fn) }.toMap
+    val pass1 = names.map(once)
     val load1 = loadavg()
-    val results: Seq[(String, Double)] = qseq.map { case (name, fn) =>
-      val a = pass1(name)
-      name -> (if (a < 0) a else {
-        val b = once(name, fn)
-        if (b < 0) -1.0 else math.min(a, b)
-      })
-    }
+    val samples = names.zip(pass1).map { case (n, a) => (n, a, if (a < 0) a else once(n)) }
     val load2 = loadavg()
     // Self-adjudication (judge directive r14 item 5, rule tightened per
     // r15 verdict): a bench sampled under competing load is an upper
@@ -116,11 +200,9 @@ object Bench {
     // [13.9, 3.5, 3.7]). Any later sample over threshold is still
     // flagged on stderr for the record. Quiet-host runs here read
     // ~1-3; loaded rounds read 9-13. Threshold via SPARK_GRAFT_LOAD_MAX.
-    val loadMax = sys.env.get("SPARK_GRAFT_LOAD_MAX").map(_.toDouble)
-      .getOrElse(4.0)
+    val loadMax = sys.env.get("SPARK_GRAFT_LOAD_MAX").map(_.toDouble).getOrElse(4.0)
     val tainted = load0 > loadMax
-    val hotLater = Seq("mid" -> load1, "end" -> load2)
-      .filter(_._2 > loadMax)
+    val hotLater = Seq("mid" -> load1, "end" -> load2).filter(_._2 > loadMax)
     if (tainted)
       System.err.println(f"[bench] loadavg-tainted: HOT START " +
         f"(first sample $load0%.1f > $loadMax%.1f; all samples " +
@@ -135,65 +217,71 @@ object Bench {
       System.err.println(f"[bench] loadavg verdict: quiet " +
         f"(first sample $load0%.1f <= $loadMax%.1f)")
     }
-    // The harness that captures this output keeps only the final 2000
-    // characters of the log (sbt's trailing "[success] Total time" line
-    // included). At 149 queries a full per-query map (~1,900 chars) no
-    // longer fits — r6's BENCH line was truncated to `parsed: null`. The
-    // stdout line therefore carries only the headline total plus the 12
-    // slowest queries (the ones worth a glance); the FULL per-query map at
-    // nanosecond precision always goes to the bench_full.json sidecar.
-    def compact(v: Double, scale: Int): String =
-      if (v < 0) "-1"
-      else new java.math.BigDecimal(v).setScale(scale, java.math.RoundingMode.HALF_UP)
-        .stripTrailingZeros().toPlainString
+    Passes(samples, Seq(load0, load1, load2), tainted)
+  }
+
+  private def compact(v: Double, scale: Int): String =
+    if (v < 0) "-1"
+    else new java.math.BigDecimal(v).setScale(scale, java.math.RoundingMode.HALF_UP)
+      .stripTrailingZeros().toPlainString
+
+  /** A full or anchor run's stdout line and history entry (and, for a full
+    * run, its `bench_full.json` sidecar), from each query's min. Stops the
+    * session. */
+  private def report(spark: SparkSession, sfDir: String, anchor: Boolean, run: Passes): Unit = {
+    val results = run.samples.map { case (n, a, b) => n -> minOf(a, b) }
     val keys = results.map { case (k, _) => benchKey(k) }
     require(keys.distinct.size == keys.size,
       s"bench compact keys collide: ${keys.diff(keys.distinct).mkString(",")}")
-    val qs = results.sortBy(-_._2).take(12).map { case (k, v) =>
-      "\"" + benchKey(k) + "\":" + compact(v, 1)
-    }.mkString("{", ",", "}")
-    val ok = results.filter(_._2 >= 0)
-    val total = if (ok.nonEmpty) ok.map(_._2).sum else 0.0
+    val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.count(_._2 < 0)
-    // sf as a bare number ("0.1") when the dir is .../sf<N>, else quoted.
-    val sfToken = {
-      val m = "sf([0-9.]+)/?$".r.findFirstMatchIn(sfDir)
-      m.map(_.group(1)).getOrElse("\"" + sfDir + "\"")
+    // 1-min system loadavg sampled before pass 1 / between passes / after
+    // pass 2: an artifact inflated by neighbor load self-describes (quiet
+    // host ≈ the worker count; competing load shows >> that).
+    val loadField = run.loadavg.map(compact(_, 1)).mkString(""""loadavg":[""", ",", "]") +
+      (if (run.tainted) ""","tainted":true""" else "")
+    val line = if (anchor) {
+      val qs = results.map { case (k, v) => "\"" + benchKey(k) + "\":" + compact(v, 2) }
+        .mkString("{", ",", "}")
+      s"""{"metric":"anchor","value":${compact(total, 2)},"unit":"sec","n_queries":${results.size},"failed":$failed,"queries":$qs,$loadField,"sf":"$sfDir"}"""
+    } else {
+      // The harness that captures this output keeps only the final 2000
+      // characters of the log (sbt's trailing "[success] Total time" line
+      // included). At 149 queries a full per-query map (~1,900 chars) no
+      // longer fits — r6's BENCH line was truncated to `parsed: null`. The
+      // stdout line therefore carries only the headline total plus the 12
+      // slowest queries (the ones worth a glance); the FULL per-query map
+      // at nanosecond precision always goes to the bench_full.json sidecar.
+      val qs = results.sortBy(-_._2).take(12).map { case (k, v) =>
+        "\"" + benchKey(k) + "\":" + compact(v, 1)
+      }.mkString("{", ",", "}")
+      val failedField = if (failed > 0) s""","failed":$failed""" else ""
+      // sf as a bare number ("0.1") when the dir is .../sf<N>, else quoted.
+      val sfToken = "sf([0-9.]+)/?$".r.findFirstMatchIn(sfDir)
+        .map(_.group(1)).getOrElse("\"" + sfDir + "\"")
+      s"""{"metric":"total","value":${compact(total, 2)},"unit":"sec","n_queries":${results.size},"queries":$qs$failedField,$loadField,"sf":$sfToken}"""
     }
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failedField = if (failed > 0) s""","failed":$failed""" else ""
-    // 1-min system loadavg sampled before pass 1 / between passes / after
-    // pass 2: an artifact inflated by neighbor load now self-describes
-    // (quiet host ≈ the worker count; competing load shows >> that).
-    val loadField =
-      s""","loadavg":[${compact(load0, 1)},${compact(load1, 1)},${compact(load2, 1)}]""" +
-        (if (tainted) ""","tainted":true""" else "")
-    val line =
-      s"""{"metric":"total","value":${compact(total, 2)},"unit":"sec","n_queries":${results.size},"queries":$qs$failedField$loadField,"sf":$sfToken}"""
     // History entries tag the physical-path mode so benchdiff and the
     // round ledger can tell kernel-gated runs from forced-distributed
-    // coverage runs (scripts/distbench.sh) — the stdout driver-contract
-    // line is untouched.
-    val mode =
-      if (spark.conf.getOption("graft.graph.smallKernel").contains("false"))
-        ""","mode":"distributed""""
-      else ""
+    // coverage runs (scripts/distbench.sh), and anchor entries form their
+    // own series — the stdout driver-contract line is untouched.
+    val mode = if (spark.conf.getOption("graft.graph.smallKernel").contains("false"))
+      ""","mode":"distributed"""" else ""
+    val metric = if (anchor) """"anchor","anchor":true""" else "\"total\""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"failed":$failed,"loadavg":[$load0,$load1,$load2],"tainted":$tainted$mode,"sf":"$sfDir","ts":${System.currentTimeMillis / 1000}}"""
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"),
-      fullLine + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] sidecar write failed: ${e.getMessage}") }
-    // Round-over-round per-query history (VERDICT r13 item 3): every full
-    // bench run appends here; scripts/benchdiff.py diffs the last two
-    // entries and flags >2x per-query regressions with loadavg context, so
-    // an inflated single-run driver artifact (or a REAL regression) is
-    // caught in-round instead of at judge review.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_history.jsonl"),
-      (fullLine + "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: Throwable => System.err.println(s"[bench] history append failed: ${e.getMessage}") }
+      s"""{"metric":$metric,"value":$total,"unit":"sec","queries":$fullQs,"failed":$failed,"loadavg":${run.loadavg.mkString("[", ",", "]")},"tainted":${run.tainted}$mode,"sf":"$sfDir","ts":${System.currentTimeMillis / 1000}}"""
+    def write(file: String, options: StandardOpenOption*): Unit =
+      try Files.write(Paths.get(file), (fullLine + "\n").getBytes("UTF-8"), options: _*)
+      catch { case e: Throwable => System.err.println(s"[bench] $file write failed: ${e.getMessage}") }
+    if (!anchor) write("bench_full.json")
+    // Round-over-round per-query history: every full or anchor bench run
+    // appends here; scripts/benchdiff.py diffs the last two entries of a
+    // series and flags >2x per-query regressions with loadavg context, so
+    // an inflated single-run artifact (or a REAL regression) is caught in
+    // the round that made it.
+    write("bench_history.jsonl", StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     System.err.println(s"[bench] line length: ${line.length} chars")
     require(line.length <= 1200,
       s"bench line ${line.length} chars risks the 2000-char stdout tail")

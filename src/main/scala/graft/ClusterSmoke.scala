@@ -180,7 +180,7 @@ object ClusterSmoke {
       val sizeMb = new java.io.File(xlsx).length / 1e6
       require(new java.io.File(xlsx).length > 8 * 1024 * 1024,
         f"xlsx fixture only $sizeMb%.1f MB - below the distributed threshold")
-      val xlsxRows = graft.io.FileReader.readXlsx(cs, xlsx).count()
+      val xlsxRows = graft.io.FileReader.parseFile(cs, xlsx)._1.count()
       println(f"[cluster] xlsx distributed read: $xlsxRows rows " +
         f"($sizeMb%.1f MB, executor scratch scans) OK")
 
@@ -196,7 +196,7 @@ object ClusterSmoke {
       val ls = session("local[8]")
       try {
         val localResults = runQueries(ls, "local")
-        val localXlsxRows = graft.io.FileReader.readXlsx(ls, xlsx).count()
+        val localXlsxRows = graft.io.FileReader.parseFile(ls, xlsx)._1.count()
         require(localXlsxRows == xlsxRows,
           s"xlsx rows differ: cluster $xlsxRows vs local $localXlsxRows")
         queryNames.foreach { name =>

@@ -9,7 +9,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, Expression, GenericInternalRow, JoinedRow, Literal, UnsafeProjection}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -39,9 +38,9 @@ import scala.jdk.CollectionConverters._
   *    same options `spark.read.csv` gets), so quoted newlines parse as in
   *    pandas and a 100 MB upload still parses on every core. An upload
   *    whose boundaries the scan cannot prove (a backslash, a bare `\r`, a
-  *    blank line, an unterminated quote, …) is read as one `multiLine`
-  *    `spark.read.csv` range, numbered by `zipWithIndex` and counted by a
-  *    job.
+  *    blank line, an unterminated quote, …) is parsed by the same code as
+  *    one range `[0, size)` in one task; its head comes from a driver-side
+  *    parse of that range, and its count from a job on first use.
   *  - XLSX/XLS parsed on the driver: numbered there and parallelized into
   *    `defaultParallelism` slices.
   *  - Large XLSX: the sheet-layout scan counts the rows of each range.
@@ -50,9 +49,6 @@ import scala.jdk.CollectionConverters._
   * file, mirroring the reference's own bounded probes.
   */
 object FileReader {
-
-  /** Detected per-file read plan. */
-  final case class ReadPlan(encoding: String, delimiter: String, numColumns: Int)
 
   /** An upload as the ingest reads it: `rows` are the cells `_c0.._cN`
     * plus `_row_number` (1-based, file order), `head` its first
@@ -145,10 +141,10 @@ object FileReader {
     * multiLine: the reference parses with pandas, which honors newlines
     * embedded in quoted fields; Spark's line-split mode would shear such
     * records. */
-  private def csvOptions(plan: ReadPlan): Map[String, String] = Map(
+  private def csvOptions(encoding: String, delimiter: String): Map[String, String] = Map(
     "header" -> "false",
-    "sep" -> plan.delimiter,
-    "encoding" -> plan.encoding,
+    "sep" -> delimiter,
+    "encoding" -> encoding,
     "mode" -> "PERMISSIVE",
     "nullValue" -> "\u0000\u0000graft-null-sentinel",
     "emptyValue" -> "",
@@ -167,40 +163,36 @@ object FileReader {
     val first = scan(guess)
     val delimiter = sep.getOrElse(sniffDelimiter(path, first.encoding))
     val result = if (delimiter == guess) first else scan(delimiter)
-    val plan = ReadPlan(result.encoding, delimiter,
-      sniffColumnCount(path, result.encoding, delimiter))
-    result.layout match {
-      case Some(layout) =>
-        val opts = csvOptions(plan)
-        val tz = spark.conf.get("spark.sql.session.timeZone")
-        val n = plan.numColumns
-        val rdd = spark.sparkContext.parallelize(layout.ranges, layout.ranges.size)
-          .mapPartitions(_.flatMap { r =>
-            val in = RangeStream(path, r)
-            TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
-            parseRange(in, path, r, n, opts, tz)
-          })
-        val head = DelimitedScan.ByteRange(0, layout.headEnd, 1, math.min(layout.records, HeadRows))
-        new Upload(Bridge.internalCreateDataFrame(spark, rdd, rangedSchema(n)), {
-          val in = RangeStream(path, head)
-          try parseRange(in, path, head, n, opts, tz).map { r =>
-            Row.fromSeq((0 until n).map(c => r.getUTF8String(c).toString))
-          }.toIndexedSeq
-          finally in.close()
-        }, layout.records)
+    val opts = csvOptions(result.encoding, delimiter)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val n = sniffColumnCount(path, result.encoding, delimiter)
+    // Without a layout the whole file is one range whose records nobody
+    // counted, and its head is parsed until HeadRows records.
+    val (ranges, head) = result.layout match {
+      case Some(l) => (l.ranges, DelimitedScan.ByteRange(0, l.headEnd, 1, math.min(l.records, HeadRows)))
       case None =>
-        // One range: Spark's whole-file multiLine read, numbered by
-        // zipWithIndex, its head and count each fetched by a job. Ragged
-        // rows: missing tail cells become "" (one Project over all columns).
-        val df = spark.read.schema(allStringSchema(plan.numColumns))
-          .options(csvOptions(plan)).csv(path)
-        val raw = df.select(df.columns.map(c => coalesce(col(c), lit("")).as(c)): _*)
-        new Upload(withRowNumbers(raw), raw.limit(HeadRows).collect().toIndexedSeq, raw.count())
+        val whole = DelimitedScan.ByteRange(0, Files.size(Paths.get(path)), 1, Uncounted)
+        (Seq(whole), whole)
     }
+    val rdd = spark.sparkContext.parallelize(ranges, ranges.size)
+      .mapPartitions(_.flatMap { r =>
+        val in = RangeStream(path, r)
+        TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        parseRange(in, path, r, n, opts, tz)
+      })
+    new Upload(Bridge.internalCreateDataFrame(spark, rdd, rangedSchema(n)), {
+      val in = RangeStream(path, head)
+      try parseRange(in, path, head, n, opts, tz).take(HeadRows).map { r =>
+        Row.fromSeq((0 until n).map(c => r.getUTF8String(c).toString))
+      }.toIndexedSeq
+      finally in.close()
+    }, result.layout.fold(rdd.count())(_.records))
   }
 
-  /** The ranged read's rows: cells never null (as the fallback's
-    * `coalesce` leaves them), then the row number. */
+  /** The record count of a range the scan could not count. */
+  private val Uncounted = -1L
+
+  /** The delimited read's rows: cells never null, then the row number. */
   private def rangedSchema(n: Int): StructType =
     StructType(allStringSchema(n).fields.map(_.copy(nullable = false)) :+
       StructField(RowNumber, LongType, nullable = false))
@@ -209,7 +201,8 @@ object FileReader {
     * number them from `r.first`; a ragged row's missing tail cells become
     * "" in the same projection, so no plan above the read repeats that
     * per use. Throws when the range holds a different number of records
-    * than the scan counted, so a row is never silently renumbered. */
+    * than the scan counted (unless [[Uncounted]]), so a row is never
+    * silently renumbered. */
   private def parseRange(in: java.io.InputStream, path: String, r: DelimitedScan.ByteRange,
                          n: Int, opts: Map[String, String], tz: String): Iterator[InternalRow] = {
     val rows = Bridge.parseCsvStream(in, allStringSchema(n), new CSVOptions(opts, false, tz),
@@ -222,7 +215,7 @@ object FileReader {
     var i = 0L
     new Iterator[InternalRow] {
       def hasNext: Boolean = rows.hasNext || {
-        if (i != r.records) throw new IllegalStateException(
+        if (r.records != Uncounted && i != r.records) throw new IllegalStateException(
           s"$path bytes [${r.start}, ${r.end}) hold $i records; the scan counted ${r.records}")
         false
       }
@@ -256,14 +249,18 @@ object FileReader {
     override def close(): Unit = file.close()
   }
 
-  /** S1 CSV scan with encoding cascade. */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    readDelimited(spark, path, Some(",")).rows.drop(RowNumber)
-
-  /** S4 TXT scan with delimiter sniffing (always utf-8-with-replacement in
-    * the reference; Spark's csv reader replaces malformed bytes already). */
-  def readTxt(spark: SparkSession, path: String): DataFrame =
-    readDelimited(spark, path, None).rows.drop(RowNumber)
+  /** Driver-parsed row grid → numbered upload, parallelized into
+    * `defaultParallelism` slices (parallelize keeps element order). */
+  private def gridUpload(spark: SparkSession,
+                         rows: IndexedSeq[IndexedSeq[String]]): Upload = {
+    val n = if (rows.isEmpty) 0 else rows.map(_.length).max
+    val numbered = rows.iterator.zipWithIndex
+      .map { case (r, i) => Row.fromSeq(r.padTo(n, "") :+ (i + 1L)) }.toVector
+    val sc = spark.sparkContext
+    val slices = math.max(1, math.min(sc.defaultParallelism, rows.size))
+    new Upload(spark.createDataFrame(sc.parallelize(numbered, slices), numberedSchema(n)),
+      rows.take(HeadRows).map(r => Row.fromSeq(r.padTo(n, ""))), rows.size.toLong)
+  }
 
   /** S2 XLSX scan — hand-rolled zip+XML bridge (no POI in this image).
     * XLSX is a zip holding sharedStrings.xml + worksheets/sheet1.xml,
@@ -293,27 +290,9 @@ object FileReader {
     *    read on a multi-node cluster (defaults to java.io.tmpdir, correct
     *    for local mode).
     *
-    * Numbers render like pandas dtype=str: integral floats lose the
-    * trailing ".0". */
-  def readXlsx(spark: SparkSession, path: String): DataFrame =
-    xlsxUpload(spark, path).rows.drop(RowNumber)
-
-  /** Driver-parsed row grid → numbered upload, parallelized into
-    * `defaultParallelism` slices (parallelize keeps element order). */
-  private def gridUpload(spark: SparkSession,
-                         rows: IndexedSeq[IndexedSeq[String]]): Upload = {
-    val n = if (rows.isEmpty) 0 else rows.map(_.length).max
-    val numbered = rows.iterator.zipWithIndex
-      .map { case (r, i) => Row.fromSeq(r.padTo(n, "") :+ (i + 1L)) }.toVector
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(sc.defaultParallelism, rows.size))
-    new Upload(spark.createDataFrame(sc.parallelize(numbered, slices), numberedSchema(n)),
-      rows.take(HeadRows).map(r => Row.fromSeq(r.padTo(n, ""))), rows.size.toLong)
-  }
-
-  /** Dispatch between the driver-parsed and distributed XLSX paths on the
-    * worksheet's decompressed size (falls back to compressed×8 when the
-    * central directory omits it). */
+    * The path is picked on the worksheet's decompressed size (compressed×8
+    * when the central directory omits it). Numbers render like pandas
+    * dtype=str: integral floats lose the trailing ".0". */
   private def xlsxUpload(spark: SparkSession, path: String): Upload = {
     val threshold = spark.conf.getOption("graft.xlsx.distributedThresholdBytes")
       .map(_.toLong).getOrElse(8L << 20)
@@ -426,7 +405,7 @@ object FileReader {
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
   /** Delete every tracked XLSX scratch file — call only once no DataFrame
-    * returned by [[parseFile]]/[[readXlsx]] will be evaluated again (e.g.
+    * returned by [[readUpload]]/[[parseFile]] will be evaluated again (e.g.
     * after the ingest's checkpoint + store landing). Without this, each
     * 100 MB ceiling ingest parks ~1 GB of decompressed XML on disk until
     * JVM exit. */
@@ -704,9 +683,6 @@ object FileReader {
 
   /** S3 legacy XLS scan via the BIFF8 subset reader; files that are really
     * zip containers (xlsx renamed .xls) fall through to the XLSX bridge. */
-  def readXls(spark: SparkSession, path: String): DataFrame =
-    xlsUpload(spark, path).rows.drop(RowNumber)
-
   private def xlsUpload(spark: SparkSession, path: String): Upload = {
     val head = Files.newInputStream(Paths.get(path))
     val magic = try { val b = new Array[Byte](4); head.read(b); b } finally head.close()

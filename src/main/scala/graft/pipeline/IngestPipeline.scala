@@ -125,9 +125,8 @@ object IngestPipeline {
     * Jobs per file: the checkpoint (which also counts valid and invalid
     * rows and keeps the first error strings), the dedup shuffle, and the
     * data write (which also counts the rows it lands). The reader hands
-    * over the head the header detection reads, with no job except on its
-    * one-range fallback (see [[FileReader]]); the store's metadata commits
-    * launch none. */
+    * over the head the header detection reads, parsed on the driver (see
+    * [[FileReader]]); the store's metadata commits launch no job. */
   def ingestFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                  path: String, versionLabel: String,
                  effectiveDate: java.sql.Date, variant: Option[String] = None,
@@ -195,7 +194,8 @@ object IngestPipeline {
     * warnings vs the previous completed version, sampled type warnings.
     * On a ranged CSV/TXT or a driver-parsed XLSX/XLS it launches no job:
     * the head and the count come with the upload, and the type sample is
-    * evaluated on the driver ([[sampleTypeWarnings]]). */
+    * evaluated on the driver ([[sampleTypeWarnings]]). An unranged CSV/TXT
+    * costs one job, its count. */
   def validateFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                    path: String, versionLabel: String,
                    variant: Option[String] = None): ValidationReport = {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the [[AnchorBench]] contract (judge directive r16 item 3): the
+/** Pins the contract of [[Bench.anchors]]: the
   * anchor set is a FROZEN, append-only series — cross-round fresh-JVM
   * comparability dies the moment an entry is renamed or dropped — and
   * every anchor must resolve in the registry so the fresh-JVM run can
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AnchorBenchSpec extends AnyFunSuite {
 
   /** The r16 founding membership. Entries may be APPENDED to
-    * AnchorBench.anchors in later rounds; every name below must remain
+    * Bench.anchors in later rounds; every name below must remain
     * present verbatim forever. */
   private val r16Frozen = Seq(
     "q_d8_group_category", "q_j1_lateral_top1", "q_agg1_pricing_summary",
@@ -31,20 +31,20 @@ class AnchorBenchSpec extends AnyFunSuite {
     "q_llm_minhash_neardup", "q_llm_ann_ivfpq_rerank")
 
   test("r16 frozen membership is intact (append-only contract)") {
-    val missing = r16Frozen.filterNot(AnchorBench.anchors.contains)
+    val missing = r16Frozen.filterNot(Bench.anchors.contains)
     assert(missing.isEmpty,
       s"anchor series broken - renamed/removed: ${missing.mkString(", ")}")
     assert(r16Frozen.size == 43)
   }
 
   test("every anchor is a registered query, no duplicates") {
-    val unknown = AnchorBench.anchors.filterNot(SparkEntry.queries.contains)
+    val unknown = Bench.anchors.filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"unknown anchors: ${unknown.mkString(", ")}")
-    assert(AnchorBench.anchors.distinct.size == AnchorBench.anchors.size)
+    assert(Bench.anchors.distinct.size == Bench.anchors.size)
   }
 
   test("anchor compact stdout keys stay unique") {
-    val keys = AnchorBench.anchors.map(Bench.benchKey)
+    val keys = Bench.anchors.map(Bench.benchKey)
     assert(keys.distinct.size == keys.size,
       s"colliding keys: ${keys.diff(keys.distinct).mkString(", ")}")
   }

@@ -18,7 +18,7 @@ class FileReaderSpec extends SparkSpecBase {
 
   test("csv with quoted commas stays one field (test_file_parser.py:41-55)") {
     val p = tmp(".csv", "a,\"b, with comma\",c\n1,2,3\n")
-    val rows = FileReader.readCsv(spark, p).collect().map(_.toSeq)
+    val rows = FileReader.parseFile(spark, p)._1.collect().map(_.toSeq)
     assert(rows(0) == Seq("a", "b, with comma", "c"))
     assert(rows(1) == Seq("1", "2", "3"))
   }
@@ -27,7 +27,7 @@ class FileReaderSpec extends SparkSpecBase {
     val p = java.nio.file.Files.createTempFile("graft-spec", ".csv")
     java.nio.file.Files.writeString(p,
       "a,b\n\"line1\nline2\",x\nplain,y\n")
-    val rows = FileReader.readCsv(spark, p.toString).collect()
+    val rows = FileReader.parseFile(spark, p.toString)._1.collect()
     assert(rows.length == 3)
     assert(rows(1).getString(0) == "line1\nline2")
     assert(rows(1).getString(1) == "x")
@@ -36,7 +36,7 @@ class FileReaderSpec extends SparkSpecBase {
 
   test("txt tab sniffing (test_file_parser.py:57-71)") {
     val p = tmp(".txt", "A\tB\tC\n1\t2\t3\n")
-    val rows = FileReader.readTxt(spark, p).collect().map(_.toSeq)
+    val rows = FileReader.parseFile(spark, p)._1.collect().map(_.toSeq)
     assert(rows(0) == Seq("A", "B", "C"))
     assert(rows(1) == Seq("1", "2", "3"))
   }
@@ -49,16 +49,16 @@ class FileReaderSpec extends SparkSpecBase {
 
   test("all strings + leading zeros preserved (test_file_parser.py:90-107)") {
     val p = tmp(".csv", "code,val\n00100,007\n01999,042\n")
-    val rows = FileReader.readCsv(spark, p).collect().map(_.toSeq)
+    val rows = FileReader.parseFile(spark, p)._1.collect().map(_.toSeq)
     assert(rows(1) == Seq("00100", "007"))
     assert(rows(2) == Seq("01999", "042"))
-    assert(FileReader.readCsv(spark, p).schema.fields.forall(
+    assert(FileReader.parseFile(spark, p)._1.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.StringType))
   }
 
   test("empty cells stay empty string, not null (test_file_parser.py:109-125)") {
     val p = tmp(".csv", "a,,c\n,,\n")
-    val rows = FileReader.readCsv(spark, p).collect().map(_.toSeq)
+    val rows = FileReader.parseFile(spark, p)._1.collect().map(_.toSeq)
     assert(rows(0) == Seq("a", "", "c"))
     assert(rows(1) == Seq("", "", ""))
   }
@@ -77,7 +77,7 @@ class FileReaderSpec extends SparkSpecBase {
   test("encoding cascade: latin-1 bytes fall back from utf-8 (file_parser.py:79-101)") {
     val p = tmp(".csv", "café,x\n", StandardCharsets.ISO_8859_1)
     assert(FileReader.detectEncoding(p) == "ISO-8859-1")
-    val rows = FileReader.readCsv(spark, p).collect().map(_.toSeq)
+    val rows = FileReader.parseFile(spark, p)._1.collect().map(_.toSeq)
     assert(rows(0) == Seq("café", "x"))
   }
 
@@ -101,7 +101,7 @@ class FileReaderSpec extends SparkSpecBase {
 
   test("row numbers are stable 1-based file order (P1/P4)") {
     val p = tmp(".csv", (1 to 100).map(i => s"r$i,$i").mkString("\n"))
-    val df = FileReader.withRowNumbers(FileReader.readCsv(spark, p))
+    val df = FileReader.withRowNumbers(FileReader.parseFile(spark, p)._1)
     val got = df.collect().map(r => (r.getString(0), r.getLong(2)))
     assert(got.toSeq == (1 to 100).map(i => (s"r$i", i.toLong)))
   }
@@ -125,7 +125,7 @@ class FileReaderSpec extends SparkSpecBase {
     spark.conf.set("graft.xlsx.distributedThresholdBytes", "0")
     spark.conf.set("graft.xlsx.chunkBytes", "4096")
     try {
-      val raw = FileReader.readXlsx(spark, p)
+      val raw = FileReader.parseFile(spark, p)._1
       assert(raw.rdd.getNumPartitions > 1) // the ranged, distributed parse
       val got = FileReader.withRowNumbers(raw).collect()
       val expected = FileReader.readXlsxRows(p)

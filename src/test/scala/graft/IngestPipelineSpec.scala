@@ -213,6 +213,17 @@ class IngestPipelineSpec extends SparkSpecBase {
     assert(jobsIn(validate()) == before)
   }
 
+  test("validating a CSV whose record boundaries the scan cannot prove launches one job: the count") {
+    val store = newStore()
+    // the blank line sends the upload down the one-range parse
+    val path = csv("HCPCS,OPPS CAP\n99213,120.50\n\n99214,140.00\n")
+    def validate() = IngestPipeline.validateFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1")
+    validate() // warm
+    var report: IngestPipeline.ValidationReport = null
+    assert(jobsIn { report = validate() } == 1)
+    assert(report.valid && report.dataRows == 2 && report.headerRowIndex.contains(0))
+  }
+
   /** Jobs of one validate + ingest of `path` (after a warm-up pair in
     * another store), and the task count of every checkpoint stage. */
   private def jobsPerUpload(source: String, path: String,

@@ -64,7 +64,7 @@ class SyntheticCeilingSpec extends SparkSpecBase {
     // duplicate-key rows repeat the prior key pair
     assert(rows(101).take(2) == rows(100).take(2))
     // the DataFrame wrapper slices sanely and keeps row order
-    val df = FileReader.readXlsx(spark, p)
+    val df = FileReader.parseFile(spark, p)._1
     assert(df.count() == 5002)
   }
 
@@ -77,7 +77,7 @@ class SyntheticCeilingSpec extends SparkSpecBase {
     spark.conf.set("graft.xlsx.distributedThresholdBytes", "0")
     spark.conf.set("graft.xlsx.chunkBytes", "65536") // force ~dozens of chunks
     try {
-      val df = FileReader.readXlsx(spark, p)
+      val df = FileReader.parseFile(spark, p)._1
       val n = expected.map(_.length).max
       val got = df.collect().map(_.toSeq.map(_.toString))
       assert(got.length == expected.length)
@@ -89,7 +89,7 @@ class SyntheticCeilingSpec extends SparkSpecBase {
       val px = s"$dir/renamed.xls"
       java.nio.file.Files.copy(java.nio.file.Paths.get(p),
         java.nio.file.Paths.get(px))
-      assert(FileReader.readXls(spark, px).count() == expected.length)
+      assert(FileReader.parseFile(spark, px)._1.count() == expected.length)
     } finally {
       spark.conf.unset("graft.xlsx.distributedThresholdBytes")
       spark.conf.unset("graft.xlsx.chunkBytes")

@@ -45,7 +45,7 @@ class XlsxScanSpec extends SparkSpecBase {
     spark.conf.set("graft.xlsx.chunkBytes", chunkBytes)
     try {
       val n = if (driver.isEmpty) 0 else driver.map(_.length).max
-      val dist = FileReader.readXlsx(spark, p).collect()
+      val dist = FileReader.parseFile(spark, p)._1.collect()
         .map(_.toSeq.map(_.toString)).toSeq
       (driver.map(_.padTo(n, "")), dist)
     } finally {
@@ -84,7 +84,7 @@ class XlsxScanSpec extends SparkSpecBase {
     spark.conf.set("graft.xlsx.distributedThresholdBytes", "0")
     spark.conf.set("graft.xlsx.scratchDir", alt.toString)
     try {
-      val rows = FileReader.readXlsx(spark, p).collect()
+      val rows = FileReader.parseFile(spark, p)._1.collect()
         .map(_.toSeq.map(_.toString)).toSeq
       assert(rows == Seq(Seq("x", "1")))
       val scratchFiles = alt.toFile.listFiles()
