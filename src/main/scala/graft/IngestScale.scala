@@ -31,9 +31,10 @@ import scala.jdk.CollectionConverters._
   * tasks, `outside_jobs_s` (the ingest's wall time outside every Spark job:
   * hashing, the reader's driver-side scan, planning and metadata commits),
   * peak driver heap over the ingest, and the `IngestResult` counters. Two
-  * driver-side steps every validate and ingest repeats are timed alone
-  * beforehand, to attribute `outside_jobs_s`: the upload's SHA-256
-  * (`hash_s`) and `FileReader.readUpload` (`read_s`, `read_jobs`).
+  * driver-side steps are timed alone beforehand, to attribute
+  * `outside_jobs_s`: the upload's SHA-256 (`hash_s`), which validate and
+  * ingest both take, and `FileReader.readUpload` (`read_s`, `read_jobs`),
+  * which validate takes and the ingest that follows it reuses.
   * Findings recorded in PLANS.md ("100 MB ingestion exercise"). Run:
   * `sbt "runMain graft.IngestScale [/tmp/outdir] [csv,xlsx,xls]"`. */
 object IngestScale {

@@ -51,12 +51,24 @@ import scala.jdk.CollectionConverters._
 object FileReader {
 
   /** An upload as the ingest reads it: `rows` are the cells `_c0.._cN`
-    * plus `_row_number` (1-based, file order), `head` its first
-    * [[HeadRows]] rows without the row number, and `count` its row count.
-    * Both are computed at most once, on first use. */
-  final class Upload(val rows: DataFrame, head0: => IndexedSeq[Row], count0: => Long) {
+    * plus `_row_number` (1-based, file order), split into `partitions`
+    * partitions; `head` its first [[HeadRows]] rows without the row
+    * number, and `count` its row count. Both are computed at most once, on
+    * first use. An upload read through a distributed-XLSX scratch file
+    * owns it: `rows` reads it on every evaluation, and [[release]] deletes
+    * it. */
+  final class Upload(val rows: DataFrame, val partitions: Int, head0: => IndexedSeq[Row],
+                     count0: => Long, scratch: Option[java.nio.file.Path] = None) {
     lazy val head: IndexedSeq[Row] = head0
     lazy val count: Long = count0
+
+    /** False once its scratch file is gone ([[releaseScratch]] sweeps every
+      * one): `rows` can no longer be evaluated. */
+    def readable: Boolean = scratch.forall(Files.exists(_))
+
+    /** Delete this upload's scratch file, if it has one. Call once nothing
+      * evaluates `rows` again. */
+    def release(): Unit = scratch.foreach { p => scratchRegistry.remove(p); deleteScratch(p) }
   }
 
   val RowNumber = "_row_number"
@@ -180,7 +192,7 @@ object FileReader {
         TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
         parseRange(in, path, r, n, opts, tz)
       })
-    new Upload(Bridge.internalCreateDataFrame(spark, rdd, rangedSchema(n)), {
+    new Upload(Bridge.internalCreateDataFrame(spark, rdd, rangedSchema(n)), ranges.size, {
       val in = RangeStream(path, head)
       try parseRange(in, path, head, n, opts, tz).take(HeadRows).map { r =>
         Row.fromSeq((0 until n).map(c => r.getUTF8String(c).toString))
@@ -258,7 +270,7 @@ object FileReader {
       .map { case (r, i) => Row.fromSeq(r.padTo(n, "") :+ (i + 1L)) }.toVector
     val sc = spark.sparkContext
     val slices = math.max(1, math.min(sc.defaultParallelism, rows.size))
-    new Upload(spark.createDataFrame(sc.parallelize(numbered, slices), numberedSchema(n)),
+    new Upload(spark.createDataFrame(sc.parallelize(numbered, slices), numberedSchema(n)), slices,
       rows.take(HeadRows).map(r => Row.fromSeq(r.padTo(n, ""))), rows.size.toLong)
   }
 
@@ -340,12 +352,14 @@ object FileReader {
       try in.transferTo(out) finally { in.close(); out.close() }
       (sh, sc)
     } finally zip.close()
-    scanSheetLayout(scratch, chunkBytes) match {
+    // Until the upload that owns it is built, a throw drops the scratch.
+    def dropScratch(): Unit = { scratchRegistry.remove(scratch); deleteScratch(scratch) }
+    try scanSheetLayout(scratch, chunkBytes) match {
       case None =>
-        Files.delete(scratch)
+        dropScratch()
         gridUpload(spark, readXlsxRows(path)) // structure not recognized
       case Some(SheetLayout(_, ranges)) if ranges.isEmpty =>
-        Files.delete(scratch)
+        dropScratch()
         gridUpload(spark, IndexedSeq.empty)
       case Some(SheetLayout(openTag, ranges)) =>
         val sc = spark.sparkContext
@@ -388,32 +402,37 @@ object FileReader {
         val rdd = parsed.flatMap { case (first, rows) =>
           rows.iterator.zipWithIndex.map { case (r, i) => Row.fromSeq(r.padTo(n, "") :+ (first + i)) }
         }
-        new Upload(spark.createDataFrame(rdd, numberedSchema(n)),
+        new Upload(spark.createDataFrame(rdd, numberedSchema(n)), ranges.size,
           widths.iterator.flatMap(_._2).take(HeadRows).map(r => Row.fromSeq(r.padTo(n, ""))).toIndexedSeq,
-          ranges.map(_.records).sum)
-    }
+          ranges.map(_.records).sum, Some(scratch))
+    } catch { case e: Throwable => dropScratch(); throw e }
   }
 
-  /** Scratch files created by the distributed XLSX path. A scratch file
-    * must outlive every re-evaluation of the DataFrame built over it, so
-    * deletion is the CALLER's lifecycle decision: the ingest pipeline
-    * releases after its eager localCheckpoint materializes the grid
-    * (deleteOnExit remains the backstop for ad-hoc readers). Ingests run
-    * one file at a time (the reference's upload flow), so releaseScratch
-    * deleting every tracked file is safe. */
+  /** Scratch files created by the distributed XLSX path and not yet
+    * deleted. A scratch file must outlive every evaluation of the
+    * DataFrame built over it, so deletion is the owner's lifecycle
+    * decision: the [[Upload]] that reads it deletes it on
+    * [[Upload.release]] — the ingest pipeline releases an upload once its
+    * data write (the one job that reads the rows) is done, or when a newer
+    * validate pushes it out of the pipeline's upload cache. The registry
+    * is the sweep for readers that never see their [[Upload]]
+    * ([[parseFile]]); deleteOnExit remains the last backstop. */
   private val scratchRegistry =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
+  private def deleteScratch(p: java.nio.file.Path): Unit =
+    try Files.deleteIfExists(p): Unit
+    catch { case _: java.io.IOException => } // backstop: deleteOnExit
+
   /** Delete every tracked XLSX scratch file — call only once no DataFrame
-    * returned by [[readUpload]]/[[parseFile]] will be evaluated again (e.g.
-    * after the ingest's checkpoint + store landing). Without this, each
-    * 100 MB ceiling ingest parks ~1 GB of decompressed XML on disk until
-    * JVM exit. */
+    * returned by [[readUpload]]/[[parseFile]] will be evaluated again (an
+    * [[Upload]] whose file is swept is no longer [[Upload.readable]]).
+    * Without this, each 100 MB ceiling read parks ~1 GB of decompressed
+    * XML on disk until JVM exit. */
   def releaseScratch(): Unit = {
     var p = scratchRegistry.poll()
     while (p != null) {
-      try Files.deleteIfExists(p)
-      catch { case _: java.io.IOException => } // backstop: deleteOnExit
+      deleteScratch(p)
       p = scratchRegistry.poll()
     }
   }

@@ -109,22 +109,24 @@ object Ingestor {
     (unique.unionByName(df.filter(anyNull)), dups)
   }
 
-  /** First-wins dedup of rows whose unique keys are all set: one
-    * `row_number` window per key, ordered by `orderCol`; rank 1 survives.
-    * Returns (unique, duplicates). A caller whose rows all carry their keys
-    * (the valid side of [[validateSplit]]) calls this directly, so its plan
-    * has no null-key branch to scan.
+  /** First-wins dedup of rows whose unique keys are all set: [[dupRank]]
+    * over the keys; rank 1 survives. Returns (unique, duplicates).
     *
     * Scale note: partitionBy(uniqueKeys) distributes by key cardinality —
     * at 100 TB the key space (e.g. code pairs) is large, so partitions stay
     * balanced; no global sort, no collect. */
   def firstWins(keyed: DataFrame, uniqueKeys: Seq[String],
                 orderCol: String = "_row_number"): (DataFrame, DataFrame) = {
-    val w = Window.partitionBy(uniqueKeys.map(col): _*).orderBy(col(orderCol))
-    val ranked = keyed.withColumn("_dup_rank", row_number().over(w))
+    val ranked = dupRank(keyed, uniqueKeys.map(col), orderCol)
     (ranked.filter(col("_dup_rank") === 1).drop("_dup_rank"),
       ranked.filter(col("_dup_rank") > 1).drop("_dup_rank"))
   }
+
+  /** The first-wins rank, as `_dup_rank`: one `row_number` window per
+    * group of `groups`, ordered by `orderCol`. */
+  def dupRank(df: DataFrame, groups: Seq[Column], orderCol: String = "_row_number"): DataFrame =
+    df.withColumn("_dup_rank",
+      row_number().over(Window.partitionBy(groups: _*).orderBy(col(orderCol))))
 
   /** D3 column statistics: per-column null count / null %, and up to 3
     * deterministic sample values (reference: ingestor.py:576-582 collects

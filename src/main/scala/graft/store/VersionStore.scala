@@ -144,13 +144,25 @@ final class VersionStore(val spark: SparkSession, val root: String) {
     * replaces it — a replay after a crash leaves no extra rows — and never
     * touches the version's other parts. The version's directory is the
     * hive-style `data_version_id=<id>` partition, so the layout (and the
-    * partition-pruned read path) is that of a `partitionBy` write. */
-  def writeData(table: String, versionId: Long, df: DataFrame, part: Int = 1): Long = {
+    * partition-pruned read path) is that of a `partitionBy` write.
+    *
+    * With `dropEmpty`, a write that counted no rows lands nothing: its
+    * staging directory (an empty write still stages one parquet file) is
+    * deleted before any rename, so the version's directory is not created.
+    * An ingest whose write is also the job that finds out whether any row
+    * is valid writes its first part this way. */
+  def writeData(table: String, versionId: Long, df: DataFrame, part: Int = 1,
+                dropEmpty: Boolean = false): Long = {
     val staging = new Path(s"$dataDir/$table/.staging-v$versionId-p$part")
     val dest = versionDir(table, versionId)
     val written = Observation()
     df.observe(written, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val rows = written.get("rows").asInstanceOf[Long]
+    if (rows == 0 && dropEmpty) {
+      fs.delete(staging, true)
+      return 0L
+    }
     fs.mkdirs(dest)
     fs.globStatus(new Path(dest, s"p$part-*.parquet"))
       .foreach(st => fs.delete(st.getPath, false))
@@ -160,7 +172,7 @@ final class VersionStore(val spark: SparkSession, val root: String) {
         if (!fs.rename(p, target)) throw new IOException(s"cannot rename $p to $target")
       }
     fs.delete(staging, true)
-    written.get("rows").asInstanceOf[Long]
+    rows
   }
 
   /** Part already on the ledger? (The exactly-once probe.) */

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * Expression conversions a custom-Expression library needs (the standard
   * pattern for third-party Catalyst extensions), runtime function
   * registration, building a DataFrame straight from internal rows,
-  * releasing an RDD's cached blocks, Spark's CSV stream parser, the
+  * Spark's CSV stream parser, the
   * bounded top-k aggregate, and waiting for the listener bus. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -33,12 +33,6 @@ object Bridge {
                               schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
-
-  /** Drop an RDD's cached blocks through the SparkContext — what
-    * `RDD.unpersist` does, without its warning that a locally checkpointed
-    * RDD cannot be recomputed (for a caller that never reads it again). */
-  def unpersistRDD(rdd: RDD[_]): Unit =
-    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Parse a CSV byte stream the way `spark.read.csv` parses one file with
     * `multiLine` on: Spark's own tokenizer and row converter over `options`.

@@ -104,6 +104,12 @@ class IngestPipelineSpec extends SparkSpecBase {
       assert((r1.status, r1.processed, r1.inserted, r1.invalid, r1.duplicates, r1.errors) ==
         ("failed", 0L, 0L, 0L, 0L, Seq.empty))
       assert(!Files.exists(dataDir(r1.versionId)))
+      // the write ran and staged an empty file; it was dropped, not renamed
+      val tableDir = Paths.get(root, "data", "cms.pfs_opps_cap")
+      val staged = if (!Files.exists(tableDir)) Nil
+        else Files.list(tableDir).iterator.asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(".staging-")).toList
+      assert(staged.isEmpty, staged)
 
       val allInvalid = csv("HCPCS,OPPS CAP\n,1.00\n,2.00\n,3.00\n")
       val r2 = IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", allInvalid, "2026-Q2", d)
@@ -134,11 +140,27 @@ class IngestPipelineSpec extends SparkSpecBase {
     Files.writeString(Paths.get(root, "data", "cms.pfs_opps_cap"), "not a directory")
     val path = csv("HCPCS,OPPS CAP\n99213,120.50\n99214,140.00\n")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[Exception] {
+    val e = intercept[Exception] {
       IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1", d)
     }
     val left = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(left.isEmpty, s"ingest left persistent RDDs $left")
+    // the version the write belonged to is failed, not left processing
+    val Seq(v) = store.metadata.versions
+    assert(v.status == "failed", v)
+    assert(v.errorMessage.contains(e.getMessage.linesIterator.next()), v)
+  }
+
+  test("ingest rejects an upload over the size cap before reading it, creating no version") {
+    val store = newStore()
+    val big = Files.createTempFile("graft-ip", ".csv")
+    val raf = new java.io.RandomAccessFile(big.toFile, "rw")
+    try raf.setLength(graft.config.Catalog.Limits.maxFileSizeBytes + 1) finally raf.close()
+    val e = intercept[IllegalArgumentException] {
+      IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", big.toString, "2026-Q1", d)
+    }
+    assert(e.getMessage == "File size (100.0 MB) exceeds maximum (100 MB)")
+    assert(store.metadata.versions.isEmpty)
   }
 
   test("type warnings come in source-column order and name the first bad row") {
@@ -225,7 +247,7 @@ class IngestPipelineSpec extends SparkSpecBase {
   }
 
   /** Jobs of one validate + ingest of `path` (after a warm-up pair in
-    * another store), and the task count of every checkpoint stage. */
+    * another store), and the task count of every stage the ingest ran. */
   private def jobsPerUpload(source: String, path: String,
                             variant: Option[String]): (Int, Int, Seq[Int]) = {
     def run(store: VersionStore) = (
@@ -234,15 +256,15 @@ class IngestPipelineSpec extends SparkSpecBase {
     val (warmV, warmI) = run(newStore())
     warmV(); warmI()
     val (validate, ingest) = run(newStore())
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stages.add((e.stageInfo.name + "\n" + e.stageInfo.details, e.stageInfo.numTasks)): Unit
+        stages.add(e.stageInfo.numTasks): Unit
     }
     val v = jobsIn(validate())
     spark.sparkContext.addSparkListener(listener)
     val i = try jobsIn(ingest()) finally spark.sparkContext.removeSparkListener(listener)
-    (v, i, stages.asScala.toSeq.collect { case (site, n) if site.contains("heckpoint") => n })
+    (v, i, stages.asScala.toSeq)
   }
 
   test("uploads come numbered, counted and with their head: no job reads them for it") {
@@ -252,7 +274,7 @@ class IngestPipelineSpec extends SparkSpecBase {
       f"${10000 + i / 97}%05d,${20000 + i % 97997}%05d,${i % 3},20240101,*")
     val big = csv("NCCI PTP edits,,,,\nColumn 1,Column 2,Modifier,Effective Date,Deletion Date\n" +
       rows.mkString("\n") + "\n")
-    val (csvValidate, csvIngest, csvCheckpoints) = jobsPerUpload("NCCI_PTP", big, Some("PRACTITIONER"))
+    val (csvValidate, csvIngest, csvStages) = jobsPerUpload("NCCI_PTP", big, Some("PRACTITIONER"))
     val xlsx = s"${Files.createTempDirectory("graft-ip-jobs")}/ptp.xlsx"
     graft.io.SyntheticXlsx.writeNcciPtp(xlsx, nRows = 2000)
     val (xlsxValidate, xlsxIngest, _) = jobsPerUpload("NCCI_PTP", xlsx, Some("PRACTITIONER"))
@@ -263,13 +285,102 @@ class IngestPipelineSpec extends SparkSpecBase {
     val xlsValidate = jobsIn(IngestPipeline.validateFile(spark, store, "NCCI_PTP", xls,
       "2026-Q1", Some("PRACTITIONER")))
     // validate: none (the head and the count come with the upload, and the
-    // type sample is evaluated on the driver); ingest: the checkpoint
-    // (which also observes the errors of the XLSX's planted missing keys),
-    // the dedup shuffle and the write.
-    assert((csvValidate, csvIngest) == (0, 3))
-    assert((xlsxValidate, xlsxIngest) == (0, 3))
+    // type sample is evaluated on the driver); ingest: the one write, as
+    // its dedup shuffle's map job and its result job (which also observes
+    // the errors of the XLSX's planted missing keys).
+    assert((csvValidate, csvIngest) == (0, 2))
+    assert((xlsxValidate, xlsxIngest) == (0, 2))
     assert(xlsValidate == 0)
-    assert(csvCheckpoints.nonEmpty && csvCheckpoints.forall(_ > 1), csvCheckpoints)
+    // both stages of the write run as wide as the upload is split
+    val parts = graft.io.FileReader.readUpload(spark, big).partitions
+    assert(parts == 4 && csvStages == Seq(parts, parts), csvStages)
+  }
+
+  test("the write observes the ingest's counts past the dedup shuffle") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object Plans extends AdaptiveSparkPlanHelper
+    val path = csv("HCPCS,OPPS CAP\n99213,120.50\n,90.00\n99214,140.00\n99213,999.99\n")
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = runs.add(qe): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val r = try IngestPipeline.ingestFile(spark, newStore(), "PFS_OPPS_CAP", path, "2026-Q1", d)
+      finally {
+        org.apache.spark.SpecBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert((r.inserted, r.invalid, r.duplicates) == (2L, 1L, 1L))
+    val observing = runs.asScala.toSeq.map(qe =>
+      Plans.collect(qe.executedPlan) { case m: CollectMetricsExec => m }).filter(_.nonEmpty)
+    // one action: the write, observing the split and the rows it lands
+    assert(observing.map(_.size) == Seq(2), observing)
+    observing.flatten.foreach(m =>
+      assert(Plans.find(m)(_.isInstanceOf[ShuffleExchangeLike]).nonEmpty, m))
+  }
+
+  test("validate then ingest of the same bytes reads the upload once") {
+    val cache = IngestPipeline.UploadCache
+    val path = csv("HCPCS,OPPS CAP\n99213,120.50\n,90.00\n99214,140.00\n99213,999.99\n")
+    def ingest(store: VersionStore) =
+      IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1", d)
+    def validate(store: VersionStore) =
+      IngestPipeline.validateFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1")
+    val h0 = cache.hits
+    val s1 = newStore()
+    validate(s1)
+    val hit = ingest(s1)
+    assert(cache.hits == h0 + 1)
+    val miss = ingest(newStore()) // the entry was taken
+    assert(cache.hits == h0 + 1)
+    assert(hit == miss)
+    // different bytes under the same path: a different hash, so a miss
+    val s3 = newStore()
+    validate(s3)
+    Files.writeString(Paths.get(path), "HCPCS,OPPS CAP\n99215,1.00\n")
+    val changed = ingest(s3)
+    assert(cache.hits == h0 + 1)
+    assert((changed.status, changed.inserted, changed.invalid) == ("completed", 1L, 0L))
+  }
+
+  test("the cached distributed-XLSX upload owns its scratch until it is taken or pushed out") {
+    val scratch = Files.createTempDirectory("graft-scratch")
+    def scratchFiles = Files.list(scratch).iterator.asScala.toList
+    val dir = Files.createTempDirectory("graft-ip-xlsx").toString
+    val (a, b) = (s"$dir/a.xlsx", s"$dir/b.xlsx")
+    graft.io.SyntheticXlsx.writeNcciPtp(a, nRows = 2000)
+    graft.io.SyntheticXlsx.writeNcciPtp(b, nRows = 1500)
+    spark.conf.set("graft.xlsx.distributedThresholdBytes", "0")
+    spark.conf.set("graft.xlsx.chunkBytes", "65536")
+    spark.conf.set("graft.xlsx.scratchDir", scratch.toString)
+    try {
+      def validate(store: VersionStore, p: String) =
+        IngestPipeline.validateFile(spark, store, "NCCI_PTP", p, "2026-Q1", Some("PRACTITIONER"))
+      def ingest(store: VersionStore, p: String) =
+        IngestPipeline.ingestFile(spark, store, "NCCI_PTP", p, "2026-Q1", d, Some("PRACTITIONER"))
+      val h0 = IngestPipeline.UploadCache.hits
+      val s1 = newStore()
+      assert(validate(s1, a).valid)
+      assert(scratchFiles.size == 1)
+      val hit = ingest(s1, a)
+      assert(IngestPipeline.UploadCache.hits == h0 + 1)
+      assert(scratchFiles.isEmpty, scratchFiles)
+      assert(hit == ingest(newStore(), a)) // the same result without the hit
+      assert(scratchFiles.isEmpty, scratchFiles)
+      // a validate pushes out an entry that was never taken
+      validate(newStore(), a)
+      validate(newStore(), b)
+      assert(scratchFiles.size == 1)
+      validate(newStore(), csv("HCPCS,OPPS CAP\n99213,120.50\n"))
+      assert(scratchFiles.isEmpty, scratchFiles)
+    } finally {
+      spark.conf.unset("graft.xlsx.distributedThresholdBytes")
+      spark.conf.unset("graft.xlsx.chunkBytes")
+      spark.conf.unset("graft.xlsx.scratchDir")
+    }
   }
 
   /** The errors an ingest reports for a PTP CSV: its first
