@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *    (bag-of-words over the observed 31-token vocabulary), NOT mutated
   *    replicas — appending a replica token would plant factor-sized
   *    near-duplicate families and the pair-output growth would masquerade
-  *    as a scaling cliff (ScaleSmoke covers the planted-family shape
-  *    separately). Token count / lang / source are inherited from the
+  *    as a scaling cliff (`--families` builds that shape on purpose).
+  *    Token count / lang / source are inherited from the
   *    base doc, so the marginal distributions match sf0.1 exactly; token
   *    picks are md5-derived, deterministic, and distinct across docs.
   *  - embeddings: factor× fresh label-centered vectors (centroid per
@@ -48,13 +48,48 @@ import org.apache.spark.sql.functions._
   * uniform build — measured deltas between /tmp/sf1 and /tmp/sf1skew are
   * attributable to skew alone.
   *
-  * Run: `sbt "runMain graft.SfGen [/tmp/sf1] [10] [--skew]"`. */
+  * `--families`: the planted-family corpus, the near-dup operators' scale
+  * stress. Documents and embeddings become [[familyDocs]] and
+  * [[familyEmbeddings]] replicas of the base rows (every replica of a base
+  * row is a near-duplicate of every other); every other table is the
+  * standard build. The registry's own queries then run on it through
+  * `graft.Bench`.
+  *
+  * Run: `sbt "runMain graft.SfGen [/tmp/sf1] [10] [--skew|--families]"`. */
 object SfGen {
+
+  /** The `--families` documents: `factor` replicas of each base document,
+    * `doc_id*factor + rep`, the text with `" replica token <rep>"`
+    * appended and `n_chars` its length; lang and source are the base's. */
+  def familyDocs(docs: DataFrame, factor: Int): DataFrame = {
+    val text = concat(col("text"), lit(" replica token "),
+      col("rep").cast("string"))
+    replicas(docs, factor).select(
+      (col("doc_id") * factor + col("rep")).as("doc_id"), text.as("text"),
+      col("lang"), col("source"), length(text).cast("long").as("n_chars"))
+  }
+
+  /** The `--families` embeddings: `factor` replicas of each base vector,
+    * `vec_id*factor + rep`, every component offset by `(rep % 7)·1e-4`
+    * (in float); the label is the base's. */
+  def familyEmbeddings(emb: DataFrame, factor: Int): DataFrame =
+    replicas(emb, factor).select(
+      (col("vec_id") * factor + col("rep")).as("vec_id"),
+      transform(col("embedding"),
+        x => x + (col("rep") % 7).cast("float") * 1e-4f).as("embedding"),
+      col("label"))
+
+  /** Each row of `df` `factor` times, with its replica index `rep`. */
+  private def replicas(df: DataFrame, factor: Int): DataFrame = df.crossJoin(
+    df.sparkSession.range(factor.toLong).withColumnRenamed("id", "rep"))
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/sf1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val skew = args.length > 2 && args(2) == "--skew"
+    val mode = args.lift(2)
+    require(mode.forall(Set("--skew", "--families")),
+      s"unknown mode ${mode.get}: expected --skew or --families")
+    val skew = mode.contains("--skew")
     val src = "/root/testdata/sf0.1"
     val spark = Sessions.local(defaultCpus = 32)
 
@@ -64,8 +99,7 @@ object SfGen {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[sfgen] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
     }
-    def reps(df: DataFrame): DataFrame =
-      df.crossJoin(spark.range(factor.toLong).withColumnRenamed("id", "rep"))
+    def reps(df: DataFrame): DataFrame = replicas(df, factor)
     def remap(c: String) = (col(c) * factor + col("rep")).as(c)
     // md5-derived U[0,1) and log-uniform rank (pmf ∝ 1/r, Zipf α=1) for
     // the skew redirects — row-local, deterministic, partition-invariant.
@@ -111,44 +145,49 @@ object SfGen {
           .otherwise(col("user_id")))
     write(ev, "events")
 
-    // Fresh same-style documents: md5-derived picks from the observed
-    // vocabulary, base doc supplies token count / lang / source.
-    val vocab = read("documents")
-      .select(explode(split(col("text"), " ")).as("tok"))
-      .distinct().orderBy("tok").collect().map(_.getString(0))
-    println(s"[sfgen] vocabulary: ${vocab.length} tokens")
-    val vlit = array(vocab.map(lit).toIndexedSeq: _*)
-    // expr cannot see the scala-side array literal; bind it as a column.
-    val docsBound = reps(read("documents"))
-      .select((col("doc_id") * factor + col("rep")).as("doc_id"),
-        size(split(col("text"), " ")).as("ntok"),
-        col("lang"), col("source"))
-      .withColumn("_vocab", vlit)
-      .withColumn("text", expr(
-        s"""concat_ws(' ', transform(sequence(0, ntok - 1), d ->
-              element_at(_vocab, CAST(
-                CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':',
-                  CAST(d AS STRING))), 1, 8), 16, 10) AS BIGINT)
-                % ${vocab.length} + 1 AS INT))))"""))
-      .select(col("doc_id"), col("text"), col("lang"), col("source"),
-        length(col("text")).cast("long").as("n_chars"))
-    write(docsBound, "documents")
+    if (mode.contains("--families")) {
+      write(familyDocs(read("documents"), factor), "documents")
+      write(familyEmbeddings(read("embeddings"), factor), "embeddings")
+    } else {
+      // Fresh same-style documents: md5-derived picks from the observed
+      // vocabulary, base doc supplies token count / lang / source.
+      val vocab = read("documents")
+        .select(explode(split(col("text"), " ")).as("tok"))
+        .distinct().orderBy("tok").collect().map(_.getString(0))
+      println(s"[sfgen] vocabulary: ${vocab.length} tokens")
+      val vlit = array(vocab.map(lit).toIndexedSeq: _*)
+      // expr cannot see the scala-side array literal; bind it as a column.
+      val docsBound = reps(read("documents"))
+        .select((col("doc_id") * factor + col("rep")).as("doc_id"),
+          size(split(col("text"), " ")).as("ntok"),
+          col("lang"), col("source"))
+        .withColumn("_vocab", vlit)
+        .withColumn("text", expr(
+          s"""concat_ws(' ', transform(sequence(0, ntok - 1), d ->
+                element_at(_vocab, CAST(
+                  CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':',
+                    CAST(d AS STRING))), 1, 8), 16, 10) AS BIGINT)
+                  % ${vocab.length} + 1 AS INT))))"""))
+        .select(col("doc_id"), col("text"), col("lang"), col("source"),
+          length(col("text")).cast("long").as("n_chars"))
+      write(docsBound, "documents")
 
-    // Fresh label-centered embeddings: centroid(label)[d] + 0.3·noise,
-    // both md5-derived in [-1, 1]; float output, labels inherited.
-    val emb = reps(read("embeddings"))
-      .select((col("vec_id") * factor + col("rep")).as("vec_id"), col("label"))
-      .withColumn("embedding", expr(
-        s"""transform(sequence(0, 63), d -> CAST(
-              (CAST(conv(substring(md5(concat('c:', CAST(label AS STRING),
-                 ':', CAST(d AS STRING))), 1, 8), 16, 10) AS DOUBLE)
-                 / 4294967296.0 * 2.0 - 1.0)
-            + 0.3 * (CAST(conv(substring(md5(concat('n:',
-                 CAST(vec_id AS STRING), ':', CAST(d AS STRING))), 1, 8),
-                 16, 10) AS DOUBLE) / 4294967296.0 * 2.0 - 1.0)
-            AS FLOAT))"""))
-      .select(col("vec_id"), col("embedding"), col("label"))
-    write(emb, "embeddings")
+      // Fresh label-centered embeddings: centroid(label)[d] + 0.3·noise,
+      // both md5-derived in [-1, 1]; float output, labels inherited.
+      val emb = reps(read("embeddings"))
+        .select((col("vec_id") * factor + col("rep")).as("vec_id"), col("label"))
+        .withColumn("embedding", expr(
+          s"""transform(sequence(0, 63), d -> CAST(
+                (CAST(conv(substring(md5(concat('c:', CAST(label AS STRING),
+                   ':', CAST(d AS STRING))), 1, 8), 16, 10) AS DOUBLE)
+                   / 4294967296.0 * 2.0 - 1.0)
+              + 0.3 * (CAST(conv(substring(md5(concat('n:',
+                   CAST(vec_id AS STRING), ':', CAST(d AS STRING))), 1, 8),
+                   16, 10) AS DOUBLE) / 4294967296.0 * 2.0 - 1.0)
+              AS FLOAT))"""))
+        .select(col("vec_id"), col("embedding"), col("label"))
+      write(emb, "embeddings")
+    }
 
     spark.stop()
   }

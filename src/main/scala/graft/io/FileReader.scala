@@ -709,22 +709,30 @@ object FileReader {
     else gridUpload(spark, XlsReader.readRows(path))
   }
 
+  /** The supported upload formats, by extension, each with its reader. */
+  private val readers: Map[String, (SparkSession, String) => Upload] = Map(
+    ".csv" -> ((s, p) => readDelimited(s, p, Some(","))),
+    ".xlsx" -> ((s, p) => xlsxUpload(s, p)),
+    ".xls" -> ((s, p) => xlsUpload(s, p)),
+    ".txt" -> ((s, p) => readDelimited(s, p, None)))
+
+  /** Whether [[readUpload]] reads files with extension `ext`. */
+  def isSupported(ext: String): Boolean = readers.contains(ext)
+
   /** S5 dispatch by extension; same error contract as the reference
     * (file_parser.py:32-70). The upload comes back numbered, counted and
     * with its head (see [[Upload]]). */
   def readUpload(spark: SparkSession, path: String): Upload = {
     if (!Files.exists(Paths.get(path)))
       throw new java.io.FileNotFoundException(s"File not found: $path")
-    extension(path) match {
-      case ".csv" => readDelimited(spark, path, Some(","))
-      case ".xlsx" => xlsxUpload(spark, path)
-      case ".xls" => xlsUpload(spark, path)
-      case ".txt" => readDelimited(spark, path, None)
-      case ext => throw new IllegalArgumentException(s"Unsupported file type: $ext")
-    }
+    val ext = extension(path)
+    val read = readers.getOrElse(ext,
+      throw new IllegalArgumentException(s"Unsupported file type: $ext"))
+    read(spark, path)
   }
 
-  private def extension(path: String): String =
+  /** The lower-cased extension of `path`, dot included. */
+  def extension(path: String): String =
     path.substring(path.lastIndexOf('.') max 0).toLowerCase
 
   /** [[readUpload]]'s cells without the row number, and the extension. */

@@ -102,7 +102,8 @@ object Boruvka {
         // labels only feed cu ≠ cv tests and grouping — the original
         // hand-rolled hook + pointer-jump contraction spent ~20
         // driver-blocking micro-jobs per round on the same answer and
-        // stalled ScaleSmoke's 590k-edge witness for 15+ minutes).
+        // stalled a 590k-edge run of the distributed rounds for 15+
+        // minutes).
         val groups = graft.llm.Dedup.connectedComponents(
           sel.select(col("c").as("ga"), col("pt").as("gb")), "ga", "gb")
         comp = comp

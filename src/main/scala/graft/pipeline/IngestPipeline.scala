@@ -257,8 +257,8 @@ object IngestPipeline {
                    path: String, versionLabel: String,
                    variant: Option[String] = None): ValidationReport = {
     val source = Catalog(sourceCode)
-    val ext = path.substring((path.lastIndexOf('.') max 0)).toLowerCase
-    if (!Seq(".csv", ".xlsx", ".xls", ".txt").contains(ext))
+    val ext = FileReader.extension(path)
+    if (!FileReader.isSupported(ext))
       return ValidationReport(valid = false, 0, None, Map.empty, Seq.empty,
         Seq(s"Unsupported file type: $ext"), Seq.empty,
         duplicateFile = false, willAppend = false)

@@ -224,28 +224,6 @@ final class VersionStore(val spark: SparkSession, val root: String) {
       .option("batchsize", Catalog.Limits.insertBatchSize)
       .jdbc(url, table, properties)
 
-  /** Compact one version's data directory into `targetFiles` parquet files:
-    * the rows are rewritten to a hidden sibling directory, which then
-    * replaces the version's directory by two renames. The ingest parallelism
-    * that made the WRITE fast leaves file counts sized for the writing
-    * cluster, not the readers — at scale, every query thereafter pays the
-    * listing + footer cost of thousands of small files until a compaction
-    * pass amortizes it away. This swap is not crash-safe: a crash between
-    * the two renames leaves the version without its directory (the rows sit
-    * in `.compact-old-v<id>`), and it runs under the same single writer as
-    * every other change to the store. */
-  def compactVersion(table: String, versionId: Long, targetFiles: Int = 1): Unit = {
-    val dir = versionDir(table, versionId)
-    val tmp = new Path(dir.getParent, s".compact-tmp-v$versionId")
-    val old = new Path(dir.getParent, s".compact-old-v$versionId")
-    spark.read.parquet(dir.toString).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(old, true)
-    fs.rename(dir, old)
-    fs.rename(tmp, dir)
-    fs.delete(old, true): Unit
-  }
-
   def data(table: String): DataFrame = spark.read.parquet(s"$dataDir/$table")
 
   /** J2 current view. The current version ids are resolved DRIVER-SIDE from

@@ -87,9 +87,20 @@ class LlmOpsSpec extends SparkSpecBase {
 
   test("distributed label propagation (non-long ids skip the driver gate)") {
     import spark.implicits._
-    // String ids bypass the small-graph union-find, so this pins the
-    // ITERATIVE path on the same worst-case diameter: zero-padded ids
-    // make lexicographic min == numeric min, labels must all be "000".
+    // String ids bypass the small-graph union-find, so these pin the
+    // ITERATIVE path. A chain cut into 64-node blocks: ceil(n/64)
+    // components of diameter 63. Pointer jumping doubles the label reach
+    // per round and settles in ~7; one hop per round would need 63, so
+    // 12 rounds tell them apart.
+    val n = 1000
+    val chain = (0 until n - 1).filter(i => (i + 1) % 64 != 0)
+      .map(i => (f"$i%04d", f"${i + 1}%04d")).toDF("id_a", "id_b")
+    val components = Dedup.connectedComponents(chain, "id_a", "id_b",
+        maxIters = 12)
+      .select("component").distinct().count()
+    assert(components == (n + 63) / 64, "64-node-block chain")
+    // The worst-case diameter in 50 rounds: zero-padded ids make
+    // lexicographic min == numeric min, labels must all be "000".
     val edges = (0 until 299).map(i => (f"$i%03d", f"${i + 1}%03d"))
       .toDF("id_a", "id_b")
     val got = Dedup.connectedComponents(edges, "id_a", "id_b")

@@ -434,6 +434,19 @@ class PlanRegressionSpec extends SparkSpecBase {
       "corpus ranks must window by bucket, not globally")
   }
 
+  test("epoch shuffle: the batches tile the global ranks 1..N, 64 per batch") {
+    graft.queries.Registry.configure(spark)
+    val n = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val batches = SparkEntry.queries("q_llm_shuffle_batches")(spark, sfDir)
+      .select("batch_id", "n_docs", "rn_min", "rn_max").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(batches.map(_._2).sum == n)
+    assert(batches.toSeq == (0L until (n + 63) / 64).map { b =>
+      val hi = math.min(64 * b + 64, n)
+      (b, hi - 64 * b, 64 * b + 1, hi)
+    })
+  }
+
   test("textrank keywords: top-20 is TakeOrdered, never a global sort") {
     // (the co-occurrence window and rank rounds sit behind the operator's
     // localCheckpoints — only the final rank/top-k plan is visible here)

@@ -201,27 +201,6 @@ class VersionStoreSpec extends SparkSpecBase {
     assert(back.filter(col("data_version_id") === id).count() == 2)
   }
 
-  test("compaction merges a version's files without changing its rows") {
-    import spark.implicits._
-    val store = newStore()
-    val id = store.createVersion("PFS_OPPS_CAP", "2026-Q1",
-      java.sql.Date.valueOf("2026-01-01"), None, "h", "f.csv")
-    val wide = (0 until 1000).map(i => (s"code$i", i * 1.0))
-      .toDF("hcpcs_code", "amount").repartition(8)
-    store.writeData("cms.pfs_opps_cap", id, wide)
-    store.completeVersion(id, 1000, markCurrentFor = Some(("PFS_OPPS_CAP", None)))
-    val dir = new java.io.File(s"${store.root}/data/cms.pfs_opps_cap/data_version_id=$id")
-    def files = dir.listFiles.count(_.getName.endsWith(".parquet"))
-    assert(files == 8)
-    val checksumBefore = store.currentView("cms.pfs_opps_cap", "PFS_OPPS_CAP")
-      .agg(sum("amount"), count(lit(1))).head
-    store.compactVersion("cms.pfs_opps_cap", id, targetFiles = 2)
-    assert(files == 2)
-    val checksumAfter = store.currentView("cms.pfs_opps_cap", "PFS_OPPS_CAP")
-      .agg(sum("amount"), count(lit(1))).head
-    assert(checksumBefore == checksumAfter)
-  }
-
   test("current view takes the current version's schema; fallbacks match a table read") {
     import spark.implicits._
     import org.apache.spark.sql.types.IntegerType
