@@ -109,14 +109,8 @@ object ClusterSmoke {
     Files.createDirectories(java.nio.file.Paths.get(s"$work/scratch"))
 
     def session(master: String): SparkSession = {
-      val b = SparkSession.builder()
-        .master(master)
+      val b = Sessions.builder(master, "8")
         .appName("graft-cluster-smoke")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
         // Same-host workers: /tmp is "shared storage" here; on a real
         // cluster this must be NFS/object storage (CLUSTER.md).
         .config("graft.xlsx.scratchDir", s"$work/scratch")
@@ -129,9 +123,7 @@ object ClusterSmoke {
               System.getProperty("java.class.path"))
             .config("spark.executor.memory", "1536m")
         else b
-      val s = b2.getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
+      Sessions.start(b2)
     }
 
     val missing = queryNames.filterNot(graft.SparkEntry.queries.contains)

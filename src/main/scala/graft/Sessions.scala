@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.store.LocalFs
+
 /** Session factory for the dev/driver mains — the ONE place local-mode
   * sizing comes from, so nothing is hardcoded in any main (VERDICT r12
   * item 5):
@@ -23,13 +25,7 @@ object Sessions {
   def local(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val parts = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val b = builder(s"local[$cpus]", parts)
     val b2 = sys.env.get("SPARK_GRAFT_SCRATCH")
       .fold(b)(d => b.config("graft.xlsx.scratchDir", d))
     // SPARK_GRAFT_SMALL_KERNEL=false forces every SmallGraph-gated
@@ -39,7 +35,34 @@ object Sessions {
     // zero benchmark coverage (VERDICT r16 item 2).
     val b3 = sys.env.get("SPARK_GRAFT_SMALL_KERNEL")
       .fold(b2)(v => b2.config("graft.graph.smallKernel", v))
-    val spark = b3.getOrCreate()
+    start(b3)
+  }
+
+  /** The settings every session graft builds shares (the mains, the
+    * cluster smoke and the specs): the semantic ones
+    * [[graft.queries.Registry.configure]] also applies, no UI, and two
+    * fixed costs of an upload cut:
+    *
+    *  - `file://` is served by [[graft.store.LocalFs]], which sets
+    *    local-file permissions without forking `chmod`;
+    *  - no DataFrame query context: Spark 4 otherwise walks the driver
+    *    thread's stack for every `Column` and `Dataset` call to name the
+    *    call site in error messages; without it a 200-row CSV's validate
+    *    plus ingest took 40–100 ms less (median of 40 each, 4 cores). */
+  def builder(master: String, shufflePartitions: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      .config("spark.sql.dataFrameQueryContext.enabled", "false")
+
+  /** Get or create the session `b` describes, logging at WARN. */
+  def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -7,120 +7,20 @@ import org.apache.spark.sql.functions._
 import graft.operators.SmallGraph
 
 /** Semantic deduplication (SemDeDup, Abbas et al. 2023,
-  * arXiv:2303.09540): k-means-cluster the embedding space, compare
-  * embeddings PAIRWISE ONLY WITHIN EACH CLUSTER, and drop all but one
-  * document from every group whose cosine similarity exceeds the
-  * threshold. Near-duplicate *meaning* (paraphrases, boilerplate variants,
+  * arXiv:2303.09540): cluster the embedding space, compare embeddings
+  * PAIRWISE ONLY WITHIN EACH CLUSTER, and drop all but one document from
+  * every group whose cosine similarity exceeds the threshold.
+  * Near-duplicate *meaning* (paraphrases, boilerplate variants,
   * translations of the same page) clusters together even when the bytes
   * share no n-grams — the gap MinHash/SimHash can't see.
   *
-  * Scale shape: the quadratic step is confined to single clusters — cost
-  * is Σ|cluster|², so k is chosen to bound |cluster| (SemDeDup used 11k
-  * clusters for LAION-440M; k grows with the corpus and average cluster
-  * size stays ~constant). The cluster self-join shuffles BOTH sides by
-  * `_cluster` (co-partitioned equi-join, no broadcast of the corpus), the
-  * per-pair cosine is the codegen'd unrolled kernel, and everything
-  * downstream (connected components → min-id representative) reuses the
-  * byte-level dedup machinery. Training cost is the seeded Spark-ML
-  * k-means fit, the same coarse quantizer as [[Ivf.build]]. */
+  * Scale shape: the quadratic step is confined to single cells of the
+  * deterministic k-means gate ([[DetKMeans]]) — cost is
+  * Σ|cell|², bounded by `maxCluster`: an oversized cell is split by an
+  * integer sign-LSH sub-key, and a sub-bucket that is STILL oversized
+  * degrades to consecutive-chain pairing, whose links the downstream
+  * connected components merge back into one dedup group. */
 object SemDedup {
-
-  private def dot(a: org.apache.spark.sql.Column,
-                  b: org.apache.spark.sql.Column) = Similarity.dot(a, b)
-
-  /** Within-cluster pairs with cosine ≥ threshold: (id_a, id_b, cos),
-    * id_a < id_b.
-    *
-    * The quadratic step is bounded: a cluster larger than `maxCluster`
-    * (skewed k-means — one boilerplate mega-cluster is the common case on
-    * web corpora) is split by a sign-LSH sub-key before the self-join, so
-    * near-identical embeddings still land together while the join stays
-    * Σ|bucket|² with |bucket| ≤ maxCluster. A sub-bucket that is STILL
-    * oversized is a true mega-group of near-identical vectors; for those
-    * the all-pairs join degrades to consecutive-chain pairing (sorted by
-    * id, one `lead` window) — O(n) pairs whose ≥-threshold links the
-    * downstream connected components merges back into one dedup group, so
-    * the mega-group is still deduplicated instead of silently skipped. */
-  def semanticPairs(corpus: DataFrame, embCol: String, idCol: String,
-                    k: Int, threshold: Double, dim: Int = 64,
-                    seed: Long = 42L, maxIter: Int = 5,
-                    maxCluster: Int = 2000): DataFrame = {
-    // 5 Lloyd's iterations, but KEEP the k-means|| init: random init can
-    // seed one tight blob twice and split it (SemDedupSpec catches exactly
-    // this — a split blob silently loses its cross-split pairs). A gating
-    // clusterer tolerates loose convergence, not a broken partition.
-    val assigned = Ivf.build(corpus, embCol, idCol, k, seed, maxIter).assigned
-    val planes = Similarity.hyperplanes(8, dim)
-    // Per-row norm computed ONCE here (N sqrt-sums), not per pair (P >> N
-    // after the self-join) — the pair kernel below is then a pure dot
-    // product. Persisted: three consumers below (both self-join sides +
-    // the chain branch) would otherwise each re-run the k-means transform
-    // and both count windows.
-    def normOf(c: org.apache.spark.sql.Column) = sqrt(dot(c, c))
-    val subKeyed = assigned
-      .withColumn("_cn", count(lit(1)).over(Window.partitionBy("_cluster")))
-      .withColumn("_sub", when(col("_cn") <= maxCluster, lit(0L))
-        .otherwise(Similarity.lshBucket(col(embCol), planes)))
-      .withColumn("_sn",
-        count(lit(1)).over(Window.partitionBy("_cluster", "_sub")))
-      .withColumn("_norm", normOf(col(embCol)))
-      .drop("_cn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Native loop kernel, NOT the unrolled 64-term Column reduce: a single
-    // expression tree cannot be method-split by codegen, and combined with
-    // the self-join's sort pipeline it blew Janino's 64 KB method limit —
-    // silently dropping the whole pair stage to interpreted eval. Same
-    // ascending-index accumulation, bit-identical results.
-    def cos(ea: org.apache.spark.sql.Column, eb: org.apache.spark.sql.Column,
-            na: org.apache.spark.sql.Column, nb: org.apache.spark.sql.Column) =
-      when(na === 0.0 || nb === 0.0, lit(0.0))
-        .otherwise(dot(ea, eb) / (na * nb))
-
-    val small = subKeyed.filter(col("_sn") <= maxCluster)
-    val a = small.select(col("_cluster"), col("_sub"),
-      col(idCol).as("id_a"), col(embCol).as("_ea"), col("_norm").as("_na"))
-    val b = small.select(col("_cluster"), col("_sub"),
-      col(idCol).as("id_b"), col(embCol).as("_eb"), col("_norm").as("_nb"))
-    val allPairs = a.join(b, Seq("_cluster", "_sub"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", cos(col("_ea"), col("_eb"), col("_na"), col("_nb")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
-
-    val chainOrd = Window.partitionBy("_cluster", "_sub").orderBy(col(idCol))
-    val chainPairs = subKeyed.filter(col("_sn") > maxCluster)
-      .withColumn("_nid", lead(col(idCol), 1).over(chainOrd))
-      .withColumn("_nemb", lead(col(embCol), 1).over(chainOrd))
-      .withColumn("_nnorm", lead(col("_norm"), 1).over(chainOrd))
-      .filter(col("_nid").isNotNull)
-      .withColumn("cos",
-        cos(col(embCol), col("_nemb"), col("_norm"), col("_nnorm")))
-      .filter(col("cos") >= threshold)
-      .select(col(idCol).as("id_a"), col("_nid").as("id_b"), col("cos"))
-
-    // Materialize the (small) pair set eagerly so the cached assignment
-    // relation can be released NOW rather than leaking until session end —
-    // the same lifecycle contract IvfPq.Index.release() provides. The
-    // pair relation is bounded (Σ|bucket|² post-threshold), so the
-    // localCheckpoint is cheap; downstream CC iterations re-read it
-    // without replaying the k-means transform.
-    val pairs = allPairs.unionByName(chainPairs).localCheckpoint()
-    subKeyed.unpersist()
-    pairs
-  }
-
-  /** Full SemDeDup decision: every document labeled with its semantic
-    * component and an `is_representative` keep/drop flag (min-id wins,
-    * matching the byte-level dedup contract). */
-  def semDedup(corpus: DataFrame, embCol: String, idCol: String,
-               k: Int, threshold: Double, dim: Int = 64,
-               seed: Long = 42L, maxCluster: Int = 2000): DataFrame = {
-    val pairs = semanticPairs(corpus, embCol, idCol, k, threshold, dim, seed,
-      maxCluster = maxCluster)
-    Dedup.dedupByCluster(corpus.select(col(idCol)), idCol, pairs)
-  }
-
-  // ---------------- deterministic bounded pairing (the DetKMeans gate) ----
 
   /** Integer sign-LSH planes for the deterministic mega-cell sub-split:
     * `numPlanes` × `dim` md5-derived components in [-2^19, 2^19). All-long
@@ -163,9 +63,9 @@ object SemDedup {
       .drop("_cn")
 
   /** Bounded within-cell pairing over the DETERMINISTIC k-means gate —
-    * the [[semanticPairs]] scale contract (maxCluster cap + sign-LSH
-    * sub-split + O(n) chain degrade for true mega-groups) re-expressed in
-    * md5/integer arithmetic an external SQL engine can replay end to end.
+    * a maxCluster cap, a sign-LSH sub-split and an O(n) chain degrade for
+    * true mega-groups, all in md5/integer arithmetic an external SQL
+    * engine can replay end to end.
     * `withCell` must carry idCol, embCol, `u` (unit coords) and `cid`
     * (cell id). Cost is Σ|bucket|² with |bucket| ≤ maxCluster plus O(n)
     * chain links — never corpus-quadratic, whatever the cell skew.
@@ -212,8 +112,8 @@ object SemDedup {
         .withColumn("cos", cosCol(col(embCol), col("_ne")))
         .filter(col("cos") >= threshold)
         .select(col(idCol).as("id_a"), col("_nid").as("id_b"), col("cos"))
-      // Same lifecycle contract as semanticPairs: the pair set is bounded,
-      // so checkpoint it eagerly and release the keyed relation now.
+      // The pair set is bounded, so checkpoint it eagerly and release the
+      // keyed relation now rather than at session end.
       val pairs = allPairs.unionByName(chainPairs).localCheckpoint()
       keyed.unpersist()
       pairs

@@ -68,13 +68,16 @@ object IngestPipeline {
     * of its own, so all rows take the one shuffle, an all-invalid file
     * spreads over every task, and the valid rows' groups are their keys.
     * The explicit partition count keeps AQE from coalescing the write's
-    * stage, and the first-wins window reuses that partitioning. An
-    * `Observation` over the ranked rows counts the valid and invalid rows
-    * and keeps the first `maxCollectedErrors` error strings (Spark's
-    * bounded top-k aggregate, so an adversarial all-invalid file cannot
-    * become a driver-OOM vector). It sits past the shuffle, in the result
-    * stage, so a retried map task cannot count twice. The survivors are
-    * the valid rows of rank 1. */
+    * stage, and the first-wins window reuses that partitioning. An upload
+    * read as one partition is ranked in place instead: its rows are
+    * planned as one known partition, which every group's clustering
+    * already satisfies, so the ingest is one job with no shuffle and no
+    * AQE re-plan. An `Observation` over the ranked rows counts the valid
+    * and invalid rows and keeps the first `maxCollectedErrors` error
+    * strings (Spark's bounded top-k aggregate, so an adversarial
+    * all-invalid file cannot become a driver-OOM vector). It sits past the
+    * shuffle, in the result stage, so a retried map task cannot count
+    * twice. The survivors are the valid rows of rank 1. */
   private def prepare(source: SourceConfig, upload: FileReader.Upload): Prepared = {
     val head = FileReader.cellStrings(upload.head.take(HeaderDetector.MaxScanRows))
     val det = HeaderDetector.detectHeaderRow(head, mappingsOf(source))
@@ -82,14 +85,17 @@ object IngestPipeline {
       throw new IllegalArgumentException(det.error.getOrElse("header not found"))
     val hdrIdx = det.headerRowIndex.get
     val colIdx = HeaderDetector.getColumnIndex(head(hdrIdx), det.columnMap)
-    val dataRows = upload.rows.filter(col(FileReader.RowNumber) > hdrIdx + 1)
+    val one = upload.partitions == 1
+    val rows = if (one) Bridge.onePartition(upload.rows) else upload.rows
+    val dataRows = rows.filter(col(FileReader.RowNumber) > hdrIdx + 1)
     val nonEmpty = Ingestor.filterEmptyRows(dataRows, colIdx.values.map(i => s"_c$i").toSeq)
     val keys = source.uniqueKeys
     val present = Ingestor.keysPresent(keys)
     val groups = keys.map(col) :+ when(!present, col(FileReader.RowNumber))
     val split = Observation()
-    val ranked = Ingestor.dupRank(Ingestor.transformColumns(Ingestor.project(nonEmpty, colIdx), source)
-      .repartition(upload.partitions, groups: _*), groups)
+    val typed = Ingestor.transformColumns(Ingestor.project(nonEmpty, colIdx), source)
+    val ranked = Ingestor.dupRank(
+      if (one) typed else typed.repartition(upload.partitions, groups: _*), groups)
       .observe(split, count(when(present, lit(1))).as("valid"),
         count(when(!present, lit(1))).as("invalid"),
         Bridge.collectSmallest(when(!present,
@@ -170,7 +176,8 @@ object IngestPipeline {
     * → window → write — which is two jobs under AQE, the shuffle's map
     * stage and the write's result stage (which also counts the valid and
     * invalid rows, keeps the first error strings and counts the rows it
-    * lands). Right after `validateFile` of the same bytes, the upload that
+    * lands); one job for an upload read as one partition, which takes no
+    * shuffle. Right after `validateFile` of the same bytes, the upload that
     * validate read is reused ([[UploadCache]]): no driver-side scan, parse
     * or XLSX inflate is repeated. The reader hands over the head the header
     * detection reads, parsed on the driver (see [[FileReader]]); the

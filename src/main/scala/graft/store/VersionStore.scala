@@ -35,10 +35,11 @@ import graft.config.Catalog
   * file, so it sees the state before a commit or after it, never a mix and
   * never nothing — the same observable contract as the reference's single
   * DB transaction, under a single-writer discipline (one writing driver
-  * per root). Because the next id is part of the committed state, a
-  * version id is never handed out twice, even after the highest version is
-  * deleted. Metadata reads and commits launch no Spark job. Stores written
-  * in the older `meta/data_versions` parquet layout are not read.
+  * per root; a store the log has moved past refuses to commit). Because
+  * the next id is part of the committed state, a version id is never
+  * handed out twice, even after the highest version is deleted. Metadata
+  * reads and commits launch no Spark job. Stores written in the older
+  * `meta/data_versions` parquet layout are not read.
   */
 final class VersionStore(val spark: SparkSession, val root: String) {
   import VersionStore._
@@ -69,11 +70,20 @@ final class VersionStore(val spark: SparkSession, val root: String) {
     * superseded commits. The driver's state moves only once the rename has
     * succeeded; a crash before it leaves the previous commit the latest
     * one (a stray temp file is never read), a crash after it leaves the new
-    * one. Returns the committed state. */
+    * one. Returns the committed state.
+    *
+    * If the log holds a commit numbered past this store's head, another
+    * writer committed since this store last read it: the commit throws and
+    * changes nothing (a local-FS rename would replace the next commit
+    * silently, or land under a newer one a reader takes instead). The
+    * check and the rename are two steps, so two writers racing between
+    * them can still both succeed. */
   private def commit(f: State => State): State = synchronized {
     val next = f(state)
     if (next != state) {
       val target = commitPath(head + 1)
+      if (commits.exists(_ > head))
+        throw new IOException(s"$logDir has commits past $head: another writer committed")
       val tmp = new Path(logDir, s".${target.getName}.tmp")
       val out = fs.create(tmp, true)
       try out.write(Json.writeValueAsBytes(next)) finally out.close()

@@ -6,13 +6,16 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` entry points graft needs: the Column ⇄
   * Expression conversions a custom-Expression library needs (the standard
   * pattern for third-party Catalyst extensions), runtime function
-  * registration, building a DataFrame straight from internal rows,
+  * registration, building a DataFrame straight from internal rows or as
+  * one known partition,
   * Spark's CSV stream parser, the
   * bounded top-k aggregate, and waiting for the listener bus. */
 object Bridge {
@@ -33,6 +36,16 @@ object Bridge {
                               schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** `df`, whose rows are one partition, as a relation the planner knows
+    * is one partition, so no clustering asked of it needs an exchange. */
+  def onePartition(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val rdd = df.queryExecution.toRdd
+    require(rdd.getNumPartitions == 1, s"${rdd.getNumPartitions} partitions, not one")
+    Dataset.ofRows(spark,
+      LogicalRDD(df.queryExecution.analyzed.output, rdd, SinglePartition)(spark))
+  }
 
   /** Parse a CSV byte stream the way `spark.read.csv` parses one file with
     * `multiLine` on: Spark's own tokenizer and row converter over `options`.

@@ -301,7 +301,10 @@ class IngestPipelineSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     object Plans extends AdaptiveSparkPlanHelper
-    val path = csv("HCPCS,OPPS CAP\n99213,120.50\n,90.00\n99214,140.00\n99213,999.99\n")
+    // ~2.4 MB: several record-aligned ranges, so the rows take the shuffle
+    val rows = (0 until 160000).map(i => f"H$i%06d,120.50")
+    val path = csv(("HCPCS,OPPS CAP" +: rows :+ ",90.00" :+ "H000000,999.99").mkString("\n") + "\n")
+    assert(graft.io.FileReader.readUpload(spark, path).partitions > 1)
     val runs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = runs.add(qe): Unit
@@ -313,13 +316,45 @@ class IngestPipelineSpec extends SparkSpecBase {
         org.apache.spark.SpecBus.drain(spark.sparkContext)
         spark.listenerManager.unregister(listener)
       }
-    assert((r.inserted, r.invalid, r.duplicates) == (2L, 1L, 1L))
+    assert((r.inserted, r.invalid, r.duplicates) == (160000L, 1L, 1L))
     val observing = runs.asScala.toSeq.map(qe =>
       Plans.collect(qe.executedPlan) { case m: CollectMetricsExec => m }).filter(_.nonEmpty)
     // one action: the write, observing the split and the rows it lands
     assert(observing.map(_.size) == Seq(2), observing)
     observing.flatten.foreach(m =>
       assert(Plans.find(m)(_.isInstanceOf[ShuffleExchangeLike]).nonEmpty, m))
+  }
+
+  test("an upload read as one partition is ranked in place: one job, no shuffle") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object Plans extends AdaptiveSparkPlanHelper
+    val path = csv("HCPCS,OPPS CAP\n99213,120.50\n,90.00\n99214,140.00\n99213,999.99\n")
+    assert(graft.io.FileReader.readUpload(spark, path).partitions == 1)
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = runs.add(qe): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val store = newStore()
+    spark.listenerManager.register(listener)
+    var r: IngestPipeline.IngestResult = null
+    val jobs = try jobsIn {
+        r = IngestPipeline.ingestFile(spark, store, "PFS_OPPS_CAP", path, "2026-Q1", d)
+      } finally {
+        org.apache.spark.SpecBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert((r.inserted, r.invalid, r.duplicates) == (2L, 1L, 1L))
+    assert(r.errors.size == 1)
+    assert(jobs == 1)
+    assert(runs.asScala.forall(qe => Plans.find(qe.executedPlan)(_.isInstanceOf[Exchange]).isEmpty))
+    // first wins: the duplicate 99213 keeps the first row's amount
+    val amounts = store.currentView("cms.pfs_opps_cap", "PFS_OPPS_CAP")
+      .select("hcpcs_code", "opps_cap_amount").collect()
+      .map(x => x.getString(0) -> x.get(1).toString).toMap
+    assert(amounts.keySet == Set("99213", "99214") && amounts("99213").startsWith("120.5"), amounts)
   }
 
   test("validate then ingest of the same bytes reads the upload once") {

@@ -142,6 +142,25 @@ class VersionStoreSpec extends SparkSpecBase {
     assert(create(new VersionStore(spark, store.root), "d") == 4L)
   }
 
+  test("a second writer on the same root cannot replace a commit") {
+    val a = newStore()
+    val b = new VersionStore(spark, a.root)
+    def create(s: VersionStore, label: String) = s.createVersion("PFS_GPCI", label,
+      java.sql.Date.valueOf("2026-01-01"), None, s"h-$label", s"$label.csv")
+    val v1 = create(a, "a1")
+    // b last read the empty log, so its next commit number is a's
+    val err = intercept[java.io.IOException](create(b, "b1"))
+    assert(err.getMessage.contains("another writer"))
+    assert(b.metadata.versions.isEmpty)
+    val v2 = create(a, "a2")
+    intercept[java.io.IOException](create(b, "b2"))
+    assert(b.metadata.versions.isEmpty)
+    val labels = new VersionStore(spark, a.root).metadata.versions
+      .map(v => v.dataVersionId -> v.versionLabel)
+    assert(labels == Vector(v1 -> "a1", v2 -> "a2"))
+    assert(new java.io.File(s"${a.root}/meta/_log").list.forall(!_.endsWith(".tmp")))
+  }
+
   test("metadata reads and commits launch no job; landing a part launches one") {
     val store = newStore()
     val data = sampleData(1)
