@@ -168,7 +168,9 @@ object IngestPipeline {
     * file appends under the SAME version id (691-783), landing as one part
     * through [[VersionStore.landPart]]; a replayed file (its hash already
     * that version's first file or on its part ledger) lands nothing, but
-    * runs the same plan through a `noop` write to report its counts.
+    * runs the same plan through a `noop` write to report its counts. A new
+    * version is settled in the commit that lists its files: completed (and
+    * current, with its warning) when a row landed, failed otherwise.
     * An upload over the size cap is rejected before it is hashed or read,
     * as `validateFile` rejects it.
     *
@@ -212,23 +214,15 @@ object IngestPipeline {
       case None =>
         val versionId = store.createVersion(source.sourceCode, versionLabel,
           effectiveDate, variant, fileHash, fileName)
-        // First-wins dedup keeps a row for every valid key, so the write
-        // lands rows exactly when one is valid; with none it drops what it
-        // staged, and a failed version has no data.
         val inserted = failingOnThrow(store, versionId) {
-          store.writeData(source.targetTable, versionId, plan.unique, dropEmpty = true)
+          store.writeData(source.targetTable, versionId, plan.unique, 1, n => s =>
+            if (n > 0) s.completed(versionId, n,
+              markCurrentFor = if (markAsCurrent) Some((source.sourceCode, variant)) else None,
+              warning = Option.when(plan.invalidCount > 0)((s"${plan.invalidCount} rows failed validation",
+                Some(plan.errors.take(5).mkString("[\"", "\",\"", "\"]")))))
+            else s.failed(versionId, s"No rows inserted. First errors: ${plan.errors.take(5).mkString("; ")}"))
         }
-        if (inserted > 0) {
-          store.completeVersion(versionId, inserted,
-            markCurrentFor = if (markAsCurrent) Some((source.sourceCode, variant)) else None,
-            warning = Option.when(plan.invalidCount > 0)((s"${plan.invalidCount} rows failed validation",
-              Some(plan.errors.take(5).mkString("[\"", "\",\"", "\"]")))))
-          (versionId, inserted, "completed")
-        } else {
-          val summary = plan.errors.take(5).mkString("; ")
-          store.failVersion(versionId, s"No rows inserted. First errors: $summary")
-          (versionId, 0L, "failed")
-        }
+        (versionId, inserted, if (inserted > 0) "completed" else "failed")
     }
     // Duplicates = valid minus survivors: exactly the rank>1 rows.
     val dupCount = plan.validCount - inserted

@@ -8,7 +8,7 @@ import graft.config.Catalog
 import graft.header.HeaderDetector
 import graft.io.FileReader
 import graft.llm.{Decontaminate, Dedup, Index, Multimodal, Pack, SemDedup, Similarity, TextAnalysis, Urls}
-import graft.pipeline.Ingestor
+import graft.pipeline.{IngestPipeline, Ingestor}
 import graft.transform.Transformers
 
 import scala.collection.immutable.ListMap
@@ -732,12 +732,8 @@ trait RegistryCore extends RegistryBase {
       ("05102", "San Francisco", "1.060", "1.298", "0.604"),
     ).toDF("_c0", "_c1", "_c2", "_c3", "_c4")
     val source = Catalog("PFS_GPCI")
-    val mappings = ListMap(source.columns.collect {
-      case c if c.acceptedHeaders.nonEmpty =>
-        c.internalName -> HeaderDetector.ColumnMapping(c.acceptedHeaders, c.isRequired)
-    }: _*)
     val head = FileReader.firstRows(raw, HeaderDetector.MaxScanRows)
-    val det = HeaderDetector.detectHeaderRow(head, mappings)
+    val det = HeaderDetector.detectHeaderRow(head, IngestPipeline.mappingsOf(source))
     require(det.found && det.headerRowIndex.contains(2), s"detect failed: $det")
     val colIdx = HeaderDetector.getColumnIndex(head(det.headerRowIndex.get), det.columnMap)
     val numbered = FileReader.withRowNumbers(raw)

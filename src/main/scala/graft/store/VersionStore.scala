@@ -7,28 +7,30 @@ import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 import graft.config.Catalog
 
 /** Versioned relational store over parquet.
   *
-  * Layout: `root/data/<table>/data_version_id=<id>/p<part>-<i>.parquet`
+  * Layout: `root/data/<table>/data_version_id=<id>/<file>.parquet`
   * (hive-style partitioning so version predicates prune at the FILE level —
   * a "current version" read of a 100 TB table touches only that version's
-  * files), plus the metadata log `root/meta/_log/<n>.json`.
+  * files), plus the metadata log `root/meta/_log/<n>.json`. The committed
+  * state lists every version's data files, by part, and its written schema,
+  * like the add/remove actions of Delta Lake's log: a read opens exactly
+  * the listed files, so rows become visible in the commit that counts them.
   *
   * Reference semantics: scripts/init_db.py:36-155 (metadata schema),
   * app/services/ingestor.py:101-259 (lifecycle), 691-783 (multi-part append),
   * scripts/init_db.py:418-518 (current views).
   *
-  * Atomicity (U3): the metadata — versions, the part ledger, the event log
-  * and the next version id, KB-scale — is one [[VersionStore.State]] held
-  * on the driver. Every change is one [[commit]]: the new state is written
+  * Atomicity (U3): the metadata — versions with their file lists, the part
+  * ledger, the event log and the next version id — is one
+  * [[VersionStore.State]] held on the driver. Every change is one
+  * [[commit]]: the new state is written
   * from the driver to a temp file under `meta/_log/` and renamed to the next
   * commit number; superseded commit files are pruned after the rename. A
   * reader (a fresh instance on the same root) takes the highest-numbered
@@ -39,7 +41,8 @@ import graft.config.Catalog
   * the next id is part of the committed state, a version id is never
   * handed out twice, even after the highest version is deleted. Metadata
   * reads and commits launch no Spark job. Stores written in the older
-  * `meta/data_versions` parquet layout are not read.
+  * `meta/data_versions` parquet layout are not read, and a commit written
+  * before versions listed their files reads as holding no data.
   */
 final class VersionStore(val spark: SparkSession, val root: String) {
   import VersionStore._
@@ -126,16 +129,9 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   def completeVersion(id: Long, recordCount: Long,
                       markCurrentFor: Option[(String, Option[String])] = None,
                       warning: Option[(String, Option[String])] = None): Unit =
-    commit { s =>
-      val done = s.edit(id)(_.copy(status = "completed", recordCount = Some(recordCount)))
-      val current = markCurrentFor.fold(done) { case (sourceCode, variant) =>
-        done.current(id, sourceCode, variant) }
-      warning.fold(current) { case (message, details) =>
-        current.logged(id, "WARNING", message, details) }
-    }: Unit
+    commit(_.completed(id, recordCount, markCurrentFor, warning)): Unit
 
-  def failVersion(id: Long, error: String): Unit =
-    commit(_.edit(id)(_.copy(status = "failed", errorMessage = Some(error)))): Unit
+  def failVersion(id: Long, error: String): Unit = commit(_.failed(id, error)): Unit
 
   /** U3 mark-as-current: one commit clears is_current for the (source,
     * variant) scope and sets it on the new version — null-safe variant
@@ -147,40 +143,42 @@ final class VersionStore(val spark: SparkSession, val root: String) {
     new Path(s"$dataDir/$table/data_version_id=$versionId")
 
   /** Write one part of a version's data and return the rows written, counted
-    * by the write job itself. The rows go to a staging directory; then any
-    * `p<part>-*.parquet` files an earlier attempt left in the version's
-    * directory are deleted and the staged files are renamed to the
-    * deterministic `p<part>-<i>.parquet` names. Rewriting a part therefore
-    * replaces it — a replay after a crash leaves no extra rows — and never
-    * touches the version's other parts. The version's directory is the
-    * hive-style `data_version_id=<id>` partition, so the layout (and the
-    * partition-pruned read path) is that of a `partitionBy` write.
-    *
-    * With `dropEmpty`, a write that counted no rows lands nothing: its
-    * staging directory (an empty write still stages one parquet file) is
-    * deleted before any rename, so the version's directory is not created.
-    * An ingest whose write is also the job that finds out whether any row
-    * is valid writes its first part this way. */
-  def writeData(table: String, versionId: Long, df: DataFrame, part: Int = 1,
-                dropEmpty: Boolean = false): Long = {
+    * by the write job itself. The job stages its files; they move into the
+    * version's `data_version_id=<id>` directory (the hive-style partition of
+    * a `partitionBy` write) under the unique names the job gave them, and one
+    * commit lists them, with the written schema, as the part's files: that
+    * commit makes them visible. A second write of the same part replaces the
+    * part's list, and the files it unlists are deleted after that commit, so
+    * a replay after a crash leaves no extra rows and never touches the
+    * version's other parts. A write that counts no rows lists no file and
+    * creates no directory; a part already on the ledger is not relisted. */
+  def writeData(table: String, versionId: Long, df: DataFrame, part: Int = 1): Long =
+    writeData(table, versionId, df, part, (_: Long) => identity[State])
+
+  /** [[writeData]], whose listing commit also applies `settle(rows)` to the
+    * state: the write and what it settles become visible together. */
+  def writeData(table: String, versionId: Long, df: DataFrame, part: Int,
+                settle: Long => State => State): Long = {
     val staging = new Path(s"$dataDir/$table/.staging-v$versionId-p$part")
     val dest = versionDir(table, versionId)
     val written = Observation()
     df.observe(written, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     val rows = written.get("rows").asInstanceOf[Long]
-    if (rows == 0 && dropEmpty) {
-      fs.delete(staging, true)
-      return 0L
+    val names = if (rows == 0) Vector.empty else {
+      fs.mkdirs(dest)
+      fs.listStatus(staging).toVector.map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).map { p =>
+          if (!fs.rename(p, new Path(dest, p.getName))) throw new IOException(s"cannot move $p to $dest")
+          p.getName
+        }
     }
-    fs.mkdirs(dest)
-    fs.globStatus(new Path(dest, s"p$part-*.parquet"))
-      .foreach(st => fs.delete(st.getPath, false))
-    fs.listStatus(staging).map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName).zipWithIndex.foreach { case (p, i) =>
-        val target = new Path(dest, s"p$part-$i.parquet")
-        if (!fs.rename(p, target)) throw new IOException(s"cannot rename $p to $target")
-      }
+    def listed(s: State) = for (v <- s.versions if v.dataVersionId == versionId;
+      f <- v.files if f.part == part; n <- f.names) yield new Path(versionDir(f.table, versionId), n)
+    val before = listed(state) ++ names.map(new Path(dest, _))
+    val after = listed(commit(s => if (s.hasPart(versionId, part)) s
+      else settle(rows)(s.listed(versionId, DataFiles(table, part, names), df.schema.json))))
+    before.filterNot(after.contains).foreach(fs.delete(_, false))
     fs.delete(staging, true)
     rows
   }
@@ -189,35 +187,27 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   def hasPart(versionId: Long, partNumber: Int): Boolean = state.hasPart(versionId, partNumber)
 
   /** U4 land one appended part EXACTLY ONCE even under crash/replay: skip
-    * if the part is on the ledger; otherwise [[writeData]] it, then commit
-    * its ledger row, the version's counters (record_count += n,
-    * part_count += 1 — reference ingestor.py:153-195) and a log line as ONE
-    * commit, the commit point. A crash before that commit leaves a state a
-    * replay repairs, because rewriting the part replaces its files. Batch
+    * if the part is on the ledger; otherwise [[writeData]] it, and list its
+    * files, its ledger row, the version's counters (record_count += n,
+    * part_count += 1 — reference ingestor.py:153-195) and a log line in ONE
+    * commit, the commit point: the part's rows are visible exactly when
+    * they are counted. A crash before that commit leaves files no commit
+    * lists, which no read opens; a replay writes the part afresh. Batch
     * (multi-part upload) and streaming (micro-batch) parts both land here.
     * Returns rows landed (0 = skipped).
-    *
-    * Between the rename of the part's files and the commit, the current
-    * view already reads the new rows; a crash there leaves them visible,
-    * uncounted, until the part is replayed.
     *
     * Concurrency contract: ONE writing driver per store root. Within one
     * JVM the re-probe inside the synchronized commit closes the
     * check-then-act window — a zombie foreachBatch replay on the same
     * driver commits the part once. */
   def landPart(table: String, versionId: Long, partNumber: Int,
-               df: DataFrame, fileHash: String, fileName: String): Long = {
-    if (hasPart(versionId, partNumber)) return 0L
-    val n = writeData(table, versionId, df, partNumber)
-    commit { s =>
-      if (s.hasPart(versionId, partNumber)) s
-      else s.edit(versionId)(v => v.copy(recordCount = Some(v.recordCount.getOrElse(0L) + n),
+               df: DataFrame, fileHash: String, fileName: String): Long =
+    if (hasPart(versionId, partNumber)) 0L
+    else writeData(table, versionId, df, partNumber, n => s =>
+      s.edit(versionId)(v => v.copy(recordCount = Some(v.recordCount.getOrElse(0L) + n),
           partCount = v.partCount + 1))
         .copy(parts = s.parts :+ Part(versionId, partNumber, fileHash, fileName, n))
-        .logged(versionId, "INFO", s"Appended part $partNumber ($n rows)", None)
-    }
-    n
-  }
+        .logged(versionId, "INFO", s"Appended part $partNumber ($n rows)", None))
 
   /** S7's relational-sink sibling: write a version's rows to an external
     * RDBMS over JDBC in 1000-row insert batches — the same page size as the
@@ -234,48 +224,40 @@ final class VersionStore(val spark: SparkSession, val root: String) {
       .option("batchsize", Catalog.Limits.insertBatchSize)
       .jdbc(url, table, properties)
 
-  def data(table: String): DataFrame = spark.read.parquet(s"$dataDir/$table")
+  /** Every listed file of `table`, under the schema of its newest version. */
+  def data(table: String): DataFrame = read(table, _ => true)
 
   /** J2 current view. The current version ids are resolved DRIVER-SIDE from
-    * the committed metadata, and only their `data_version_id=<id>`
-    * directories are opened (`basePath` keeps `data_version_id` as a path
-    * column), so the file index lists the current version's files however
-    * long the table's history is. The schema comes from one footer of the
-    * current version ([[readVersions]]), so building the view launches no
-    * job. A static `isin` partition filter stays on top, so the plan shows
-    * the pruning (a broadcast join would at best prune dynamically at
-    * runtime). With no current version, or no footer carrying Spark's
-    * schema, the view is the whole table filtered to the current ids.
-    * Null-safe variant compare mirrors the reference's
-    * `IS NOT DISTINCT FROM` (init_db.py:418-518). */
+    * the committed metadata, and only their listed files are read
+    * ([[read]]), so building the view launches no job however long the
+    * table's history is. A static `isin` partition filter stays on top, so
+    * the plan shows the pruning (a broadcast join would at best prune
+    * dynamically at runtime). With no current version, the view is empty,
+    * with the schema of [[data]]. Null-safe variant compare mirrors the
+    * reference's `IS NOT DISTINCT FROM` (init_db.py:418-518). */
   def currentView(table: String, sourceCode: String, variant: Option[String] = None): DataFrame = {
     val ids = currentVersionIds(sourceCode, variant)
-    readVersions(table, ids).getOrElse(data(table))
+    read(table, v => ids.contains(v.dataVersionId))
       .filter(col("data_version_id").isin(ids.map(Long.box): _*))
   }
 
-  /** The given versions' directories of `table`, read with the Spark schema
-    * stored in the footer of the first directory's first parquet file (by
-    * name) — the footer Spark's own non-merging inference reads, read here
-    * on the driver instead of in a job. None when no directory exists, it
-    * holds no parquet file, or the footer has no Spark schema (a file Spark
-    * did not write). */
-  private def readVersions(table: String, ids: Seq[Long]): Option[DataFrame] = {
-    val dirs = ids.map(versionDir(table, _)).filter(fs.exists)
-    dirs.headOption.flatMap(footerSchema).map(schema =>
-      spark.read.schema(schema).option("basePath", s"$dataDir/$table")
-        .parquet(dirs.map(_.toString): _*))
-  }
-
-  private def footerSchema(dir: Path): Option[StructType] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).headOption.flatMap { st =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(SparkSchemaKey))
-        finally reader.close()
-      }.map(json => DataType.fromJson(json).asInstanceOf[StructType])
+  /** The listed files of the `keep` versions of `table`, read with the
+    * committed schema of the newest of them (of the table's newest version
+    * when none lists a file), so no footer is read. Only their
+    * `data_version_id=<id>` directories are opened, under `basePath`, so
+    * `data_version_id` is the path column; the file index keeps just the
+    * listed names (`_metadata.file_name`), so a file no commit lists is
+    * never opened. */
+  private def read(table: String, keep: Version => Boolean): DataFrame = {
+    val written = state.versions.filter(_.files.exists(_.table == table))
+    val kept = written.filter(keep)
+    val schema = (kept.lastOption orElse written.lastOption).flatMap(_.schema)
+      .fold(new StructType())(DataType.fromJson(_).asInstanceOf[StructType])
+    val reader = spark.read.schema(schema.add("data_version_id", IntegerType))
+    (if (kept.isEmpty) reader else reader.option("basePath", s"$dataDir/$table"))
+      .parquet(kept.map(v => versionDir(table, v.dataVersionId).toString): _*)
+      .filter(col("_metadata.file_name").isin(
+        kept.flatMap(_.files.filter(_.table == table).flatMap(_.names)): _*))
   }
 
   /** Current completed version ids for a (source, variant) scope, from the
@@ -312,9 +294,6 @@ final class VersionStore(val spark: SparkSession, val root: String) {
 object VersionStore {
   import org.apache.spark.sql.types._
 
-  /** Footer key under which Spark's parquet writer stores the row schema. */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
   private val Json = JsonMapper.builder().addModule(DefaultScalaModule).build()
 
   private val CommitFile = """(\d{20})\.json""".r
@@ -326,18 +305,24 @@ object VersionStore {
 
   private def now() = new java.sql.Timestamp(System.currentTimeMillis())
 
-  /** One `data_versions` row ([[versionSchema]]). */
+  /** One `data_versions` row ([[versionSchema]]), with the data files its
+    * writes listed and the schema (JSON) they were written with. */
   final case class Version(
       dataVersionId: Long, sourceCode: String, versionLabel: String,
       effectiveDate: java.sql.Date, variant: Option[String], status: String,
       fileHash: String, fileName: String,
       @JsonDeserialize(contentAs = classOf[java.lang.Long]) recordCount: Option[Long],
       isCurrent: Boolean, importedAt: java.sql.Timestamp, partCount: Int,
-      errorMessage: Option[String]) {
+      errorMessage: Option[String], files: Vector[DataFiles] = Vector.empty,
+      schema: Option[String] = None) {
     def row: Row = Row(dataVersionId, sourceCode, versionLabel, effectiveDate,
       variant.orNull, status, fileHash, fileName, recordCount.map(Long.box).orNull,
       isCurrent, importedAt, partCount, errorMessage.orNull)
   }
+
+  /** The parquet files that one part of a version landed in `table`, by the
+    * names the write job gave them. */
+  final case class DataFiles(table: String, part: Int, names: Vector[String])
 
   /** One part-ledger row ([[partSchema]]): an appended part of a version. */
   final case class Part(dataVersionId: Long, partNumber: Int, fileHash: String,
@@ -365,6 +350,28 @@ object VersionStore {
 
     private[store] def edit(id: Long)(f: Version => Version): State =
       copy(versions = versions.map(v => if (v.dataVersionId == id) f(v) else v))
+
+    /** `files` become the listed files of their part of version `id` (none:
+      * the part lists nothing), written with `schema`. */
+    private[store] def listed(id: Long, files: DataFiles, schema: String): State =
+      edit(id)(v => v.copy(
+        files = v.files.filterNot(_.part == files.part) ++ Option.when(files.names.nonEmpty)(files),
+        schema = if (files.names.isEmpty) v.schema else Some(schema)))
+
+    /** U2 completed (+record_count), with the U3 current swap and a
+      * WARNING log line if given. */
+    private[graft] def completed(id: Long, recordCount: Long,
+                                 markCurrentFor: Option[(String, Option[String])],
+                                 warning: Option[(String, Option[String])]): State = {
+      val done = edit(id)(_.copy(status = "completed", recordCount = Some(recordCount)))
+      val current = markCurrentFor.fold(done) { case (sourceCode, variant) =>
+        done.current(id, sourceCode, variant) }
+      warning.fold(current) { case (message, details) =>
+        current.logged(id, "WARNING", message, details) }
+    }
+
+    private[graft] def failed(id: Long, error: String): State =
+      edit(id)(_.copy(status = "failed", errorMessage = Some(error)))
 
     /** `id` becomes the one current version of its (source, variant) scope. */
     private[store] def current(id: Long, sourceCode: String, variant: Option[String]): State =

@@ -629,16 +629,16 @@ object EventStream {
 
   /** Stream → versioned store: land each micro-batch as an appended part
     * of one store version via foreachBatch, with EXACTLY-ONCE landing —
-    * the part ledger records the micro-batch id as the part number and is
-    * committed only AFTER the batch's files sit at their deterministic
-    * names ([[graft.store.VersionStore.landPart]], the path batch
-    * multi-part uploads take too).
+    * the part ledger records the micro-batch id as the part number, in
+    * the same commit that lists the batch's files
+    * ([[graft.store.VersionStore.landPart]], the path batch multi-part
+    * uploads take too).
     * A re-delivered batch (Structured Streaming replays the last
     * uncommitted batch after failure) is skipped when its part is on the
-    * ledger; a crash BETWEEN the data move and the ledger commit is
-    * repaired on replay because rewriting the part sweeps its previous
-    * files before renaming the fresh ones in. At-least-once delivery ×
-    * idempotent batch-id-keyed commit = exactly-once landed data.
+    * ledger; a crash BETWEEN the data move and that commit leaves files no
+    * commit lists, which no read opens, and the replay lands the batch
+    * afresh. At-least-once delivery × idempotent batch-id-keyed commit =
+    * exactly-once landed data.
     *
     * Exposed seam: [[landBatch]] is the per-batch commit function, called
     * directly by specs to prove the replay path without a failure

@@ -194,6 +194,22 @@ class PlanRegressionSpec extends SparkSpecBase {
     assert(view.collect().map(_.getAs[String]("mac_locality")).toSeq == Seq("loc33"))
   }
 
+  test("a current view over more listed files than Spark lists on the driver launches no job") {
+    val store = new graft.store.VersionStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-files").toString)
+    val id = store.createVersion("PFS_GPCI", "v1",
+      java.sql.Date.valueOf("2026-01-01"), None, "hash", "f.csv")
+    val rows = spark.range(400).selectExpr("cast(id as string) as mac_locality",
+      "cast(id as double) as work_gpci").repartition(40)
+    store.writeData("cms.pfs_gpci", id, rows)
+    store.completeVersion(id, 400, markCurrentFor = Some(("PFS_GPCI", None)))
+    assert(store.metadata.versions.head.files.flatMap(_.names).size >= 40)
+    var view: DataFrame = null
+    assert(jobsIn { view = store.currentView("cms.pfs_gpci", "PFS_GPCI") } == 0,
+      "building a current view must launch no Spark job")
+    assert(view.count() == 400)
+  }
+
   test("inverted index caps postings pre-shuffle via WindowGroupLimit") {
     val p = plan("q_llm_postings")
     assert(p.contains("WindowGroupLimit"),

@@ -97,10 +97,16 @@ class VersionStoreFaultSpec extends SparkSpecBase {
     }.takeWhile(identity).size
   }
 
-  /** After a replay: no committed version lost, no id reused, the upload's
-    * rows in the current view exactly once and equal to the counters. */
+  /** Before the replay, the current view shows exactly the rows its version
+    * counts. After a replay: no committed version lost, no id reused, the
+    * upload's rows in the current view exactly once and equal to the
+    * counters. */
   private def replayAndCheck(store: VersionStore, before: Set[Long], path: String,
                              rows: Long, parts: Int): Unit = {
+    val counted = store.metadata.versions.filter(v => v.sourceCode == "NCCI_PTP" && v.isCurrent)
+      .flatMap(_.recordCount).sum
+    assert(store.currentView("cms.ncci_ptp", "NCCI_PTP", Some("HOSPITAL")).count() == counted,
+      "visible rows the current version does not count")
     val ids = store.metadata.versions.map(_.dataVersionId).toSet
     assert(before.subsetOf(ids), s"lost committed versions ${before -- ids}")
     val onDisk = Seq("cms.ncci_ptp", "cms.pfs_gpci").flatMap { t =>

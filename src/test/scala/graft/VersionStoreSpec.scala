@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.store.VersionStore
@@ -179,6 +181,7 @@ class VersionStoreSpec extends SparkSpecBase {
       val s = new VersionStore(spark, store.root)
       s.versions.collect(); s.parts.collect(); s.logs.collect()
     } == 0)
+    assert(jobsIn(store.data("cms.ncci_ptp")) == 0)
     val v = store.versions.filter(col("data_version_id") === id).head
     assert((v.getAs[Long]("record_count"), v.getAs[Int]("part_count")) == (4L, 2))
     assert(store.parts.collect().map(_.getAs[String]("file_hash")).toSeq == Seq("h2"))
@@ -243,31 +246,47 @@ class VersionStoreSpec extends SparkSpecBase {
     assert(view.schema("data_version_id").dataType == IntegerType)
     assert(view.collect().map(_.getString(0)).toSeq == Seq("01"))
 
-    // No current version in scope: the whole table, filtered to no ids.
+    // No current version in scope: no rows, under the table's schema.
     val none = store.currentView(table, "PFS_GPCI", Some("HOSPITAL"))
     assert(none.schema == store.data(table).schema)
     assert(none.count() == 0)
+  }
 
-    // A version file without Spark's schema in its footer (written by plain
-    // parquet-hadoop): the view reads it the way spark.read.parquet does.
-    val foreign = newStore()
-    val id = foreign.createVersion("PFS_GPCI", "ext",
-      java.sql.Date.valueOf("2026-01-01"), None, "h-ext", "ext.parquet")
-    val file = new org.apache.hadoop.fs.Path(
-      s"${foreign.root}/data/$table/data_version_id=$id/part-0.parquet")
-    val parquetSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message gpci { required binary mac_locality (UTF8); required double work_gpci; }")
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(file)
-      .withType(parquetSchema).withConf(spark.sparkContext.hadoopConfiguration).build()
-    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(parquetSchema)
-    try Seq(("03", 3.0), ("04", 4.0)).foreach { case (loc, w) =>
-      writer.write(groups.newGroup().append("mac_locality", loc).append("work_gpci", w))
-    } finally writer.close()
-    foreign.completeVersion(id, 2, markCurrentFor = Some(("PFS_GPCI", None)))
-    val read = spark.read.parquet(s"${foreign.root}/data/$table")
-    val ext = foreign.currentView(table, "PFS_GPCI")
-    assert(ext.schema == read.schema)
-    assert(ext.collect().toSeq.map(_.toSeq) == read.collect().toSeq.map(_.toSeq))
+  test("reads open only the files a commit lists") {
+    import java.nio.file.{Files, Paths}
+    val store = newStore()
+    val table = "cms.pfs_gpci"
+    val id = store.createVersion("PFS_GPCI", "v1",
+      java.sql.Date.valueOf("2026-01-01"), None, "h", "f.csv")
+    assert(store.writeData(table, id, sampleData(1).repartition(2)) == 2)
+    store.completeVersion(id, 2, markCurrentFor = Some(("PFS_GPCI", None)))
+    val dir = Paths.get(store.root, "data", table, s"data_version_id=$id")
+    def files() = Files.list(dir).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSet
+    val landed = files()
+    assert(store.metadata.versions.head.files.flatMap(_.names).toSet == landed)
+    // Not parquet at all: opening it would fail the read.
+    val planted = "part-00000-unlisted.snappy.parquet"
+    Files.writeString(dir.resolve(planted), "not parquet")
+    def codes(df: org.apache.spark.sql.DataFrame) =
+      df.select("hcpcs_code").collect().map(_.getString(0)).toSet
+    assert(codes(store.currentView(table, "PFS_GPCI")) == Set("code1", "other1"))
+    assert(codes(store.data(table)) == Set("code1", "other1"))
+    assert(codes(new VersionStore(spark, store.root).currentView(table, "PFS_GPCI")) ==
+      Set("code1", "other1"))
+
+    // A second write of the part replaces its list; the unlisted files go.
+    assert(store.writeData(table, id, sampleData(2)) == 2)
+    assert(files().intersect(landed).isEmpty)
+    assert(codes(store.data(table)) == Set("code2", "other2"))
+    // A write that counts no rows unlists the part and lands nothing.
+    assert(store.writeData(table, id, sampleData(3).limit(0)) == 0)
+    assert(files() == Set(planted) && store.data(table).isEmpty)
+    val empty = store.createVersion("PFS_GPCI", "v2",
+      java.sql.Date.valueOf("2026-01-01"), None, "h2", "f2.csv")
+    assert(store.writeData(table, empty, sampleData(3).limit(0)) == 0)
+    assert(store.landPart(table, empty, 2, sampleData(3).limit(0), "p2", "p2.csv") == 0)
+    assert(!Files.exists(Paths.get(store.root, "data", table, s"data_version_id=$empty")))
   }
 
   test("version diff classifies added/removed/changed/unchanged keys") {
